@@ -1,8 +1,5 @@
 package graft.analytics
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
-
 /** Pipeline alerting (reference: src/alerts.py, src/slack_alerts.py,
   * scheduler.py:72-95): decide success/failure/partial from run stats and
   * emit through a pluggable channel. The decision logic is pure and
@@ -40,16 +37,5 @@ object Alerts {
       Some(Alert(Warning, "Partial fetch",
         s"$symbolsFetched/$symbolsRequested symbols fetched"))
     else None
-  }
-
-  /** Evaluate a quality report DataFrame (Expectations.qualityReport) and
-    * alert through the channel if the run warrants it. */
-  def alertOnRun(channel: Channel, features: DataFrame, report: DataFrame,
-                 symbolsRequested: Int, symbolsFetched: Int): Option[Alert] = {
-    val records = features.count()
-    val passRate = report.agg(avg(col("passed").cast("int"))).head.getDouble(0)
-    val alert = evaluateRun(records, symbolsRequested, symbolsFetched, passRate)
-    alert.foreach(channel.send)
-    alert
   }
 }

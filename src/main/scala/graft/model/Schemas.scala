@@ -10,20 +10,6 @@ import org.apache.spark.sql.types._
   */
 object Schemas {
 
-  /** Input contract of the cleaning stage: one row = (symbol, trading day).
-    * Raw API values arrive as strings and are coerced with cast("double")
-    * (invalid -> null), matching pandas to_numeric(errors='coerce')
-    * (reference: src/transform.py:133-136). */
-  val stockRaw: StructType = StructType(Seq(
-    StructField("symbol", StringType, nullable = false),
-    StructField("date", DateType, nullable = true),
-    StructField("open", DoubleType, nullable = true),
-    StructField("high", DoubleType, nullable = true),
-    StructField("low", DoubleType, nullable = true),
-    StructField("close", DoubleType, nullable = true),
-    StructField("volume", LongType, nullable = true)
-  ))
-
   /** The analytic columns of the persistent table (reference: src/load.py:35-84,
     * minus the auto-increment id and load-time extracted_at default), in the
     * canonical output order (reference: src/transform.py:292-321). */

@@ -1,6 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.AtLeastNNonNulls
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -26,27 +28,44 @@ object Cleaning {
     df.withColumnsRenamed(present)
   }
 
-  /** F1: drop rows with a null in any critical column
-    * (reference: src/transform.py:168-170). */
-  def dropNullCritical(df: DataFrame): DataFrame =
-    df.na.drop("any", criticalColumns)
+  private val criticalFnName = "graft_has_critical_values"
 
-  /** F2: OHLC logical-consistency filter (reference: src/transform.py:174-184).
-    * Removes rows where high < low, high < open, high < close, low > open or
-    * low > close. Applied after F1 so the null-vs-false distinction of the
-    * negated predicate cannot drop extra rows. */
-  def filterOhlcConsistent(df: DataFrame): DataFrame = {
-    val bad = col("high") < col("low") || col("high") < col("open") ||
-      col("high") < col("close") || col("low") > col("open") ||
-      col("low") > col("close")
-    df.filter(!bad)
+  /** F1 predicate: no null (or NaN) in any critical column. It is the
+    * expression `na.drop("any", criticalColumns)` plans (AtLeastNNonNulls),
+    * which the public Column API cannot build, so it is registered as a
+    * session function (as ext.Similarity does for its native cosine). */
+  def hasCriticalValues: Column = {
+    val registry = SparkSession.active.sessionState.functionRegistry
+    if (!registry.functionExists(FunctionIdentifier(criticalFnName)))
+      registry.createOrReplaceTempFunction(criticalFnName,
+        children => AtLeastNNonNulls(children.size, children), "built-in")
+    call_function(criticalFnName, criticalColumns.map(col): _*)
   }
 
-  /** F3: remove non-positive prices and negative volume
+  /** F2 predicate: OHLC logical consistency (reference:
+    * src/transform.py:174-184). False where high < low, high < open,
+    * high < close, low > open or low > close. Applied after F1 so the
+    * null-vs-false distinction of the negation cannot drop extra rows. */
+  val ohlcConsistent: Column =
+    !(col("high") < col("low") || col("high") < col("open") ||
+      col("high") < col("close") || col("low") > col("open") ||
+      col("low") > col("close"))
+
+  /** F3 predicate: positive prices and non-negative volume
     * (reference: src/transform.py:187-197). */
-  def filterPositivePrices(df: DataFrame): DataFrame =
-    df.filter(col("open") > 0 && col("high") > 0 && col("low") > 0 &&
-      col("close") > 0 && col("volume") >= 0)
+  val positivePrices: Column =
+    col("open") > 0 && col("high") > 0 && col("low") > 0 &&
+      col("close") > 0 && col("volume") >= 0
+
+  /** F1: drop rows with a null in any critical column
+    * (reference: src/transform.py:168-170). */
+  def dropNullCritical(df: DataFrame): DataFrame = df.filter(hasCriticalValues)
+
+  /** F2: remove OHLC-inconsistent rows. */
+  def filterOhlcConsistent(df: DataFrame): DataFrame = df.filter(ohlcConsistent)
+
+  /** F3: remove non-positive prices and negative volume. */
+  def filterPositivePrices(df: DataFrame): DataFrame = df.filter(positivePrices)
 
   /** F4: dedup on (symbol, date) keeping the "last" row. pandas keep='last'
     * relies on positional order (reference: src/transform.py:199-204); Spark

@@ -1,7 +1,9 @@
 package graft.quality
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
 /** The reference's 13-item Great Expectations suite as Column-predicate
   * aggregates (reference: src/data_quality.py:8-128, operator A11).
@@ -11,11 +13,19 @@ import org.apache.spark.sql.functions._
   * exploded into one row per check. GX `mostly` semantics: the ratio is
   * computed over non-null values (avg ignores nulls), and a check passes when
   * observed_ratio >= threshold.
+  *
+  * The suite has two forms over one check list and one report tail:
+  * [[qualityReport]], a query of its own, and [[observe]], which carries the
+  * same ratios as observed metrics of an action that consumes the frame
+  * anyway (the ETL's lake write), so validating costs no pass of its own.
   */
 object Expectations {
 
-  /** (name, ratio expression over the frame, mostly-threshold). */
-  private def checks(df: DataFrame): Seq[(String, Column, Double)] = {
+  /** (name, ratio expression over the frame, mostly-threshold), sorted by
+    * name, the report's order. `unique` is the compound (symbol, date)
+    * uniqueness count, the one check whose form differs between the two
+    * callers. */
+  private def checks(df: DataFrame, unique: Column): Seq[(String, Column, Double)] = {
     def exists(c: String): Column =
       lit(if (df.columns.contains(c)) 1.0 else 0.0)
     def notNullRatio(c: String): Column =
@@ -44,38 +54,75 @@ object Expectations {
         .when(col("high") > col("low"), 1.0).otherwise(0.0)), 1.0),
       // try_divide: ANSI mode throws on /0, and an EMPTY frame (all rows
       // filtered away) must produce a null ratio, not crash the report
-      ("compound_unique:symbol_date",
-        try_divide(countDistinct(col("symbol"), col("date")).cast("double"),
-          count(lit(1))), 1.0)
-    )
+      ("compound_unique:symbol_date", try_divide(unique.cast("double"), count(lit(1))), 1.0)
+    ).sortBy(_._1)
   }
 
-  /** One row per expectation: (check_name, observed_ratio, threshold, passed).
-    * `passed` is decided on the unrounded ratio; observed_ratio is rounded to
-    * 6 decimals for engine-agnostic comparison. */
-  def qualityReport(df: DataFrame): DataFrame = {
-    val cs = checks(df)
-    val aggCols = cs.zipWithIndex.map { case ((_, ratio, _), i) => ratio.as(s"__r$i") }
-    val aggRow = df.agg(aggCols.head, aggCols.tail: _*)
+  private def ratios(cs: Seq[(String, Column, Double)]): Seq[Column] =
+    cs.zipWithIndex.map { case ((_, ratio, _), i) => ratio.as(s"__r$i") }
+
+  /** The report tail: the one-row frame of ratios `__r<i>` -> one row per
+    * check, in check order: (check_name, observed_ratio, threshold, passed).
+    * `passed` is decided on the unrounded ratio; observed_ratio is rounded
+    * to 6 decimals for engine-agnostic comparison. */
+  private def report(ratioRow: DataFrame, cs: Seq[(String, Column, Double)]): DataFrame = {
     val rows = cs.zipWithIndex.map { case ((name, _, thr), i) =>
       struct(
         lit(name).as("check_name"),
         col(s"__r$i").as("observed_ratio"),
         lit(thr).as("threshold"))
     }
-    aggRow.select(explode(array(rows: _*)).as("c"))
+    ratioRow.select(explode(array(rows: _*)).as("c"))
       .select(col("c.check_name"), col("c.observed_ratio"), col("c.threshold"))
       .withColumn("passed", col("observed_ratio") >= col("threshold"))
       .withColumn("observed_ratio", graft.ops.Num.cround(col("observed_ratio"), 6))
-      .orderBy("check_name")
   }
 
-  /** Overall pass rate with the reference's >= 90% gate
-    * (src/data_quality.py:222). */
-  def passRate(report: DataFrame, gate: Double = 0.9): DataFrame =
-    report.agg(
-      count(lit(1)).as("total_checks"),
-      sum(when(col("passed"), 1L).otherwise(0L)).as("passed_checks"))
-      .withColumn("pass_rate", col("passed_checks") / col("total_checks"))
-      .withColumn("overall_success", col("pass_rate") >= gate)
+  /** One row per expectation, as a query of its own over `df`. */
+  def qualityReport(df: DataFrame): DataFrame = {
+    val cs = checks(df, countDistinct(col("symbol"), col("date")))
+    val rs = ratios(cs)
+    report(df.agg(rs.head, rs.tail: _*), cs).orderBy("check_name")
+  }
+
+  /** The suite attached to `df` as observed metrics, with `extra` metrics
+    * alongside. Spark rejects DISTINCT aggregates in observed metrics, so
+    * the uniqueness ratio counts the first row of each non-null
+    * (symbol, date) instead: a row whose date differs from the previous
+    * date of its symbol. That is exact against countDistinct, and over a
+    * frame that already comes out of the per-symbol date-ordered windows
+    * (Derive's) the lag needs no exchange or sort of its own. */
+  def observe(df: DataFrame, extra: Column*): Observed = {
+    val w = Window.partitionBy("symbol").orderBy("date")
+    val firstOfKey = col("symbol").isNotNull && col("date").isNotNull &&
+      !lag(col("date"), 1).over(w).eqNullSafe(col("date"))
+    val cs = checks(df, count_if(col("__first_of_key")))
+    val metrics = ratios(cs) ++ extra
+    val observation = Observation()
+    val frame = df.withColumn("__first_of_key", firstOfKey)
+      .observe(observation, metrics.head, metrics.tail: _*)
+      .drop("__first_of_key")
+    new Observed(frame, observation, cs)
+  }
+
+  /** `frame` is the observed frame: run one action over it, then read the
+    * metrics or the report. Both block until that action has finished. */
+  final class Observed private[Expectations] (val frame: DataFrame,
+      observation: Observation, cs: Seq[(String, Column, Double)]) {
+
+    /** Every metric of the action: the checks' `__r<i>` and the extras. */
+    def metrics: Map[String, Any] = observation.get
+
+    /** The rows [[qualityReport]] gives for the observed frame, in its
+      * order, built from the observed ratios as a one-row local frame (no
+      * sort: the checks are already in name order). */
+    def report(spark: SparkSession): DataFrame = {
+      val m = metrics
+      val names = cs.indices.map(i => s"__r$i")
+      val ratioRow = spark.createDataFrame(
+        java.util.List.of(Row.fromSeq(names.map(m))),
+        StructType(names.map(StructField(_, DoubleType))))
+      Expectations.report(ratioRow, cs)
+    }
+  }
 }

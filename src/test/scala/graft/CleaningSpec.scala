@@ -31,6 +31,13 @@ class CleaningSpec extends AnyFunSuite {
     assert(dates.toSeq == Seq("2024-01-01"))
   }
 
+  test("F1 predicate plans the very filter na.drop plans") {
+    val df = Seq(("A", d("2024-01-01"), 1.0, 2.0, 0.5, 1.5, 10L))
+      .toDF("symbol", "date", "open", "high", "low", "close", "volume")
+    assert(Cleaning.dropNullCritical(df).queryExecution.optimizedPlan ==
+      df.na.drop("any", Cleaning.criticalColumns).queryExecution.optimizedPlan)
+  }
+
   test("F2 also removes high < open and high < close") {
     val df = Seq(
       ("A", d("2024-01-01"), 120.0, 110.0, 95.0, 105.0, 1L),  // high < open

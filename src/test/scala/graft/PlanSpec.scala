@@ -18,6 +18,21 @@ class PlanSpec extends AnyFunSuite {
       s"expected exactly one symbol hash exchange, got $symbolExchanges")
   }
 
+  test("the observed quality checks ride the feature windows' exchange and sort") {
+    // the uniqueness check's lag uses Derive's (symbol) partitioning and
+    // (symbol, date) order, so observing the suite adds no shuffle or sort
+    import org.apache.spark.sql.functions.col
+    val features = graft.ops.Derive.addDerived(graft.ops.Cleaning.clean(
+      graft.io.Sources.stockFromLineitem(spark, dir), col("rid")).drop("rid"))
+    val observed = graft.quality.Expectations.observe(features).frame
+    def count(df: org.apache.spark.sql.DataFrame, node: String): Int =
+      node.r.findAllIn(df.queryExecution.executedPlan.toString).length
+    for (node <- Seq("Exchange ", "Sort \\["))
+      assert(count(observed, node) == count(features, node),
+        s"$node:\n${observed.queryExecution.executedPlan}")
+    assert(count(observed, "CollectMetrics") == 1)
+  }
+
   test("dimension joins broadcast the small side") {
     val p = plan("j1_join_dims")
     assert(p.contains("BroadcastHashJoin"), "nation/region should broadcast")

@@ -3024,10 +3024,12 @@ object Queries {
     * graph). Links are seeded deterministically from doc_ids with every
     * edge step a multiple of 4, so hosts partition into the 4 residue
     * classes mod 4 by construction — the min-label propagation
-    * ([[graft.analytics.Graph.connectedComponents]], 10 rounds >= the
-    * within-class diameter) must recover exactly those classes. Corpus
-    * pays one distinct-edge aggregate; every round runs on the bounded
-    * host graph. Labels are strings; the whole query is float-free. */
+    * ([[graft.analytics.Graph.connectedComponents]], capped at 10 rounds
+    * >= the within-class diameter, stopping at the fixpoint) must recover
+    * exactly those classes. Each class is a complete graph, so round 1
+    * labels every host and round 2 changes nothing. Corpus pays one
+    * distinct-edge aggregate; every round runs on the bounded host graph.
+    * Labels are strings; the whole query is float-free. */
   def g3Components(s: SparkSession, dir: String): DataFrame =
     // edge projection shared verbatim with the streaming twin (the g1
     // one-code-path invariant)

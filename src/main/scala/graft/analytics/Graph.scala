@@ -76,47 +76,50 @@ object Graph {
   /** Connected components over an edge list, by iterative min-label
     * propagation: every node starts labeled with itself; each round every
     * node takes the LEAST of its own label and its neighbors' labels
-    * (edges symmetrized, so propagation is undirected). After `iters`
-    * rounds every node within distance `iters` of its component's
-    * lexicographic-minimum node carries that minimum — `iters` must be
-    * >= the graph diameter for full convergence (the caller's contract;
-    * extra rounds are exact no-ops, so a generous bound is safe, and each
-    * round costs one stage on the AGGREGATED graph, never the corpus).
+    * (edges symmetrized, so propagation is undirected). `iters` caps the
+    * rounds: the loop stops at the first round that changes no label. The
+    * round is deterministic, so every later round would be a no-op too, and
+    * the result equals `iters` unconditional rounds on every input. Every
+    * node within distance `iters` of its component's lexicographic-minimum
+    * node carries that minimum — `iters` must be >= the graph diameter for
+    * full convergence (the caller's contract).
     *
-    * Same division of labor as [[pagerank]]: distill the corpus to a
-    * distinct edge set once, then iterate with the label frame broadcast
-    * into each step. Labels are exact strings — no floating point
+    * Same division of labor as [[pagerank]]: the corpus pays one distinct
+    * over the self-looped undirected edge set, then each round is one
+    * checkpoint on the AGGREGATED graph, with the node-sized label frame
+    * broadcast into it. Labels are exact strings — no floating point
     * anywhere, so cross-engine equality is structural. This is the
-    * general-graph sibling of [[graft.ext.Dedup]]'s bounded-round
-    * min-label clustering over LSH candidate pairs. */
+    * general-graph sibling of [[graft.ext.Dedup]]'s min-label clustering
+    * over LSH candidate pairs. */
   def connectedComponents(links: DataFrame, iters: Int = 10): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
-    // und feeds TWO materializations (nodes, undSelf) and references the
-    // corpus-sized links twice itself — checkpoint it once so the corpus
-    // pays one distill pass, not four scans across the two jobs
-    val und = Materialize(
-      links.select(col("src").as("a"), col("dst").as("b"))
-        .union(links.select(col("dst"), col("src")))
-        .filter(col("a") =!= col("b"))
-        .distinct())
-    val nodes = Materialize(und.select(col("a").as("host")).distinct())
     // self-loops fold the keep-own-label branch into the same MIN as the
     // neighbor labels, so every round references the label frame exactly
     // ONCE — double-referencing it (neighbor join + coalesce join) doubles
     // the logical plan per round and the optimizer chokes on 2^iters
-    // (measured: 10 rounds never finished analysis)
-    val undSelf = Materialize(und.union(
-      nodes.select(col("host").as("a"), col("host").as("b"))))
-    var lbl = nodes.select(col("host"), col("host").as("comp"))
-    for (_ <- 1 to iters) {
-      lbl = undSelf
+    val (src, dst) = (col("src"), col("dst"))
+    val edges = Materialize(links.filter(src =!= dst)
+      .select(explode(array(struct(src.as("a"), dst.as("b")),
+        struct(dst.as("a"), src.as("b")), struct(src.as("a"), src.as("b")),
+        struct(dst.as("a"), dst.as("b")))).as("e"))
+      .select("e.*").distinct())
+    var lbl = edges.filter(col("a") === col("b"))
+      .select(col("a").as("host"), col("a").as("comp"))
+    var (round, changed) = (0, 1L)
+    while (changed > 0 && round < iters) {
+      // the self-loop edge carries the node's old label as prev, so the
+      // convergence count rides the round's checkpoint
+      val (next, n) = Materialize.counting(edges
         .join(broadcast(lbl.withColumnRenamed("host", "a")), "a")
-        .groupBy(col("b").as("host")).agg(min("comp").as("comp"))
+        .groupBy(col("b").as("host")).agg(min("comp").as("comp"),
+          max(when(col("a") === col("b"), col("comp"))).as("prev")),
+        col("comp") =!= col("prev"))
+      lbl = next.select("host", "comp")
+      changed = n
+      round += 1
     }
-    val folded = Materialize(lbl)
-    val sizes = folded.groupBy("comp").agg(count(lit(1)).as("component_size"))
-    folded.join(broadcast(sizes), "comp")
-      .select(col("host"), col("comp").as("component"), col("component_size"))
+    lbl.select(col("host"), col("comp").as("component"),
+        count(lit(1)).over(Window.partitionBy("comp")).as("component_size"))
       .orderBy("host")
   }
 

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.ops.Materialize
 import graft.ops.Materialize.MaterializeOps
 
 /** Deduplication operators for a training-data pipeline: exact, MinHash+LSH,
@@ -296,15 +297,14 @@ object Dedup {
       // ids), so the self-join loses no rows.
       val reps = propagated
         .select(col("doc_id").as("rep_id"), col("cluster_rep").as("rep_rep"))
-      val updated = propagated
+      // the pre-round label rides the round as __old, so the convergence
+      // count is observed on the round's checkpoint job
+      val (updated, changed) = Materialize.counting(propagated
         .join(reps, propagated("cluster_rep") === reps("rep_id"))
         .select(col("doc_id"), col("__old"),
-          least(col("cluster_rep"), col("rep_rep")).as("cluster_rep"))
-        .materialized
-      // the pre-round label rides the materialized frame as __old, so the
-      // convergence read is a filter over the checkpoint — the former
-      // re-join of two checkpointed tables per round was pure overhead
-      converged = updated.filter(col("cluster_rep") =!= col("__old")).isEmpty
+          least(col("cluster_rep"), col("rep_rep")).as("cluster_rep")),
+        col("cluster_rep") =!= col("__old"))
+      converged = changed == 0
       labels = updated.select("doc_id", "cluster_rep")
       round += 1
     }

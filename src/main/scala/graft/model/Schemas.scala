@@ -36,10 +36,4 @@ object Schemas {
     * "Error Message" (invalid symbol) or "Note" (rate limit) instead.
     * Parsed as a map, typed in Sources.parseOverview. */
   val overviewPayload: MapType = MapType(StringType, StringType)
-
-  /** Typed company dimension produced by Sources.parseOverview. */
-  val overviewColumns: Seq[String] = Seq(
-    "symbol", "name", "description", "sector", "industry",
-    "market_cap", "pe_ratio", "eps", "dividend_yield",
-    "week52_high", "week52_low", "beta")
 }

@@ -1,11 +1,21 @@
 package graft
 
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
+import scala.util.Random
+
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.rng.Seed
+import org.scalacheck.util.Pretty
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.analytics.Graph
+import graft.ext.Dedup
 
-/** PageRank semantics on hand graphs with known solutions — the oracle
-  * cross-check proves engine==engine; these pin engine==MATH. */
+/** Graph kernel semantics on hand graphs with known solutions and on
+  * random graphs against plain-Scala references — the oracle cross-check
+  * proves engine==engine; these pin engine==MATH. */
 class GraphSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -108,5 +118,77 @@ class GraphSpec extends AnyFunSuite {
     // L1 contract: each score family sums to 1
     assert(math.abs(out.values.map(_._1).sum - 1.0) < 1e-9)
     assert(math.abs(out.values.map(_._2).sum - 1.0) < 1e-9)
+  }
+
+  /** `iters` unconditional min-label rounds over the symmetrized non-self
+    * links, in plain Scala: host -> (component, component size). */
+  private def referenceComponents(links: Seq[(String, String)],
+                                  iters: Int): Map[String, (String, Long)] = {
+    val nbrs = links.filter { case (a, b) => a != b }
+      .flatMap { case (a, b) => Seq(a -> b, b -> a) }.groupMap(_._1)(_._2)
+    var lbl = nbrs.map { case (v, _) => v -> v }
+    for (_ <- 1 to iters)
+      lbl = lbl.map { case (v, l) => v -> (l +: nbrs(v).map(lbl)).min }
+    val sizes = lbl.values.groupBy(identity).map { case (c, m) => c -> m.size.toLong }
+    lbl.map { case (v, c) => v -> (c, sizes(c)) }
+  }
+
+  /** A path of 2-14 nodes (longer than small `iters`), two disjoint stars,
+    * `src == dst` links (one on a node with no other link) and repeated
+    * edges, over shuffled names so the minimum label sits anywhere, with
+    * every link's direction flipped at random. */
+  private val genLinks: Gen[Seq[(String, String)]] = for {
+    path <- Gen.choose(2, 14)
+    leaves <- Gen.listOfN(2, Gen.choose(1, 4))
+    selfs <- Gen.choose(0, 3)
+    dups <- Gen.choose(1, 3)
+    seed <- Gen.long
+  } yield {
+    val rnd = new Random(seed)
+    val n = path + leaves.map(_ + 1).sum
+    val name = rnd.shuffle((0 to n).toVector).map(i => f"v$i%02d")
+    val stars = leaves.scanLeft(path)(_ + _ + 1).zip(leaves)
+      .flatMap { case (c, k) => (1 to k).map(j => (name(c), name(c + j))) }
+    val edges = (1 until path).map(i => (name(i - 1), name(i))) ++ stars
+    val loops = Seq.fill(selfs)(name(rnd.nextInt(n))) :+ name(n)
+    val all = edges ++ loops.map(v => (v, v)) ++ Seq.fill(dups)(edges(rnd.nextInt(edges.size)))
+    rnd.shuffle(all).map(e => if (rnd.nextBoolean()) e.swap else e)
+  }
+
+  private def components(df: org.apache.spark.sql.DataFrame): Map[String, (String, Long)] =
+    df.collect().map(r => r.getString(0) -> (r.getString(1), r.getLong(2))).toMap
+
+  test("connectedComponents equals iters unconditional min-label rounds on random graphs") {
+    // the loop stops at the first round that changes no label; that stop
+    // must be invisible: chains longer than iters stay partly labeled
+    val prop = Prop.forAllNoShrink(genLinks) { links =>
+      val df = links.toDF("src", "dst")
+      Prop.all(Seq(1, 2, 3, 10).map { iters =>
+        Prop(components(Graph.connectedComponents(df, iters)) ==
+          referenceComponents(links, iters)) :| s"iters=$iters links=$links"
+      }: _*)
+    }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(8)
+      .withWorkers(1).withInitialSeed(Seed(3L)), prop)
+    assert(res.passed, Pretty.pretty(res))
+  }
+
+  test("persist mode: connectedComponents and duplicateClusters match localCheckpoint and terminate") {
+    // under persist Materialize runs no action, so the convergence count
+    // needs one of its own: a blocking read would hang here
+    val links = Seq(("b", "a"), ("c", "b"), ("d", "c"), ("e", "d"), ("x", "y"), ("y", "y"))
+      .toDF("src", "dst")
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (7L, 8L)).toDF("doc_a", "doc_b")
+    def run() = Await.result(Future((
+      components(Graph.connectedComponents(links, 3)),
+      components(Graph.connectedComponents(links)),
+      Dedup.duplicateClusters(pairs).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)),
+      2.minutes)
+    val viaCheckpoint = run()
+    spark.conf.set(graft.ops.Materialize.ConfKey, "persist")
+    val viaPersist = try run() finally spark.conf.unset(graft.ops.Materialize.ConfKey)
+    assert(viaPersist == viaCheckpoint)
+    assert(viaCheckpoint._1("e") == ("b", 1L) && viaCheckpoint._2("e") == ("a", 5L))
+    assert(viaCheckpoint._3 == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 7L -> 7L, 8L -> 7L))
   }
 }

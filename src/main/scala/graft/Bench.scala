@@ -98,15 +98,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession()
     // the per-query unpersist below triggers one benign WARN per freed
     // localCheckpoint RDD ("lineage has been truncated") — ~1000 lines per
     // pass that would drown the per-query timings on stderr
@@ -148,10 +140,8 @@ object Bench {
     // requires every new query to land with a measured sf0.1 median, and
     // a full 3-pass sweep to measure 8 queries is wasted wall-clock. The
     // driver never sets this, so driver rounds always run the full map.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+    val queries = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .fold(SparkEntry.queries.toSeq)(SparkEntry.select).sortBy(_._1)
     // Wall-clock budget: under heavy host contention one pass has taken up
     // to ~900 s; never start a pass that would push the total past the
     // budget (pass 1 always runs — every query needs >= 1 sample; median

@@ -215,15 +215,7 @@ object RecallProbe {
 
   def main(args: Array[String]): Unit = {
     val dir = args.lift(0).getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession()
 
     sweep(spark, io.Sources.embeddings(spark, dir).localCheckpoint(true),
       s"$dir (near-uniform)")

@@ -180,15 +180,7 @@ object ScalingProbe {
       "target/scaledata/sf1.0" -> base,
       "target/scaledata/sf10" -> "target/scaledata/sf1.0")
     val iters = sys.env.getOrElse("SPARK_GRAFT_PROBE_ITERS", "3").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession()
 
     // a corpus is present if lineitem.parquet is either a single parquet
     // FILE (the driver's testdata layout) or a Spark-written DIRECTORY with
@@ -222,8 +214,7 @@ object ScalingProbe {
     // focused re-adjudication of one noisy query: SPARK_GRAFT_PROBE_QUERIES
     // (comma-separated names) overrides the default top-10 list
     val names = sys.env.get("SPARK_GRAFT_PROBE_QUERIES")
-      .map(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty))
-      .getOrElse(probeNames)
+      .fold(probeNames)(SparkEntry.select(_).map(_._1))
     // Probe-only variants for queries whose REGISTERED form derives its
     // workload from the corpus in a way that confounds the scaling read.
     // c2's registered benchmark slice (vec_id % 37 == 0) grows 10x with the

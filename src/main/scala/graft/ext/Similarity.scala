@@ -735,9 +735,9 @@ object Similarity {
     // copies of the hop-0 subtree by the final action (the g3
     // single-reference iteration lesson). Materialize the bounded
     // (queries × beam)-row frame per hop instead — an r14 back-to-back
-    // A/B (Probe14) measured this per-hop form FASTEST locally too
-    // (1.2-1.6 s vs 1.6-2.3 s lazy at sf0.1), settling the r13 driver
-    // regression as host noise. The FINAL hop's beam is the exception:
+    // A/B (OPTIMIZATION_r14.md §3) measured this per-hop form FASTEST
+    // locally too (1.2-1.6 s vs 1.6-2.3 s lazy at sf0.1), settling the r13
+    // driver regression as host noise. The FINAL hop's beam is the exception:
     // it has exactly ONE consumer (the top-k window below, which shares
     // its sort order), so its checkpoint bought nothing — it rides the
     // final job lazily, one blocking job fewer per search.

@@ -1,10 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan regression guards: the scale properties ARCHITECTURE.md
@@ -478,54 +473,16 @@ class PlanSpec extends AnyFunSuite {
       s"g3's final plan must not rescan the corpus:\n$p")
   }
 
-  /** Spark jobs and `localCheckpoint` executions of `body`, counted by
-    * listeners; a marker query drains both (events arrive in order). */
-  private def traced(body: => Unit): (Int, Int) = {
-    val sc = spark.sparkContext
-    val jobs, checkpoints = new AtomicInteger
-    @volatile var jobsDrained, plansDrained = false
-    val jobListener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        e.properties.getProperty("spark.jobGroup.id") match {
-          case "graft-traced" => jobs.incrementAndGet()
-          case "graft-drain" => jobsDrained = true
-          case _ =>
-        }
-    }
-    val planListener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, ns: Long): Unit =
-        if (funcName == "localCheckpoint") checkpoints.incrementAndGet()
-        else if (qe.analyzed.toString.contains("graft_drain_marker")) plansDrained = true
-      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    sc.addSparkListener(jobListener)
-    spark.listenerManager.register(planListener)
-    try {
-      sc.setJobGroup("graft-traced", "traced")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup("graft-drain", "drain")
-      try spark.range(1).toDF("graft_drain_marker").collect() finally sc.clearJobGroup()
-      val deadline = System.currentTimeMillis() + 30000
-      while (!(jobsDrained && plansDrained) && System.currentTimeMillis() < deadline)
-        Thread.sleep(20)
-      assert(jobsDrained && plansDrained, "listener events did not drain")
-    } finally {
-      sc.removeSparkListener(jobListener)
-      spark.listenerManager.unregister(planListener)
-    }
-    (jobs.get, checkpoints.get)
-  }
-
   test("g3_components: job budget, and the rounds stop at the fixpoint") {
     // each residue class of the planted host graph is a complete graph, so
     // round 1 labels every host and round 2 changes nothing: one checkpoint
     // for the edge set plus one per round
-    val (jobs, checkpoints) = traced {
+    val r = Profile.run(spark) {
       Queries.all("g3_components")(spark, dir)
         .write.format("noop").mode("overwrite").save()
     }
-    assert(jobs <= 15, s"g3_components ran $jobs Spark jobs")
-    assert(checkpoints == 3, s"expected the edge set + 2 rounds, saw $checkpoints checkpoints")
+    assert(r.jobs <= 15, s"g3_components ran ${r.jobs} Spark jobs")
+    assert(r.checkpoints == 3, s"expected the edge set + 2 rounds, saw ${r.checkpoints} checkpoints")
   }
 
   test("HITS: distinct edges materialized once, reinforcement rounds broadcast") {

@@ -43,6 +43,34 @@ class SparkEntrySpec extends AnyFunSuite {
     assert(out.endsWith(s""","other":${Bench.f2(expectedOther)}}"""), out.takeRight(40))
   }
 
+  test("select trims names and rejects every unknown one") {
+    assert(SparkEntry.select(" a1_count ,j1_join_dims").map(_._1) ==
+      Seq("a1_count", "j1_join_dims"))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.select("a1_count, typo1,typo2"))
+    assert(e.getMessage.contains("typo1, typo2"), e.getMessage)
+    intercept[IllegalArgumentException](SparkEntry.select(" , "))
+  }
+
+  test("localSession carries the confs every oracle hash depends on") {
+    val s = SparkEntry.localSession("2")
+    assert(s.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(s.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(s.conf.get("spark.sql.shuffle.partitions") == "2")
+    assert(s.sparkContext.getConf.get("spark.ui.enabled") == "false")
+  }
+
+  test("SparkEntry.scala holds the only SparkSession builder in src/main") {
+    import scala.jdk.CollectionConverters._
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val builders = try files.iterator.asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        java.nio.file.Files.readString(p).contains("SparkSession.builder"))
+      .map(_.getFileName.toString).toSeq
+    finally files.close()
+    assert(builders == Seq("SparkEntry.scala"))
+  }
+
   test("entry() returns rows on sf0.001") {
     assert(SparkEntry.entry(spark).limit(5).count() > 0)
   }

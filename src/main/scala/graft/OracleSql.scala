@@ -625,7 +625,7 @@ object OracleSql {
   // candidates embed the engine's 3-iteration Lloyd's k-means as unrolled
   // CTEs — argmin on the tie-safe-rounded subspace distance with centroid
   // tiebreak, centroid means ROUND(..., 9), empty cells keep the previous
-  // centroid — exactly graft.ext.Similarity.learnPqFromLong's discipline.
+  // centroid — exactly graft.ext.Similarity.lloyd's discipline.
 
   /** One Lloyd's iteration chain over population CTE `pop` (columns
     * vec_id, s, d, v), seeded from codebook CTE `seed`; returns the CTEs

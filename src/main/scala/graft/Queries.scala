@@ -3342,95 +3342,32 @@ object Queries {
     recallReport(s, dir, queryCap = 2000L)
 
   /** PQ codebook-configuration scorecard as a FIRST-CLASS query (r11
-    * verdict item #4): [[graft.ext.Similarity.choosePqConfig]]'s measured
-    * selection, registered so a production pipeline can read the decision
-    * the way sim20/sim22 expose recall. Each candidate configuration runs
-    * the SAME IVF routing / code budget / shortlist / exact-rerank stack
-    * over the FIXED vec_id < 2000 query batch; recall@5 scores against
-    * the brute-force truth on that batch; the winner flag breaks ties
-    * toward the CHEAPER config in build-cost order (fixed < learned <
-    * residual — the choosePqConfig discipline).
+    * verdict item #4): [[graft.ext.Similarity.pqConfigScorecard]]'s
+    * measured selection, registered so a production pipeline can read the
+    * decision the way sim20/sim22 expose recall. Each candidate
+    * configuration runs the SAME IVF routing / code budget / shortlist /
+    * exact-rerank stack over the FIXED vec_id < 2000 query batch; recall@5
+    * scores against the brute-force truth on that batch; the winner flag
+    * ([[graft.ext.Similarity.flagWinner]]) breaks ties toward the CHEAPER
+    * config in build-cost order (fixed < learned < residual).
     *
     * Scope: the three RELATIONAL codebook families carry measured scores
     * (gate = 'oracle' — the cross-engine hash verifies them). The fourth
-    * choosePqConfig candidate (OPQ) trains its rotation through a
-    * driver-side eigendecomposition — the one computation no SQL oracle
-    * can express — so it appears as a DOCUMENTED-EXCLUSION row (r12
-    * verdict item #5): config 'opq' with NULL scores and gate naming the
-    * ScalaTest suite that measures it (ExtSpec, both recall fixtures).
-    * A pipeline reading this scorecard now sees all FOUR candidates with
-    * provenance explicit, and the oracle gate still verifies everything
-    * it can express.
-    *
-    * Shape at scale: selection is index-BUILD-time work — each candidate
-    * is linear in the corpus under the fixed batch (the sim18 shape), the
-    * learned/residual training passes are the bounded-iteration k-means
-    * the index build pays anyway, and the recall joins reduce
-    * batch-sized frames. */
+    * configuration (OPQ) trains its rotation through a driver-side
+    * eigendecomposition — the one computation no SQL oracle can express —
+    * so it appears as a DOCUMENTED-EXCLUSION row (r12 verdict item #5):
+    * config 'opq' with NULL scores and gate naming the ScalaTest suite
+    * that measures it (ExtSpec scores it through the same recall kernel
+    * on both recall fixtures). A pipeline reading this scorecard sees all
+    * FOUR candidates with provenance explicit, and the oracle gate still
+    * verifies everything it can express. */
   def sim21CodebookSelector(s: SparkSession, dir: String): DataFrame = {
     // the three candidate stacks and the truth scan all consume the same
-    // corpus and the same IVF routing — checkpoint the corpus once and
-    // score the anchors once, so each stack starts from the shared routed
-    // frame instead of re-reading parquet and re-scoring 16 anchors
-    // (values unchanged: same data, same windows — the r12 trim item)
+    // corpus — checkpoint it once instead of re-reading parquet per stack
     val emb = Materialize(Sources.embeddings(s, dir))
-    val cap = 2000L
-    val anchors = ext.Similarity.ivfAnchors(s)
-    val (assigned, probes) = ext.Similarity.ivfRoute(emb, anchors,
-      queryCap = cap)
-    val routing = Some((Materialize(assigned), Materialize(probes)))
-    val truth = Materialize(
-      ext.Similarity.bruteForceTopK(emb, queryCap = cap)
-        .select("query_id", "vec_id"))
-    val nTruth = truth.agg(count(lit(1)).as("n_truth"))
-    def report(config: String, buildCost: Int, approx: DataFrame): DataFrame =
-      truth.join(approx.select("query_id", "vec_id"),
-          Seq("query_id", "vec_id"), "left_semi")
-        .agg(count(lit(1)).as("hits"))
-        .crossJoin(broadcast(nTruth))
-        .select(lit(config).as("config"),
-          lit(buildCost).as("build_cost"), col("hits"), col("n_truth"),
-          Num.cround(col("hits").cast("double") / col("n_truth"), 6)
-            .as("recall_at_5"))
-    // the learned and residual stacks each run an EAGER k-means training
-    // (per-iteration checkpoints — unavoidable lineage control), which
-    // would otherwise serialize behind one another during plan
-    // CONSTRUCTION; building the three report frames on parallel threads
-    // lets those small training jobs interleave on the idle cores (Spark
-    // job submission is thread-safe; values are independent per stack).
-    // The UNION itself stays lazy — one final job still schedules the
-    // three stacks' remaining stages concurrently.
-    import scala.concurrent.Await
-    import scala.concurrent.duration.Duration
-    // ConcurrentJobs (not the global EC): the dedicated pool carries the
-    // bench's job description onto the worker threads, so the training
-    // jobs attribute to sim21 in the UI/event log (r14; the ingest
-    // kernels made the same move)
-    val fFixed = graft.ops.ConcurrentJobs.submit(s.sparkContext)(
-      report("fixed", 0,
-        ext.Similarity.ivfPqTopKRerank(emb, anchors,
-          ext.Similarity.pqCodebook(s), queryCap = cap,
-          routingOpt = routing)))
-    val fLearned = graft.ops.ConcurrentJobs.submit(s.sparkContext)(
-      report("learned", 1,
-        ext.Similarity.ivfPqTopKRerank(emb, anchors,
-          ext.Similarity.learnPqCodebook(emb), queryCap = cap,
-          routingOpt = routing)))
-    val fResidual = graft.ops.ConcurrentJobs.submit(s.sparkContext)(
-      report("residual", 2,
-        ext.Similarity.ivfPqResidualTopKRerank(emb, anchors,
-          queryCap = cap, routingOpt = routing)))
-    val rows = Await.result(fFixed, Duration.Inf)
-      .unionByName(Await.result(fLearned, Duration.Inf))
-      .unionByName(Await.result(fResidual, Duration.Inf))
-    // 3-row frame: the single-partition window is the point, not a smell
-    val wAll = Window.orderBy(desc("recall_at_5"), col("build_cost"))
-    val scored = rows.withColumn("is_winner", row_number().over(wAll) === 1)
+    val scored = ext.Similarity.flagWinner(
+        ext.Similarity.pqConfigScorecard(emb, ext.Similarity.ivfAnchors(s)))
       .withColumn("gate", lit("oracle"))
-    // the documented-exclusion row: OPQ is evaluated, but its rotation
-    // trains driver-side (eigendecomposition) — gate names the spec that
-    // measures it instead of the SQL oracle, and it never contends for
-    // is_winner here (choosePqConfig, which CAN run it, does that)
     val opqRow = s.range(1).select(
       lit("opq").as("config"), lit(3).as("build_cost"),
       lit(null).cast("long").as("hits"),
@@ -3448,16 +3385,10 @@ object Queries {
     val truth = Materialize(
       ext.Similarity.bruteForceTopK(emb, queryCap = queryCap)
         .select("query_id", "vec_id"))
-    val nTruth = truth.agg(count(lit(1)).as("n_truth"))
     def report(method: String, approx: DataFrame): DataFrame =
-      truth
-        .join(approx.select("query_id", "vec_id"),
-          Seq("query_id", "vec_id"), "left_semi")
-        .agg(count(lit(1)).as("hits"))
-        .crossJoin(broadcast(nTruth))
+      ext.Similarity.recall(truth, approx)
         .select(lit(method).as("method"), col("hits"), col("n_truth"),
-          Num.cround(col("hits").cast("double") / col("n_truth"), 6)
-            .as("recall_at_5"))
+          col("recall").as("recall_at_5"))
     report("lsh",
         ext.Similarity.lshTopK(emb, ext.Similarity.planes(s), k = 5,
           queryCap = queryCap))

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * path's recall against the sim1 brute-force truth, sweep the learned
   * codebook knobs (IVF and PQ), and measure the exact-rerank tier.
   *
-  * Two corpora, because one can't separate operator quality from corpus
+  * Three corpora, because one can't separate operator quality from corpus
   * pathology:
   *   - the driver's sf fixture (near-uniform sphere embeddings — true
   *     neighbors sit at cosine ~0.3-0.4, adversarial to every hashing
@@ -16,27 +16,23 @@ import org.apache.spark.sql.functions._
   *   - [[plantedEmbeddings]], a planted-neighborhood corpus with real
   *     cluster structure (k md5-derived centers + bounded noise — true
   *     neighbors at cosine ~0.9+, the geometry real embedding corpora
-  *     have), where hashing-path success is actually measurable.
+  *     have), where hashing-path success is actually measurable;
+  *   - [[anisotropicEmbeddings]], the planted corpus with a per-dimension
+  *     variance decay in storage order (the OPQ fixture).
+  * The ExtSpec recall gates and the PQ-config scorecard test read the
+  * same fixtures.
   *
   * recall@k = |approx ∩ truth| / |truth| summed over the query set, with
-  * truth = [[ext.Similarity.bruteForceTopK]] at the same (queryMod, k).
-  * Computed with a join + one aggregate — no per-row driver collects; the
-  * single `.first()` pulls the one-row (hits, total) scalar per config
-  * (same dev-tool scalar-pull pattern as ScalingProbe).
+  * truth = [[ext.Similarity.bruteForceTopK]] at the same (queryMod, k),
+  * read from [[ext.Similarity.recall]] — the engine's one recall kernel,
+  * the same one sim20/sim21/sim22 and the ExtSpec gates use. Each table
+  * row is one `.first()` of that kernel's one-row (hits, n_truth, recall)
+  * frame (same dev-tool scalar-pull pattern as ScalingProbe).
   *
   * Usage: runMain graft.RecallProbe [sfDir] (default the driver's sf0.1)
   * Prints one markdown table per corpus for COVERAGE.md.
   */
 object RecallProbe {
-
-  /** recall of `approx` against `truth`, both (query_id, vec_id[, ...]). */
-  def recall(approx: DataFrame, truth: DataFrame): Double = {
-    val t = truth.select(col("query_id"), col("vec_id"))
-    val hit = approx.select(col("query_id"), col("vec_id"))
-      .join(t, Seq("query_id", "vec_id"), "inner")
-    val r = t.agg(count(lit(1))).first().getLong(0)
-    if (r == 0) 0.0 else hit.agg(count(lit(1))).first().getLong(0).toDouble / r
-  }
 
   /** Planted-neighborhood embedding corpus (round-9 verdict item #2):
     * `nClusters` md5-derived centers (coordinates uniform in [-1, 1]),
@@ -99,78 +95,78 @@ object RecallProbe {
     println(s"\ncorpus=$corpus vectors=${emb.count()} queries=$nq k=$k")
     println("| path | config | recall@5 |")
     println("|---|---|---|")
-    def row(path: String, config: String, r: Double): Unit =
-      println(f"| $path | $config | $r%.3f |")
+    def row(path: String, config: String, approx: DataFrame): Unit =
+      println(s"| $path | $config | " + "%.3f".format(
+        Similarity.recall(truth, approx).first().getAs[Any]("recall")) + " |")
 
     // sim2: hyperplane-LSH bucketed top-k (registered config nPlanes=8)
     for (nPlanes <- Seq(4, 6, 8)) {
-      val r = recall(Similarity.lshTopK(emb,
-        Similarity.planes(spark, nPlanes = nPlanes), queryMod = qm, k = k,
-        nPlanes = nPlanes), truth)
-      row("sim2 lsh", s"nPlanes=$nPlanes (2^$nPlanes buckets)", r)
+      row("sim2 lsh", s"nPlanes=$nPlanes (2^$nPlanes buckets)",
+        Similarity.lshTopK(emb,
+          Similarity.planes(spark, nPlanes = nPlanes), queryMod = qm, k = k,
+          nPlanes = nPlanes))
     }
 
     // sim6: multi-probe over the registered 256-bucket config — recall
     // recovered per extra probed bucket at (probes+1)x candidate cost
     for (probes <- Seq(1, 2, 4, 8)) {
-      val r = recall(Similarity.lshTopKMultiProbe(emb,
-        Similarity.planes(spark), queryMod = qm, k = k, probes = probes),
-        truth)
-      row("sim6 multiprobe", s"nPlanes=8 probes=$probes", r)
+      row("sim6 multiprobe", s"nPlanes=8 probes=$probes",
+        Similarity.lshTopKMultiProbe(emb,
+          Similarity.planes(spark), queryMod = qm, k = k, probes = probes))
     }
 
     // sim3: IVF fixed codebook — nprobe sweep at the registered nLists
     for (nprobe <- Seq(1, 2, 4)) {
-      val r = recall(Similarity.ivfTopK(emb,
-        Similarity.ivfAnchors(spark), queryMod = qm, k = k,
-        nprobe = nprobe), truth)
-      row("sim3 ivf fixed", s"nLists=16 nprobe=$nprobe", r)
+      row("sim3 ivf fixed", s"nLists=16 nprobe=$nprobe",
+        Similarity.ivfTopK(emb,
+          Similarity.ivfAnchors(spark), queryMod = qm, k = k,
+          nprobe = nprobe))
     }
 
     // sim3: learned codebook at the registered/ExtSpec-tracked shape
     val learnedIvf = Similarity.learnIvfAnchors(emb).localCheckpoint(true)
     row("sim3 ivf learned", "nLists=16 iters=3 nprobe=2",
-      recall(Similarity.ivfTopK(emb, learnedIvf,
-        queryMod = qm, k = k, nprobe = 2), truth))
+      Similarity.ivfTopK(emb, learnedIvf,
+        queryMod = qm, k = k, nprobe = 2))
 
     // sim5: prefix-rerank — shortlist depth sweep (stage-2 rerank is exact,
     // so recall == shortlist's coverage of the true top-k)
     for (shortlist <- Seq(10, 20, 50, 100)) {
-      val r = recall(Similarity.prefixRerankTopK(emb, pdims = 16,
-        shortlist = shortlist, queryMod = qm, k = k), truth)
-      row("sim5 prefix-rerank", s"pdims=16 shortlist=$shortlist", r)
+      row("sim5 prefix-rerank", s"pdims=16 shortlist=$shortlist",
+        Similarity.prefixRerankTopK(emb, pdims = 16,
+          shortlist = shortlist, queryMod = qm, k = k))
     }
 
     // sim7: PQ/ADC point accuracy at depth k — fixed vs learned codebook
     val fixedCb = Similarity.pqCodebook(spark)
     val learnedCb = Similarity.learnPqCodebook(emb).localCheckpoint(true)
     row("sim7 pq adc", "nSub=8 nCentroids=16 fixed",
-      recall(Similarity.pqTopK(emb, fixedCb, queryMod = qm, k = k), truth))
+      Similarity.pqTopK(emb, fixedCb, queryMod = qm, k = k))
     row("sim7 pq adc", "nSub=8 nCentroids=16 learned iters=3",
-      recall(Similarity.pqTopK(emb, learnedCb, queryMod = qm, k = k), truth))
+      Similarity.pqTopK(emb, learnedCb, queryMod = qm, k = k))
 
     // sim7 + rerank: ADC coverage at depth `shortlist`, exact-rerank to k
     for (shortlist <- Seq(10, 25, 50, 100)) {
       row("sim7 pq+rerank", s"fixed shortlist=$shortlist",
-        recall(Similarity.pqTopKRerank(emb, fixedCb, queryMod = qm, k = k,
-          shortlist = shortlist), truth))
+        Similarity.pqTopKRerank(emb, fixedCb, queryMod = qm, k = k,
+          shortlist = shortlist))
       row("sim7 pq+rerank", s"learned shortlist=$shortlist",
-        recall(Similarity.pqTopKRerank(emb, learnedCb, queryMod = qm, k = k,
-          shortlist = shortlist), truth))
+        Similarity.pqTopKRerank(emb, learnedCb, queryMod = qm, k = k,
+          shortlist = shortlist))
     }
 
     // sim8: IVF routing x PQ distance, then the full production stack
     // (routing x ADC proposal x exact rerank)
     row("sim8 ivf-pq", "nLists=16 nprobe=2 nSub=8 fixed",
-      recall(Similarity.ivfPqTopK(emb, Similarity.ivfAnchors(spark),
-        fixedCb, queryMod = qm, k = k), truth))
+      Similarity.ivfPqTopK(emb, Similarity.ivfAnchors(spark),
+        fixedCb, queryMod = qm, k = k))
     row("sim8 ivf-pq+rerank", "fixed cb, fixed anchors, shortlist=50",
-      recall(Similarity.ivfPqTopKRerank(emb, Similarity.ivfAnchors(spark),
-        fixedCb, queryMod = qm, k = k, shortlist = 50), truth))
+      Similarity.ivfPqTopKRerank(emb, Similarity.ivfAnchors(spark),
+        fixedCb, queryMod = qm, k = k, shortlist = 50))
     for (shortlist <- Seq(50, 100))
       row("sim8 ivf-pq+rerank", s"learned cb+anchors, shortlist=$shortlist",
-        recall(Similarity.ivfPqTopKRerank(emb, learnedIvf,
-          learnedCb, queryMod = qm, k = k, shortlist = shortlist), truth))
+        Similarity.ivfPqTopKRerank(emb, learnedIvf,
+          learnedCb, queryMod = qm, k = k, shortlist = shortlist))
 
     // residual IVFADC (the actual FAISS formulation): PQ over
     // list-centroid residuals at the SAME code budget (8x16x8) — on a
@@ -178,27 +174,27 @@ object RecallProbe {
     // cluster centers (same-cluster vectors -> identical codes -> ADC
     // ties), which residuals repair
     row("sim8 residual ivf-pq", "learned anchors, residual-learned cb",
-      recall(Similarity.ivfPqResidualTopK(emb, learnedIvf,
-        queryMod = qm, k = k), truth))
+      Similarity.ivfPqResidualTopK(emb, learnedIvf,
+        queryMod = qm, k = k))
     for (shortlist <- Seq(50, 100))
       row("sim8 residual+rerank", s"learned anchors, shortlist=$shortlist",
-        recall(Similarity.ivfPqResidualTopKRerank(emb, learnedIvf,
-          queryMod = qm, k = k, shortlist = shortlist), truth))
+        Similarity.ivfPqResidualTopKRerank(emb, learnedIvf,
+          queryMod = qm, k = k, shortlist = shortlist))
 
     // OPQ (parametric rotation, Ge et al. 2013): same 8x16x8 code budget,
     // codebook trained in the eigen-allocated basis — ADC-only shows the
     // raw codebook-quality delta, the rerank rows the production shape
     row("opq pq adc", "rotated, learned, nSub=8",
-      recall(Similarity.opqPqTopK(emb, queryMod = qm, k = k), truth))
+      Similarity.opqPqTopK(emb, queryMod = qm, k = k))
     for (shortlist <- Seq(25, 50))
       row("opq pq+rerank", s"rotated, learned, shortlist=$shortlist",
-        recall(Similarity.opqPqTopKRerank(emb, queryMod = qm, k = k,
-          shortlist = shortlist), truth))
+        Similarity.opqPqTopKRerank(emb, queryMod = qm, k = k,
+          shortlist = shortlist))
     // the selector's architecture: IVF routing + ADC + rerank, everything
-    // learned in the rotated basis (the 4th choosePqConfig candidate)
+    // learned in the rotated basis (the opq row of the PQ-config scorecard)
     row("opq ivf-pq+rerank", "rotated anchors+cb, shortlist=50",
-      recall(Similarity.opqIvfPqTopKRerank(emb, queryMod = qm, k = k,
-        shortlist = 50), truth))
+      Similarity.opqIvfPqTopKRerank(emb, queryMod = qm, k = k,
+        shortlist = 50))
 
     // sim23: graph ANN — dual-seeded (LSH buckets ∪ IVF lists) NN-descent
     // build, beam-greedy search (the navigable-graph family). Per-query
@@ -209,8 +205,8 @@ object RecallProbe {
     // BUILD quality is the recall lever, so the sweep is (m, rounds).
     for ((mW, rounds) <- Seq((8, 1), (8, 2), (16, 1)))
       row("sim23 graph-ann", s"m=$mW rounds=$rounds beam=10 hops=3",
-        recall(Similarity.graphAnnTopK(emb, Similarity.planes(spark),
-          queryMod = qm, k = k, m = mW, descentRounds = rounds), truth))
+        Similarity.graphAnnTopK(emb, Similarity.planes(spark),
+          queryMod = qm, k = k, m = mW, descentRounds = rounds))
   }
 
   def main(args: Array[String]): Unit = {

@@ -112,6 +112,18 @@ object Dedup {
     sh.groupBy("doc_id").agg(mins.head, mins.tail: _*)
   }
 
+  /** The banded signature view (doc_id, band, band_value): band b is the
+    * concat of minhashes 2b and 2b+1. One layout for the batch self-join
+    * ([[lshCandidatePairs]]) and the incremental fresh-vs-all probe
+    * (IncrementalCuration.ingestBatch), so the two cannot drift apart. */
+  private[graft] def bands(signatures: DataFrame, nBands: Int): DataFrame = {
+    val stackArgs = (0 until nBands)
+      .map(b => s"$b, concat(CAST(mh_${2 * b} AS STRING), '_', CAST(mh_${2 * b + 1} AS STRING))")
+      .mkString(", ")
+    signatures.selectExpr("doc_id",
+      s"stack($nBands, $stackArgs) as (band, band_value)")
+  }
+
   /** LSH banding over the signatures: band b = concat of 2 consecutive
     * minhashes (collision probability j^2 per band — kills the j~0.03
     * background, keeps j>0.5 near-dups). Returns candidate pairs with the
@@ -127,17 +139,12 @@ object Dedup {
     * the near-dup cluster for a downstream connected-components pass. */
   def lshCandidatePairs(signatures: DataFrame, nBands: Int = 8,
                         maxPerBucket: Int = DefaultMaxPerBucket): DataFrame = {
-    val stackArgs = (0 until nBands)
-      .map(b => s"$b, concat(CAST(mh_${2 * b} AS STRING), '_', CAST(mh_${2 * b + 1} AS STRING))")
-      .mkString(", ")
     // NOT persisted: both self-join sides recompute the signature subtree,
     // but that build is a cheap codegen'd single pass (see
     // minhashSignatures) and a persist here would leak cache for the
     // session lifetime (this is a library function — the caller owns
     // caching if the signatures are reused)
-    val bands = signatures.selectExpr(
-      "doc_id", s"stack($nBands, $stackArgs) as (band, band_value)")
-    val capped = bands
+    val capped = bands(signatures, nBands)
       .withColumn("__bn", row_number().over(
         org.apache.spark.sql.expressions.Window
           .partitionBy("band", "band_value").orderBy("doc_id")))

@@ -82,17 +82,6 @@ object IncrementalCuration {
       nIngested = 0L)
   }
 
-  /** Banded signature view (same band layout as
-    * [[Dedup.lshCandidatePairs]] — that function self-joins one frame;
-    * here the probe and build sides differ, so the banding is inlined). */
-  private def bands(signatures: DataFrame, nBands: Int): DataFrame = {
-    val stackArgs = (0 until nBands)
-      .map(b => s"$b, concat(CAST(mh_${2 * b} AS STRING), '_', CAST(mh_${2 * b + 1} AS STRING))")
-      .mkString(", ")
-    signatures.selectExpr("doc_id",
-      s"stack($nBands, $stackArgs) as (band, band_value)")
-  }
-
   /** Fold one arriving batch into the state: exact dedup (within batch +
     * against history), fresh-vs-all LSH candidates, exact-Jaccard
     * verification, union-find merge. Only the per-batch DELTAS are
@@ -128,14 +117,14 @@ object IncrementalCuration {
     val freshSigs = Dedup.minhashSignatures(freshDocs, cfg.nHashes)
       .materialized
     val allSigs = state.signatures.unionByName(freshSigs)
-    val freshBands = bands(freshSigs, cfg.nBands)
+    val freshBands = Dedup.bands(freshSigs, cfg.nBands)
     // cap election is per (band, band_value) and the candidate join is an
     // inner join on that key — so only buckets the fresh probe actually
     // touches can produce candidates, and capping just those buckets is
     // row-identical while keeping the row_number window delta-sized
     // instead of corpus-sized
     val probedBuckets = freshBands.select("band", "band_value").distinct()
-    val cappedAll = bands(allSigs, cfg.nBands)
+    val cappedAll = Dedup.bands(allSigs, cfg.nBands)
       .join(probedBuckets, Seq("band", "band_value"), "left_semi")
       .withColumn("__bn", row_number().over(
         org.apache.spark.sql.expressions.Window

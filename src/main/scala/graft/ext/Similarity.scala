@@ -81,6 +81,34 @@ object Similarity {
     call_function(nativeFnName, a, b)
   }
 
+  /** The per-query top-k cut every ranked search here ends with: rank by
+    * `score` descending with vec_id as the tiebreak, keep rank <= k. */
+  private def topKPerQuery(scored: DataFrame, k: Int,
+                           score: String = "cosine"): DataFrame =
+    scored.withColumn("rank", row_number().over(Window.partitionBy("query_id")
+        .orderBy(col(score).desc, col("vec_id"))))
+      .filter(col("rank") <= k)
+
+  /** Recall of an approximate top-k against its exact truth, both keyed
+    * (query_id, vec_id): one row of `hits` (truth rows that `approx` also
+    * returned — a left-semi membership join, so a repeated approx row
+    * counts once), `n_truth`, and `recall` = hits / n_truth,
+    * tie-safe-rounded at 6. An empty truth reads hits = 0, n_truth = 0 and
+    * a NULL recall — the DuckDB oracle's answer for the same division,
+    * where a plain ANSI divide would throw DIVIDE_BY_ZERO. The only recall
+    * computation in the engine: the sim20/sim22 reports, the sim21
+    * scorecard and RecallProbe's sweep all read it. */
+  def recall(truth: DataFrame, approx: DataFrame): DataFrame = {
+    val t = truth.select("query_id", "vec_id")
+    t.join(approx.select("query_id", "vec_id"),
+        Seq("query_id", "vec_id"), "left_semi")
+      .agg(count(lit(1)).as("hits"))
+      .crossJoin(broadcast(t.agg(count(lit(1)).as("n_truth"))))
+      .select(col("hits"), col("n_truth"), graft.ops.Num.cround(
+        try_divide(col("hits").cast("double"), col("n_truth")), 6)
+        .as("recall"))
+  }
+
   /** Brute-force cosine top-k: deterministic query subset
     * (vec_id % queryMod == 0, optionally capped below `queryCap` — the
     * fixed-batch production shape) against the full corpus. Ranking uses
@@ -95,11 +123,7 @@ object Similarity {
         col("vec_id") =!= col("query_id"))
       .withColumn("cosine", graft.ops.Num.cround(
         nativeCosine(col("emb_d"), col("q_emb")), 6))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "vec_id", "cosine")
+    topKPerQuery(scored, k).select("query_id", "rank", "vec_id", "cosine")
   }
 
   /** Two-stage prefix-dimension rerank top-k — the Matryoshka-retrieval
@@ -151,10 +175,7 @@ object Similarity {
       .join(broadcast(qFull), "query_id")
       .withColumn("cosine", graft.ops.Num.cround(
         nativeCosine(col("emb_d"), col("q_d")), 6))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topKPerQuery(scored, k)
       .select("query_id", "rank", "vec_id", "cosine", "pre_cosine")
   }
 
@@ -195,54 +216,20 @@ object Similarity {
         (conv(substring(md5(concat(col("c"), lit("~"), col("d"))), 1, 8), 16, 10)
           .cast("long") % 2001 - 1000).cast("double") / 1000.0)
 
-  /** Learned IVF codebook: Lloyd's k-means over (a sample of) the corpus,
-    * refining the fixed md5 codebook for `iters` iterations — fixed
-    * iteration count, deterministic init/tie-breaks, and centroid means
-    * rounded to 9 dp (shuffle-arrival summation order perturbs the last
-    * ulps; rounding well above that noise makes runs reproducible).
-    * The learned path is spec-checked by recall, while sim3's oracle path
-    * keeps the fixed codebook.
-    *
-    * Fully distributed: assignment is an exploded broadcast join against
-    * the tiny centroid table + min_by argmin; the update is one
-    * (c, d)-grouped mean. Per iteration that is two shuffles whose rows
-    * are (sample_size × nLists) scores and (nLists × dims) centroids —
-    * never the corpus itself; `sampleMod` subsamples the training set the
-    * way a 100 TB deployment trains its coarse quantizer on a slice. The
-    * exploded sample is checkpointed once and reused across iterations.
-    * Empty lists keep their previous centroid. */
+  /** Learned IVF codebook: Lloyd's k-means over the corpus, refining the
+    * fixed md5 codebook for `iters` iterations. It is [[lloyd]] with one
+    * subspace spanning all `dims` coordinates, seeded by [[ivfAnchors]]:
+    * the same loop, argmin and rounding that train the PQ codebooks. The
+    * learned path is spec-checked by recall, while sim3's oracle path keeps
+    * the fixed codebook. To train on a slice of a large corpus, filter
+    * `emb` first. Output (c, d, w), the [[ivfAnchors]] layout. */
   def learnIvfAnchors(emb: DataFrame, nLists: Int = 16, dims: Int = 64,
-                      iters: Int = 3, sampleMod: Int = 1): DataFrame = {
-    val sample = (if (sampleMod > 1) emb.filter(col("vec_id") % sampleMod === 0)
-                  else emb)
-      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "v")))
-      .select(col("vec_id"), (col("pos") + 1).as("d"),
-        col("v").cast("double").as("v"))
-      .materialized
-    var centroids = ivfAnchors(emb.sparkSession, nLists, dims)
+                      iters: Int = 3): DataFrame =
+    lloyd(exploded(emb),
+      ivfAnchors(emb.sparkSession, nLists, dims)
+        .select(lit(0L).as("s"), col("c"), col("d"), col("w")),
+      dims, iters)
       .select("c", "d", "w")
-    for (_ <- 0 until iters) {
-      val assigned = sample.join(broadcast(centroids), "d")
-        .groupBy("vec_id", "c")
-        .agg(sum((col("v") - col("w")) * (col("v") - col("w"))).as("dist2"))
-        .groupBy("vec_id")
-        // argmin by (distance, list id): deterministic tie-break
-        .agg(min_by(col("c"), struct(col("dist2"), col("c"))).as("c"))
-      // round the mean to 9 dp: shuffle-arrival summation order perturbs
-      // the last ulps (~1e-16 relative), and an unrounded mean would make
-      // centroids — and therefore near-tie assignments and measured
-      // recall — differ run to run. 9 dp is far above the noise and far
-      // below any real centroid geometry.
-      val updated = sample.join(assigned, "vec_id")
-        .groupBy("c", "d").agg(round(avg(col("v")), 9).as("w"))
-      centroids = centroids.as("old")
-        .join(updated.as("new"), Seq("c", "d"), "left")
-        .select(col("c"), col("d"),
-          coalesce(col("new.w"), col("old.w")).as("w"))
-        .materialized
-    }
-    centroids
-  }
 
   /** Anchor-similarity scores per vector: (vec_id, c, score) where score =
     * dot(v, anchor_c) / |anchor_c| (|v| constant across lists, dropped). */
@@ -282,10 +269,7 @@ object Similarity {
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("cosine", graft.ops.Num.cround(
         nativeCosine(col("emb_d"), col("q_emb")), 6))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topKPerQuery(scored, k)
       .select("query_id", "rank", "vec_id", "list_id", "cosine")
   }
 
@@ -362,10 +346,7 @@ object Similarity {
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("cosine", graft.ops.Num.cround(
         nativeCosine(col("emb_d"), col("q_emb")), 6))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topKPerQuery(scored, k)
       .join(emb.select(col("vec_id"), col("label")), "vec_id")
       .select("query_id", "rank", "vec_id", "list_id", "label", "cosine")
   }
@@ -443,10 +424,7 @@ object Similarity {
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("cosine", graft.ops.Num.cround(
         nativeCosine(col("emb_d"), col("q_emb")), 6))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topKPerQuery(scored, k)
       .select("query_id", "rank", "vec_id", "bucket", "cosine")
   }
 
@@ -541,10 +519,7 @@ object Similarity {
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("cosine", graft.ops.Num.cround(
         nativeCosine(col("emb_d"), col("q_emb")), 6))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topKPerQuery(scored, k)
       .select("query_id", "rank", "vec_id", "bucket", "cosine")
   }
 
@@ -759,9 +734,7 @@ object Similarity {
       beamDf = topBeam(beamDf.unionByName(expanded).distinct())
       if (hop < hops) beamDf = beamDf.materialized
     }
-    beamDf.withColumn("rank", row_number().over(wQ))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "vec_id", "cosine")
+    topKPerQuery(beamDf, k).select("query_id", "rank", "vec_id", "cosine")
   }
 
   /** Symmetric per-vector int8 scalar quantization: scale = max|x| / 127,
@@ -826,10 +799,7 @@ object Similarity {
       .withColumn("rrf", graft.ops.Num.cround(
         coalesce(lit(1.0) / (lit(c) + col("lsh_rank")), lit(0.0)) +
           coalesce(lit(1.0) / (lit(c) + col("ivf_rank")), lit(0.0)), 6))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("rrf").desc, col("vec_id"))
-    fused.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= kOut)
+    topKPerQuery(fused, kOut, "rrf")
       .select("query_id", "rank", "vec_id", "lsh_rank", "ivf_rank", "rrf")
   }
 
@@ -913,7 +883,7 @@ object Similarity {
     * (the [[planes]] recipe, salt "pq") — reproducible from public md5
     * alone, hence oracle-checkable, while preserving the PQ execution
     * shape exactly (a production deployment swaps in k-means subspace
-    * codebooks the way [[learnIvfAnchors]] does for IVF). */
+    * codebooks, which [[learnPqCodebook]] trains). */
   def pqCodebook(spark: SparkSession, nSub: Int = 8, nCentroids: Int = 16,
                  subDim: Int = 8): DataFrame =
     spark.range(nSub).withColumnRenamed("id", "s")
@@ -924,47 +894,50 @@ object Similarity {
           lit("_"), col("d"))), 1, 8), 16, 10)
           .cast("long") % 2001 - 1000).cast("double") / 1000.0)
 
-  /** Learned PQ codebook: per-subspace Lloyd's k-means over the subvector
-    * population, seeded from the fixed md5 [[pqCodebook]] — the
-    * [[learnIvfAnchors]] recipe applied independently to each of the nSub
-    * 8-dim subspaces (production PQ trains exactly this way: k-means per
-    * subspace over a corpus sample; Jegou et al. 2011 §III). Deterministic
-    * like its IVF sibling: fixed iteration count, md5 init, tie-safe
-    * argmin on the 6-dp-rounded subspace distance (the [[pqEncode]]
-    * discipline), centroid means rounded to 9 dp so shuffle-arrival
-    * summation ulps can't drift a codebook across runs. Empty cells keep
-    * their previous centroid.
+  /** Learned PQ codebook: per-subspace Lloyd's k-means ([[lloyd]]) over
+    * the subvector population, seeded from the fixed md5 [[pqCodebook]] —
+    * k-means run independently in each of the nSub 8-dim subspaces
+    * (production PQ trains exactly this way: k-means per subspace over a
+    * corpus sample; Jegou et al. 2011 §III). To train on a slice of a
+    * large corpus, filter `emb` first. */
+  def learnPqCodebook(emb: DataFrame, nSub: Int = 8, nCentroids: Int = 16,
+                      subDim: Int = 8, iters: Int = 3): DataFrame =
+    lloyd(exploded(emb), pqCodebook(emb.sparkSession, nSub, nCentroids, subDim),
+      subDim, iters)
+
+  /** The (vec_id, pos, v) training population of the raw coordinates. */
+  private def exploded(emb: DataFrame): DataFrame =
+    emb.select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "v")))
+      .select(col("vec_id"), col("pos"), col("v").cast("double").as("v"))
+
+  /** THE Lloyd's k-means loop: every learned codebook in the engine (PQ,
+    * residual PQ, and the IVF anchors as a single subspace of `subDim` =
+    * dims) trains here. Population: (vec_id, pos, v) with 0-based `pos`,
+    * split into subspace s = pos / subDim and in-subspace coordinate
+    * d = pos % subDim + 1. Seed: an (s, c, d, w) codebook.
+    *
+    * Deterministic: fixed iteration count, argmin on the 6-dp-rounded
+    * subspace distance with the centroid id as tiebreak (the [[pqEncode]]
+    * discipline — the per-subspace sums are doubles whose summation order
+    * differs run to run and engine to engine, so an unrounded argmin
+    * would let an ulp flip an assignment), and centroid means rounded to
+    * 9 dp, far above shuffle-arrival summation noise and far below any
+    * real centroid geometry. Empty cells keep their previous centroid.
     *
     * Fully distributed: per iteration the assignment is one exploded
-    * broadcast join against the (nSub x nCentroids x subDim)-row codebook
-    * + a (vec, subspace) argmin, and the update is one (s, c, d)-grouped
-    * mean — shuffled rows are (sample x nSub x nCentroids) scores and
-    * codebook-sized centroids, never the corpus; `sampleMod` trains on a
-    * slice the way a 100 TB deployment does. The exploded sample is
-    * checkpointed once and reused across iterations. */
-  def learnPqCodebook(emb: DataFrame, nSub: Int = 8, nCentroids: Int = 16,
-                      subDim: Int = 8, iters: Int = 3,
-                      sampleMod: Int = 1): DataFrame =
-    learnPqFromLong(
-      (if (sampleMod > 1) emb.filter(col("vec_id") % sampleMod === 0) else emb)
-        .select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "v")))
-        .select(col("vec_id"), col("pos"), col("v").cast("double").as("v")),
-      emb.sparkSession, nSub, nCentroids, subDim, iters)
-
-  /** The k-means loop of [[learnPqCodebook]] over an already-exploded
-    * (vec_id, pos, v) training population — shared with the residual
-    * trainer, whose population is `v - centroid(list(v))` rather than the
-    * raw coordinates. */
-  private def learnPqFromLong(popLong: DataFrame, spark: SparkSession,
-                              nSub: Int, nCentroids: Int, subDim: Int,
-                              iters: Int): DataFrame = {
-    val sample = popLong
+    * broadcast join against the codebook + a (vec, subspace) argmin, and
+    * the update is one (s, c, d)-grouped mean — shuffled rows are
+    * (population x nSub x nCentroids) scores and codebook-sized centroids,
+    * never the corpus. The population is checkpointed once and reused
+    * across iterations; each iteration's codebook is checkpointed. */
+  private def lloyd(population: DataFrame, seed: DataFrame, subDim: Int,
+                    iters: Int): DataFrame = {
+    val sample = population
       .withColumn("s", floor(col("pos") / subDim).cast("long"))
       .withColumn("d", col("pos") % subDim + 1)
       .select(col("vec_id"), col("s"), col("d"), col("v"))
       .materialized
-    var codebook = pqCodebook(spark, nSub, nCentroids, subDim)
-      .select("s", "c", "d", "w")
+    var codebook = seed.select("s", "c", "d", "w")
     for (_ <- 0 until iters) {
       val assigned = sample.join(broadcast(codebook), Seq("s", "d"))
         .groupBy("vec_id", "s", "c")
@@ -1109,10 +1082,7 @@ object Similarity {
       .join(broadcast(qFull), "query_id")
       .withColumn("cosine", graft.ops.Num.cround(
         nativeCosine(col("emb_d"), col("q_d")), 6))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topKPerQuery(scored, k)
       .select("query_id", "rank", "vec_id", "cosine", "adc_dist2")
   }
 
@@ -1275,8 +1245,8 @@ object Similarity {
       .materialized
     val codebook =
       if (learnedCodebook)
-        learnPqFromLong(resid.select("vec_id", "pos", "v"), spark,
-          nSub, nCentroids, subDim, iters)
+        lloyd(resid.select("vec_id", "pos", "v"),
+          pqCodebook(spark, nSub, nCentroids, subDim), subDim, iters)
       else pqCodebook(spark, nSub, nCentroids, subDim)
     val rl = resid
       .withColumn("s", floor(col("pos") / subDim).cast("long"))
@@ -1335,68 +1305,73 @@ object Similarity {
         routingOpt = routingOpt),
       queryMod, k, queryCap)
 
-  /** Measured PQ-configuration selector (r10 verdict item #2): the engine
-    * ships four codebook configurations for the IVF-PQ + exact-rerank
-    * stack — `fixed` (md5-derived codebook, no training pass), `learned`
-    * (raw-vector per-subspace k-means), `residual` (per-list residual
-    * k-means, the FAISS IVFADC form), `opq` (eigenvalue-allocation
-    * rotation + learned codebook and anchors in the rotated basis,
-    * [[opqIvfPqTopKRerank]]) — and their recall RANKING INVERTS
-    * with corpus geometry: raw-vector learned wins on a near-uniform
-    * corpus (there is no shared cluster component for residuals to
-    * remove, and the residual pass just re-centers noise), while residual
-    * wins decisively on a clustered one (raw-vector codebooks collapse
-    * onto the cluster centers, same-cluster vectors get identical codes,
-    * and ADC ties destroy within-cluster ranking — RecallProbe measures
-    * the inversion). No prose rule can pick per corpus, so this MEASURES:
-    * each candidate runs at the same anchors / code budget / shortlist
-    * over the probe query batch, recall@k is scored against the exact
-    * brute-force truth on that same batch, and the winner returns. Ties
-    * break toward the CHEAPER config in build-cost order fixed < learned
-    * < residual < opq (the fixed codebook skips the k-means passes;
-    * residual adds a corpus-linear residual pass on top of learned; opq
-    * additionally learns the rotation and re-learns the anchors in the
-    * rotated basis).
+  /** PQ codebook-configuration scorecard — the engine's one selector
+    * path. The IVF-PQ + exact-rerank stack ships several codebook
+    * configurations — `fixed` (md5-derived codebook, no training pass),
+    * `learned` (raw-vector per-subspace k-means), `residual` (per-list
+    * residual k-means, the FAISS IVFADC form), and `opq`
+    * ([[opqIvfPqTopKRerank]]) — and their recall RANKING INVERTS with
+    * corpus geometry: raw-vector learned wins on a near-uniform corpus
+    * (there is no shared cluster component for residuals to remove, and
+    * the residual pass just re-centers noise), while residual wins
+    * decisively on a clustered one (raw-vector codebooks collapse onto the
+    * cluster centers, same-cluster vectors get identical codes, and ADC
+    * ties destroy within-cluster ranking — RecallProbe measures the
+    * inversion). No prose rule can pick per corpus, so this MEASURES.
+    *
+    * One row per relational configuration: (config, build_cost, hits,
+    * n_truth, recall_at_5). Every stack runs at the same `anchors`, code
+    * budget, shortlist 50 and k = 5 over the FIXED query batch vec_id ≡ 0
+    * (mod 100) below 2000, and is scored by [[recall]] against the
+    * brute-force truth on that batch. `build_cost` is the build-cost
+    * order fixed < learned < residual (< opq, 3): the fixed codebook
+    * skips the k-means passes, residual adds a corpus-linear residual
+    * pass on top of learned, opq additionally learns a rotation and
+    * re-learns the anchors in the rotated basis. [[flagWinner]] breaks
+    * recall ties toward the cheaper build.
+    *
+    * The stacks share one IVF routing (identical at fixed anchors) and one
+    * truth scan, both materialized once. The learned and residual stacks
+    * each run an EAGER k-means training while their frames are built, so
+    * the three frames are built on [[graft.ops.ConcurrentJobs]] threads
+    * and those small training jobs interleave on idle cores instead of
+    * queueing; the union itself stays lazy.
     *
     * Shape at scale: selection is index-BUILD-time work, amortized over
-    * the index lifetime exactly like the encode itself; with a bounded
-    * probe batch (`queryCap`, the sim9-batch regime) every candidate AND
-    * the brute-force truth scan are linear in the corpus, and the recall
-    * joins reduce probe-batch-sized frames only. The per-candidate
-    * scores surface in the returned map so the choice is auditable. */
-  def choosePqConfig(emb: DataFrame, anchors: DataFrame,
-                     queryMod: Int = 100, k: Int = 5, shortlist: Int = 50,
-                     queryCap: Long = Long.MaxValue)
-      : (String, Map[String, Double]) = {
-    import graft.ops.Materialize.MaterializeOps
-    val truthAll = bruteForceTopK(emb, queryMod, k)
-    val truth = (if (queryCap == Long.MaxValue) truthAll
-                 else truthAll.filter(col("query_id") < queryCap)).materialized
-    def recallOf(approx: DataFrame): Double = {
-      val t = truth.select("query_id", "vec_id")
-      val total = t.count()
-      if (total == 0L) 0.0
-      else approx.select("query_id", "vec_id")
-        .join(t, Seq("query_id", "vec_id")).count().toDouble / total
-    }
-    val candidates = Seq(
-      "fixed" -> (() => ivfPqTopKRerank(emb, anchors,
-        pqCodebook(emb.sparkSession), queryMod, k, shortlist = shortlist,
-        queryCap = queryCap)),
-      "learned" -> (() => ivfPqTopKRerank(emb, anchors,
-        learnPqCodebook(emb), queryMod, k, shortlist = shortlist,
-        queryCap = queryCap)),
-      "residual" -> (() => ivfPqResidualTopKRerank(emb, anchors, queryMod,
-        k, shortlist = shortlist, queryCap = queryCap)),
-      "opq" -> (() => opqIvfPqTopKRerank(emb, queryMod, k,
-        shortlist = shortlist, queryCap = queryCap)))
-    val scores = candidates.map { case (name, mk) => name -> recallOf(mk()) }
-    // foldLeft with strict > keeps the FIRST (cheapest) max on ties
-    val winner = scores.foldLeft(scores.head) {
-      case (best, cand) => if (cand._2 > best._2) cand else best
-    }
-    (winner._1, scores.toMap)
+    * the index lifetime like the encode itself; with a bounded query
+    * batch every stack AND the truth scan are linear in the corpus, and
+    * the recall joins reduce batch-sized frames only. */
+  def pqConfigScorecard(emb: DataFrame, anchors: DataFrame): DataFrame = {
+    import scala.concurrent.Await
+    import scala.concurrent.duration.Duration
+    val spark = emb.sparkSession
+    val queryCap = 2000L
+    val (assigned, probes) = ivfRoute(emb, anchors, queryCap = queryCap)
+    val routing = Some((assigned.materialized, probes.materialized))
+    val truth = bruteForceTopK(emb, queryCap = queryCap)
+      .select("query_id", "vec_id").materialized
+    def scored(config: String, buildCost: Int)(approx: => DataFrame) =
+      graft.ops.ConcurrentJobs.submit(spark.sparkContext)(
+        recall(truth, approx).select(lit(config).as("config"),
+          lit(buildCost).as("build_cost"), col("hits"), col("n_truth"),
+          col("recall").as("recall_at_5")))
+    Seq(
+      scored("fixed", 0)(ivfPqTopKRerank(emb, anchors, pqCodebook(spark),
+        queryCap = queryCap, routingOpt = routing)),
+      scored("learned", 1)(ivfPqTopKRerank(emb, anchors,
+        learnPqCodebook(emb), queryCap = queryCap, routingOpt = routing)),
+      scored("residual", 2)(ivfPqResidualTopKRerank(emb, anchors,
+        queryCap = queryCap, routingOpt = routing)))
+      .map(Await.result(_, Duration.Inf))
+      .reduce(_ unionByName _)
   }
+
+  /** `is_winner` over a [[pqConfigScorecard]]-shaped frame: the highest
+    * recall_at_5, ties to the lowest build_cost. The frame is one row per
+    * configuration, so the single-partition window is the point. */
+  def flagWinner(card: DataFrame): DataFrame =
+    card.withColumn("is_winner", row_number().over(
+      Window.orderBy(desc("recall_at_5"), col("build_cost"))) === 1)
 
   // ------------------------------------------------------------------
   // OPQ: optimized product quantization (parametric rotation)
@@ -1518,14 +1493,14 @@ object Similarity {
   }
 
   /** [[ivfPqTopKRerank]] in the OPQ basis — the fourth
-    * [[choosePqConfig]] candidate: rotate the corpus, then learn BOTH the
+    * [[pqConfigScorecard]] configuration: rotate the corpus, then learn BOTH the
     * IVF anchors and the PQ codebook in the rotated coordinates (an IVF
     * coarse quantizer must live in the same basis as the codes it
     * routes), route x ADC-propose x exact-rerank as usual. Same
     * nLists / nSub x nCentroids x subDim budget as the other candidates;
     * the extra build cost is the rotation learning pass plus re-learning
     * anchors in the rotated basis — the most expensive of the four, which
-    * is why selector ties break away from it. */
+    * is why [[flagWinner]] ties break away from it. */
   def opqIvfPqTopKRerank(emb: DataFrame, queryMod: Int = 100, k: Int = 5,
                          nprobe: Int = 2, shortlist: Int = 50,
                          nSub: Int = 8, subDim: Int = 8,
@@ -1606,7 +1581,7 @@ object Similarity {
     * broadcast); the corpus explodes to (vec, dim) elements and reduces via
     * one (vec_id, label) partial-aggregated sum, then one argmin — shuffled
     * rows are (corpus x labels) score pairs, never pairwise corpus (the
-    * same shape [[learnIvfAnchors]]'s assignment step documents).
+    * same shape [[lloyd]]'s assignment step documents).
     * Determinism: distances compare tie-safe-ROUNDED (scale 6) with the
     * label id as tiebreak, so cross-engine summation-order ulps can never
     * flip a prediction. */

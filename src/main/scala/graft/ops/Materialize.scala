@@ -70,7 +70,7 @@ object Materialize {
   }
 
   /** `.materialized` — chainable form for mid-pipeline reuse points.
-    * Note for the iterative loops (duplicateClusters, learnIvfAnchors):
+    * Note for the iterative loops (duplicateClusters, Similarity.lloyd):
     * under `persist` the LOGICAL plan still grows per round (persist does
     * not truncate lineage, it only caches blocks); that is fine for the
     * bounded round counts these loops run (≤20 / 3), and it is exactly

@@ -77,17 +77,4 @@ object Skew {
     val want = (hottest + targetPerBucket - 1) / targetPerBucket
     math.max(1L, math.min(maxBuckets.toLong, want)).toInt
   }
-
-  /** Skew diagnostic: rows per key with share of total — what you run
-    * before deciding to salt or to repartition differently. */
-  def keyHistogram(df: DataFrame, key: String, topN: Int = 20): DataFrame = {
-    // single scan: the total comes from the per-key aggregate, not a second
-    // full pass over the fact table
-    val counts = df.groupBy(col(key)).agg(count(lit(1)).as("rows"))
-    val total = counts.agg(sum(col("rows")).as("__total"))
-    counts.crossJoin(broadcast(total))
-      .withColumn("share", col("rows") / col("__total"))
-      .drop("__total")
-      .orderBy(desc("rows")).limit(topN)
-  }
 }

@@ -189,22 +189,6 @@ object TemporalJoins {
     }: _*)
   }
 
-  /** `asofBackward` with a match-staleness bound: a matched right row older
-    * than `maxAgeDays` (relative to the left row's date) is discarded — its
-    * payload columns become null, as if no match existed. Time columns must
-    * be DATEs. The standard "don't join yesterday's quote to a bar from two
-    * years later" guard. */
-  def asofBackwardMaxAge(left: DataFrame, right: DataFrame, keys: Seq[String],
-                         leftTime: String, rightTime: String,
-                         maxAgeDays: Int): DataFrame = {
-    val joined = asofBackward(left, right, keys, leftTime, rightTime)
-    val fresh = datediff(col(leftTime), col(rightTime)) <= maxAgeDays
-    val payloadCols = right.columns.filterNot(keys.contains)
-    payloadCols.foldLeft(joined) { (df, c) =>
-      df.withColumn(c, when(fresh, col(c)))
-    }
-  }
-
   /** Range join: every (point, range) pair with the same join keys and
     * `rangeStart <= pointTs < rangeEnd` (half-open interval). All three
     * time expressions must be castable to LONG on a shared epoch (days,

@@ -19,6 +19,11 @@ class ExtSpec extends AnyFunSuite {
     (5L, "ab", "en") // < 3 tokens -> no shingles
   ).toDF("doc_id", "text", "lang")
 
+  /** The recall value of the engine's one recall kernel. */
+  private def measuredRecall(truth: org.apache.spark.sql.DataFrame,
+                             approx: org.apache.spark.sql.DataFrame): Double =
+    Similarity.recall(truth, approx).first().getAs[Double]("recall")
+
   test("exact dedup groups identical texts, keeps smallest doc_id") {
     val groups = Dedup.exactDuplicates(docs).collect()
     assert(groups.length == 5) // 6 docs, one pair collapsed
@@ -243,20 +248,13 @@ class ExtSpec extends AnyFunSuite {
     // scale it does: RecallProbe r9 measured fixed 0.300 / learned 0.430
     // (3 iters) / 0.440 (6 iters) at the registered nLists=16, nprobe=2.
     val emb = graft.io.Sources.embeddings(spark, "/root/testdata/sf0.1")
-    def sets(df: org.apache.spark.sql.DataFrame): Map[Long, Set[Long]] =
-      df.select("query_id", "vec_id").collect()
-        .groupBy(_.getLong(0))
-        .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
-    val truth = sets(Similarity.bruteForceTopK(emb, queryMod = 100, k = 5))
-    def recallOf(anchors: org.apache.spark.sql.DataFrame): Double = {
-      val got = sets(Similarity.ivfTopK(emb, anchors,
+    val truth = Similarity.bruteForceTopK(emb, queryMod = 100, k = 5)
+      .localCheckpoint(true)
+    def recallWith(anchors: org.apache.spark.sql.DataFrame): Double =
+      measuredRecall(truth, Similarity.ivfTopK(emb, anchors,
         queryMod = 100, k = 5, nprobe = 2))
-      val hits = truth.map { case (q, t) =>
-        (got.getOrElse(q, Set.empty[Long]) & t).size }.sum
-      hits.toDouble / truth.values.map(_.size).sum
-    }
-    val fixed = recallOf(Similarity.ivfAnchors(spark))
-    val learned = recallOf(Similarity.learnIvfAnchors(emb))
+    val fixed = recallWith(Similarity.ivfAnchors(spark))
+    val learned = recallWith(Similarity.learnIvfAnchors(emb))
     info(f"recall@5 fixed=$fixed%.3f learned=$learned%.3f")
     assert(learned > fixed,
       f"k-means codebook recall $learned%.3f not above fixed $fixed%.3f — " +
@@ -277,19 +275,11 @@ class ExtSpec extends AnyFunSuite {
     // -> learned + rerank@50 0.300 (and 0.350 for sim8's learned stack,
     // vs sim3-fixed's 0.300 at comparable candidate cost).
     val emb = graft.io.Sources.embeddings(spark, "/root/testdata/sf0.1")
-    def sets(df: org.apache.spark.sql.DataFrame): Map[Long, Set[Long]] =
-      df.select("query_id", "vec_id").collect()
-        .groupBy(_.getLong(0))
-        .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
-    val truth = sets(Similarity.bruteForceTopK(emb, queryMod = 100, k = 5))
-    def recallOf(df: org.apache.spark.sql.DataFrame): Double = {
-      val got = sets(df)
-      truth.map { case (q, t) => (got.getOrElse(q, Set.empty[Long]) & t).size }
-        .sum.toDouble / truth.values.map(_.size).sum
-    }
-    val fixedAdc = recallOf(Similarity.pqTopK(emb,
+    val truth = Similarity.bruteForceTopK(emb, queryMod = 100, k = 5)
+      .localCheckpoint(true)
+    val fixedAdc = measuredRecall(truth, Similarity.pqTopK(emb,
       Similarity.pqCodebook(spark), queryMod = 100, k = 5))
-    val learnedRerank = recallOf(Similarity.pqTopKRerank(emb,
+    val learnedRerank = measuredRecall(truth, Similarity.pqTopKRerank(emb,
       Similarity.learnPqCodebook(emb), queryMod = 100, k = 5, shortlist = 50))
     info(f"recall@5 fixedADC=$fixedAdc%.3f learned+rerank@50=$learnedRerank%.3f")
     assert(learnedRerank > fixedAdc,
@@ -315,20 +305,12 @@ class ExtSpec extends AnyFunSuite {
     // code budget (8x16x8) and shortlist 50, residual+rerank reads 0.750
     // vs raw-learned+rerank 0.480 on the planted fixture.
     val emb = RecallProbe.plantedEmbeddings(spark).localCheckpoint(true)
-    def sets(df: org.apache.spark.sql.DataFrame): Map[Long, Set[Long]] =
-      df.select("query_id", "vec_id").collect()
-        .groupBy(_.getLong(0))
-        .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
-    val truth = sets(Similarity.bruteForceTopK(emb, queryMod = 100, k = 5))
-    def recallOf(df: org.apache.spark.sql.DataFrame): Double = {
-      val got = sets(df)
-      truth.map { case (q, t) => (got.getOrElse(q, Set.empty[Long]) & t).size }
-        .sum.toDouble / truth.values.map(_.size).sum
-    }
+    val truth = Similarity.bruteForceTopK(emb, queryMod = 100, k = 5)
+      .localCheckpoint(true)
     val anchors = Similarity.learnIvfAnchors(emb).localCheckpoint(true)
-    val plain = recallOf(Similarity.ivfPqTopKRerank(emb, anchors,
+    val plain = measuredRecall(truth, Similarity.ivfPqTopKRerank(emb, anchors,
       Similarity.learnPqCodebook(emb), queryMod = 100, k = 5, shortlist = 50))
-    val residual = recallOf(Similarity.ivfPqResidualTopKRerank(emb, anchors,
+    val residual = measuredRecall(truth, Similarity.ivfPqResidualTopKRerank(emb, anchors,
       queryMod = 100, k = 5, shortlist = 50))
     info(f"recall@5 raw-learned+rerank=$plain%.3f residual+rerank=$residual%.3f")
     assert(residual > plain,
@@ -359,29 +341,69 @@ class ExtSpec extends AnyFunSuite {
     } finally spark.conf.unset(graft.ops.Materialize.ConfKey)
   }
 
-  test("choosePqConfig measures the corpus and picks the right codebook on both fixtures") {
-    // r10 verdict item #2: the three PQ configurations' recall ranking
-    // INVERTS by corpus geometry (learned wins near-uniform, residual
-    // wins clustered), so the choice must be measured, not prose. Gate
-    // the selector on both fixtures: it must pick `residual` on the
-    // planted corpus and `learned` on the near-uniform driver fixture,
-    // and the returned per-config scores must actually support the pick.
+  test("PQ-config scorecard picks the right codebook on both fixtures") {
+    // r10 verdict item #2: the PQ configurations' recall ranking INVERTS
+    // by corpus geometry (learned wins near-uniform, residual wins
+    // clustered), so the choice must be measured, not prose. Gate the
+    // selector on both fixtures: the scorecard sim21 registers, plus the
+    // OPQ configuration scored through the same recall kernel, must flag
+    // `residual` on the planted corpus and `learned` on the near-uniform
+    // sf0.1 fixture, and the per-config scores must support the pick.
     def gate(emb: org.apache.spark.sql.DataFrame, corpus: String,
              expect: String): Unit = {
       val anchors = Similarity.learnIvfAnchors(emb).localCheckpoint(true)
-      val (choice, scores) = Similarity.choosePqConfig(emb, anchors)
+      // the scorecard's fixed query batch: vec_id ≡ 0 (mod 100) below 2000
+      val opq = Similarity.recall(
+          Similarity.bruteForceTopK(emb, queryCap = 2000L),
+          Similarity.opqIvfPqTopKRerank(emb, queryCap = 2000L))
+        .select(lit("opq").as("config"), lit(3).as("build_cost"),
+          col("hits"), col("n_truth"), col("recall").as("recall_at_5"))
+      val card = Similarity.flagWinner(
+        Similarity.pqConfigScorecard(emb, anchors).unionByName(opq)).collect()
+      val scores = card.map(r =>
+        r.getAs[String]("config") -> r.getAs[Double]("recall_at_5")).toMap
+      val choice = card.filter(_.getAs[Boolean]("is_winner"))
+        .map(_.getAs[String]("config")).toSeq
       info(s"$corpus: choice=$choice scores=" + scores.map {
         case (n, r) => f"$n=$r%.3f" }.mkString(" "))
-      assert(choice === expect,
+      assert(choice === Seq(expect),
         s"selector picked $choice on the $corpus corpus, expected $expect " +
           s"(scores $scores)")
-      assert(scores(choice) >= scores.values.max,
+      assert(scores(expect) >= scores.values.max,
         s"winner's score is not the max: $scores")
     }
     gate(RecallProbe.plantedEmbeddings(spark).localCheckpoint(true),
       "planted", "residual")
     gate(graft.io.Sources.embeddings(spark, "/root/testdata/sf0.1")
       .localCheckpoint(true), "uniform", "learned")
+  }
+
+  test("recall kernel: an empty truth reads hits 0, n_truth 0 and a NULL recall") {
+    // the session runs ANSI, where hits / n_truth over an empty truth
+    // throws DIVIDE_BY_ZERO; DuckDB (the oracle) returns NULL instead
+    val truth = Seq.empty[(Long, Long)].toDF("query_id", "vec_id")
+    val approx = Seq((0L, 1L), (0L, 2L)).toDF("query_id", "vec_id")
+    val row = Similarity.recall(truth, approx).collect().toSeq
+    assert(row.map(r => (r.getAs[Long]("hits"), r.getAs[Long]("n_truth"),
+      r.isNullAt(r.fieldIndex("recall")))) == Seq((0L, 0L, true)))
+    // and the non-empty reading: a repeated approx row counts once
+    val some = Similarity.recall(Seq((0L, 1L), (0L, 3L)).toDF("query_id", "vec_id"),
+      approx.unionByName(approx)).collect().toSeq
+    assert(some.map(r => (r.getAs[Long]("hits"), r.getAs[Long]("n_truth"),
+      r.getAs[Double]("recall"))) == Seq((1L, 2L, 0.5)))
+  }
+
+  test("sim20_recall over an empty embeddings table reports three tiers with NULL recall") {
+    // sim20 reads only `embeddings`: a dir holding that table, empty, with
+    // the fixture schema (vec_id bigint, embedding array<float>, label int)
+    val dir = java.nio.file.Files.createTempDirectory("graft-empty-emb")
+    Seq.empty[(Long, Seq[Float], Int)].toDF("vec_id", "embedding", "label")
+      .write.parquet(dir.resolve("embeddings.parquet").toString)
+    val rows = Queries.all("sim20_recall")(spark, dir.toString).collect().toSeq
+    assert(rows.map(r => (r.getAs[String]("method"), r.getAs[Long]("hits"),
+        r.getAs[Long]("n_truth"), r.isNullAt(r.fieldIndex("recall_at_5")))) ==
+      Seq(("ivf", 0L, 0L, true), ("lsh", 0L, 0L, true),
+        ("lsh_multiprobe", 0L, 0L, true)))
   }
 
   test("OPQ rotation: orthonormal, cosine-invariant, beats plain learned PQ") {
@@ -409,35 +431,21 @@ class ExtSpec extends AnyFunSuite {
       assert(math.abs(dot - expect) < 1e-6,
         f"rotation rows $i,$j not orthonormal: dot=$dot%.9f")
     }
-    def sets(df: org.apache.spark.sql.DataFrame): Map[Long, Set[Long]] =
-      df.select("query_id", "vec_id").collect()
-        .groupBy(_.getLong(0))
-        .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
     // cosine invariance: an orthonormal rotation must not change the
     // brute-force top-k (float re-rounding can flip exact ties only)
-    val truthRaw = sets(Similarity.bruteForceTopK(uniform, 100, 5))
-    val truthRot = sets(
+    val overlap = measuredRecall(Similarity.bruteForceTopK(uniform, 100, 5),
       Similarity.bruteForceTopK(Similarity.rotate(uniform, rot), 100, 5))
-    val overlap = truthRaw.map { case (q, t) =>
-      (truthRot.getOrElse(q, Set.empty[Long]) & t).size }.sum.toDouble /
-      truthRaw.values.map(_.size).sum
     info(f"top-k overlap raw vs rotated basis: $overlap%.3f")
     assert(overlap >= 0.95,
       f"rotation changed the exact top-k ($overlap%.3f < 0.95) — " +
         "it is not behaving as an isometry")
     def gate(emb: org.apache.spark.sql.DataFrame, corpus: String,
              floor: Double): Unit = {
-      val truth = sets(Similarity.bruteForceTopK(emb, 100, 5))
-      def recallOf(df: org.apache.spark.sql.DataFrame): Double = {
-        val got = sets(df)
-        truth.map { case (q, t) =>
-          (got.getOrElse(q, Set.empty[Long]) & t).size }
-          .sum.toDouble / truth.values.map(_.size).sum
-      }
-      val learned = recallOf(Similarity.pqTopKRerank(emb,
+      val truth = Similarity.bruteForceTopK(emb, 100, 5).localCheckpoint(true)
+      val learned = measuredRecall(truth, Similarity.pqTopKRerank(emb,
         Similarity.learnPqCodebook(emb), queryMod = 100, k = 5,
         shortlist = 50))
-      val opq = recallOf(Similarity.opqPqTopKRerank(emb, queryMod = 100,
+      val opq = measuredRecall(truth, Similarity.opqPqTopKRerank(emb, queryMod = 100,
         k = 5, shortlist = 50))
       info(f"$corpus: learned+rerank@50=$learned%.3f opq+rerank@50=$opq%.3f")
       assert(opq > learned,
@@ -503,10 +511,6 @@ class ExtSpec extends AnyFunSuite {
   test("multi-probe LSH: probes=0 degenerates to lshTopK; probing lifts recall") {
     val emb = graft.io.Sources.embeddings(spark, "/root/testdata/sf0.01")
     val planes = Similarity.planes(spark)
-    def sets(df: org.apache.spark.sql.DataFrame): Map[Long, Set[Long]] =
-      df.select("query_id", "vec_id").collect()
-        .groupBy(_.getLong(0))
-        .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
     val single = Similarity.lshTopK(emb, planes, queryMod = 100, k = 3)
     val zero = Similarity.lshTopKMultiProbe(emb, planes, queryMod = 100,
       k = 3, probes = 0)
@@ -516,14 +520,10 @@ class ExtSpec extends AnyFunSuite {
 
     // recall against brute-force truth must not DROP when probing more
     // buckets: every single-probe candidate is still a candidate
-    val truth = sets(Similarity.bruteForceTopK(emb, queryMod = 100, k = 3))
-    def recallOf(df: org.apache.spark.sql.DataFrame): Double = {
-      val got = sets(df)
-      truth.map { case (q, t) => (got.getOrElse(q, Set.empty[Long]) & t).size }
-        .sum.toDouble / truth.values.map(_.size).sum
-    }
-    val r0 = recallOf(single)
-    val r2 = recallOf(Similarity.lshTopKMultiProbe(emb, planes,
+    val truth = Similarity.bruteForceTopK(emb, queryMod = 100, k = 3)
+      .localCheckpoint(true)
+    val r0 = measuredRecall(truth, single)
+    val r2 = measuredRecall(truth, Similarity.lshTopKMultiProbe(emb, planes,
       queryMod = 100, k = 3, probes = 2))
     info(f"recall@3 single=$r0%.3f probes2=$r2%.3f")
     assert(r2 >= r0, f"multi-probe recall $r2%.3f below single-probe $r0%.3f")
@@ -1623,12 +1623,12 @@ class ExtSpec extends AnyFunSuite {
     // candidates vs beam*m*hops = 240) is printed and floor-gated.
     val emb = RecallProbe.plantedEmbeddings(spark).localCheckpoint(true)
     val truth = Similarity.bruteForceTopK(emb).localCheckpoint(true)
-    val rGraph = RecallProbe.recall(
-      Similarity.graphAnnTopK(emb, Similarity.planes(spark)), truth)
-    val rLsh = RecallProbe.recall(
-      Similarity.lshTopK(emb, Similarity.planes(spark), k = 5), truth)
-    val rIvf = RecallProbe.recall(
-      Similarity.ivfTopK(emb, Similarity.ivfAnchors(spark), k = 5), truth)
+    val rGraph = measuredRecall(truth,
+      Similarity.graphAnnTopK(emb, Similarity.planes(spark)))
+    val rLsh = measuredRecall(truth,
+      Similarity.lshTopK(emb, Similarity.planes(spark), k = 5))
+    val rIvf = measuredRecall(truth,
+      Similarity.ivfTopK(emb, Similarity.ivfAnchors(spark), k = 5))
     info(f"planted recall@5: graph=$rGraph%.3f lsh-seed=$rLsh%.3f ivf(nprobe=2)=$rIvf%.3f")
     assert(rGraph > rLsh,
       f"graph ANN ($rGraph%.3f) must beat its LSH seed ($rLsh%.3f)")

@@ -29,13 +29,6 @@ class SkewSpec extends AnyFunSuite {
     }
   }
 
-  test("keyHistogram surfaces the hot key with its share") {
-    val df = ((1 to 900).map(_ => "HOT") ++ (1 to 100).map(_ => "cold")).toDF("k")
-    val top = Skew.keyHistogram(df, "k", 1).head
-    assert(top.getAs[String]("k") == "HOT")
-    assert(math.abs(top.getAs[Double]("share") - 0.9) < 1e-9)
-  }
-
   test("salted funnel equals the window funnel on a dominant-user fixture") {
     // one bot user owns ~98% of all events (the funnel/window family's skew
     // trap: partitionBy(user_id) puts that user's whole history in one

@@ -111,17 +111,6 @@ class TemporalJoinsSpec extends AnyFunSuite {
     assert(out3.head.isNullAt(0))
   }
 
-  test("asofBackwardMaxAge nulls out stale matches") {
-    val out = TemporalJoins.asofBackwardMaxAge(
-        bars, marks, Seq("symbol"), "date", "mark_date", maxAgeDays = 1)
-      .orderBy("symbol", "date")
-      .collect()
-      .map(r => Option(r.getAs[java.lang.Double]("mark_price")).map(_.toDouble))
-    // 01-05 bar: mark same day (age 0) -> kept; 01-10 bar: mark 01-09 (age 1)
-    // -> kept; nothing else within 1 day
-    assert(out.toSeq == Seq(None, Some(2.0), Some(3.0), None))
-  }
-
   test("rangeJoinBucketed matches half-open containment incl. bucket-crossing ranges") {
     val points = Seq((1L, "p1"), (6L, "p2"), (7L, "p3"), (13L, "p4"), (14L, "p5"))
       .toDF("t", "pname")

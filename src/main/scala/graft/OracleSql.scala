@@ -805,7 +805,7 @@ object OracleSql {
   /** The selector report: membership of each candidate's top-5 in the
     * brute-force truth at the same fixed batch; winner = best recall with
     * ties toward the CHEAPER config (build-cost order fixed < learned <
-    * residual). The OPQ candidate appears as the documented-exclusion
+    * residual), and no winner without a measured recall. The OPQ candidate appears as the documented-exclusion
     * literal row — its rotation training is a driver-side
     * eigendecomposition no SQL engine can express, so its `gate` names
     * the ScalaTest suite that measures it (see the Spark-side scaladoc). */
@@ -834,7 +834,8 @@ object OracleSql {
        |    ${R("CAST(hits AS DOUBLE) / n_truth", 6)} AS recall_at_5
        |  FROM h CROSS JOIN nt)
        |SELECT config, build_cost, hits, n_truth, recall_at_5,
-       |  (ROW_NUMBER() OVER (ORDER BY recall_at_5 DESC, build_cost) = 1) AS is_winner,
+       |  (ROW_NUMBER() OVER (ORDER BY recall_at_5 DESC, build_cost) = 1
+       |    AND recall_at_5 IS NOT NULL) AS is_winner,
        |  'oracle' AS gate
        |FROM rep
        |UNION ALL

@@ -3434,21 +3434,24 @@ object Queries {
     * merge — never a corpus rebuild. */
   def sim24IncrementalAnn(s: SparkSession, dir: String): DataFrame = {
     val emb = Sources.embeddings(s, dir)
-    // tercile width floor(max/3)+1 keeps vec_id/width <= 2 for every
-    // vec_id <= max — no multiplication of vec_id, so no overflow at any
-    // id scale (the g2 residue lesson)
-    val mx = Materialize(emb.agg(
-      (floor(max("vec_id") / 3) + 1).as("__w")))
-    def slice(i: Int): DataFrame =
-      emb.crossJoin(broadcast(mx))
-        .filter(floor(col("vec_id") / col("__w")) === i)
-        .drop("__w")
-    var state = ext.IncrementalAnnIndex.init(s, emb)
-    for (i <- 0 until 3)
-      state = ext.IncrementalAnnIndex.ingestBatch(state, slice(i),
-        ext.Similarity.planes(s))
+    val state = terciles(emb, "vec_id")
+      .foldLeft(ext.IncrementalAnnIndex.init(s, emb)) { (st, batch) =>
+        ext.IncrementalAnnIndex.ingestBatch(st, batch, ext.Similarity.planes(s))
+      }
     ext.IncrementalAnnIndex.snapshotSearch(state)
       .orderBy("query_id", "rank")
+  }
+
+  /** `df` as three `id`-ordered value-range batches, the arrival order of
+    * the ingest queries d15 and sim24: a tercile split on a broadcast max,
+    * fully in-plan, no driver-side slicing. The width floor(max/3)+1 keeps
+    * id/width <= 2 for every id <= max with no multiplication of the id,
+    * so no overflow at any id scale (the g2 residue lesson). */
+  private def terciles(df: DataFrame, id: String): Seq[DataFrame] = {
+    val w = Materialize(df.agg((floor(max(id) / 3) + 1).as("__w")))
+    (0 until 3).map(i => df.crossJoin(broadcast(w))
+      .filter(floor(col(id) / col("__w")) === i)
+      .drop("__w"))
   }
 
   /** Epochs the e7 perceptron trainer runs — shared with the oracle's
@@ -3580,15 +3583,10 @@ object Queries {
   def d15IncrementalCuration(s: SparkSession, dir: String): DataFrame = {
     val docs = Sources.documents(s, dir)
     val cfg = ext.CorpusPipeline.CurationConfig(redact = false)
-    val mx = Materialize(docs.agg(
-      (floor(max("doc_id") / 3) + 1).as("__w")))
-    def slice(i: Int): DataFrame =
-      docs.crossJoin(broadcast(mx))
-        .filter(floor(col("doc_id") / col("__w")) === i)
-        .drop("__w")
-    var st = ext.IncrementalCuration.init(s, docs, cfg.nHashes)
-    for (i <- 0 until 3)
-      st = ext.IncrementalCuration.ingestBatch(st, slice(i), cfg)
+    val st = terciles(docs, "doc_id")
+      .foldLeft(ext.IncrementalCuration.init(s, docs, cfg.nHashes)) {
+        (acc, batch) => ext.IncrementalCuration.ingestBatch(acc, batch, cfg)
+      }
     ext.Dedup.dedupByClusters(st.docs, st.labels)
       .select("doc_id", "source", "n_chars")
       .orderBy("doc_id")

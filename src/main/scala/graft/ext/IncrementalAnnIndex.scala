@@ -1,9 +1,13 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
+
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.ops.{ConcurrentJobs, Materialize}
 import graft.ops.Materialize.MaterializeOps
 
 /** Incremental maintenance of the sim23 k-NN graph index — the ANN
@@ -50,21 +54,11 @@ object IncrementalAnnIndex {
 
   /** Accumulated index state: accepted vectors, the two capped
     * partitioning memberships, and the folded top-m seed edges.
-    * `nBatches` drives [[CompactEvery]]. */
+    * `vectors` and the memberships grow by
+    * [[graft.ops.Materialize.append]]; `nBatches` counts folded batches. */
   case class GraphState(
       vectors: DataFrame, lshCapped: DataFrame, ivfCapped: DataFrame,
       edges: DataFrame, nIngested: Long, nBatches: Int = 0)
-
-  /** Accumulated frames are LAZY unions of per-batch materialized deltas
-    * (the same compaction discipline as [[IncrementalCuration]], which
-    * keeps its own independent constant — this one governs only this
-    * module): only the
-    * delta and the re-folded edge table pay eager work per batch —
-    * re-checkpointing the whole vector corpus (and a second full
-    * double-cast copy of it) per batch was the dominant sim24 ingest
-    * cost. Unions compact every `CompactEvery` batches so plan depth
-    * stays bounded under long ingest streams. */
-  val CompactEvery: Int = 8
 
   def init(spark: SparkSession, template: DataFrame): GraphState = {
     val empty = spark.createDataFrame(
@@ -96,26 +90,21 @@ object IncrementalAnnIndex {
   }
 
   /** Fold one arriving vector batch into the index state. Per-batch
-    * DELTAS and the re-folded edge table are eagerly materialized;
-    * accumulated frames stay lazy unions of those deltas, compacted every
-    * [[CompactEvery]] batches (the [[IncrementalCuration.ingestBatch]]
-    * discipline) — eager work per batch is delta-proportional. */
+    * DELTAS and the re-folded edge table are eagerly materialized; the
+    * accumulated frames grow by the one [[graft.ops.Materialize.append]]
+    * rule (shared with [[IncrementalCuration.ingestBatch]]), so eager
+    * work per batch is delta-proportional. The raw-arrival count is an
+    * `Observation` on the batch, filled by the fresh delta's
+    * materialization — no job of its own. */
   def ingestBatch(state: GraphState, batch: DataFrame,
                   planesDf: DataFrame, m: Int = 8, nPlanes: Int = 8,
                   bucketCap: Int = 64): GraphState = {
-    import scala.concurrent.Await
-    import scala.concurrent.duration.Duration
-    import graft.ops.ConcurrentJobs
     val spark = batch.sparkSession
     val sc = spark.sparkContext
-    // the raw-arrival count and the admission chain are independent small
-    // jobs, as are the two per-partitioning admissions — submit them from
-    // futures so their stages interleave instead of serializing (the
-    // sim21 concurrent-jobs pattern; Spark job submission is thread-safe).
-    // The dedicated ConcurrentJobs pool carries the caller's job
-    // description onto its worker threads (r13 advice item).
-    val fN = ConcurrentJobs.submit(sc)(batch.count())
+    val nb = state.nBatches + 1
+    val arrived = Observation()
     val fresh = batch
+      .observe(arrived, count(lit(1)).as("n"))
       .join(state.vectors.select("vec_id"), Seq("vec_id"), "left_anti")
       .materialized
 
@@ -128,13 +117,16 @@ object IncrementalAnnIndex {
       .filter(col("__rnk") === 1)
       .select(col("vec_id"), col("c").as("bucket"))
 
+    // the two per-partitioning admissions are independent small jobs —
+    // submit them from futures so their stages interleave instead of
+    // serializing (the sim21 concurrent-jobs pattern; the ConcurrentJobs
+    // pool carries the caller's job description onto its worker threads)
     val fLsh = ConcurrentJobs.submit(sc)(
       admit(state.lshCapped, freshLsh, bucketCap).materialized)
     val fIvf = ConcurrentJobs.submit(sc)(
       admit(state.ivfCapped, freshIvf, bucketCap).materialized)
     val newLsh = Await.result(fLsh, Duration.Inf)
     val newIvf = Await.result(fIvf, Duration.Inf)
-    val n = Await.result(fN, Duration.Inf)
 
     // fresh-vs-all co-occupant pairs, BOTH directions, per partitioning —
     // the batch that admits a pair's later endpoint generates it
@@ -154,10 +146,11 @@ object IncrementalAnnIndex {
       .unionByName(newPairs(state.ivfCapped, newIvf))
       .distinct()
 
-    // lazy union of checkpointed deltas — the scoring join below only
-    // pulls the pair endpoints out of it, so double-casting and
-    // checkpointing the WHOLE corpus here per batch bought nothing
-    val allVectors = state.vectors.unionByName(fresh)
+    // between compactions a lazy union of checkpointed deltas — the
+    // scoring join below only pulls the pair endpoints out of it, so
+    // double-casting and checkpointing the WHOLE corpus here per batch
+    // bought nothing
+    val allVectors = Materialize.append(state.vectors, fresh, nb)
     val scored = Similarity.scorePairs(
       Similarity.withDoubles(allVectors), pairs)
     // dedupe on the exact triple: a pair regenerated via the other
@@ -165,18 +158,13 @@ object IncrementalAnnIndex {
     val edges = Similarity.topMEdges(
       state.edges.unionByName(scored).distinct(), m).materialized
 
-    val next = GraphState(
+    GraphState(
       vectors = allVectors,
-      lshCapped = state.lshCapped.unionByName(newLsh),
-      ivfCapped = state.ivfCapped.unionByName(newIvf),
+      lshCapped = Materialize.append(state.lshCapped, newLsh, nb),
+      ivfCapped = Materialize.append(state.ivfCapped, newIvf, nb),
       edges = edges,
-      nIngested = state.nIngested + n,
-      nBatches = state.nBatches + 1)
-    if (next.nBatches % CompactEvery == 0)
-      next.copy(vectors = next.vectors.materialized,
-        lshCapped = next.lshCapped.materialized,
-        ivfCapped = next.ivfCapped.materialized)
-    else next
+      nIngested = state.nIngested + arrived.get("n").asInstanceOf[Long],
+      nBatches = nb)
   }
 
   /** Snapshot graph: the shared NN-descent refinement over the maintained

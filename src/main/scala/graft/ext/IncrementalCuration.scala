@@ -1,8 +1,9 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
+import graft.ops.Materialize
 import graft.ops.Materialize.MaterializeOps
 
 /** Incremental (foreachBatch) variant of [[CorpusPipeline.curate]]: a
@@ -55,19 +56,11 @@ object IncrementalCuration {
     * md5(text) of accepted docs. `signatures`: their MinHash signatures.
     * `labels`: union-find table (doc_id, cluster_rep) for every doc that
     * ever verified into a duplicate pair. `nIngested`: raw rows seen.
-    * `nBatches`: batches folded so far (drives [[CompactEvery]]). */
+    * `nBatches`: batches folded so far. `docs`, `digests` and
+    * `signatures` grow by [[graft.ops.Materialize.append]]. */
   case class CurationState(
       docs: DataFrame, digests: DataFrame, signatures: DataFrame,
       labels: DataFrame, nIngested: Long, nBatches: Int = 0)
-
-  /** Accumulated frames are LAZY unions of per-batch materialized deltas
-    * (each batch adds one cheap union node over checkpointed inputs —
-    * re-checkpointing the whole corpus per batch was the dominant d15
-    * ingest cost, O(corpus) eager work × batches for frames whose rows a
-    * batch never changes). Every `CompactEvery` batches the unions are
-    * collapsed into one materialization so plan depth stays bounded for
-    * long-running [[Curator]] streams; a 3-batch ingest never compacts. */
-  val CompactEvery: Int = 8
 
   def init(spark: SparkSession, template: DataFrame,
            nHashes: Int = 16): CurationState = {
@@ -85,22 +78,17 @@ object IncrementalCuration {
   /** Fold one arriving batch into the state: exact dedup (within batch +
     * against history), fresh-vs-all LSH candidates, exact-Jaccard
     * verification, union-find merge. Only the per-batch DELTAS are
-    * eagerly materialized (Materialize: localCheckpoint by default,
-    * persist on clusters); accumulated frames stay lazy unions of those
-    * deltas, compacted every [[CompactEvery]] batches — so per-batch
-    * eager work is proportional to the delta, not the corpus, and state
-    * lineage stays bounded. */
+    * eagerly materialized; the accumulated frames grow by the one
+    * [[graft.ops.Materialize.append]] rule, so per-batch eager work is
+    * proportional to the delta, not the corpus, and state lineage stays
+    * bounded. The raw-arrival count is an `Observation` on the batch,
+    * filled by the fresh delta's materialization — no job of its own. */
   def ingestBatch(state: CurationState, batch: DataFrame,
                   cfg: CurationConfig = CurationConfig()): CurationState = {
-    import scala.concurrent.Await
-    import scala.concurrent.duration.Duration
-    // the raw-arrival count is independent of the dedup chain — let its
-    // job interleave with the fresh materialization (the sim21 pattern);
-    // submitted via the dedicated pool that carries the caller's job
-    // description onto the worker thread (ConcurrentJobs scaladoc)
-    val fN = graft.ops.ConcurrentJobs.submit(
-      batch.sparkSession.sparkContext)(batch.count())
-    val scrubbed = if (cfg.redact) TextOps.redact(batch) else batch
+    val nb = state.nBatches + 1
+    val arrived = Observation()
+    val observedBatch = batch.observe(arrived, count(lit(1)).as("n"))
+    val scrubbed = if (cfg.redact) TextOps.redact(observedBatch) else observedBatch
 
     // exact dedup: keep-first within the batch, drop anything history has
     val fresh = Dedup.keepFirstPerDigest(scrubbed)
@@ -116,7 +104,7 @@ object IncrementalCuration {
     // match. a < b normalization keeps pair ids ordered for the verifier.
     val freshSigs = Dedup.minhashSignatures(freshDocs, cfg.nHashes)
       .materialized
-    val allSigs = state.signatures.unionByName(freshSigs)
+    val allSigs = Materialize.append(state.signatures, freshSigs, nb)
     val freshBands = Dedup.bands(freshSigs, cfg.nBands)
     // cap election is per (band, band_value) and the candidate join is an
     // inner join on that key — so only buckets the fresh probe actually
@@ -140,10 +128,11 @@ object IncrementalCuration {
         greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b"))
       .distinct()
 
-    // verification needs both pair sides' text: history ∪ fresh.
-    // Materialized ONCE — the isEmpty gate and duplicateClusters both
-    // read it (unmaterialized, the verify join ran twice per batch).
-    val allDocs = state.docs.unionByName(freshDocs)
+    // verification needs both pair sides' text: history ∪ fresh. The
+    // verified edges are materialized ONCE — the isEmpty gate and
+    // duplicateClusters both read them (unmaterialized, the verify join
+    // ran twice per batch).
+    val allDocs = Materialize.append(state.docs, freshDocs, nb)
     val newEdges = Dedup.jaccardVerifyPairs(allDocs, candidates, cfg.minJaccard)
       .select("doc_a", "doc_b")
       .materialized
@@ -158,20 +147,15 @@ object IncrementalCuration {
       if (newEdges.isEmpty) state.labels
       else Dedup.duplicateClusters(labelEdges.unionByName(newEdges))
 
-    val next = CurationState(
+    CurationState(
       docs = allDocs,
-      digests = state.digests.unionByName(fresh.select("__digest")),
+      digests = Materialize.append(state.digests, fresh.select("__digest"), nb),
       signatures = allSigs,
       // duplicateClusters returns a materialized table; the empty-edge
       // branch reuses the already-materialized previous labels
       labels = merged,
-      nIngested = state.nIngested + Await.result(fN, Duration.Inf),
-      nBatches = state.nBatches + 1)
-    if (next.nBatches % CompactEvery == 0)
-      next.copy(docs = next.docs.materialized,
-        digests = next.digests.materialized,
-        signatures = next.signatures.materialized)
-    else next
+      nIngested = state.nIngested + arrived.get("n").asInstanceOf[Long],
+      nBatches = nb)
   }
 
   /** Materialize the curated corpus from the accumulated state: survivors

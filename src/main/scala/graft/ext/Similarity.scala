@@ -1367,11 +1367,14 @@ object Similarity {
   }
 
   /** `is_winner` over a [[pqConfigScorecard]]-shaped frame: the highest
-    * recall_at_5, ties to the lowest build_cost. The frame is one row per
-    * configuration, so the single-partition window is the point. */
+    * recall_at_5, ties to the lowest build_cost. A NULL recall (an empty
+    * truth) is never a winner, so an unmeasured scorecard has none. The
+    * frame is one row per configuration, so the single-partition window is
+    * the point. */
   def flagWinner(card: DataFrame): DataFrame =
     card.withColumn("is_winner", row_number().over(
-      Window.orderBy(desc("recall_at_5"), col("build_cost"))) === 1)
+      Window.orderBy(desc("recall_at_5"), col("build_cost"))) === 1 &&
+      col("recall_at_5").isNotNull)
 
   // ------------------------------------------------------------------
   // OPQ: optimized product quantization (parametric rotation)

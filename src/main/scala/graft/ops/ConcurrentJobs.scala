@@ -6,14 +6,14 @@ import scala.concurrent.{ExecutionContext, Future}
 
 import org.apache.spark.SparkContext
 
-/** Submission helper for the guide-§2.6 concurrent-jobs pattern (the
-  * independent count/admission jobs inside the incremental ingest
-  * kernels): a SMALL dedicated pool — 2-3 jobs in flight is the guide's
-  * bound; the former `ExecutionContext.Implicits.global` submissions ran
-  * on pre-created pool threads that never inherit Spark's
-  * InheritableThreadLocal job properties, so those jobs lost their
-  * `setJobDescription` attribution (r13 advice item), and a caller that
-  * also used the global EC could starve the submissions entirely.
+/** Submission helper for the guide-§2.6 concurrent-jobs pattern: a SMALL
+  * dedicated pool (2-3 jobs in flight is the guide's bound) for
+  * independent jobs whose stages should interleave: the two capped
+  * admissions of `IncrementalAnnIndex.ingestBatch` and the three candidate
+  * stacks of `Similarity.pqConfigScorecard` (sim21). Threads of the global
+  * EC never inherit Spark's InheritableThreadLocal job properties, so
+  * their jobs lost their `setJobDescription` attribution, and a caller
+  * also using the global EC could starve the submissions.
   *
   * [[submit]] copies the calling thread's job description/group onto the
   * worker thread for the duration of the job and clears them after, so

@@ -19,13 +19,18 @@ import org.apache.spark.storage.StorageLevel
   *    path, so losing one executor (preemption, OOM kill — routine at
   *    1000 executors) fails the whole job.
   *  - `persist`: lineage-PRESERVING MEMORY_AND_DISK persist. Same
-  *    reuse-across-passes effect (first action computes, later passes
-  *    read the cached blocks); an executor loss recomputes the lost
-  *    partitions from lineage instead of failing the job. The cluster
-  *    default you'd deploy with.
+  *    reuse-across-passes effect (later passes read the cached blocks);
+  *    an executor loss recomputes the lost partitions from lineage
+  *    instead of failing the job. The cluster default you'd deploy with.
   *
-  * Both forms return the same rows, so the registered oracles are
-  * indifferent to the switch.
+  * Both forms are eager and return a frame whose logical plan is one scan
+  * (the checkpoint, or an RDD scan of the cached blocks), so an
+  * `Observation` anywhere in the plan has filled when [[apply]] returns,
+  * and loops that feed each result into the next do not nest plans (a
+  * cached frame that keeps its plan repeats every cached plan below it in
+  * the `explain` Spark renders per query; that ran both ingest kernels
+  * out of heap within three batches). Both forms return the same rows, so
+  * the registered oracles are indifferent to the switch.
   */
 object Materialize {
   val ConfKey = "spark.graft.materialize"
@@ -40,41 +45,49 @@ object Materialize {
   // incremental index's edge state). CONTRACT (r13 advice item): the guard
   // matches ANY RDD-backed frame, so Materialize is deliberately a no-op for
   // every spark.createDataFrame(rdd, schema) scan too — in this codebase
-  // those are only the empty ingest init() states (zero rows, free to
-  // rescan). A caller with an EXPENSIVE or non-deterministic source RDD must
-  // persist it itself before wrapping it in a DataFrame.
+  // those are the empty ingest init() states (zero rows, free to rescan)
+  // and apply's own scans of cached blocks under `persist`. A caller with
+  // an EXPENSIVE or non-deterministic source RDD must persist it itself
+  // before wrapping it in a DataFrame.
   private def bareRdd(df: DataFrame): Boolean =
     df.queryExecution.analyzed.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
 
   def apply(df: DataFrame): DataFrame =
-    if (persistMode(df)) df.persist(StorageLevel.MEMORY_AND_DISK)
-    else if (bareRdd(df)) df
-    else df.localCheckpoint(true)
+    if (bareRdd(df)) df
+    else if (persistMode(df)) {
+      val cached = df.persist(StorageLevel.MEMORY_AND_DISK)
+      // count the cached frame itself, not the scan returned below: an
+      // observation fills from the query whose plan holds the observed node
+      cached.count()
+      df.sparkSession.createDataFrame(cached.rdd, cached.schema)
+    } else df.localCheckpoint(true)
 
   /** [[apply]], plus the number of materialized rows where `cond` holds —
     * the convergence read of the iterative min-label loops. The count is an
-    * `Observation` on the checkpoint job, so it costs no job of its own.
-    * Where [[apply]] runs no action (`persist` is lazy; a bare RDD scan is
-    * returned as is), one action over the result fills the cache and
-    * carries the observation, so reading the count never blocks. */
+    * `Observation` on the materializing job, so it costs no job of its
+    * own. */
   def counting(df: DataFrame, cond: Column): (DataFrame, Long) = {
     val obs = Observation()
-    val counted = count_if(cond).as("n")
-    val out =
-      if (persistMode(df) || bareRdd(df)) {
-        val m = apply(df)
-        m.observe(obs, counted).count()
-        m
-      } else apply(df.observe(obs, counted))
+    val out = apply(df.observe(obs, count_if(cond).as("n")))
     (out, obs.get("n").asInstanceOf[Long])
   }
 
-  /** `.materialized` — chainable form for mid-pipeline reuse points.
-    * Note for the iterative loops (duplicateClusters, Similarity.lloyd):
-    * under `persist` the LOGICAL plan still grows per round (persist does
-    * not truncate lineage, it only caches blocks); that is fine for the
-    * bounded round counts these loops run (≤20 / 3), and it is exactly
-    * the property that makes executor loss survivable. */
+  /** Batches folded between two compactions of an accumulated frame. */
+  val CompactEvery: Int = 8
+
+  /** The append rule of the incremental kernels' accumulated state: `acc`
+    * ∪ `delta`, where `batchNo` is the 1-based number of the batch that
+    * brings `delta`. Between compactions the result is a LAZY union of
+    * materialized deltas, so a batch pays eager work only for its own
+    * delta, not for the corpus; every [[CompactEvery]] batches the union
+    * is materialized once, so plan depth stays bounded over a long ingest
+    * stream. */
+  def append(acc: DataFrame, delta: DataFrame, batchNo: Int): DataFrame = {
+    val all = acc.unionByName(delta)
+    if (batchNo % CompactEvery == 0) apply(all) else all
+  }
+
+  /** `.materialized` — chainable form for mid-pipeline reuse points. */
   implicit class MaterializeOps(private val df: DataFrame) extends AnyVal {
     def materialized: DataFrame = Materialize(df)
   }

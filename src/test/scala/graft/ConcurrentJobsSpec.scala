@@ -9,10 +9,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.ConcurrentJobs
 
-/** The §2.6 job-submission pool's label contract (r14): the ingest
-  * kernels and sim21 attribute their concurrent jobs by copying the
-  * caller's description onto the worker thread, and a pooled thread must
-  * not leak one query's label into the next query's jobs. */
+/** The §2.6 job-submission pool's label contract: the ANN index's
+  * admissions and sim21's scorecard stacks attribute their concurrent jobs
+  * by copying the caller's description onto the worker thread, and a
+  * pooled thread must not leak one query's label into the next query's
+  * jobs. */
 class ConcurrentJobsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 

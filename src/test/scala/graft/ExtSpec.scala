@@ -332,13 +332,10 @@ class ExtSpec extends AnyFunSuite {
         .select("doc_a", "doc_b").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
     val viaCheckpoint = run()
-    spark.conf.set(graft.ops.Materialize.ConfKey, "persist")
-    try {
-      val viaPersist = run()
-      assert(viaPersist === viaCheckpoint,
-        "persist-mode Materialize changed the candidate pairs")
-      assert(viaCheckpoint.nonEmpty, "fixture produced no candidate pairs")
-    } finally spark.conf.unset(graft.ops.Materialize.ConfKey)
+    val viaPersist = SparkTestSession.underPersist(run())
+    assert(viaPersist === viaCheckpoint,
+      "persist-mode Materialize changed the candidate pairs")
+    assert(viaCheckpoint.nonEmpty, "fixture produced no candidate pairs")
   }
 
   test("PQ-config scorecard picks the right codebook on both fixtures") {
@@ -393,17 +390,32 @@ class ExtSpec extends AnyFunSuite {
       r.getAs[Double]("recall"))) == Seq((1L, 2L, 0.5)))
   }
 
-  test("sim20_recall over an empty embeddings table reports three tiers with NULL recall") {
-    // sim20 reads only `embeddings`: a dir holding that table, empty, with
-    // the fixture schema (vec_id bigint, embedding array<float>, label int)
+  /** A data dir holding only an empty `embeddings` table with the fixture
+    * schema (vec_id bigint, embedding array<float>, label int) — all that
+    * sim20 and sim21 read. */
+  private def emptyEmbeddingsDir(): String = {
     val dir = java.nio.file.Files.createTempDirectory("graft-empty-emb")
     Seq.empty[(Long, Seq[Float], Int)].toDF("vec_id", "embedding", "label")
       .write.parquet(dir.resolve("embeddings.parquet").toString)
-    val rows = Queries.all("sim20_recall")(spark, dir.toString).collect().toSeq
+    dir.toString
+  }
+
+  test("sim20_recall over an empty embeddings table reports three tiers with NULL recall") {
+    val rows = Queries.all("sim20_recall")(spark, emptyEmbeddingsDir()).collect().toSeq
     assert(rows.map(r => (r.getAs[String]("method"), r.getAs[Long]("hits"),
         r.getAs[Long]("n_truth"), r.isNullAt(r.fieldIndex("recall_at_5")))) ==
       Seq(("ivf", 0L, 0L, true), ("lsh", 0L, 0L, true),
         ("lsh_multiprobe", 0L, 0L, true)))
+  }
+
+  test("sim21_codebook_selector over an empty embeddings table flags no winner") {
+    // every recall is NULL there; a NULL recall is never a measured winner
+    val rows = Queries.all("sim21_codebook_selector")(spark, emptyEmbeddingsDir())
+      .collect().toSeq
+    assert(rows.map(r => (r.getAs[String]("config"),
+        r.isNullAt(r.fieldIndex("recall_at_5")), r.getAs[Boolean]("is_winner"))) ==
+      Seq(("fixed", true, false), ("learned", true, false),
+        ("opq", true, false), ("residual", true, false)))
   }
 
   test("OPQ rotation: orthonormal, cosine-invariant, beats plain learned PQ") {
@@ -519,13 +531,18 @@ class ExtSpec extends AnyFunSuite {
       "probes=0 must equal the single-probe lshTopK exactly")
 
     // recall against brute-force truth must not DROP when probing more
-    // buckets: every single-probe candidate is still a candidate
-    val truth = Similarity.bruteForceTopK(emb, queryMod = 100, k = 3)
+    // buckets: every single-probe candidate is still a candidate. Measured
+    // on the planted corpus, where single-probe LSH finds true neighbors
+    // (on sf0.01 both recalls read 0, so the comparison says nothing)
+    val planted = RecallProbe.plantedEmbeddings(spark).localCheckpoint(true)
+    val truth = Similarity.bruteForceTopK(planted, queryMod = 100, k = 3)
       .localCheckpoint(true)
-    val r0 = measuredRecall(truth, single)
-    val r2 = measuredRecall(truth, Similarity.lshTopKMultiProbe(emb, planes,
-      queryMod = 100, k = 3, probes = 2))
+    val r0 = measuredRecall(truth,
+      Similarity.lshTopK(planted, planes, queryMod = 100, k = 3))
+    val r2 = measuredRecall(truth, Similarity.lshTopKMultiProbe(planted,
+      planes, queryMod = 100, k = 3, probes = 2))
     info(f"recall@3 single=$r0%.3f probes2=$r2%.3f")
+    assert(r0 > 0, "single-probe LSH found no true neighbor: the lift is unmeasured")
     assert(r2 >= r0, f"multi-probe recall $r2%.3f below single-probe $r0%.3f")
 
     // each query's candidate pool grows: probed bucket count == probes+1

@@ -185,8 +185,7 @@ class GraphSpec extends AnyFunSuite {
       Dedup.duplicateClusters(pairs).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)),
       2.minutes)
     val viaCheckpoint = run()
-    spark.conf.set(graft.ops.Materialize.ConfKey, "persist")
-    val viaPersist = try run() finally spark.conf.unset(graft.ops.Materialize.ConfKey)
+    val viaPersist = SparkTestSession.underPersist(run())
     assert(viaPersist == viaCheckpoint)
     assert(viaCheckpoint._1("e") == ("b", 1L) && viaCheckpoint._2("e") == ("a", 5L))
     assert(viaCheckpoint._3 == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 7L -> 7L, 8L -> 7L))

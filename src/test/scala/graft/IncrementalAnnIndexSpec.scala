@@ -32,9 +32,13 @@ class IncrementalAnnIndexSpec extends AnyFunSuite {
       s"$what diverges between incremental and batch")
   }
 
-  test("3-batch ingest reproduces the batch seed edges, graph, and search") {
+  /** Folds the sf0.001 embeddings in `nBatches` vec_id-ordered batches and
+    * checks the arrival count and the seed edges, descended graph and
+    * search against the batch build. */
+  private def checkAgainstBatch(nBatches: Int): Unit = {
     val emb = graft.io.Sources.embeddings(spark, dir).localCheckpoint(true)
-    val st = foldBatches(emb, 3, bucketCap = 64)
+    val st = foldBatches(emb, nBatches, bucketCap = 64)
+    assert(st.nBatches == nBatches)
     assert(st.nIngested == emb.count())
 
     val batchSeed = Similarity.seedEdges(emb, Similarity.planes(spark))
@@ -47,6 +51,22 @@ class IncrementalAnnIndexSpec extends AnyFunSuite {
     val incSearch = IncrementalAnnIndex.snapshotSearch(st)
     val batchSearch = Similarity.graphAnnTopK(emb, Similarity.planes(spark))
     assertSame(incSearch, batchSearch, "beam-search results")
+  }
+
+  test("3-batch ingest reproduces the batch seed edges, graph, and search") {
+    checkAgainstBatch(3)
+  }
+
+  test("9-batch ingest crosses a compaction and still reproduces the batch index") {
+    // Materialize.CompactEvery = 8: batch 8 compacts the accumulated
+    // vectors and memberships, batch 9 folds onto the compacted state
+    checkAgainstBatch(9)
+  }
+
+  test("persist mode: 3-batch ingest reproduces the batch index and counts arrivals") {
+    // under persist the arrival Observation fills through a count of the
+    // persisted delta, not through a checkpoint job
+    SparkTestSession.underPersist(checkAgainstBatch(3))
   }
 
   test("engaged caps: ordered ingest still reproduces the batch election") {

@@ -57,7 +57,8 @@ class IncrementalCurationSpec extends AnyFunSuite {
     assert(inc == bat, s"packed corpora diverge:\n inc   $inc\n batch $bat")
   }
 
-  test("ingestBatch-folded snapshot == batch curate on the union") {
+  /** The three-slice fold, with the per-batch state checks. */
+  private def foldThreeSlices(): Unit = {
     var st = IncrementalCuration.init(spark, union, cfg.nHashes)
     st = IncrementalCuration.ingestBatch(st,
       slices(0).toDF("doc_id", "source", "text"), cfg)
@@ -81,6 +82,30 @@ class IncrementalCurationSpec extends AnyFunSuite {
       s"cross-batch transitive chain broke: $labels3")
     assert(st.nIngested == 9)
 
+    assertSnapshotEqualsBatch(st)
+  }
+
+  test("ingestBatch-folded snapshot == batch curate on the union") {
+    foldThreeSlices()
+  }
+
+  test("persist mode: ingestBatch-folded snapshot == batch curate, arrivals counted") {
+    // under persist the arrival Observation fills through a count of the
+    // persisted delta, not through a checkpoint job
+    SparkTestSession.underPersist(foldThreeSlices())
+  }
+
+  test("nine one-doc batches cross a compaction and still equal batch curate") {
+    // Materialize.CompactEvery = 8: batch 8 compacts docs, digests and
+    // signatures, batch 9 (doc 9, an exact dup of doc 1) folds onto the
+    // compacted state and must still be rejected at the digest gate
+    val st = slices.flatten.foldLeft(
+        IncrementalCuration.init(spark, union, cfg.nHashes)) { (acc, doc) =>
+      IncrementalCuration.ingestBatch(acc,
+        Seq(doc).toDF("doc_id", "source", "text"), cfg)
+    }
+    assert(st.nBatches == 9 && st.nIngested == 9)
+    assert(st.docs.count() == 7, "exact dups 4 and 9 must not enter")
     assertSnapshotEqualsBatch(st)
   }
 

@@ -74,8 +74,8 @@ def main():
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.isdir(p):
-            # Spark-written table (directory of part files), e.g. the
-            # ScalingProbe's synthesized corpora under target/scaledata
+            # Spark-written table (directory of part files), e.g. a
+            # corpus generated by graft.ScaleCorpus
             con.execute(
                 f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}/*.parquet')")
         elif os.path.exists(p):

@@ -1823,10 +1823,10 @@ object Queries {
     * vec_id ≡ 50 (mod 100) below 2000, i.e. a batch that stops growing
     * once the corpus passes the driver's sf0.1 size — mined against the
     * whole corpus. e3's corpus-sampled anchors make the scan corpus ×
-    * anchors (declared quadratic under the ScalingProbe); this shape is
-    * what a fine-tune actually runs (a bounded training batch against a
-    * growing corpus) and is linear in the corpus: one broadcast-anchor
-    * scan reduced by the bounded `top_k_by` (see
+    * anchors (declared quadratic in COVERAGE.md's round-8 scaling read);
+    * this shape is what a fine-tune actually runs (a bounded training
+    * batch against a growing corpus) and is linear in the corpus: one
+    * broadcast-anchor scan reduced by the bounded `top_k_by` (see
     * [[graft.ext.Similarity.hardNegativesFor]]). */
   def e4HardNegativesBatch(s: SparkSession, dir: String): DataFrame = {
     val emb = Sources.embeddings(s, dir)
@@ -3316,8 +3316,9 @@ object Queries {
   /** ANN recall observability as a FIRST-CLASS query — recall@5 of the
     * three approximate retrieval tiers (sim2 LSH, sim6 multiprobe, sim3
     * IVF) against sim1's brute-force truth, the production health check a
-    * vector platform schedules next to its index builds (RecallProbe is
-    * the dev-loop sibling; this is the operator). Truth materializes once
+    * vector platform schedules next to its index builds (COVERAGE.md
+    * rounds 9-10 hold the full per-config recall sweep; this is the
+    * operator). Truth materializes once
     * and broadcasts into three left-semi membership joins; each report row
     * is exact-integer division. Cost is the three index scans it measures
     * — the observability is as cheap as the thing observed.

@@ -97,7 +97,7 @@ object Similarity {
     * a NULL recall — the DuckDB oracle's answer for the same division,
     * where a plain ANSI divide would throw DIVIDE_BY_ZERO. The only recall
     * computation in the engine: the sim20/sim22 reports, the sim21
-    * scorecard and RecallProbe's sweep all read it. */
+    * scorecard and ExtSpec's recall gates all read it. */
   def recall(truth: DataFrame, approx: DataFrame): DataFrame = {
     val t = truth.select("query_id", "vec_id")
     t.join(approx.select("query_id", "vec_id"),
@@ -469,8 +469,8 @@ object Similarity {
     * likely lands on the other side of, so first-order single-bit flips
     * recover most of the recall lost to bucket boundaries at a (probes+1)×
     * candidate cost instead of the 2^planes-fold cost of using fewer
-    * planes. RecallProbe on the sf0.1 fixture: 0.030 recall@5 for the
-    * single-probe registered config → see COVERAGE.md's table for the
+    * planes. COVERAGE.md round 9 on the sf0.1 fixture: 0.030 recall@5
+    * for the single-probe registered config → see that table for the
     * probes sweep.
     *
     * Cross-engine determinism: the flip ranking orders planes by the
@@ -1202,8 +1202,8 @@ object Similarity {
     * clustered corpus a codebook trained on raw vectors collapses onto the
     * cluster centers — every same-cluster vector gets the SAME codes, ADC
     * ties everywhere, and within-cluster ranking (where the true top-k
-    * lives) is destroyed (RecallProbe measures exactly this: learned
-    * raw-vector PQ UNDERPERFORMS the fixed codebook on the planted
+    * lives) is destroyed (COVERAGE.md round 10 measured exactly this:
+    * learned raw-vector PQ UNDERPERFORMS the fixed codebook on the planted
     * corpus). Subtracting the centroid removes the shared cluster
     * component, so the codebook's 16 centroids spend their capacity on the
     * within-cluster structure ADC actually needs to rank.
@@ -1316,8 +1316,8 @@ object Similarity {
     * the residual pass just re-centers noise), while residual wins
     * decisively on a clustered one (raw-vector codebooks collapse onto the
     * cluster centers, same-cluster vectors get identical codes, and ADC
-    * ties destroy within-cluster ranking — RecallProbe measures the
-    * inversion). No prose rule can pick per corpus, so this MEASURES.
+    * ties destroy within-cluster ranking — COVERAGE.md round 10 measured
+    * the inversion). No prose rule can pick per corpus, so this MEASURES.
     *
     * One row per relational configuration: (config, build_cost, hits,
     * n_truth, recall_at_5). Every stack runs at the same `anchors`, code
@@ -1387,8 +1387,9 @@ object Similarity {
     * the coordinates in storage order; on anisotropic or correlated
     * corpora (real embedding models put most energy in a few directions)
     * the high-variance subspace's quantization error dominates every ADC
-    * distance and recall collapses — the exact failure RecallProbe's
-    * anisotropic fixture measures. OPQ-P fixes the basis first:
+    * distance and recall collapses — the exact failure the round-12
+    * anisotropic fixture (COVERAGE.md's sim23 table) measured. OPQ-P
+    * fixes the basis first:
     *
     *  1. covariance of the corpus (one exploded outer-product pass —
     *     partial aggregation keeps the shuffle at partitions x dims²
@@ -1485,16 +1486,6 @@ object Similarity {
       queryMod, k, shortlist, subDim, queryCap)
   }
 
-  /** ADC-only OPQ search ([[pqTopK]] in the OPQ basis) — the
-    * codebook-quality probe without the rerank tier's repair. */
-  def opqPqTopK(emb: DataFrame, queryMod: Int = 100, k: Int = 5,
-                nSub: Int = 8, subDim: Int = 8,
-                queryCap: Long = Long.MaxValue): DataFrame = {
-    val remb = rotate(emb, opqRotation(emb, nSub, subDim)).materialized
-    pqTopK(remb, learnPqCodebook(remb, nSub, subDim = subDim),
-      queryMod, k, subDim, queryCap)
-  }
-
   /** [[ivfPqTopKRerank]] in the OPQ basis — the fourth
     * [[pqConfigScorecard]] configuration: rotate the corpus, then learn BOTH the
     * IVF anchors and the PQ codebook in the rotated coordinates (an IVF
@@ -1542,7 +1533,7 @@ object Similarity {
     * shape: a training batch is a FIXED set of anchors mined against a
     * growing corpus, so the scan is linear in the corpus (the registered
     * e3's corpus-sampled anchors are the probe-friendly special case;
-    * under the ScalingProbe's corpus-growing queryMod that special case
+    * under a 10x scale read's corpus-growing queryMod that special case
     * inherits sim1's declared-quadratic regime while THIS shape does
     * not). `anchorVecs` must carry (vec_id, label, embedding). */
   def hardNegativesFor(emb: DataFrame, anchorVecs: DataFrame,

@@ -41,7 +41,7 @@ object Sources {
     * session-zone TIMESTAMP so downstream `unix_micros`/window math sees
     * one type; the session zone is pinned UTC everywhere, so the NTZ cast
     * relabels the same instant rather than shifting it. Used by the batch
-    * reader, both streaming readers, and the ScalingProbe generator. */
+    * reader, both streaming readers, and the ScaleCorpus generator. */
   def normalizeEventTs(df: DataFrame): DataFrame =
     df.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,6 +19,40 @@ class ExtSpec extends AnyFunSuite {
     (4L, "completely different words entirely unrelated tokens", "en"),
     (5L, "ab", "en") // < 3 tokens -> no shingles
   ).toDF("doc_id", "text", "lang")
+
+  /** Planted-neighborhood embedding corpus: `nClusters` md5-derived
+    * centers (coordinates uniform in [-1, 1]), every vector = its
+    * cluster's center + `noise`-bounded md5-derived jitter. Same schema as
+    * the driver fixture (vec_id, embedding float[dims], label = cluster
+    * id). Deterministic end to end — reproducible from public md5 alone,
+    * no RNG state.
+    *
+    * Geometry: center norm ~ sqrt(dims/3) ≈ 4.6 at dims=64, jitter norm ~
+    * noise * sqrt(dims/3) ≈ 1.15 at noise=0.25, so same-cluster cosine
+    * sits at ~1/(1+noise²) ≈ 0.94 and cross-cluster at ~0 — the planted
+    * true top-k is same-cluster, exactly the clustered-neighbor regime
+    * COVERAGE.md's sim2 reading says real corpora occupy, and the one
+    * where hashing-path success is measurable (the driver's near-uniform
+    * embeddings put true neighbors at cosine ~0.3-0.4). Cluster
+    * assignment hashes vec_id (md5, NOT vec_id % nClusters) so it is
+    * decorrelated from the vec_id % 100 query-selection convention. */
+  private def plantedEmbeddings(n: Int = 2000, dims: Int = 64,
+                                nClusters: Int = 20,
+                                noise: Double = 0.25): DataFrame =
+    spark.range(n).withColumnRenamed("id", "vec_id")
+      .withColumn("__k",
+        conv(substring(md5(concat(lit("pc_"), col("vec_id"))), 1, 8), 16, 10)
+          .cast("long") % nClusters)
+      .withColumn("embedding", expr(
+        s"""transform(sequence(1, $dims), d -> cast(
+           |  (cast(conv(substring(md5(concat('pctr_', __k, '_', d)), 1, 8),
+           |        16, 10) as long) % 2001 - 1000) / 1000.0
+           |  + $noise *
+           |  ((cast(conv(substring(md5(concat('pnz_', vec_id, '_', d)), 1, 8),
+           |         16, 10) as long) % 2001 - 1000) / 1000.0)
+           |  as float))""".stripMargin))
+      .withColumn("label", col("__k").cast("int"))
+      .select("vec_id", "embedding", "label")
 
   /** The recall value of the engine's one recall kernel. */
   private def measuredRecall(truth: org.apache.spark.sql.DataFrame,
@@ -245,7 +280,7 @@ class ExtSpec extends AnyFunSuite {
     // fixture learned == fixed == 0.280 every round — too few points per
     // list for k-means to move a centroid meaningfully, which is why the
     // r7/r8 tracked numbers showed learning "buying nothing". At this
-    // scale it does: RecallProbe r9 measured fixed 0.300 / learned 0.430
+    // scale it does: COVERAGE.md round 9 measured fixed 0.300 / learned 0.430
     // (3 iters) / 0.440 (6 iters) at the registered nLists=16, nprobe=2.
     val emb = graft.io.Sources.embeddings(spark, "/root/testdata/sf0.1")
     val truth = Similarity.bruteForceTopK(emb, queryMod = 100, k = 5)
@@ -270,8 +305,8 @@ class ExtSpec extends AnyFunSuite {
     // r9 verdict item #1: recall@5 0.020 at sim7's registered shape was
     // the only number saying an operator doesn't do its job. The fix is
     // the production configuration — per-subspace k-means codebooks
-    // (learnPqCodebook) plus the exact-rerank tier (pqTopKRerank). r10
-    // RecallProbe on this fixture: fixed ADC 0.020 -> learned ADC 0.080
+    // (learnPqCodebook) plus the exact-rerank tier (pqTopKRerank).
+    // COVERAGE.md round 10 on this fixture: fixed ADC 0.020 -> learned ADC 0.080
     // -> learned + rerank@50 0.300 (and 0.350 for sim8's learned stack,
     // vs sim3-fixed's 0.300 at comparable candidate cost).
     val emb = graft.io.Sources.embeddings(spark, "/root/testdata/sf0.1")
@@ -298,13 +333,13 @@ class ExtSpec extends AnyFunSuite {
     // on RAW vectors collapses onto the cluster centers — same-cluster
     // vectors encode to identical codes, ADC ties everywhere, and
     // within-cluster ranking (where the true top-k lives) is destroyed
-    // (r10 RecallProbe: learned raw-PQ 0.070 vs fixed 0.150 ADC-only —
+    // (COVERAGE.md round 10: learned raw-PQ 0.070 vs fixed 0.150 ADC-only —
     // learning HURTS there). Encoding list-centroid RESIDUALS (the actual
     // FAISS IVFADC formulation) removes the shared cluster component, so
     // codebook capacity goes to the within-cluster structure: at equal
     // code budget (8x16x8) and shortlist 50, residual+rerank reads 0.750
     // vs raw-learned+rerank 0.480 on the planted fixture.
-    val emb = RecallProbe.plantedEmbeddings(spark).localCheckpoint(true)
+    val emb = plantedEmbeddings().localCheckpoint(true)
     val truth = Similarity.bruteForceTopK(emb, queryMod = 100, k = 5)
       .localCheckpoint(true)
     val anchors = Similarity.learnIvfAnchors(emb).localCheckpoint(true)
@@ -369,7 +404,7 @@ class ExtSpec extends AnyFunSuite {
       assert(scores(expect) >= scores.values.max,
         s"winner's score is not the max: $scores")
     }
-    gate(RecallProbe.plantedEmbeddings(spark).localCheckpoint(true),
+    gate(plantedEmbeddings().localCheckpoint(true),
       "planted", "residual")
     gate(graft.io.Sources.embeddings(spark, "/root/testdata/sf0.1")
       .localCheckpoint(true), "uniform", "learned")
@@ -420,8 +455,8 @@ class ExtSpec extends AnyFunSuite {
 
   test("OPQ rotation: orthonormal, cosine-invariant, beats plain learned PQ") {
     // r10 verdict stretch item (OPQ, Ge et al. CVPR 2013 — the
-    // parametric eigenvalue-allocation variant). RecallProbe r11,
-    // rerank@50 at the equal 8x16x8 code budget:
+    // parametric eigenvalue-allocation variant). The round-11 recall
+    // sweep, rerank@50 at the equal 8x16x8 code budget:
     //   uniform:      OPQ 0.330 > learned 0.300 > residual 0.230
     //   planted:      OPQ 0.630 > learned 0.480 (residual 0.750 still
     //                 wins clustered corpora)
@@ -467,7 +502,7 @@ class ExtSpec extends AnyFunSuite {
         f"$corpus: OPQ recall regressed: $opq%.3f < $floor (r11 measured)")
     }
     gate(uniform, "uniform", 0.30)
-    gate(RecallProbe.plantedEmbeddings(spark).localCheckpoint(true),
+    gate(plantedEmbeddings().localCheckpoint(true),
       "planted", 0.55)
   }
 
@@ -534,7 +569,7 @@ class ExtSpec extends AnyFunSuite {
     // buckets: every single-probe candidate is still a candidate. Measured
     // on the planted corpus, where single-probe LSH finds true neighbors
     // (on sf0.01 both recalls read 0, so the comparison says nothing)
-    val planted = RecallProbe.plantedEmbeddings(spark).localCheckpoint(true)
+    val planted = plantedEmbeddings().localCheckpoint(true)
     val truth = Similarity.bruteForceTopK(planted, queryMod = 100, k = 3)
       .localCheckpoint(true)
     val r0 = measuredRecall(truth,
@@ -1605,7 +1640,7 @@ class ExtSpec extends AnyFunSuite {
     // 0.3 * maxsim penalty must (a) keep step 1 identical to the
     // brute-force winner (no penalty applies yet) and (b) produce selected
     // sets with strictly lower mean pairwise cosine than plain top-5.
-    val emb = RecallProbe.plantedEmbeddings(spark).localCheckpoint(true)
+    val emb = plantedEmbeddings().localCheckpoint(true)
     graft.functions.GraftFunctions.register(spark)
     val mmr = Similarity.mmrTopK(emb).localCheckpoint(true)
     val bf = Similarity.bruteForceTopK(emb, 100, 5).localCheckpoint(true)
@@ -1638,7 +1673,7 @@ class ExtSpec extends AnyFunSuite {
     // seed's quality — the defect the dual seeding fixes), and (b) the
     // equal-candidate-budget comparison vs IVF nprobe=2 (~corpus/8
     // candidates vs beam*m*hops = 240) is printed and floor-gated.
-    val emb = RecallProbe.plantedEmbeddings(spark).localCheckpoint(true)
+    val emb = plantedEmbeddings().localCheckpoint(true)
     val truth = Similarity.bruteForceTopK(emb).localCheckpoint(true)
     val rGraph = measuredRecall(truth,
       Similarity.graphAnnTopK(emb, Similarity.planes(spark)))
@@ -1657,7 +1692,7 @@ class ExtSpec extends AnyFunSuite {
     // sequence(2, 1) is DESCENDING in Spark — an unguarded k=1 would run
     // two bogus greedy steps (round-12 ADVICE); the guard must return one
     // row per query, identical to brute-force rank 1.
-    val emb = RecallProbe.plantedEmbeddings(spark).localCheckpoint(true)
+    val emb = plantedEmbeddings().localCheckpoint(true)
     val m1 = Similarity.mmrTopK(emb, k = 1).localCheckpoint(true)
     val perQuery = m1.groupBy("query_id").count()
       .agg(min("count"), max("count")).head

@@ -1,6 +1,14 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+import java.nio.file.attribute.FileTime
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.io.Sources
@@ -10,18 +18,63 @@ import graft.streaming.StreamPipeline
   * aggregate over the same events, one AvailableNow micro-batch run. */
 class StreamingSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
+  private val dir = "/root/testdata/sf0.001"
+
+  /** A fresh landing directory holding the whole events file as one part. */
+  private def landEvents(): String = {
+    val landing = Files.createTempDirectory("graft-events")
+    Files.copy(Paths.get(s"$dir/events.parquet"),
+      landing.resolve("part-0.parquet"))
+    landing.toString
+  }
+
+  /** Lands `src`, in its row order, as `parts` slices of
+    * `rows / parts + 1` rows, one `slice-NN.parquet` file each, in a fresh
+    * landing directory. FileStreamSource orders by mtime and the slice
+    * writes land within milliseconds, so the slices get strictly
+    * increasing mtimes: coarse-mtime filesystems could otherwise deliver
+    * them out of order and flake the equivalence. */
+  private def land(src: DataFrame, parts: Int): Path = {
+    val landing = Files.createTempDirectory("graft-slices")
+    val rows = src.collect()
+    rows.grouped(rows.length / parts + 1).zipWithIndex.foreach { case (slice, i) =>
+      val stage = landing.resolve(f"stage-$i%02d")
+      spark.createDataFrame(
+          spark.sparkContext.parallelize(slice.toIndexedSeq, 1), src.schema)
+        .write.parquet(stage.toString)
+      val part = Files.list(stage).iterator().asScala
+        .find(_.getFileName.toString.endsWith(".parquet")).get
+      val dest = landing.resolve(f"slice-$i%02d.parquet")
+      Files.move(part, dest)
+      Files.setLastModifiedTime(dest,
+        FileTime.fromMillis(1000000000000L + i * 60000L))
+    }
+    landing
+  }
+
+  /** A file stream over [[land]]'s slices, one slice per micro-batch. */
+  private def sliceStream(schema: StructType, landing: Path): DataFrame =
+    spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", 1)
+      .option("pathGlobFilter", "slice-*.parquet")
+      .parquet(landing.toString)
+
+  /** Runs `ds` to completion (AvailableNow) into the memory table `name`. */
+  private def drain(ds: Dataset[_], name: String,
+                    mode: String): StreamingQuery = {
+    val q = ds.writeStream.format("memory").queryName(name).outputMode(mode)
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    q
+  }
 
   test("availableNow streaming hourly stats match the batch aggregate") {
-    val dir = "/root/testdata/sf0.001"
     // file-stream sources need a landing DIRECTORY; stage the events file
-    val landing = java.nio.file.Files.createTempDirectory("graft-events")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$dir/events.parquet"),
-      landing.resolve("part-0.parquet"))
+    val landing = landEvents()
     // complete mode deliberately: this bounded one-shot batch compares the
     // FULL window set against the batch aggregate, including trailing
     // windows the watermark has not finalized (append would hold those back)
-    StreamPipeline.runAvailableNow(spark, landing.toString, "hourly_stats_test",
+    StreamPipeline.runAvailableNow(spark, landing, "hourly_stats_test",
       outputMode = "complete")
     val streamed = spark.table("hourly_stats_test")
 
@@ -42,35 +95,10 @@ class StreamingSpec extends AnyFunSuite {
     // micro-batches, complete mode so unfinalized trailing windows are
     // comparable) and must reproduce the batch st4 report exactly —
     // including every event appearing in all 4 of its slide windows.
-    val dir = "/root/testdata/sf0.001"
-    val landing = java.nio.file.Files.createTempDirectory("graft-ev-slide")
-    val src = spark.read.parquet(s"$dir/events.parquet").cache()
-    val n = src.count()
-    import scala.jdk.CollectionConverters._
-    val thirds = src.collect().grouped((n / 3 + 1).toInt).toSeq
-    thirds.zipWithIndex.foreach { case (rows, i) =>
-      val sliceDir = landing.resolve(f"stage-$i%02d")
-      spark.createDataFrame(
-          spark.sparkContext.parallelize(rows.toIndexedSeq, 1), src.schema)
-        .write.parquet(sliceDir.toString)
-      val part = java.nio.file.Files.list(sliceDir).iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet")).get
-      val dest = landing.resolve(f"slice-$i%02d.parquet")
-      java.nio.file.Files.move(part, dest)
-      java.nio.file.Files.setLastModifiedTime(dest,
-        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
-    }
-    val fs = spark.readStream.schema(src.schema)
-      .option("maxFilesPerTrigger", 1)
-      .option("pathGlobFilter", "slice-*.parquet")
-      .parquet(landing.toString)
-    val q = StreamPipeline
-      .slidingRates(graft.io.Sources.normalizeEventTs(fs))
-      .writeStream.format("memory").queryName("sliding_rates_test")
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val src = spark.read.parquet(s"$dir/events.parquet")
+    val fs = sliceStream(src.schema, land(src, 3))
+    val q = drain(StreamPipeline.slidingRates(Sources.normalizeEventTs(fs)),
+      "sliding_rates_test", "complete")
     assert(q.lastProgress.batchId >= 2,
       s"expected >= 3 micro-batches, saw ${q.lastProgress.batchId + 1}")
     val streamed = spark.table("sliding_rates_test")
@@ -86,20 +114,12 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("native session_window sessions match the batch gaps-and-islands twin") {
-    val dir = "/root/testdata/sf0.001"
-    val landing = java.nio.file.Files.createTempDirectory("graft-events-sessions")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$dir/events.parquet"),
-      landing.resolve("part-0.parquet"))
+    val landing = landEvents()
     // complete mode: bounded one-shot — compare ALL sessions, including the
     // trailing ones append mode would hold back behind the watermark
-    val q = StreamPipeline.userSessions(
-        StreamPipeline.readEvents(spark, landing.toString))
-      .writeStream.format("memory").queryName("user_sessions_test")
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(StreamPipeline.userSessions(
+        StreamPipeline.readEvents(spark, landing)),
+      "user_sessions_test", "complete")
     val streamed = spark.table("user_sessions_test")
       .select(col("user_id"), col("session_start"), col("n_events"),
         col("duration_sec"), round(col("total_value"), 2).as("total_value"))
@@ -124,7 +144,6 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("dropDuplicatesWithinWatermark removes re-delivered events") {
-    val dir = "/root/testdata/sf0.001"
     import spark.implicits._
     val events = Sources.events(spark, dir).limit(100).cache()
     val doubled = events.union(events) // simulate at-least-once redelivery
@@ -134,20 +153,12 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("stream-static enrichment broadcast-joins the dimension per micro-batch") {
-    val dir = "/root/testdata/sf0.001"
-    val landing = java.nio.file.Files.createTempDirectory("graft-events-enrich")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$dir/events.parquet"),
-      landing.resolve("part-0.parquet"))
+    val landing = landEvents()
     val dim = Sources.customer(spark, dir).select("c_custkey", "c_mktsegment")
-    val q = StreamPipeline.enrich(
-        StreamPipeline.readEvents(spark, landing.toString), dim,
-        "user_id", "c_custkey")
-      .writeStream.format("memory").queryName("enriched_events_test")
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(StreamPipeline.enrich(
+        StreamPipeline.readEvents(spark, landing), dim,
+        "user_id", "c_custkey"),
+      "enriched_events_test", "append")
     val streamed = spark.table("enriched_events_test")
 
     val batchEvents = Sources.events(spark, dir)
@@ -163,21 +174,13 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("stream-stream click->purchase interval join matches the batch twin") {
-    val dir = "/root/testdata/sf0.001"
-    val landing = java.nio.file.Files.createTempDirectory("graft-events-ssjoin")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$dir/events.parquet"),
-      landing.resolve("part-0.parquet"))
+    val landing = landEvents()
     // append mode: an INNER stream-stream join emits each match as soon as
     // both sides arrive; the watermark + two-sided time bound only govern
     // state EVICTION, so a bounded AvailableNow run must surface every match
-    val q = StreamPipeline.clickPurchase(
-        StreamPipeline.readEvents(spark, landing.toString))
-      .writeStream.format("memory").queryName("click_purchase_test")
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(StreamPipeline.clickPurchase(
+        StreamPipeline.readEvents(spark, landing)),
+      "click_purchase_test", "append")
     val streamed = spark.table("click_purchase_test")
 
     val batch = Queries.all("st3_interval_join")(spark, dir)
@@ -190,20 +193,12 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("native top_k_by aggregate runs inside streaming state, matches batch") {
-    val dir = "/root/testdata/sf0.001"
-    val landing = java.nio.file.Files.createTempDirectory("graft-events-topk")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$dir/events.parquet"),
-      landing.resolve("part-0.parquet"))
+    val landing = landEvents()
     // complete mode: bounded one-shot batch, compare ALL windows (append
     // would hold back windows the watermark has not finalized)
-    val q = StreamPipeline.windowedTopK(
-        StreamPipeline.readEvents(spark, landing.toString))
-      .writeStream.format("memory").queryName("windowed_topk_test")
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(StreamPipeline.windowedTopK(
+        StreamPipeline.readEvents(spark, landing)),
+      "windowed_topk_test", "complete")
     val streamed = spark.table("windowed_topk_test")
 
     val batch = StreamPipeline.windowedTopK(Sources.events(spark, dir))
@@ -218,7 +213,6 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     // two micro-batches: batch 2 re-delivers doc 1's CONTENT under a new
     // doc_id (the crawl-refetch shape) plus one genuinely new doc
-    val landing = java.nio.file.Files.createTempDirectory("graft-docs-dedup")
     val t0 = java.sql.Timestamp.valueOf("2024-01-01 10:00:00")
     def at(min: Int) = new java.sql.Timestamp(t0.getTime + min * 60000L)
     val batch1 = Seq(
@@ -227,35 +221,12 @@ class StreamingSpec extends AnyFunSuite {
     val batch2 = Seq(
       (4L, "alpha content", at(30)), // duplicate payload inside watermark
       (5L, "delta content", at(31)))
-    Seq(batch1, batch2).zipWithIndex.foreach { case (rows, i) =>
-      rows.toDF("doc_id", "text", "ts").coalesce(1)
-        .write.parquet(landing.resolve(f"stage-$i%02d").toString)
-      import scala.jdk.CollectionConverters._
-      val part = java.nio.file.Files.list(landing.resolve(f"stage-$i%02d"))
-        .iterator().asScala.find(_.getFileName.toString.endsWith(".parquet")).get
-      val dest = landing.resolve(f"docs-$i%02d.parquet")
-      java.nio.file.Files.move(part, dest)
-      // pin strictly increasing mtimes (FileStreamSource orders by mtime)
-      java.nio.file.Files.setLastModifiedTime(dest,
-        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
-    }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("ts",
-        org.apache.spark.sql.types.TimestampType)))
-    val q = StreamPipeline.dedupDocumentsStream(
-        spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1)
-          .option("pathGlobFilter", "docs-*.parquet")
-          .parquet(landing.toString))
-      .writeStream.format("memory").queryName("dedup_docs_test")
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    // 5 rows in slices of 5 / 2 + 1 = 3: batch1, then batch2
+    val landing = land((batch1 ++ batch2).toDF("doc_id", "text", "ts"), 2)
+    val schema = new StructType()
+      .add("doc_id", "long").add("text", "string").add("ts", "timestamp")
+    drain(StreamPipeline.dedupDocumentsStream(sliceStream(schema, landing)),
+      "dedup_docs_test", "append")
     val kept = spark.table("dedup_docs_test")
       .select("doc_id").as[Long].collect().toSet
     assert(kept == Set(1L, 2L, 3L, 5L),
@@ -269,40 +240,12 @@ class StreamingSpec extends AnyFunSuite {
     // and because no event is later than the 2h watermark delay, eviction
     // must never cost a match. This executes the state-eviction path the
     // single-batch case cannot reach.
-    val dir = "/root/testdata/sf0.001"
-    val landing = java.nio.file.Files.createTempDirectory("graft-events-wm")
     val src = spark.read.parquet(s"$dir/events.parquet")
-      .orderBy("ts", "event_id").cache()
-    val n = src.count()
-    import scala.jdk.CollectionConverters._
-    val quarts = src.collect().grouped((n / 4 + 1).toInt).toSeq
-    quarts.zipWithIndex.foreach { case (rows, i) =>
-      val sliceDir = landing.resolve(f"stage-$i%02d")
-      spark.createDataFrame(
-          spark.sparkContext.parallelize(rows.toIndexedSeq, 1), src.schema)
-        .write.parquet(sliceDir.toString)
-      val part = java.nio.file.Files.list(sliceDir).iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet")).get
-      val dest = landing.resolve(f"slice-$i%02d.parquet")
-      java.nio.file.Files.move(part, dest)
-      // FileStreamSource orders by mtime; the slice writes land within
-      // milliseconds, so pin strictly increasing mtimes explicitly —
-      // coarse-mtime filesystems could otherwise deliver slices out of
-      // event-time order and flake the equivalence.
-      java.nio.file.Files.setLastModifiedTime(dest,
-        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
-    }
-    val fileStream = Sources.normalizeEventTs(spark.readStream
-      .schema(src.schema)
-      .option("maxFilesPerTrigger", 1)
-      .option("pathGlobFilter", "slice-*.parquet")
-      .parquet(landing.toString))
-    val q = StreamPipeline.clickPurchase(fileStream)
-      .writeStream.format("memory").queryName("click_purchase_wm_test")
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .orderBy("ts", "event_id")
+    val landing = land(src, 4)
+    val fileStream = Sources.normalizeEventTs(sliceStream(src.schema, landing))
+    val q = drain(StreamPipeline.clickPurchase(fileStream),
+      "click_purchase_wm_test", "append")
     assert(q.lastProgress.batchId >= 3,
       s"expected >= 4 micro-batches, saw ${q.lastProgress.batchId + 1}")
 
@@ -317,41 +260,13 @@ class StreamingSpec extends AnyFunSuite {
     // ev1's streaming twin: three time-ordered micro-batches through the
     // flatMapGroupsWithState funnel; the latest per-user snapshot must
     // equal the batch window-funnel over the whole fixture.
-    val dir = "/root/testdata/sf0.001"
-    val landing = java.nio.file.Files.createTempDirectory("graft-events-funnel")
     val src = spark.read.parquet(s"$dir/events.parquet")
-      .orderBy("ts", "event_id").cache()
-    val n = src.count()
-    import scala.jdk.CollectionConverters._
-    val thirds = src.collect().grouped((n / 3 + 1).toInt).toSeq
-    thirds.zipWithIndex.foreach { case (rows, i) =>
-      val sliceDir = landing.resolve(f"stage-$i%02d")
-      spark.createDataFrame(
-          spark.sparkContext.parallelize(rows.toIndexedSeq, 1), src.schema)
-        .write.parquet(sliceDir.toString)
-      val part = java.nio.file.Files.list(sliceDir).iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet")).get
-      val dest = landing.resolve(f"slice-$i%02d.parquet")
-      java.nio.file.Files.move(part, dest)
-      // FileStreamSource orders by mtime; the slice writes land within
-      // milliseconds, so pin strictly increasing mtimes explicitly —
-      // coarse-mtime filesystems could otherwise deliver slices out of
-      // event-time order and flake the equivalence.
-      java.nio.file.Files.setLastModifiedTime(dest,
-        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
-    }
-    val fileStream = spark.readStream
-      .schema(src.schema)
-      .option("maxFilesPerTrigger", 1)
-      .option("pathGlobFilter", "slice-*.parquet")
-      .parquet(landing.toString)
-    val q = graft.streaming.StreamingFunnel.userFunnelStream(spark,
-        graft.streaming.StreamingFunnel.toFunnelEvents(spark, fileStream))
-      .writeStream.format("memory").queryName("funnel_stream_test")
-      .outputMode("update")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .orderBy("ts", "event_id")
+    val landing = land(src, 3)
+    val fileStream = sliceStream(src.schema, landing)
+    val q = drain(graft.streaming.StreamingFunnel.userFunnelStream(spark,
+        graft.streaming.StreamingFunnel.toFunnelEvents(spark, fileStream)),
+      "funnel_stream_test", "update")
     assert(q.lastProgress.batchId >= 2,
       s"expected >= 3 micro-batches, saw ${q.lastProgress.batchId + 1}")
 
@@ -378,37 +293,13 @@ class StreamingSpec extends AnyFunSuite {
     // counted over all micro-batches, must equal the batch lag-pass —
     // including transitions whose two events arrive in DIFFERENT batches
     // (the per-user last-event state carries across).
-    val dir = "/root/testdata/sf0.001"
-    val landing = java.nio.file.Files.createTempDirectory("graft-events-trans")
     val src = spark.read.parquet(s"$dir/events.parquet")
-      .orderBy("ts", "event_id").cache()
-    val n = src.count()
-    import scala.jdk.CollectionConverters._
-    val thirds = src.collect().grouped((n / 3 + 1).toInt).toSeq
-    thirds.zipWithIndex.foreach { case (rows, i) =>
-      val sliceDir = landing.resolve(f"stage-$i%02d")
-      spark.createDataFrame(
-          spark.sparkContext.parallelize(rows.toIndexedSeq, 1), src.schema)
-        .write.parquet(sliceDir.toString)
-      val part = java.nio.file.Files.list(sliceDir).iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet")).get
-      val dest = landing.resolve(f"slice-$i%02d.parquet")
-      java.nio.file.Files.move(part, dest)
-      java.nio.file.Files.setLastModifiedTime(dest,
-        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
-    }
-    val fileStream = spark.readStream
-      .schema(src.schema)
-      .option("maxFilesPerTrigger", 1)
-      .option("pathGlobFilter", "slice-*.parquet")
-      .parquet(landing.toString)
-    val q = graft.streaming.StreamingTransitions.transitionsStream(spark,
-        graft.streaming.StreamingTransitions.toTransitionEvents(spark, fileStream))
-      .writeStream.format("memory").queryName("transitions_stream_test")
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .orderBy("ts", "event_id")
+    val landing = land(src, 3)
+    val fileStream = sliceStream(src.schema, landing)
+    val q = drain(graft.streaming.StreamingTransitions.transitionsStream(spark,
+        graft.streaming.StreamingTransitions.toTransitionEvents(spark, fileStream)),
+      "transitions_stream_test", "append")
     assert(q.lastProgress.batchId >= 2,
       s"expected >= 3 micro-batches, saw ${q.lastProgress.batchId + 1}")
 
@@ -437,18 +328,8 @@ class StreamingSpec extends AnyFunSuite {
     // (plain incremental aggregate), and per-user first events (a min_by
     // running aggregate whose state is one row per user — order-
     // independent, so it needs no ingest contract at all).
-    def aggStream(name: String)(
-        agg: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) = {
-      val fs = spark.readStream
-        .schema(src.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "slice-*.parquet")
-        .parquet(landing.toString)
-      val q2 = agg(fs).writeStream.format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q2.awaitTermination()
+    def aggStream(name: String)(agg: DataFrame => DataFrame) = {
+      drain(agg(sliceStream(src.schema, landing)), name, "complete")
       spark.table(name)
     }
     val totals = aggStream("ev23_totals_test")(
@@ -475,37 +356,13 @@ class StreamingSpec extends AnyFunSuite {
     // micro-batches, must equal linearAttribution over all events —
     // including purchases whose in-window touches arrived in EARLIER
     // batches (the per-user touch-window state carries across).
-    val dir = "/root/testdata/sf0.001"
-    val landing = java.nio.file.Files.createTempDirectory("graft-events-attr")
     val src = spark.read.parquet(s"$dir/events.parquet")
-      .orderBy("ts", "event_id").cache()
-    val n = src.count()
-    import scala.jdk.CollectionConverters._
-    val thirds = src.collect().grouped((n / 3 + 1).toInt).toSeq
-    thirds.zipWithIndex.foreach { case (rows, i) =>
-      val sliceDir = landing.resolve(f"stage-$i%02d")
-      spark.createDataFrame(
-          spark.sparkContext.parallelize(rows.toIndexedSeq, 1), src.schema)
-        .write.parquet(sliceDir.toString)
-      val part = java.nio.file.Files.list(sliceDir).iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet")).get
-      val dest = landing.resolve(f"slice-$i%02d.parquet")
-      java.nio.file.Files.move(part, dest)
-      java.nio.file.Files.setLastModifiedTime(dest,
-        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
-    }
-    val fileStream = spark.readStream
-      .schema(src.schema)
-      .option("maxFilesPerTrigger", 1)
-      .option("pathGlobFilter", "slice-*.parquet")
-      .parquet(landing.toString)
-    val q = graft.streaming.StreamingAttribution.attributionStream(spark,
-        graft.streaming.StreamingAttribution.toAttrEvents(spark, fileStream))
-      .writeStream.format("memory").queryName("attribution_stream_test")
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .orderBy("ts", "event_id")
+    val landing = land(src, 3)
+    val fileStream = sliceStream(src.schema, landing)
+    val q = drain(graft.streaming.StreamingAttribution.attributionStream(spark,
+        graft.streaming.StreamingAttribution.toAttrEvents(spark, fileStream)),
+      "attribution_stream_test", "append")
     assert(q.lastProgress.batchId >= 2,
       s"expected >= 3 micro-batches, saw ${q.lastProgress.batchId + 1}")
 
@@ -528,37 +385,13 @@ class StreamingSpec extends AnyFunSuite {
     // time-ordered: cohort min + week-set union are order-insensitive, so
     // the twin's equality contract is stronger than the funnel's
     // event-time-ordered one, and the test exercises exactly that.
-    val dir = "/root/testdata/sf0.001"
-    val landing = java.nio.file.Files.createTempDirectory("graft-events-ret")
     val src = spark.read.parquet(s"$dir/events.parquet")
-      .orderBy(expr("hash(user_id)"), col("event_id")).cache()
-    val n = src.count()
-    import scala.jdk.CollectionConverters._
-    val thirds = src.collect().grouped((n / 3 + 1).toInt).toSeq
-    thirds.zipWithIndex.foreach { case (rows, i) =>
-      val sliceDir = landing.resolve(f"stage-$i%02d")
-      spark.createDataFrame(
-          spark.sparkContext.parallelize(rows.toIndexedSeq, 1), src.schema)
-        .write.parquet(sliceDir.toString)
-      val part = java.nio.file.Files.list(sliceDir).iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet")).get
-      val dest = landing.resolve(f"slice-$i%02d.parquet")
-      java.nio.file.Files.move(part, dest)
-      java.nio.file.Files.setLastModifiedTime(dest,
-        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
-    }
-    val fileStream = spark.readStream
-      .schema(src.schema)
-      .option("maxFilesPerTrigger", 1)
-      .option("pathGlobFilter", "slice-*.parquet")
-      .parquet(landing.toString)
-    val q = graft.streaming.StreamingRetention.retentionStream(spark,
-        graft.streaming.StreamingRetention.toRetentionEvents(spark, fileStream))
-      .writeStream.format("memory").queryName("retention_stream_test")
-      .outputMode("update")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .orderBy(expr("hash(user_id)"), col("event_id"))
+    val landing = land(src, 3)
+    val fileStream = sliceStream(src.schema, landing)
+    val q = drain(graft.streaming.StreamingRetention.retentionStream(spark,
+        graft.streaming.StreamingRetention.toRetentionEvents(spark, fileStream)),
+      "retention_stream_test", "update")
     assert(q.lastProgress.batchId >= 2,
       s"expected >= 3 micro-batches, saw ${q.lastProgress.batchId + 1}")
 
@@ -602,37 +435,13 @@ class StreamingSpec extends AnyFunSuite {
     // retention twin: day-set union is order-insensitive, so the fold of
     // the latest per-user snapshots must equal ActiveUsers.rollingActive
     // over all events regardless of arrival order.
-    val dir = "/root/testdata/sf0.001"
-    val landing = java.nio.file.Files.createTempDirectory("graft-events-act")
     val src = spark.read.parquet(s"$dir/events.parquet")
-      .orderBy(expr("hash(user_id)"), col("event_id")).cache()
-    val n = src.count()
-    import scala.jdk.CollectionConverters._
-    val thirds = src.collect().grouped((n / 3 + 1).toInt).toSeq
-    thirds.zipWithIndex.foreach { case (rows, i) =>
-      val sliceDir = landing.resolve(f"stage-$i%02d")
-      spark.createDataFrame(
-          spark.sparkContext.parallelize(rows.toIndexedSeq, 1), src.schema)
-        .write.parquet(sliceDir.toString)
-      val part = java.nio.file.Files.list(sliceDir).iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet")).get
-      val dest = landing.resolve(f"slice-$i%02d.parquet")
-      java.nio.file.Files.move(part, dest)
-      java.nio.file.Files.setLastModifiedTime(dest,
-        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
-    }
-    val fileStream = spark.readStream
-      .schema(src.schema)
-      .option("maxFilesPerTrigger", 1)
-      .option("pathGlobFilter", "slice-*.parquet")
-      .parquet(landing.toString)
-    val q = graft.streaming.StreamingActiveUsers.activeStream(spark,
-        graft.streaming.StreamingActiveUsers.toActiveEvents(spark, fileStream))
-      .writeStream.format("memory").queryName("active_stream_test")
-      .outputMode("update")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .orderBy(expr("hash(user_id)"), col("event_id"))
+    val landing = land(src, 3)
+    val fileStream = sliceStream(src.schema, landing)
+    val q = drain(graft.streaming.StreamingActiveUsers.activeStream(spark,
+        graft.streaming.StreamingActiveUsers.toActiveEvents(spark, fileStream)),
+      "active_stream_test", "update")
     assert(q.lastProgress.batchId >= 2,
       s"expected >= 3 micro-batches, saw ${q.lastProgress.batchId + 1}")
 
@@ -653,20 +462,12 @@ class StreamingSpec extends AnyFunSuite {
     // per-day tail (StreamingBounce.fromSessions) the batch query runs, so
     // any divergence is the session step itself — which st2's boundary
     // assertion (no exactly-1800s gaps in the fixture) rules out.
-    val dir = "/root/testdata/sf0.001"
-    val landing = java.nio.file.Files.createTempDirectory("graft-events-bounce")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$dir/events.parquet"),
-      landing.resolve("part-0.parquet"))
+    val landing = landEvents()
     // complete mode: bounded one-shot — include the trailing sessions
     // append mode would hold back behind the watermark
-    val q = graft.streaming.StreamingBounce.sessionDaily(
-        StreamPipeline.readEvents(spark, landing.toString))
-      .writeStream.format("memory").queryName("bounce_sessions_test")
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(graft.streaming.StreamingBounce.sessionDaily(
+        StreamPipeline.readEvents(spark, landing)),
+      "bounce_sessions_test", "complete")
     val streamed = graft.streaming.StreamingBounce.fromSessions(
       spark.table("bounce_sessions_test"))
     val batch = Queries.all("ev17_bounce_rate")(spark, dir)
@@ -691,37 +492,13 @@ class StreamingSpec extends AnyFunSuite {
     // micro-units, both order-insensitive, so the fold of the latest
     // per-user snapshots must equal the batch triangle bit-for-bit
     // regardless of arrival order.
-    val dir = "/root/testdata/sf0.001"
-    val landing = java.nio.file.Files.createTempDirectory("graft-events-cohort")
     val src = spark.read.parquet(s"$dir/events.parquet")
-      .orderBy(expr("hash(user_id)"), col("event_id")).cache()
-    val n = src.count()
-    import scala.jdk.CollectionConverters._
-    val thirds = src.collect().grouped((n / 3 + 1).toInt).toSeq
-    thirds.zipWithIndex.foreach { case (rows, i) =>
-      val sliceDir = landing.resolve(f"stage-$i%02d")
-      spark.createDataFrame(
-          spark.sparkContext.parallelize(rows.toIndexedSeq, 1), src.schema)
-        .write.parquet(sliceDir.toString)
-      val part = java.nio.file.Files.list(sliceDir).iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet")).get
-      val dest = landing.resolve(f"slice-$i%02d.parquet")
-      java.nio.file.Files.move(part, dest)
-      java.nio.file.Files.setLastModifiedTime(dest,
-        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
-    }
-    val fileStream = spark.readStream
-      .schema(src.schema)
-      .option("maxFilesPerTrigger", 1)
-      .option("pathGlobFilter", "slice-*.parquet")
-      .parquet(landing.toString)
-    val q = graft.streaming.StreamingCohortValue.cohortStream(spark,
-        graft.streaming.StreamingCohortValue.toCohortEvents(spark, fileStream))
-      .writeStream.format("memory").queryName("cohort_stream_test")
-      .outputMode("update")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .orderBy(expr("hash(user_id)"), col("event_id"))
+    val landing = land(src, 3)
+    val fileStream = sliceStream(src.schema, landing)
+    val q = drain(graft.streaming.StreamingCohortValue.cohortStream(spark,
+        graft.streaming.StreamingCohortValue.toCohortEvents(spark, fileStream)),
+      "cohort_stream_test", "update")
     assert(q.lastProgress.batchId >= 2,
       s"expected >= 3 micro-batches, saw ${q.lastProgress.batchId + 1}")
 
@@ -744,37 +521,13 @@ class StreamingSpec extends AnyFunSuite {
     // occurrences land in different batches), and the SAME
     // Graph.fromEdgeCounts power iteration over the snapshot must equal
     // the batch g1 report (the ev20 pure-composition pattern).
-    val dir = "/root/testdata/sf0.001"
-    val landing = java.nio.file.Files.createTempDirectory("graft-docs-graph")
     val src = spark.read.parquet(s"$dir/documents.parquet")
-      .orderBy("doc_id").cache()
-    val n = src.count()
-    import scala.jdk.CollectionConverters._
-    val thirds = src.collect().grouped((n / 3 + 1).toInt).toSeq
-    thirds.zipWithIndex.foreach { case (rows, i) =>
-      val sliceDir = landing.resolve(f"stage-$i%02d")
-      spark.createDataFrame(
-          spark.sparkContext.parallelize(rows.toIndexedSeq, 1), src.schema)
-        .write.parquet(sliceDir.toString)
-      val part = java.nio.file.Files.list(sliceDir).iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet")).get
-      val dest = landing.resolve(f"slice-$i%02d.parquet")
-      java.nio.file.Files.move(part, dest)
-      java.nio.file.Files.setLastModifiedTime(dest,
-        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
-    }
-    val fileStream = spark.readStream
-      .schema(src.schema)
-      .option("maxFilesPerTrigger", 1)
-      .option("pathGlobFilter", "slice-*.parquet")
-      .parquet(landing.toString)
-    val q = graft.streaming.StreamingGraph.edgeCountsStream(spark,
-        graft.streaming.StreamingGraph.toEdgeEvents(fileStream))
-      .writeStream.format("memory").queryName("graph_stream_test")
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .orderBy("doc_id")
+    val landing = land(src, 3)
+    val fileStream = sliceStream(src.schema, landing)
+    val q = drain(graft.streaming.StreamingGraph.edgeCountsStream(spark,
+        graft.streaming.StreamingGraph.toEdgeEvents(fileStream)),
+      "graph_stream_test", "complete")
     assert(q.lastProgress.batchId >= 2,
       s"expected >= 3 micro-batches, saw ${q.lastProgress.batchId + 1}")
 
@@ -804,39 +557,13 @@ class StreamingSpec extends AnyFunSuite {
     // aggregate is the only stateful piece, and the SAME
     // connectedComponents / hits kernels over the snapshots (projected to
     // distinct (src, dst)) must equal the registered batch reports.
-    val dir = "/root/testdata/sf0.001"
-    val landing = java.nio.file.Files.createTempDirectory("graft-docs-g34")
     val src = spark.read.parquet(s"$dir/documents.parquet")
-      .orderBy("doc_id").cache()
-    val n = src.count()
-    import scala.jdk.CollectionConverters._
-    val thirds = src.collect().grouped((n / 3 + 1).toInt).toSeq
-    thirds.zipWithIndex.foreach { case (rows, i) =>
-      val sliceDir = landing.resolve(f"stage-$i%02d")
-      spark.createDataFrame(
-          spark.sparkContext.parallelize(rows.toIndexedSeq, 1), src.schema)
-        .write.parquet(sliceDir.toString)
-      val part = java.nio.file.Files.list(sliceDir).iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet")).get
-      val dest = landing.resolve(f"slice-$i%02d.parquet")
-      java.nio.file.Files.move(part, dest)
-      java.nio.file.Files.setLastModifiedTime(dest,
-        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
-    }
-    def snapshot(project: org.apache.spark.sql.DataFrame =>
-        org.apache.spark.sql.DataFrame, name: String) = {
-      val fileStream = spark.readStream
-        .schema(src.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "slice-*.parquet")
-        .parquet(landing.toString)
-      val q = graft.streaming.StreamingGraph
-        .edgeCountsStream(spark, project(fileStream))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      .orderBy("doc_id")
+    val landing = land(src, 3)
+    def snapshot(project: DataFrame => DataFrame, name: String) = {
+      val q = drain(graft.streaming.StreamingGraph.edgeCountsStream(spark,
+          project(sliceStream(src.schema, landing))),
+        name, "complete")
       assert(q.lastProgress.batchId >= 2,
         s"expected >= 3 micro-batches, saw ${q.lastProgress.batchId + 1}")
       spark.table(name).select("src", "dst")
@@ -869,7 +596,6 @@ class StreamingSpec extends AnyFunSuite {
     // the shared fold over the accumulated histogram must equal the
     // registered batch query exactly (not just approximately: the
     // frequency-weighted percentile IS the multiset percentile).
-    val dir = "/root/testdata/sf0.001"
     val ev = Sources.events(spark, dir)
       .select("user_id", "event_type", "ts", "event_id")
       .orderBy("ts", "event_id").cache()

@@ -1014,12 +1014,15 @@ object Queries {
 
   // ===== streaming-shaped (tumbling window over events) ====================
 
-  /** Sessionization (gaps-and-islands): a new session starts after a
-    * > 30 min silence per user. The batch-declarative twin of
-    * session_window — same semantics, oracle-checkable. */
-  def st2Sessionize(s: SparkSession, dir: String): DataFrame = {
+  /** Gaps-and-islands session labelling, the one copy behind st2, ev7,
+    * ev17 and ev19: per user in (ts, event_id) order, an event opens a
+    * new session when it is the user's first or follows a > 1800 s
+    * silence, and `session_seq` is the running count of openings. Adds
+    * `prev_ts`, `new_session` and `session_seq`; both windows share the
+    * one user_id partitioning. */
+  private def sessionized(events: DataFrame): DataFrame = {
     val byUser = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    val sessions = Sources.events(s, dir)
+    events
       .withColumn("prev_ts", lag("ts", 1).over(byUser))
       .withColumn("new_session",
         when(col("prev_ts").isNull ||
@@ -1027,6 +1030,13 @@ object Queries {
           .otherwise(0L))
       .withColumn("session_seq", sum("new_session").over(
         byUser.rowsBetween(Window.unboundedPreceding, 0)))
+  }
+
+  /** Sessionization (gaps-and-islands): a new session starts after a
+    * > 30 min silence per user. The batch-declarative twin of
+    * session_window — same semantics, oracle-checkable. */
+  def st2Sessionize(s: SparkSession, dir: String): DataFrame = {
+    val sessions = sessionized(Sources.events(s, dir))
     rounded(sessions.groupBy("user_id", "session_seq")
       .agg(
         count(lit(1)).as("n_events"),
@@ -1050,15 +1060,7 @@ object Queries {
     * table is tiny (distinct truncated paths); top-20 is
     * TakeOrderedAndProject. */
   def ev7SessionPaths(s: SparkSession, dir: String): DataFrame = {
-    val byUser = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    val sessions = Sources.events(s, dir)
-      .withColumn("prev_ts", lag("ts", 1).over(byUser))
-      .withColumn("new_session",
-        when(col("prev_ts").isNull ||
-          col("ts").cast("long") - col("prev_ts").cast("long") > 1800, 1L)
-          .otherwise(0L))
-      .withColumn("session_seq", sum("new_session").over(
-        byUser.rowsBetween(Window.unboundedPreceding, 0)))
+    val sessions = sessionized(Sources.events(s, dir))
     val rnW = Window.partitionBy("user_id", "session_seq")
       .orderBy("ts", "event_id")
     val first8 = sessions
@@ -2591,15 +2593,7 @@ object Queries {
     * tail is [[graft.streaming.StreamingBounce.fromSessions]] — the same
     * fold the session_window stream twin runs. */
   def ev17BounceRate(s: SparkSession, dir: String): DataFrame = {
-    val byUser = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    val sessions = Sources.events(s, dir)
-      .withColumn("prev_ts", lag("ts", 1).over(byUser))
-      .withColumn("new_session",
-        when(col("prev_ts").isNull ||
-          col("ts").cast("long") - col("prev_ts").cast("long") > 1800, 1L)
-          .otherwise(0L))
-      .withColumn("session_seq", sum("new_session").over(
-        byUser.rowsBetween(Window.unboundedPreceding, 0)))
+    val sessions = sessionized(Sources.events(s, dir))
       .groupBy("user_id", "session_seq")
       .agg(count(lit(1)).as("n_events"),
         date_trunc("day", min(col("ts"))).cast("date").as("day"))
@@ -2729,15 +2723,7 @@ object Queries {
     * (floor-epoch diffs), percentiles are the a5-proven exact
     * `percentile` == `quantile_cont` contract, the mean rounds at 2. */
   def ev19SessionDuration(s: SparkSession, dir: String): DataFrame = {
-    val byUser = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    val sess = Sources.events(s, dir)
-      .withColumn("prev_ts", lag("ts", 1).over(byUser))
-      .withColumn("new_session",
-        when(col("prev_ts").isNull ||
-          col("ts").cast("long") - col("prev_ts").cast("long") > 1800, 1L)
-          .otherwise(0L))
-      .withColumn("session_seq", sum("new_session").over(
-        byUser.rowsBetween(Window.unboundedPreceding, 0)))
+    val sess = sessionized(Sources.events(s, dir))
       .groupBy("user_id", "session_seq")
       .agg(date_trunc("day", min(col("ts"))).cast("date").as("day"),
         (max(col("ts").cast("long")) - min(col("ts").cast("long")))

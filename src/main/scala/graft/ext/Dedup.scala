@@ -1,6 +1,7 @@
 package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops.Materialize
 import graft.ops.Materialize.MaterializeOps
@@ -27,6 +28,18 @@ object Dedup {
     * the SAME bound, so neither may hardcode its own copy. */
   val DefaultMaxPerBucket: Int = 128
 
+  /** The hot-bucket cap: keep the `cap` smallest `id` rows of each `keys`
+    * group, every column unchanged. An order-independent election (the
+    * survivors depend only on the ids), so the batch paths, the
+    * incremental ingest and the DuckDB oracle's `row_number` all keep the
+    * same rows. */
+  private[graft] def capPerKey(df: DataFrame, keys: Seq[String], id: String,
+                               cap: Int): DataFrame =
+    df.withColumn("__rn", row_number().over(
+        Window.partitionBy(keys.map(col): _*).orderBy(id)))
+      .filter(col("__rn") <= cap)
+      .drop("__rn")
+
   /** Exact duplicate groups by content digest. Keeps the smallest doc_id as
     * the canonical representative (deterministic). */
   def exactDuplicates(docs: DataFrame): DataFrame =
@@ -52,11 +65,6 @@ object Dedup {
     docs.join(winners, Seq("doc_id"), "left_semi")
   }
 
-  /** MinHash signatures: `nHashes` permutations approximated by seeded md5
-    * (hash b of shingle s = md5("b:" || s)); the signature entry is the
-    * minimum over the document's shingles. One exploded pass, partial-min
-    * map-side combine, single shuffle on doc_id. Documents with < 3 tokens
-    * have no shingles and drop out (nothing to near-dup on). */
   /** Per-component XOR masks for [[minhashSignatures]] — a deterministic
     * splitmix64 stream, computed in ONE place and embedded as literals by
     * both the engine and the DuckDB oracle's generated SQL (the
@@ -73,10 +81,14 @@ object Dedup {
     (0 until nHashes).map(b => splitmix(b.toLong) & ((1L << 60) - 1))
   }
 
+  /** MinHash signatures over word-trigram shingles: ONE md5 per shingle,
+    * cut to a 60-bit hash h, and component b (`mh_b`) is the minimum over
+    * the document's shingles of h XOR the b-th [[minhashXorMasks]] mask.
+    * One exploded pass, partial-min map-side combine, single shuffle on
+    * doc_id. Documents with < 3 tokens have no shingles and drop out
+    * (nothing to near-dup on). */
   def minhashSignatures(docs: DataFrame, nHashes: Int = 16): DataFrame = {
-    // ONE md5 per shingle; component b = min over shingles of
-    // (h60 XOR R_b), with an independent 60-bit random mask per component
-    // (each mask relabels the hash trie, so each component elects a
+    // an independent 60-bit random mask per component (each mask relabels the hash trie, so each component elects a
     // genuinely different argmin — the "closest to R_b in XOR metric"
     // shingle). Two additive forms failed the d13 calibration curve
     // before this one: h1 + b*h2 with a 32-bit h2 let the 60-bit h1
@@ -95,22 +107,26 @@ object Dedup {
     // on-diagonal. The explode + 16-min hash aggregate stays fully
     // inside whole-stage codegen (higher-order array lambdas are
     // interpreted and were ~6x slower here); map-side partial mins mean
-    // the shuffle carries 16 longs per doc per partition. explode an INT
-    // index sequence and assemble each shingle scalar-wise: unlike
-    // exploding the interpreted-lambda string array, every step here
-    // (sequence, explode, element_at, concat, md5, xor) is codegen'd
-    val sh = docs
-      .withColumn("toks", TextOps.tokens(col("text")))
-      .select(col("doc_id"), col("toks"), explode(expr(
-        "CASE WHEN size(toks) >= 3 THEN sequence(0, size(toks) - 3) ELSE CAST(array() AS ARRAY<INT>) END")).as("i"))
-      .withColumn("shingle", expr(
-        "concat(element_at(toks, i + 1), ' ', element_at(toks, i + 2), ' ', element_at(toks, i + 3))"))
+    // the shuffle carries 16 longs per doc per partition
+    val sh = trigrams(docs)
       .withColumn("h", conv(substring(md5(col("shingle")), 1, 15), 16, 10).cast("long"))
     val mins = minhashXorMasks(nHashes).zipWithIndex.map { case (r, b) =>
       min(col("h").bitwiseXOR(lit(r))).as(s"mh_$b")
     }
     sh.groupBy("doc_id").agg(mins.head, mins.tail: _*)
   }
+
+  /** Word-trigram shingles (doc_id, shingle), one row per token position,
+    * repeats kept. Explodes an INT index sequence and assembles each
+    * shingle scalar-wise: unlike exploding the interpreted-lambda string
+    * array, every step (sequence, explode, element_at, concat) is
+    * codegen'd. */
+  private def trigrams(docs: DataFrame): DataFrame =
+    docs.withColumn("toks", TextOps.tokens(col("text")))
+      .select(col("doc_id"), col("toks"), explode(expr(
+        "CASE WHEN size(toks) >= 3 THEN sequence(0, size(toks) - 3) ELSE CAST(array() AS ARRAY<INT>) END")).as("i"))
+      .select(col("doc_id"), expr(
+        "concat(element_at(toks, i + 1), ' ', element_at(toks, i + 2), ' ', element_at(toks, i + 3))").as("shingle"))
 
   /** The banded signature view (doc_id, band, band_value): band b is the
     * concat of minhashes 2b and 2b+1. One layout for the batch self-join
@@ -144,12 +160,8 @@ object Dedup {
     // minhashSignatures) and a persist here would leak cache for the
     // session lifetime (this is a library function — the caller owns
     // caching if the signatures are reused)
-    val capped = bands(signatures, nBands)
-      .withColumn("__bn", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy("band", "band_value").orderBy("doc_id")))
-      .filter(col("__bn") <= maxPerBucket)
-      .drop("__bn")
+    val capped = capPerKey(bands(signatures, nBands),
+      Seq("band", "band_value"), "doc_id", maxPerBucket)
     val a = capped.as("a")
     val b = capped.as("b")
     a.join(b, col("a.band") === col("b.band") &&
@@ -177,22 +189,31 @@ object Dedup {
     * appended. */
   def jaccardVerifyPairs(docs: DataFrame, pairs: DataFrame,
                          minJaccard: Double = 0.5): DataFrame = {
-    // the pair table feeds FOUR subtrees (candidate-doc projection twice,
-    // the intersect join, the final report join) and the shingle table
-    // THREE (sizes, both sides of the intersect) — materialized once, or
-    // every consumer re-runs the candidate generation / the semi-join +
-    // shingle explode + distinct from scratch (measured 3x the verify
-    // cost at sf0.1 before the cut; exchange reuse does not fire across
-    // the differently-keyed consumers)
+    val nc = coalesce(col("n_common"), lit(0L))
+    shingleOverlap(docs, pairs)
+      .withColumn("jaccard",
+        nc.cast("double") / (col("__na") + col("__nb") - nc))
+      .filter(col("jaccard") >= minJaccard)
+      .drop("__na", "__nb", "n_common")
+  }
+
+  /** The distinct-shingle overlap both verifiers divide: every `pairs` row
+    * plus `n_common` (|A∩B|, NULL when the sets are disjoint), `__na` and
+    * `__nb` (|A|, |B|).
+    *
+    * The pair table feeds FOUR subtrees (candidate-doc projection twice,
+    * the intersect join, the final report join) and the shingle table
+    * THREE (sizes, both sides of the intersect) — materialized once, or
+    * every consumer re-runs the candidate generation / the semi-join +
+    * shingle explode + distinct from scratch (measured 3x the verify cost
+    * at sf0.1 before the cut; exchange reuse does not fire across the
+    * differently-keyed consumers). */
+  private def shingleOverlap(docs: DataFrame, pairs: DataFrame): DataFrame = {
     val p = pairs.materialized
     val candDocs = p.select(col("doc_a").as("doc_id"))
       .unionAll(p.select(col("doc_b").as("doc_id"))).distinct()
-    val sh = docs.join(candDocs, Seq("doc_id"), "left_semi")
-      .withColumn("toks", TextOps.tokens(col("text")))
-      .select(col("doc_id"), col("toks"), explode(expr(
-        "CASE WHEN size(toks) >= 3 THEN sequence(0, size(toks) - 3) ELSE CAST(array() AS ARRAY<INT>) END")).as("i"))
-      .select(col("doc_id"), xxhash64(expr(
-        "concat(element_at(toks, i + 1), ' ', element_at(toks, i + 2), ' ', element_at(toks, i + 3))")).as("sh"))
+    val sh = trigrams(docs.join(candDocs, Seq("doc_id"), "left_semi"))
+      .select(col("doc_id"), xxhash64(col("shingle")).as("sh"))
       .distinct()
       .materialized
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
@@ -204,11 +225,6 @@ object Dedup {
       .join(inter, Seq("doc_a", "doc_b"), "left")
       .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("__na")), Seq("doc_a"))
       .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("__nb")), Seq("doc_b"))
-      .withColumn("jaccard",
-        coalesce(col("n_common"), lit(0L)).cast("double") /
-          (col("__na") + col("__nb") - coalesce(col("n_common"), lit(0L))))
-      .filter(col("jaccard") >= minJaccard)
-      .drop("__na", "__nb", "n_common")
   }
 
   /** Asymmetric CONTAINMENT verification over LSH candidate pairs —
@@ -227,29 +243,8 @@ object Dedup {
     * tie-safe at 6. */
   def containmentVerifyPairs(docs: DataFrame, pairs: DataFrame,
                              minContainment: Double = 0.8): DataFrame = {
-    // same reuse points as [[jaccardVerifyPairs]]: pairs feeds four
-    // subtrees, the shingle table three — one materialization each
-    val p = pairs.materialized
-    val candDocs = p.select(col("doc_a").as("doc_id"))
-      .unionAll(p.select(col("doc_b").as("doc_id"))).distinct()
-    val sh = docs.join(candDocs, Seq("doc_id"), "left_semi")
-      .withColumn("toks", TextOps.tokens(col("text")))
-      .select(col("doc_id"), col("toks"), explode(expr(
-        "CASE WHEN size(toks) >= 3 THEN sequence(0, size(toks) - 3) ELSE CAST(array() AS ARRAY<INT>) END")).as("i"))
-      .select(col("doc_id"), xxhash64(expr(
-        "concat(element_at(toks, i + 1), ' ', element_at(toks, i + 2), ' ', element_at(toks, i + 3))")).as("sh"))
-      .distinct()
-      .materialized
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val inter = p.select("doc_a", "doc_b")
-      .join(sh.select(col("doc_id").as("doc_a"), col("sh")), Seq("doc_a"))
-      .join(sh.select(col("doc_id").as("doc_b"), col("sh")), Seq("doc_b", "sh"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("n_common"))
     val nc = coalesce(col("n_common"), lit(0L)).cast("double")
-    p
-      .join(inter, Seq("doc_a", "doc_b"), "left")
-      .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("__na")), Seq("doc_a"))
-      .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("__nb")), Seq("doc_b"))
+    shingleOverlap(docs, pairs)
       .withColumn("containment_a", graft.ops.Num.cround(nc / col("__na"), 6))
       .withColumn("containment_b", graft.ops.Num.cround(nc / col("__nb"), 6))
       .filter(col("containment_a") >= minContainment ||
@@ -361,8 +356,7 @@ object Dedup {
   def ngramJaccardPairs(docs: DataFrame, sampleMod: Int = 4,
                         threshold: Double = 0.2): DataFrame = {
     val sample = docs.filter(col("doc_id") % sampleMod === 0)
-    val sh = TextOps.withShingles(sample)
-      .select(col("doc_id"), explode(col("shingles")).as("shingle")).distinct()
+    val sh = trigrams(sample).distinct()
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n_shingles"))
     val inter = sh.as("a")
       .join(sh.as("b"), col("a.shingle") === col("b.shingle") &&
@@ -432,10 +426,8 @@ object Dedup {
       col("doc_id"), coalesce(col("lang"), lit("")).as("lang"),
       substring(norm, 1, prefixLen).as("block_key"),
       substring(norm, 1, cmpLen).as("cmp"))
-    val capped = blocked.withColumn("__rn", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy("lang", "block_key").orderBy("doc_id")))
-      .filter(col("__rn") <= maxPerBlock).drop("__rn")
+    val capped = capPerKey(blocked, Seq("lang", "block_key"), "doc_id",
+      maxPerBlock)
     val a = capped.as("a")
     val b = capped.as("b")
     val mx = greatest(length(col("a.cmp")), length(col("b.cmp")))

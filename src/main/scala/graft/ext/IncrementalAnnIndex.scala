@@ -99,8 +99,7 @@ object IncrementalAnnIndex {
   def ingestBatch(state: GraphState, batch: DataFrame,
                   planesDf: DataFrame, m: Int = 8, nPlanes: Int = 8,
                   bucketCap: Int = 64): GraphState = {
-    val spark = batch.sparkSession
-    val sc = spark.sparkContext
+    val sc = batch.sparkSession.sparkContext
     val nb = state.nBatches + 1
     val arrived = Observation()
     val fresh = batch
@@ -109,13 +108,7 @@ object IncrementalAnnIndex {
       .materialized
 
     val freshLsh = Similarity.lshBuckets(fresh, planesDf, nPlanes)
-    val wBest = Window.partitionBy("vec_id")
-      .orderBy(desc("score"), col("c"))
-    val freshIvf = Similarity
-      .anchorScores(fresh, Similarity.ivfAnchors(spark))
-      .withColumn("__rnk", row_number().over(wBest))
-      .filter(col("__rnk") === 1)
-      .select(col("vec_id"), col("c").as("bucket"))
+    val freshIvf = Similarity.ivfMembership(fresh)
 
     // the two per-partitioning admissions are independent small jobs —
     // submit them from futures so their stages interleave instead of

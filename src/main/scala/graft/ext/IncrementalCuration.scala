@@ -109,15 +109,12 @@ object IncrementalCuration {
     // cap election is per (band, band_value) and the candidate join is an
     // inner join on that key — so only buckets the fresh probe actually
     // touches can produce candidates, and capping just those buckets is
-    // row-identical while keeping the row_number window delta-sized
-    // instead of corpus-sized
+    // row-identical while keeping the cap window delta-sized instead of
+    // corpus-sized
     val probedBuckets = freshBands.select("band", "band_value").distinct()
-    val cappedAll = Dedup.bands(allSigs, cfg.nBands)
-      .join(probedBuckets, Seq("band", "band_value"), "left_semi")
-      .withColumn("__bn", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy("band", "band_value").orderBy("doc_id")))
-      .filter(col("__bn") <= Dedup.DefaultMaxPerBucket).drop("__bn")
+    val cappedAll = Dedup.capPerKey(Dedup.bands(allSigs, cfg.nBands)
+        .join(probedBuckets, Seq("band", "band_value"), "left_semi"),
+      Seq("band", "band_value"), "doc_id", Dedup.DefaultMaxPerBucket)
     val candidates = freshBands.as("a")
       .join(cappedAll.as("b"),
         col("a.band") === col("b.band") &&

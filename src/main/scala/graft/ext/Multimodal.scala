@@ -192,12 +192,8 @@ object Multimodal {
       }: _*)).as("bv"))
       .select(col("doc_id"), col("phash"),
         col("bv.band").as("band"), col("bv.value").as("value"))
-    val wB = org.apache.spark.sql.expressions.Window
-      .partitionBy("band", "value").orderBy("doc_id")
-    val capped = bands
-      .withColumn("__bn", row_number().over(wB))
-      .filter(col("__bn") <= maxPerBucket)
-      .drop("__bn")
+    val capped = Dedup.capPerKey(bands, Seq("band", "value"), "doc_id",
+      maxPerBucket)
     capped.as("a").join(capped.as("b"),
         col("a.band") === col("b.band") && col("a.value") === col("b.value") &&
           col("a.doc_id") < col("b.doc_id"))

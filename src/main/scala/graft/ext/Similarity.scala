@@ -191,17 +191,22 @@ object Similarity {
 
   /** Sign-bucket per vector: bit p = (v . plane_p > 0); bucket in
     * [0, 2^nPlanes). One posexplode + broadcast join + aggregate. */
-  def lshBuckets(emb: DataFrame, planesDf: DataFrame, nPlanes: Int = 8): DataFrame = {
-    val exploded = emb.select(col("vec_id"),
-        posexplode(col("embedding")).as(Seq("pos", "v")))
+  def lshBuckets(emb: DataFrame, planesDf: DataFrame, nPlanes: Int = 8): DataFrame =
+    signBuckets(planeDots(emb, planesDf))
+
+  /** The plane-dot pass behind [[lshBuckets]]: (vec_id, p, pdot). */
+  private def planeDots(emb: DataFrame, planesDf: DataFrame): DataFrame =
+    emb.select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "v")))
       .withColumn("d", col("pos") + 1)
-    val dots = exploded.join(broadcast(planesDf), "d")
+      .join(broadcast(planesDf), "d")
       .groupBy("vec_id", "p")
       .agg(sum(col("v").cast("double") * col("w")).as("pdot"))
+
+  /** Plane dots to (vec_id, bucket): bit p set where pdot > 0. */
+  private def signBuckets(dots: DataFrame): DataFrame =
     dots.groupBy("vec_id")
       .agg(sum(when(col("pdot") > 0,
         pow(lit(2.0), col("p")).cast("long")).otherwise(0L)).as("bucket"))
-  }
 
   /** IVF coarse quantizer: deterministic anchor vectors (md5-derived, same
     * recipe as `planes` with a different salt). Real IVF learns centroids
@@ -244,6 +249,16 @@ object Similarity {
       .withColumn("score", col("adot") / col("anorm"))
   }
 
+  /** Each vector's `n` nearest lists over [[anchorScores]] output:
+    * (vec_id, list_id), ranked by score descending with the anchor id `c`
+    * as the tiebreak. The one routing rule of the IVF family: `n = 1` is
+    * a corpus vector's list assignment, `n = nprobe` a query's probes. */
+  private[graft] def nearestLists(scores: DataFrame, n: Int): DataFrame =
+    scores.withColumn("__rnk", row_number().over(
+        Window.partitionBy("vec_id").orderBy(desc("score"), col("c"))))
+      .filter(col("__rnk") <= n)
+      .select(col("vec_id"), col("c").as("list_id"))
+
   /** IVF top-k: assign each vector to its single nearest list, search the
     * query's `nprobe` nearest lists only. Pairwise work drops ~nLists/nprobe
     * vs brute force; the inverted-list layout is exactly the partition/
@@ -251,26 +266,28 @@ object Similarity {
   def ivfTopK(emb: DataFrame, anchors: DataFrame, queryMod: Int = 100,
               k: Int = 3, nprobe: Int = 2,
               queryCap: Long = Long.MaxValue): DataFrame = {
-    val scores = anchorScores(emb, anchors)
-    val wBest = Window.partitionBy("vec_id").orderBy(desc("score"), col("c"))
-    val assigned = scores.withColumn("rnk", row_number().over(wBest))
-      .filter(col("rnk") === 1).select(col("vec_id"), col("c").as("list_id"))
+    val (assigned, probes) = ivfRoute(emb, anchors, queryMod, nprobe, queryCap)
+    ivfSearch(emb, assigned, emb.filter(queryPred(queryMod, queryCap)),
+      probes, k)
+      .select("query_id", "rank", "vec_id", "list_id", "cosine")
+  }
 
-    val vecs = withDoubles(emb).join(assigned, "vec_id")
-    val probes = scores.filter(queryPred(queryMod, queryCap))
-      .withColumn("rnk", row_number().over(wBest))
-      .filter(col("rnk") <= nprobe)
-      .select(col("vec_id").as("query_id"), col("c").as("list_id"))
-    val queries = withDoubles(emb).filter(queryPred(queryMod, queryCap))
+  /** The search body of [[ivfTopK]] and [[ivfTopKFiltered]]: exact cosine
+    * of every query against the `corpus` vectors of its probed lists, cut
+    * to top-k. `assigned` is (vec_id, list_id) over `corpus`, `probes` is
+    * (query_id, list_id) over `queries`. */
+  private def ivfSearch(corpus: DataFrame, assigned: DataFrame,
+                        queries: DataFrame, probes: DataFrame,
+                        k: Int): DataFrame = {
+    val vecs = withDoubles(corpus).join(assigned, "vec_id")
+    val routed = withDoubles(queries)
       .select(col("vec_id").as("query_id"), col("emb_d").as("q_emb"))
       .join(probes, "query_id")
-
-    val scored = vecs.join(broadcast(queries), Seq("list_id"))
+    val scored = vecs.join(broadcast(routed), Seq("list_id"))
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("cosine", graft.ops.Num.cround(
         nativeCosine(col("emb_d"), col("q_emb")), 6))
     topKPerQuery(scored, k)
-      .select("query_id", "rank", "vec_id", "list_id", "cosine")
   }
 
   /** k-NN majority-vote classification over the IVF shortlist — the
@@ -327,26 +344,10 @@ object Similarity {
                       queryMod: Int = 100, k: Int = 3,
                       nprobe: Int = 2): DataFrame = {
     val corpus = emb.filter(pred)
-    val wBest = Window.partitionBy("vec_id").orderBy(desc("score"), col("c"))
-    val assigned = anchorScores(corpus, anchors)
-      .withColumn("rnk", row_number().over(wBest))
-      .filter(col("rnk") === 1).select(col("vec_id"), col("c").as("list_id"))
-    val vecs = withDoubles(corpus).join(assigned, "vec_id")
-
     val qset = emb.filter(col("vec_id") % queryMod === 0)
-    val probes = anchorScores(qset, anchors)
-      .withColumn("rnk", row_number().over(wBest))
-      .filter(col("rnk") <= nprobe)
-      .select(col("vec_id").as("query_id"), col("c").as("list_id"))
-    val queries = withDoubles(qset)
-      .select(col("vec_id").as("query_id"), col("emb_d").as("q_emb"))
-      .join(probes, "query_id")
-
-    val scored = vecs.join(broadcast(queries), Seq("list_id"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cosine", graft.ops.Num.cround(
-        nativeCosine(col("emb_d"), col("q_emb")), 6))
-    topKPerQuery(scored, k)
+    ivfSearch(corpus, nearestLists(anchorScores(corpus, anchors), 1), qset,
+      nearestLists(anchorScores(qset, anchors), nprobe)
+        .withColumnRenamed("vec_id", "query_id"), k)
       .join(emb.select(col("vec_id"), col("label")), "vec_id")
       .select("query_id", "rank", "vec_id", "list_id", "label", "cosine")
   }
@@ -379,15 +380,9 @@ object Similarity {
   def semanticPairs(emb: DataFrame, anchors: DataFrame,
                     minCos: Double = 0.3,
                     maxPerList: Int = 1024): DataFrame = {
-    val scores = anchorScores(emb, anchors)
-    val wBest = Window.partitionBy("vec_id").orderBy(desc("score"), col("c"))
-    val assigned = scores.withColumn("rnk", row_number().over(wBest))
-      .filter(col("rnk") === 1).select(col("vec_id"), col("c").as("list_id"))
-    val wList = Window.partitionBy("list_id").orderBy("vec_id")
-    val capped = withDoubles(emb).join(assigned, "vec_id")
-      .withColumn("__ln", row_number().over(wList))
-      .filter(col("__ln") <= maxPerList)
-      .select("vec_id", "list_id", "emb_d")
+    val assigned = nearestLists(anchorScores(emb, anchors), 1)
+    val capped = Dedup.capPerKey(withDoubles(emb).join(assigned, "vec_id"),
+      Seq("list_id"), "vec_id", maxPerList)
     capped.as("a").join(capped.as("b"),
         col("a.list_id") === col("b.list_id") &&
           col("a.vec_id") < col("b.vec_id"))
@@ -480,15 +475,8 @@ object Similarity {
                         probes: Int = 2,
                         queryCap: Long = Long.MaxValue): DataFrame = {
     val withNorm = withDoubles(emb)
-    val dots = emb.select(col("vec_id"),
-        posexplode(col("embedding")).as(Seq("pos", "v")))
-      .withColumn("d", col("pos") + 1)
-      .join(broadcast(planesDf), "d")
-      .groupBy("vec_id", "p")
-      .agg(sum(col("v").cast("double") * col("w")).as("pdot"))
-    val buckets = dots.groupBy("vec_id")
-      .agg(sum(when(col("pdot") > 0,
-        pow(lit(2.0), col("p")).cast("long")).otherwise(0L)).as("bucket"))
+    val dots = planeDots(emb, planesDf)
+    val buckets = signBuckets(dots)
     val vecs = withNorm.join(buckets, "vec_id")
 
     val qBase = buckets.filter(queryPred(queryMod, queryCap))
@@ -586,21 +574,18 @@ object Similarity {
   private[graft] def seedMemberships(emb: DataFrame, planesDf: DataFrame,
                                      nPlanes: Int, bucketCap: Int)
       : (DataFrame, DataFrame) = {
-    val wB = Window.partitionBy("bucket").orderBy("vec_id")
-    val capped = lshBuckets(emb, planesDf, nPlanes)
-      .withColumn("__rn", row_number().over(wB))
-      .filter(col("__rn") <= bucketCap)
-      .select("vec_id", "bucket")
-    val scores = anchorScores(emb, ivfAnchors(emb.sparkSession))
-    val wBest = Window.partitionBy("vec_id").orderBy(desc("score"), col("c"))
-    val listCapped = scores.withColumn("__rnk", row_number().over(wBest))
-      .filter(col("__rnk") === 1)
-      .select(col("vec_id"), col("c").as("bucket"))
-      .withColumn("__rn", row_number().over(wB))
-      .filter(col("__rn") <= bucketCap)
-      .select("vec_id", "bucket")
-    (capped, listCapped)
+    def capped(membership: DataFrame): DataFrame =
+      Dedup.capPerKey(membership, Seq("bucket"), "vec_id", bucketCap)
+    (capped(lshBuckets(emb, planesDf, nPlanes)),
+      capped(ivfMembership(emb)))
   }
+
+  /** (vec_id, bucket) with bucket = the vector's nearest fixed IVF list:
+    * the second seed partitioning of [[seedMemberships]] and of the
+    * incremental index's ingest. */
+  private[graft] def ivfMembership(emb: DataFrame): DataFrame =
+    nearestLists(anchorScores(emb, ivfAnchors(emb.sparkSession)), 1)
+      .withColumnRenamed("list_id", "bucket")
 
   /** The seed half of [[knnGraph]]: dual-partitioning co-occupant pairs,
     * exact-scored, cut to top-m per src. */
@@ -1022,28 +1007,12 @@ object Similarity {
              queryCap: Long = Long.MaxValue): DataFrame = {
     graft.functions.GraftFunctions.register(
       org.apache.spark.sql.SparkSession.active)
-    val codes = pqEncode(emb, codebook, subDim)
-    val qel = emb.filter(queryPred(queryMod, queryCap))
-      .select(col("vec_id").as("query_id"),
-        posexplode(col("embedding")).as(Seq("pos", "v")))
-      .withColumn("s", floor(col("pos") / subDim).cast("long"))
-      .withColumn("d", col("pos") % subDim + 1)
-    val adc = qel.join(broadcast(codebook), Seq("s", "d"))
-      .groupBy("query_id", "s", "c")
-      .agg(sum((col("v").cast("double") - col("w")) *
-        (col("v").cast("double") - col("w"))).as("qd"))
+    val adc = adcTables(emb, codebook, queryMod, queryCap, subDim)
       .select(col("query_id"), col("s").as("qs"), col("c").as("qc"),
         col("qd"))
-    codes.join(broadcast(adc),
-        col("s") === col("qs") && col("code") === col("qc") &&
-          col("vec_id") =!= col("query_id"))
-      .groupBy("query_id", "vec_id")
-      .agg(graft.ops.Num.cround(sum("qd"), 6).as("adc_dist2"))
-      .groupBy("query_id")
-      .agg(expr(s"top_k_by(-adc_dist2, vec_id, $k)").as("tk"))
-      .select(col("query_id"), posexplode(col("tk")).as(Seq("r", "t")))
-      .select(col("query_id"), (col("r") + 1).cast("int").as("rank"),
-        col("t.id").as("vec_id"), (-col("t.score")).as("adc_dist2"))
+    adcTopK(pqEncode(emb, codebook, subDim).join(broadcast(adc),
+      col("s") === col("qs") && col("code") === col("qc") &&
+        col("vec_id") =!= col("query_id")), k)
   }
 
   /** Exact-cosine rerank of an ADC shortlist — the second tier every
@@ -1116,14 +1085,53 @@ object Similarity {
                nprobe: Int = 2, queryCap: Long = Long.MaxValue)
       : (DataFrame, DataFrame) = {
     val scores = anchorScores(emb, anchors)
-    val wBest = Window.partitionBy("vec_id").orderBy(desc("score"), col("c"))
-    val assigned = scores.withColumn("rnk", row_number().over(wBest))
-      .filter(col("rnk") === 1).select(col("vec_id"), col("c").as("list_id"))
-    val probes = scores.filter(queryPred(queryMod, queryCap))
-      .withColumn("rnk", row_number().over(wBest))
-      .filter(col("rnk") <= nprobe)
-      .select(col("vec_id").as("query_id"), col("c").as("list_id"))
-    (assigned, probes)
+    (nearestLists(scores, 1),
+      nearestLists(scores.filter(queryPred(queryMod, queryCap)), nprobe)
+        .withColumnRenamed("vec_id", "query_id"))
+  }
+
+  /** Per-query ADC tables over the raw query vectors:
+    * (query_id, s, c, qd), qd = squared distance of the query's subvector
+    * s to centroid c. Shared by [[pqTopK]] and [[ivfPqTopK]]. */
+  private def adcTables(emb: DataFrame, codebook: DataFrame, queryMod: Int,
+                        queryCap: Long, subDim: Int): DataFrame =
+    emb.filter(queryPred(queryMod, queryCap))
+      .select(col("vec_id").as("query_id"),
+        posexplode(col("embedding")).as(Seq("pos", "v")))
+      .withColumn("s", floor(col("pos") / subDim).cast("long"))
+      .withColumn("d", col("pos") % subDim + 1)
+      .join(broadcast(codebook), Seq("s", "d"))
+      .groupBy("query_id", "s", "c")
+      .agg(sum((col("v").cast("double") - col("w")) *
+        (col("v").cast("double") - col("w"))).as("qd"))
+
+  /** ADC ranking of (query_id, vec_id, qd) candidate terms: sum the terms
+    * per pair, round tie-safe at 6, keep each query's k nearest by the
+    * bounded `top_k_by` (vec_id tiebreak). Output (query_id, rank, vec_id,
+    * adc_dist2). */
+  private def adcTopK(terms: DataFrame, k: Int): DataFrame =
+    terms.groupBy("query_id", "vec_id")
+      .agg(graft.ops.Num.cround(sum("qd"), 6).as("adc_dist2"))
+      .groupBy("query_id")
+      .agg(expr(s"top_k_by(-adc_dist2, vec_id, $k)").as("tk"))
+      .select(col("query_id"), posexplode(col("tk")).as(Seq("r", "t")))
+      .select(col("query_id"), (col("r") + 1).cast("int").as("rank"),
+        col("t.id").as("vec_id"), (-col("t.score")).as("adc_dist2"))
+
+  /** The tail of both IVF-PQ searches: join each code row to the queries
+    * probing its list, look the code up in the broadcast `adc` table on
+    * `on`, rank by [[adcTopK]], then fetch each winner's list id —
+    * broadcasting the bounded top rows against the assignment, never vice
+    * versa (the e3 label-fetch shape). `codes` is (vec_id, list_id, s,
+    * code); `adc` carries its keys renamed (aq, qs, qc, ...) and `qd`. */
+  private def ivfAdcTopK(codes: DataFrame, assigned: DataFrame,
+                         probes: DataFrame, adc: DataFrame, on: Column,
+                         k: Int): DataFrame = {
+    val top = adcTopK(codes.join(broadcast(probes), "list_id")
+      .filter(col("vec_id") =!= col("query_id"))
+      .join(broadcast(adc), on), k)
+    assigned.join(broadcast(top), "vec_id")
+      .select("query_id", "rank", "vec_id", "list_id", "adc_dist2")
   }
 
   /** IVF-PQ search — the production billion-vector configuration, end to
@@ -1154,34 +1162,12 @@ object Similarity {
     val (assigned, probes) = routingOpt.getOrElse(
       ivfRoute(emb, anchors, queryMod, nprobe, queryCap))
     val codes = pqEncode(emb, codebook, subDim).join(assigned, "vec_id")
-    val qel = emb.filter(queryPred(queryMod, queryCap))
-      .select(col("vec_id").as("query_id"),
-        posexplode(col("embedding")).as(Seq("pos", "v")))
-      .withColumn("s", floor(col("pos") / subDim).cast("long"))
-      .withColumn("d", col("pos") % subDim + 1)
-    val adc = qel.join(broadcast(codebook), Seq("s", "d"))
-      .groupBy("query_id", "s", "c")
-      .agg(sum((col("v").cast("double") - col("w")) *
-        (col("v").cast("double") - col("w"))).as("qd"))
+    val adc = adcTables(emb, codebook, queryMod, queryCap, subDim)
       .select(col("query_id").as("aq"), col("s").as("qs"),
         col("c").as("qc"), col("qd"))
-
-    val top = codes.join(broadcast(probes), "list_id")
-      .filter(col("vec_id") =!= col("query_id"))
-      .join(broadcast(adc),
-        col("query_id") === col("aq") && col("s") === col("qs") &&
-          col("code") === col("qc"))
-      .groupBy("query_id", "vec_id")
-      .agg(graft.ops.Num.cround(sum("qd"), 6).as("adc_dist2"))
-      .groupBy("query_id")
-      .agg(expr(s"top_k_by(-adc_dist2, vec_id, $k)").as("tk"))
-      .select(col("query_id"), posexplode(col("tk")).as(Seq("r", "t")))
-      .select(col("query_id"), (col("r") + 1).cast("int").as("rank"),
-        col("t.id").as("vec_id"), (-col("t.score")).as("adc_dist2"))
-    // fetch each winner's list id — broadcast the bounded top rows
-    // against the assignment, never vice versa (the e3 label-fetch shape)
-    assigned.join(broadcast(top), "vec_id")
-      .select("query_id", "rank", "vec_id", "list_id", "adc_dist2")
+    ivfAdcTopK(codes, assigned, probes, adc,
+      col("query_id") === col("aq") && col("s") === col("qs") &&
+        col("code") === col("qc"), k)
   }
 
   /** Residual-encoded IVF-PQ top-k — the ACTUAL FAISS IVFADC formulation
@@ -1264,20 +1250,9 @@ object Similarity {
       .select(col("query_id").as("aq"), col("list_id").as("al"),
         col("s").as("qs"), col("c").as("qc"), col("qd"))
 
-    val top = codes.join(broadcast(probes), "list_id")
-      .filter(col("vec_id") =!= col("query_id"))
-      .join(broadcast(adc),
-        col("query_id") === col("aq") && col("list_id") === col("al") &&
-          col("s") === col("qs") && col("code") === col("qc"))
-      .groupBy("query_id", "vec_id")
-      .agg(graft.ops.Num.cround(sum("qd"), 6).as("adc_dist2"))
-      .groupBy("query_id")
-      .agg(expr(s"top_k_by(-adc_dist2, vec_id, $k)").as("tk"))
-      .select(col("query_id"), posexplode(col("tk")).as(Seq("r", "t")))
-      .select(col("query_id"), (col("r") + 1).cast("int").as("rank"),
-        col("t.id").as("vec_id"), (-col("t.score")).as("adc_dist2"))
-    assigned.join(broadcast(top), "vec_id")
-      .select("query_id", "rank", "vec_id", "list_id", "adc_dist2")
+    ivfAdcTopK(codes, assigned, probes, adc,
+      col("query_id") === col("aq") && col("list_id") === col("al") &&
+        col("s") === col("qs") && col("code") === col("qc"), k)
   }
 
   /** [[ivfPqResidualTopK]] with the exact-rerank tier — residual IVFADC +

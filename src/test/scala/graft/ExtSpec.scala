@@ -98,6 +98,18 @@ class ExtSpec extends AnyFunSuite {
     assert(pairs.forall(_.getAs[Long]("n_bands") == 8))
   }
 
+  test("capPerKey keeps each key's cap smallest ids and passes other columns through") {
+    // key "hot" holds 5 rows, over the cap of 3; key "cold" holds 2, under it
+    val rows = Seq((7L, "hot", "g"), (3L, "hot", "c"), (9L, "hot", "i"),
+      (1L, "hot", "a"), (5L, "hot", "e"), (8L, "cold", "h"), (2L, "cold", "b"))
+    val capped = Dedup.capPerKey(rows.toDF("id", "key", "payload"),
+      Seq("key"), "id", 3)
+    assert(capped.columns.toSeq == Seq("id", "key", "payload"))
+    assert(capped.as[(Long, String, String)].collect().sortBy(_._1).toSeq ==
+      Seq((1L, "hot", "a"), (2L, "cold", "b"), (3L, "hot", "c"),
+        (5L, "hot", "e"), (8L, "cold", "h")))
+  }
+
   test("duplicate clusters: min-label propagation finds connected components") {
     // chain 1-2-3 plus pair 5-6: reps collapse transitively to the min id
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("doc_a", "doc_b")
@@ -428,15 +440,15 @@ class ExtSpec extends AnyFunSuite {
   /** A data dir holding only an empty `embeddings` table with the fixture
     * schema (vec_id bigint, embedding array<float>, label int) — all that
     * sim20 and sim21 read. */
-  private def emptyEmbeddingsDir(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-empty-emb")
-    Seq.empty[(Long, Seq[Float], Int)].toDF("vec_id", "embedding", "label")
-      .write.parquet(dir.resolve("embeddings.parquet").toString)
-    dir.toString
-  }
+  private def withEmptyEmbeddings[A](body: String => A): A =
+    SparkTestSession.withTempDir("graft-empty-emb") { dir =>
+      Seq.empty[(Long, Seq[Float], Int)].toDF("vec_id", "embedding", "label")
+        .write.parquet(dir.resolve("embeddings.parquet").toString)
+      body(dir.toString)
+    }
 
   test("sim20_recall over an empty embeddings table reports three tiers with NULL recall") {
-    val rows = Queries.all("sim20_recall")(spark, emptyEmbeddingsDir()).collect().toSeq
+    val rows = withEmptyEmbeddings(Queries.all("sim20_recall")(spark, _).collect().toSeq)
     assert(rows.map(r => (r.getAs[String]("method"), r.getAs[Long]("hits"),
         r.getAs[Long]("n_truth"), r.isNullAt(r.fieldIndex("recall_at_5")))) ==
       Seq(("ivf", 0L, 0L, true), ("lsh", 0L, 0L, true),
@@ -445,8 +457,8 @@ class ExtSpec extends AnyFunSuite {
 
   test("sim21_codebook_selector over an empty embeddings table flags no winner") {
     // every recall is NULL there; a NULL recall is never a measured winner
-    val rows = Queries.all("sim21_codebook_selector")(spark, emptyEmbeddingsDir())
-      .collect().toSeq
+    val rows = withEmptyEmbeddings(
+      Queries.all("sim21_codebook_selector")(spark, _).collect().toSeq)
     assert(rows.map(r => (r.getAs[String]("config"),
         r.isNullAt(r.fieldIndex("recall_at_5")), r.getAs[Boolean]("is_winner"))) ==
       Seq(("fixed", true, false), ("learned", true, false),

@@ -111,39 +111,40 @@ class IncrementalCurationSpec extends AnyFunSuite {
 
   test("foreachBatch curator over a real file stream == batch curate") {
     import scala.jdk.CollectionConverters._
-    val landing = java.nio.file.Files.createTempDirectory("graft-inc-curate")
-    slices.zipWithIndex.foreach { case (rows, i) =>
-      val sliceDir = landing.resolve(f"stage-$i%02d")
-      rows.toDF("doc_id", "source", "text").coalesce(1)
-        .write.parquet(sliceDir.toString)
-      val part = java.nio.file.Files.list(sliceDir).iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet")).get
-      val dest = landing.resolve(f"slice-$i%02d.parquet")
-      java.nio.file.Files.move(part, dest)
-      // FileStreamSource orders by mtime — pin strictly increasing stamps
-      java.nio.file.Files.setLastModifiedTime(dest,
-        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
+    SparkTestSession.withTempDir("graft-inc-curate") { landing =>
+      slices.zipWithIndex.foreach { case (rows, i) =>
+        val sliceDir = landing.resolve(f"stage-$i%02d")
+        rows.toDF("doc_id", "source", "text").coalesce(1)
+          .write.parquet(sliceDir.toString)
+        val part = java.nio.file.Files.list(sliceDir).iterator().asScala
+          .find(_.getFileName.toString.endsWith(".parquet")).get
+        val dest = landing.resolve(f"slice-$i%02d.parquet")
+        java.nio.file.Files.move(part, dest)
+        // FileStreamSource orders by mtime — pin strictly increasing stamps
+        java.nio.file.Files.setLastModifiedTime(dest,
+          java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
+      }
+      val schema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("doc_id",
+          org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("source",
+          org.apache.spark.sql.types.StringType),
+        org.apache.spark.sql.types.StructField("text",
+          org.apache.spark.sql.types.StringType)))
+      val stream = spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .option("pathGlobFilter", "slice-*.parquet")
+        .parquet(landing.toString)
+
+      val curator = new IncrementalCuration.Curator(cfg)
+      val q = curator.writer(stream)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      assert(q.lastProgress.batchId >= 2,
+        s"expected >= 3 micro-batches, saw ${q.lastProgress.batchId + 1}")
+
+      assertSnapshotEqualsBatch(curator.state)
     }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("source",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType)))
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .option("pathGlobFilter", "slice-*.parquet")
-      .parquet(landing.toString)
-
-    val curator = new IncrementalCuration.Curator(cfg)
-    val q = curator.writer(stream)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    assert(q.lastProgress.batchId >= 2,
-      s"expected >= 3 micro-batches, saw ${q.lastProgress.batchId + 1}")
-
-    assertSnapshotEqualsBatch(curator.state)
   }
 }

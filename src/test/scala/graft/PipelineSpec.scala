@@ -57,106 +57,117 @@ class PipelineSpec extends AnyFunSuite {
   private def dirtyPayloads = Seq(dirtyPayload("AAPL"), dirtyPayload("MSFT"),
     payload("AAPL", 2)).toDF("json")
 
-  private def tempLake(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).resolve("lake").toString
+  /** Runs `body` on a `lake` path inside a fresh temp directory, deleted
+    * afterwards. */
+  private def withLake[A](prefix: String)(body: String => A): A =
+    SparkTestSession.withTempDir(prefix)(dir => body(dir.resolve("lake").toString))
 
   test("runEtl: fetch-shaped payloads through to loaded lake + summary + no alert") {
     val channel = new Alerts.LogChannel
-    val out = java.nio.file.Files.createTempDirectory("graft-etl").resolve("lake").toString
-    val payloads = Seq("AAPL", "MSFT").map(s => payload(s, 25)).toDF("json")
+    withLake("graft-etl") { out =>
+      val payloads = Seq("AAPL", "MSFT").map(s => payload(s, 25)).toDF("json")
 
-    val result = Pipeline.runEtl(spark, payloads, "json", out, channel)
-    assert(result.recordsLoaded == 50)
-    assert(result.qualityPassRate >= 0.9) // clean synthetic data passes the gate
-    assert(result.alert.isEmpty && channel.sent.isEmpty)
+      val result = Pipeline.runEtl(spark, payloads, "json", out, channel)
+      assert(result.recordsLoaded == 50)
+      assert(result.qualityPassRate >= 0.9) // clean synthetic data passes the gate
+      assert(result.alert.isEmpty && channel.sent.isEmpty)
 
-    val loaded = spark.read.parquet(out)
-    assert(loaded.columns.contains("ma_20") && loaded.columns.contains("volume_category"))
-    assert(result.summary.head.getAs[Long]("unique_symbols") == 2)
+      val loaded = spark.read.parquet(out)
+      assert(loaded.columns.contains("ma_20") && loaded.columns.contains("volume_category"))
+      assert(result.summary.head.getAs[Long]("unique_symbols") == 2)
 
-    // the validation run is persisted (reference writes logs/data_quality_*.txt)
-    val report = spark.read.json(result.qualityReportPath)
-    assert(report.count() >= 13, "persisted quality report holds the check rows")
-    assert(report.columns.contains("passed") && report.columns.contains("validated_at"))
-    // the "_"-prefixed report dir must stay invisible to the lake reader
-    assert(loaded.count() == result.recordsLoaded)
+      // the validation run is persisted (reference writes logs/data_quality_*.txt)
+      val report = spark.read.json(result.qualityReportPath)
+      assert(report.count() >= 13, "persisted quality report holds the check rows")
+      assert(report.columns.contains("passed") && report.columns.contains("validated_at"))
+      // the "_"-prefixed report dir must stay invisible to the lake reader
+      assert(loaded.count() == result.recordsLoaded)
+    }
   }
 
   test("runEtl: all fetches failed -> Critical alert, no crash on empty lake") {
     val channel = new Alerts.LogChannel
-    val out = java.nio.file.Files.createTempDirectory("graft-etl-empty").resolve("lake").toString
-    val payloads = Seq[String](null, null).toDF("json")
-    val result = Pipeline.runEtl(spark, payloads, "json", out, channel)
-    assert(result.recordsLoaded == 0)
-    assert(result.alert.exists(_.severity == Alerts.Critical))
-    assert(channel.sent.nonEmpty)
+    withLake("graft-etl-empty") { out =>
+      val payloads = Seq[String](null, null).toDF("json")
+      val result = Pipeline.runEtl(spark, payloads, "json", out, channel)
+      assert(result.recordsLoaded == 0)
+      assert(result.alert.exists(_.severity == Alerts.Critical))
+      assert(channel.sent.nonEmpty)
+    }
   }
 
   test("runEtl: partial fetch (null placeholder among payloads) -> Warning") {
     val channel = new Alerts.LogChannel
-    val out = java.nio.file.Files.createTempDirectory("graft-etl-partial").resolve("lake").toString
-    val payloads = Seq(payload("AAPL", 25), null).toDF("json")
-    val result = Pipeline.runEtl(spark, payloads, "json", out, channel)
-    assert(result.recordsLoaded == 25)
-    assert(result.alert.exists(_.severity == Alerts.Warning),
-      s"expected partial-fetch warning, got ${result.alert}")
+    withLake("graft-etl-partial") { out =>
+      val payloads = Seq(payload("AAPL", 25), null).toDF("json")
+      val result = Pipeline.runEtl(spark, payloads, "json", out, channel)
+      assert(result.recordsLoaded == 25)
+      assert(result.alert.exists(_.severity == Alerts.Warning),
+        s"expected partial-fetch warning, got ${result.alert}")
+    }
   }
 
   test("runEtl keep-last honors fetch_seq arrival order on re-fetched symbols") {
-    val out = java.nio.file.Files.createTempDirectory("graft-seq").toString
-    // same symbol fetched twice in one batch: the later fetch carries a
-    // corrected close for every day and must win, regardless of hash order
-    def seqPayload(bump: Double): String = {
-      val series = (1 to 5).map { i =>
-        val p = 100.0 + i + bump
-        f"""\"2024-01-$i%02d\": {\"1. open\": \"${p - 1}\", \"2. high\": \"${p + 2}\",
-           |\"3. low\": \"${p - 2}\", \"4. close\": \"$p\", \"5. volume\": \"1000\"}""".stripMargin
-      }.mkString(",")
-      s"""{"Meta Data": {"2. Symbol": "DUP"}, "Time Series (Daily)": {$series}}"""
+    SparkTestSession.withTempDir("graft-seq") { dir =>
+      val out = dir.toString
+      // same symbol fetched twice in one batch: the later fetch carries a
+      // corrected close for every day and must win, regardless of hash order
+      def seqPayload(bump: Double): String = {
+        val series = (1 to 5).map { i =>
+          val p = 100.0 + i + bump
+          f"""\"2024-01-$i%02d\": {\"1. open\": \"${p - 1}\", \"2. high\": \"${p + 2}\",
+             |\"3. low\": \"${p - 2}\", \"4. close\": \"$p\", \"5. volume\": \"1000\"}""".stripMargin
+        }.mkString(",")
+        s"""{"Meta Data": {"2. Symbol": "DUP"}, "Time Series (Daily)": {$series}}"""
+      }
+      val payloads = Seq((1L, seqPayload(0.0)), (2L, seqPayload(0.5)))
+        .toDF("fetch_seq", "json")
+      Pipeline.runEtl(spark, payloads, "json", out)
+      val closes = spark.read.parquet(out)
+        .select("date", "close").collect()
+        .map(r => r.get(0).toString -> r.getDouble(1)).toMap
+      assert(closes.size == 5)
+      // every surviving close is from the bump=0.5 (later) fetch
+      assert(closes.values.forall(c => (c * 2) % 1 == 0 && c % 1 != 0),
+        s"stale fetch won: $closes")
     }
-    val payloads = Seq((1L, seqPayload(0.0)), (2L, seqPayload(0.5)))
-      .toDF("fetch_seq", "json")
-    Pipeline.runEtl(spark, payloads, "json", out)
-    val closes = spark.read.parquet(out)
-      .select("date", "close").collect()
-      .map(r => r.get(0).toString -> r.getDouble(1)).toMap
-    assert(closes.size == 5)
-    // every surviving close is from the bump=0.5 (later) fetch
-    assert(closes.values.forall(c => (c * 2) % 1 == 0 && c % 1 != 0),
-      s"stale fetch won: $closes")
   }
 
   test("runEtl appends across runs (reference accumulates daily batches)") {
-    val out = java.nio.file.Files.createTempDirectory("graft-etl-append").resolve("lake").toString
-    val payloads = Seq(payload("AAPL", 25)).toDF("json")
-    val r1 = Pipeline.runEtl(spark, payloads, "json", out)
-    val r2 = Pipeline.runEtl(spark, payloads, "json", out)
-    assert(r1.recordsLoaded == 25 && r2.recordsLoaded == 50)
-    // quality reports accumulate one per run, like the reference's
-    // timestamped log files: run 2's report dir holds BOTH runs' check rows
-    val perRun = spark.read.json(r1.qualityReportPath).count() / 2
-    assert(perRun >= 13, s"each run persists the full check suite, got $perRun")
+    withLake("graft-etl-append") { out =>
+      val payloads = Seq(payload("AAPL", 25)).toDF("json")
+      val r1 = Pipeline.runEtl(spark, payloads, "json", out)
+      val r2 = Pipeline.runEtl(spark, payloads, "json", out)
+      assert(r1.recordsLoaded == 25 && r2.recordsLoaded == 50)
+      // quality reports accumulate one per run, like the reference's
+      // timestamped log files: run 2's report dir holds BOTH runs' check rows
+      val perRun = spark.read.json(r1.qualityReportPath).count() / 2
+      assert(perRun >= 13, s"each run persists the full check suite, got $perRun")
+    }
   }
 
   test("runEtl: stage rows, envelope counts and pass rate come from one observed write") {
     val channel = new Alerts.LogChannel
-    val r = Pipeline.runEtl(spark, dirtyPayloads, "json", tempLake("graft-etl-dirty"), channel)
-    assert(r.stageRows == Pipeline.StageRows(52, 50, 48, 46, 44))
-    assert(r.recordsLoaded == 44)
-    assert(r.symbolsRequested == 3 && r.symbolsFetched == 3)
-    // the daily-change band fails (36/42 < 0.95); the other 14 checks pass
-    assert(r.qualityPassRate == 14.0 / 15)
-    assert(r.alert.isEmpty && channel.sent.isEmpty)
+    withLake("graft-etl-dirty") { lake =>
+      val r = Pipeline.runEtl(spark, dirtyPayloads, "json", lake, channel)
+      assert(r.stageRows == Pipeline.StageRows(52, 50, 48, 46, 44))
+      assert(r.recordsLoaded == 44)
+      assert(r.symbolsRequested == 3 && r.symbolsFetched == 3)
+      // the daily-change band fails (36/42 < 0.95); the other 14 checks pass
+      assert(r.qualityPassRate == 14.0 / 15)
+      assert(r.alert.isEmpty && channel.sent.isEmpty)
+    }
   }
 
   test("runEtl: the persisted report equals qualityReport over the written rows") {
-    val out = tempLake("graft-etl-report")
-    val r = Pipeline.runEtl(spark, dirtyPayloads, "json", out)
-    val cols = Seq("check_name", "observed_ratio", "threshold", "passed")
-    val persisted = spark.read.json(r.qualityReportPath).select(cols.map(col): _*)
-    val expected = Expectations.qualityReport(spark.read.parquet(out))
-    assert(persisted.collect().toSeq.sortBy(_.getString(0)) == expected.collect().toSeq)
-    assert(spark.read.json(r.qualityReportPath).columns.contains("validated_at"))
+    withLake("graft-etl-report") { out =>
+      val r = Pipeline.runEtl(spark, dirtyPayloads, "json", out)
+      val cols = Seq("check_name", "observed_ratio", "threshold", "passed")
+      val persisted = spark.read.json(r.qualityReportPath).select(cols.map(col): _*)
+      val expected = Expectations.qualityReport(spark.read.parquet(out))
+      assert(persisted.collect().toSeq.sortBy(_.getString(0)) == expected.collect().toSeq)
+      assert(spark.read.json(r.qualityReportPath).columns.contains("validated_at"))
+    }
   }
 
   test("runEtl plans the transform (from_json) in exactly one execution") {
@@ -172,34 +183,38 @@ class PipelineSpec extends AnyFunSuite {
     }
     spark.listenerManager.register(listener)
     try {
-      val r = Pipeline.runEtl(spark, dirtyPayloads, "json", tempLake("graft-etl-once"))
-      r.summary.collect() // the summary reads the lake, not the payloads
-      // executions reach the listener in order: once the marker arrives,
-      // every runEtl execution has been seen
-      spark.range(1).toDF("graft_listener_marker").collect()
-      val deadline = System.currentTimeMillis() + 30000
-      while (!marker && System.currentTimeMillis() < deadline) Thread.sleep(20)
-      assert(marker)
-      assert(parses.synchronized(parses.toList).size == 1, s"executions: $parses")
+      withLake("graft-etl-once") { lake =>
+        val r = Pipeline.runEtl(spark, dirtyPayloads, "json", lake)
+        r.summary.collect() // the summary reads the lake, not the payloads
+        // executions reach the listener in order: once the marker arrives,
+        // every runEtl execution has been seen
+        spark.range(1).toDF("graft_listener_marker").collect()
+        val deadline = System.currentTimeMillis() + 30000
+        while (!marker && System.currentTimeMillis() < deadline) Thread.sleep(20)
+        assert(marker)
+        assert(parses.synchronized(parses.toList).size == 1, s"executions: $parses")
+      }
     } finally spark.listenerManager.unregister(listener)
   }
 
   test("runEtl: every bar fails F1-F3 -> nothing loaded, Critical alert, no exception") {
     val channel = new Alerts.LogChannel
     val allBad = envelope("BAD", 5)(i => Seq[Any](100.0 + i, 90.0, 95.0, 100.0, 1000))
-    val r = Pipeline.runEtl(spark, Seq(allBad).toDF("json"), "json",
-      tempLake("graft-etl-allbad"), channel)
-    assert(r.recordsLoaded == 0)
-    assert(r.stageRows == Pipeline.StageRows(5, 5, 0, 0, 0))
-    assert(r.alert.exists(_.severity == Alerts.Critical) && channel.sent.nonEmpty)
-    assert(r.summary.head.getAs[Long]("total_records") == 0)
+    withLake("graft-etl-allbad") { lake =>
+      val r = Pipeline.runEtl(spark, Seq(allBad).toDF("json"), "json",
+        lake, channel)
+      assert(r.recordsLoaded == 0)
+      assert(r.stageRows == Pipeline.StageRows(5, 5, 0, 0, 0))
+      assert(r.alert.exists(_.severity == Alerts.Critical) && channel.sent.nonEmpty)
+      assert(r.summary.head.getAs[Long]("total_records") == 0)
+    }
   }
 
   test("runEtl: a killed first attempt of the lake write leaves the RunResult unchanged") {
     def observed(r: Pipeline.RunResult) = (r.recordsLoaded, r.qualityPassRate,
       r.symbolsRequested, r.symbolsFetched, r.stageRows, r.alert)
-    val undisturbed = observed(Pipeline.runEtl(spark, dirtyPayloads, "json",
-      tempLake("graft-etl-undisturbed")))
+    val undisturbed = withLake("graft-etl-undisturbed")(lake =>
+      observed(Pipeline.runEtl(spark, dirtyPayloads, "json", lake)))
 
     // Kill the first attempt of every task of the lake write's stages: under
     // AQE, the shuffle map stage that carries the envelope and filter
@@ -239,7 +254,8 @@ class PipelineSpec extends AnyFunSuite {
     }
     sc.addSparkListener(listener)
     val disturbed = try {
-      val r = observed(Pipeline.runEtl(spark, dirtyPayloads, "json", tempLake("graft-etl-killed")))
+      val r = withLake("graft-etl-killed")(lake =>
+        observed(Pipeline.runEtl(spark, dirtyPayloads, "json", lake)))
       sc.setJobDescription("marker")
       try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
       val deadline = System.currentTimeMillis() + 30000

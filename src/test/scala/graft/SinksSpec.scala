@@ -10,37 +10,42 @@ import graft.io.{Sinks, Sources}
 class SinksSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
-  private def tmp(name: String): String =
-    java.nio.file.Files.createTempDirectory(name).resolve("out").toString
+  /** Runs `body` on an `out` path inside a fresh temp directory, deleted
+    * afterwards. */
+  private def withOut[A](name: String)(body: String => A): A =
+    SparkTestSession.withTempDir(name)(dir => body(dir.resolve("out").toString))
 
   private lazy val df = Sources.stockFromLineitem(spark, "/root/testdata/sf0.001")
     .limit(200).cache()
 
   test("CSV sink round-trips with header") {
-    val path = tmp("graft-csv")
-    Sinks.writeCsv(df.select("symbol", "date", "close"), path)
-    val back = spark.read.option("header", "true").csv(path)
-    assert(back.count() == 200)
-    assert(back.columns.toSeq == Seq("symbol", "date", "close"))
+    withOut("graft-csv") { path =>
+      Sinks.writeCsv(df.select("symbol", "date", "close"), path)
+      val back = spark.read.option("header", "true").csv(path)
+      assert(back.count() == 200)
+      assert(back.columns.toSeq == Seq("symbol", "date", "close"))
+    }
   }
 
   test("JSON sink round-trips values") {
-    val path = tmp("graft-json")
-    Sinks.writeJson(df.select("rid", "close"), path)
-    val back = spark.read.json(path)
-    assert(back.count() == 200)
-    assert(back.agg(sum("rid")).head.getLong(0) ==
-      df.agg(sum("rid")).head.getLong(0))
+    withOut("graft-json") { path =>
+      Sinks.writeJson(df.select("rid", "close"), path)
+      val back = spark.read.json(path)
+      assert(back.count() == 200)
+      assert(back.agg(sum("rid")).head.getLong(0) ==
+        df.agg(sum("rid")).head.getLong(0))
+    }
   }
 
   test("ORC sink round-trips values and preserves types") {
-    val path = tmp("graft-orc")
-    Sinks.writeOrc(df.select("rid", "symbol", "close"), path)
-    val back = spark.read.orc(path)
-    assert(back.count() == 200)
-    assert(back.schema("close").dataType.typeName == "double")
-    assert(back.agg(sum("rid")).head.getLong(0) ==
-      df.agg(sum("rid")).head.getLong(0))
+    withOut("graft-orc") { path =>
+      Sinks.writeOrc(df.select("rid", "symbol", "close"), path)
+      val back = spark.read.orc(path)
+      assert(back.count() == 200)
+      assert(back.schema("close").dataType.typeName == "double")
+      assert(back.agg(sum("rid")).head.getLong(0) ==
+        df.agg(sum("rid")).head.getLong(0))
+    }
   }
 
   test("JDBC sink appends with batching (embedded Derby round-trip)") {
@@ -48,32 +53,34 @@ class SinksSpec extends AnyFunSuite {
     // S6 surface gets a real in-process database: create-on-first-append,
     // then append again and expect accumulation (reference: src/load.py:252
     // if_exists='append').
-    val home = java.nio.file.Files.createTempDirectory("graft-derby")
-    System.setProperty("derby.system.home", home.toString) // keep derby.log out of cwd
-    val url = s"jdbc:derby:${home.resolve("db")};create=true"
-    val props = new java.util.Properties()
-    props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
+    SparkTestSession.withTempDir("graft-derby") { home =>
+      System.setProperty("derby.system.home", home.toString) // keep derby.log out of cwd
+      val url = s"jdbc:derby:${home.resolve("db")};create=true"
+      val props = new java.util.Properties()
+      props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
 
-    val slim = df.select("rid", "symbol", "close")
-    Sinks.appendJdbc(slim, url, "stock_data", props, batchSize = 50)
-    val once = spark.read.jdbc(url, "stock_data", props)
-    assert(once.count() == 200)
-    assert(once.agg(sum("rid")).head.getLong(0) ==
-      slim.agg(sum("rid")).head.getLong(0))
+      val slim = df.select("rid", "symbol", "close")
+      Sinks.appendJdbc(slim, url, "stock_data", props, batchSize = 50)
+      val once = spark.read.jdbc(url, "stock_data", props)
+      assert(once.count() == 200)
+      assert(once.agg(sum("rid")).head.getLong(0) ==
+        slim.agg(sum("rid")).head.getLong(0))
 
-    Sinks.appendJdbc(slim, url, "stock_data", props, batchSize = 50)
-    assert(spark.read.jdbc(url, "stock_data", props).count() == 400)
+      Sinks.appendJdbc(slim, url, "stock_data", props, batchSize = 50)
+      assert(spark.read.jdbc(url, "stock_data", props).count() == 400)
+    }
   }
 
   test("bucketed table eliminates the shuffle for per-symbol aggregation") {
-    val path = tmp("graft-bucketed")
-    Sinks.writeBucketed(df, "stock_bucketed", path, buckets = 4)
-    val agg = spark.table("stock_bucketed").groupBy("symbol")
-      .agg(avg("close"), max("volume"))
-    val plan = agg.queryExecution.executedPlan.toString
-    assert(!plan.contains("hashpartitioning"),
-      s"bucketed read should not exchange:\n$plan")
-    assert(agg.count() == df.select("symbol").distinct().count())
+    withOut("graft-bucketed") { path =>
+      Sinks.writeBucketed(df, "stock_bucketed", path, buckets = 4)
+      val agg = spark.table("stock_bucketed").groupBy("symbol")
+        .agg(avg("close"), max("volume"))
+      val plan = agg.queryExecution.executedPlan.toString
+      assert(!plan.contains("hashpartitioning"),
+        s"bucketed read should not exchange:\n$plan")
+      assert(agg.count() == df.select("symbol").distinct().count())
+    }
   }
 
   test("approx monitoring summary is close to exact at small scale") {
@@ -102,32 +109,35 @@ class SinksSpec extends AnyFunSuite {
       }.sum / files.length
     }
 
-    val zdir = tmp("graft-zorder")
-    Sinks.writeZOrdered(lattice, zdir, "x", "y", numFiles = 16)
-    val (zx, zy) = (meanFileExtent(zdir, "x"), meanFileExtent(zdir, "y"))
-    // 16 files x 256 cells = one 16x16 z-block each -> extent ~15 per dim;
-    // anything < half the global extent proves BOTH dims cluster
-    assert(zx < 32 && zy < 32, s"z-order did not cluster both dims: x=$zx y=$zy")
+    withOut("graft-zorder") { zdir =>
+      Sinks.writeZOrdered(lattice, zdir, "x", "y", numFiles = 16)
+      val (zx, zy) = (meanFileExtent(zdir, "x"), meanFileExtent(zdir, "y"))
+      // 16 files x 256 cells = one 16x16 z-block each -> extent ~15 per dim;
+      // anything < half the global extent proves BOTH dims cluster
+      assert(zx < 32 && zy < 32, s"z-order did not cluster both dims: x=$zx y=$zy")
 
-    // the 1-d baseline: range-sorted by x alone clusters x but leaves y
-    // spanning the full lattice in every file
-    val sdir = tmp("graft-sorted1d")
-    lattice.repartitionByRange(16, col("x")).sortWithinPartitions("x")
-      .write.mode("overwrite").parquet(sdir)
-    val (sx, sy) = (meanFileExtent(sdir, "x"), meanFileExtent(sdir, "y"))
-    assert(sx < 32, s"1-d sort should cluster x: $sx")
-    assert(sy > 48, s"1-d sort should NOT cluster y (got $sy) — the z-order advantage")
+      // the 1-d baseline: range-sorted by x alone clusters x but leaves y
+      // spanning the full lattice in every file
+      withOut("graft-sorted1d") { sdir =>
+        lattice.repartitionByRange(16, col("x")).sortWithinPartitions("x")
+          .write.mode("overwrite").parquet(sdir)
+        val (sx, sy) = (meanFileExtent(sdir, "x"), meanFileExtent(sdir, "y"))
+        assert(sx < 32, s"1-d sort should cluster x: $sx")
+        assert(sy > 48, s"1-d sort should NOT cluster y (got $sy) — the z-order advantage")
+      }
+    }
   }
 
   test("partitioned lake sink prunes by symbol") {
-    val path = tmp("graft-lake")
-    Sinks.writePartitioned(df, path)
-    val symbols = df.select("symbol").distinct().count()
-    val dirs = new java.io.File(path).listFiles().count(_.getName.startsWith("symbol="))
-    assert(dirs == symbols)
-    // a per-symbol read touches one partition directory
-    val one = df.select("symbol").head.getString(0)
-    val pruned = spark.read.parquet(path).filter(col("symbol") === one)
-    assert(pruned.count() == df.filter(col("symbol") === one).count())
+    withOut("graft-lake") { path =>
+      Sinks.writePartitioned(df, path)
+      val symbols = df.select("symbol").distinct().count()
+      val dirs = new java.io.File(path).listFiles().count(_.getName.startsWith("symbol="))
+      assert(dirs == symbols)
+      // a per-symbol read touches one partition directory
+      val one = df.select("symbol").head.getString(0)
+      val pruned = spark.read.parquet(path).filter(col("symbol") === one)
+      assert(pruned.count() == df.filter(col("symbol") === one).count())
+    }
   }
 }

@@ -163,60 +163,63 @@ class SourcesSpec extends AnyFunSuite {
     // a clean restart from checkpoint must fetch the NEXT round — not
     // re-fetch round 0 and not conclude "no new data" and fetch nothing
     // (offset progression is stateless: latestOffset(start) = start + 1)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-fetch-ckpt").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-fetch-out").toString
-    def runOnce(): Unit = {
-      val q = spark.readStream.format("graft-fetch")
-        .option("symbols", "AAA,CCC")
-        .option("transport", classOf[CannedTransport].getName)
-        .option("ratePerMinute", "600000")
-        .load()
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    SparkTestSession.withTempDir("graft-fetch") { root =>
+      val ckpt = root.resolve("ckpt").toString
+      val out = root.resolve("out").toString
+      def runOnce(): Unit = {
+        val q = spark.readStream.format("graft-fetch")
+          .option("symbols", "AAA,CCC")
+          .option("transport", classOf[CannedTransport].getName)
+          .option("ratePerMinute", "600000")
+          .load()
+          .writeStream.format("parquet")
+          .option("path", out)
+          .option("checkpointLocation", ckpt)
+          .outputMode("append")
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
+      }
+      runOnce()
+      runOnce()
+      // run 1 lands round 0 (fetch_seq 0,1); the restart lands round 1 only
+      val seqs = spark.read.parquet(out)
+        .orderBy("fetch_seq").collect().map(_.getAs[Long]("fetch_seq")).toSeq
+      assert(seqs == Seq(0L, 1L, 2L, 3L),
+        s"restart must append exactly round 1 (fetch_seq 2,3), got $seqs")
     }
-    runOnce()
-    runOnce()
-    // run 1 lands round 0 (fetch_seq 0,1); the restart lands round 1 only
-    val seqs = spark.read.parquet(out)
-      .orderBy("fetch_seq").collect().map(_.getAs[Long]("fetch_seq")).toSeq
-    assert(seqs == Seq(0L, 1L, 2L, 3L),
-      s"restart must append exactly round 1 (fetch_seq 2,3), got $seqs")
   }
 
   test("fetch -> landing dir -> file stream: the full ingestion contract") {
     // the production shape: the paced graft-fetch scan lands raw payloads
     // in a directory; Structured Streaming tails the directory and the
     // payload parser runs distributed per micro-batch
-    val landing = java.nio.file.Files.createTempDirectory("graft-landing")
-    spark.read.format("graft-fetch")
-      .option("symbols", "AAA,BBB")
-      .option("transport", classOf[CannedTransport].getName)
-      .option("ratePerMinute", "600000")
-      .load()
-      .write.mode("overwrite").parquet(landing.toString)
+    SparkTestSession.withTempDir("graft-landing") { landing =>
+      spark.read.format("graft-fetch")
+        .option("symbols", "AAA,BBB")
+        .option("transport", classOf[CannedTransport].getName)
+        .option("ratePerMinute", "600000")
+        .load()
+        .write.mode("overwrite").parquet(landing.toString)
 
-    val stream = spark.readStream.schema(graft.io.FetchSource.schema)
-      .parquet(landing.toString)
-    val q = Sources.parseAlphaVantage(stream, "payload",
+      val stream = spark.readStream.schema(graft.io.FetchSource.schema)
+        .parquet(landing.toString)
+      val q = Sources.parseAlphaVantage(stream, "payload",
+          passthrough = Seq("fetch_seq"))
+        .writeStream.format("memory").queryName("landed_bars")
+        .outputMode("append")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+
+      val streamed = spark.table("landed_bars")
+      val batch = Sources.parseAlphaVantage(
+        spark.read.parquet(landing.toString), "payload",
         passthrough = Seq("fetch_seq"))
-      .writeStream.format("memory").queryName("landed_bars")
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-
-    val streamed = spark.table("landed_bars")
-    val batch = Sources.parseAlphaVantage(
-      spark.read.parquet(landing.toString), "payload",
-      passthrough = Seq("fetch_seq"))
-    assert(streamed.count() == 2 && batch.count() == 2)
-    assert(streamed.exceptAll(batch).count() == 0 &&
-      batch.exceptAll(streamed).count() == 0,
-      "streamed parse diverges from batch parse of the same landing dir")
+      assert(streamed.count() == 2 && batch.count() == 2)
+      assert(streamed.exceptAll(batch).count() == 0 &&
+        batch.exceptAll(streamed).count() == 0,
+        "streamed parse diverges from batch parse of the same landing dir")
+    }
   }
 }

@@ -2101,7 +2101,7 @@ object OracleSql {
   }
 
   /** The t35 BPE merge-training rounds, unrolled — mirrors
-    * Queries.t35BpeTrain in lockstep: per round, weighted adjacent-pair
+    * TextOps.bpeStates in lockstep: per round, weighted adjacent-pair
     * counts over the marked-vocabulary frame (symbols re-split on '><'),
     * the top pair by (count DESC, left, right) as a 1-row CTE, then the
     * merge applied to every word with ONE literal replace (left-to-right
@@ -5052,8 +5052,8 @@ object OracleSql {
       """v0 AS MATERIALIZED (
         |  SELECT regexp_replace(w, '(.)', '<\1>', 'g') AS sw, wc
         |  FROM wc)""".stripMargin) ++
-      bpeIterCtes(graft.Queries.BpeRounds): _*)(
-      (1 to graft.Queries.BpeRounds).map { t =>
+      bpeIterCtes(graft.ext.TextOps.BpeRounds): _*)(
+      (1 to graft.ext.TextOps.BpeRounds).map { t =>
         s"""SELECT CAST(round AS INTEGER) AS round, left_sym, right_sym,
            |  left_sym || right_sym AS merged,
            |  CAST(pair_count AS BIGINT) AS pair_count FROM t$t""".stripMargin
@@ -5110,8 +5110,8 @@ object OracleSql {
       """v0 AS MATERIALIZED (
         |  SELECT regexp_replace(w, '(.)', '<\1>', 'g') AS sw, wc
         |  FROM wc)""".stripMargin) ++
-      bpeIterCtes(graft.Queries.BpeRounds): _*)(
-      (0 to graft.Queries.BpeRounds).map { t =>
+      bpeIterCtes(graft.ext.TextOps.BpeRounds): _*)(
+      (0 to graft.ext.TextOps.BpeRounds).map { t =>
         s"""SELECT CAST($t AS INTEGER) AS round,
            |  (SELECT CAST(SUM(wc * len(string_split(
            |       substring(sw, 2, length(sw) - 2), '><'))) AS BIGINT)

@@ -814,14 +814,14 @@ object Queries {
     * rank. Exact sitting beside the estimate makes the query its own
     * accuracy report (~11% expected rel-err at k=64). */
   def a14KmvDistinct(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val k = 64
     Sources.lineitem(s, dir)
       .select(col("l_returnflag").as("flag"), col("l_partkey"),
         conv(substring(md5(col("l_partkey").cast("string")), 1, 8), 16, 10)
           .cast("long").as("h"))
       .groupBy("flag")
-      .agg(expr(s"kmv_sketch(h, $k)").as("sk"),
+      .agg(graft.functions.GraftFunctions.call("kmv_sketch", col("h"), lit(k))
+          .as("sk"),
         countDistinct(col("l_partkey")).as("exact_distinct"))
       .select(col("flag"), col("sk.n_kept").as("n_kept"),
         col("sk.kth").as("kth_hash"),
@@ -1340,40 +1340,37 @@ object Queries {
       .limit(50), Seq("close"))
   }
 
-  /** As-of join (backward): attach to every price bar the most recent
-    * order-book mark at or before the bar date, per symbol. The naive form
-    * is a theta join (BroadcastNestedLoopJoin, quadratic per key);
-    * TemporalJoins.asofBackward plans one hash shuffle + one sort. */
-  def j5AsofJoin(s: SparkSession, dir: String): DataFrame = {
-    val bars = cleanedStock(s, dir).select("symbol", "date", "close")
-    val marks = Sources.lineitem(s, dir)
+  /** The as-of family's two sides: the cleaned price bars, and the
+    * order-book marks — the mean order price per (part as symbol, order
+    * date), unique per (symbol, mark_date) as the joins require. */
+  private def asofBars(s: SparkSession, dir: String): DataFrame =
+    cleanedStock(s, dir).select("symbol", "date", "close")
+  private def orderMarks(s: SparkSession, dir: String): DataFrame =
+    Sources.lineitem(s, dir)
       .join(Sources.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("l_partkey").cast("string").as("symbol"),
         col("o_orderdate").cast("date").as("mark_date"))
       .agg(avg("o_totalprice").as("mark_price"))
-    val joined = TemporalJoins.asofBackward(
-      bars, marks, Seq("symbol"), "date", "mark_date")
+  private def asofReport(joined: DataFrame): DataFrame =
     rounded(rounded(joined, Seq("close")), Seq("mark_price"), 2)
       .orderBy("symbol", "date")
-  }
+
+  /** As-of join (backward): attach to every price bar the most recent
+    * order-book mark at or before the bar date, per symbol. The naive form
+    * is a theta join (BroadcastNestedLoopJoin, quadratic per key);
+    * TemporalJoins.asofBackward plans one hash shuffle + one sort. */
+  def j5AsofJoin(s: SparkSession, dir: String): DataFrame =
+    asofReport(TemporalJoins.asofBackward(
+      asofBars(s, dir), orderMarks(s, dir), Seq("symbol"), "date", "mark_date"))
 
   /** Forward as-of join — the event-study direction of j5: every bar
     * attaches the EARLIEST mark at or after it ("the next observation"),
     * where j5 attaches the latest at or before. Same union-and-window
     * plan, frame reversed (see [[graft.ops.TemporalJoins.asofForward]]);
     * one hash shuffle + one sort, never a per-key theta join. */
-  def j9AsofForward(s: SparkSession, dir: String): DataFrame = {
-    val bars = cleanedStock(s, dir).select("symbol", "date", "close")
-    val marks = Sources.lineitem(s, dir)
-      .join(Sources.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
-      .groupBy(col("l_partkey").cast("string").as("symbol"),
-        col("o_orderdate").cast("date").as("mark_date"))
-      .agg(avg("o_totalprice").as("mark_price"))
-    val joined = TemporalJoins.asofForward(
-      bars, marks, Seq("symbol"), "date", "mark_date")
-    rounded(rounded(joined, Seq("close")), Seq("mark_price"), 2)
-      .orderBy("symbol", "date")
-  }
+  def j9AsofForward(s: SparkSession, dir: String): DataFrame =
+    asofReport(TemporalJoins.asofForward(
+      asofBars(s, dir), orderMarks(s, dir), Seq("symbol"), "date", "mark_date"))
 
   /** Nearest as-of join — j5/j9's third direction: every bar attaches the
     * mark CLOSEST in time on either side, ties to the backward match,
@@ -1381,19 +1378,10 @@ object Queries {
     * union — a single symbol hash exchange with two in-partition sorts —
     * instead of composing j5+j9 (which would exchange the bars twice);
     * see [[graft.ops.TemporalJoins.asofNearest]]. */
-  def j10AsofNearest(s: SparkSession, dir: String): DataFrame = {
-    val bars = cleanedStock(s, dir).select("symbol", "date", "close")
-    val marks = Sources.lineitem(s, dir)
-      .join(Sources.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
-      .groupBy(col("l_partkey").cast("string").as("symbol"),
-        col("o_orderdate").cast("date").as("mark_date"))
-      .agg(avg("o_totalprice").as("mark_price"))
-    val joined = TemporalJoins.asofNearest(
-      bars, marks, Seq("symbol"), "date", "mark_date",
-      tolerance = Some(45), timeToLong = unix_date)
-    rounded(rounded(joined, Seq("close")), Seq("mark_price"), 2)
-      .orderBy("symbol", "date")
-  }
+  def j10AsofNearest(s: SparkSession, dir: String): DataFrame =
+    asofReport(TemporalJoins.asofNearest(
+      asofBars(s, dir), orderMarks(s, dir), Seq("symbol"), "date", "mark_date",
+      tolerance = Some(45), timeToLong = unix_date))
 
   /** Range join via time-bucketed equi-join: all orders landing inside the
     * 7-day aftermath window of each big urgent order. Bucket width = max
@@ -1428,15 +1416,14 @@ object Queries {
     * >= the 5 distinct priorities, so the sketch is exact here and the
     * DuckDB groupBy-count oracle applies; at cluster scale the same call
     * bounds aggregation state to `capacity` counters per partition. */
-  def a12HeavyHitters(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
+  def a12HeavyHitters(s: SparkSession, dir: String): DataFrame =
     Sources.orders(s, dir)
-      .agg(expr("heavy_hitters(o_orderpriority, 8)").as("hh"))
+      .agg(graft.functions.GraftFunctions.call("heavy_hitters",
+        col("o_orderpriority"), lit(8)).as("hh"))
       .select(explode(col("hh")).as("h"))
       .select(col("h.item").as("o_orderpriority"),
         col("h.min_count").as("n_orders"))
       .orderBy("o_orderpriority")
-  }
 
   def st1TumblingWindow(s: SparkSession, dir: String): DataFrame =
     rounded(Sources.events(s, dir)
@@ -2364,17 +2351,14 @@ object Queries {
     * source before the shuffle (see [[graft.functions.TopKByScore]]).
     * Scores are tie-safe rounded BEFORE ranking so the (score desc, doc_id
     * asc) order is engine-stable. */
-  def t14BestPerSource(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    ext.TextOps.withQualityScore(Sources.documents(s, dir))
-      .withColumn("q", Num.cround(col("quality_score"), 6))
-      .groupBy("source")
-      .agg(expr("top_k_by(q, doc_id, 3)").as("tk"))
-      .select(col("source"), posexplode(col("tk")).as(Seq("r", "t")))
-      .select(col("source"), (col("r") + 1).cast("int").as("rank"),
-        col("t.id").as("doc_id"), col("t.score").as("quality_score"))
+  def t14BestPerSource(s: SparkSession, dir: String): DataFrame =
+    graft.functions.GraftFunctions.topKBy(
+        ext.TextOps.withQualityScore(Sources.documents(s, dir))
+          .withColumn("q", Num.cround(col("quality_score"), 6))
+          .groupBy("source"), col("q"), col("doc_id"), 3)
+      .select(col("source"), col("rank"), col("id").as("doc_id"),
+        col("score").as("quality_score"))
       .orderBy("source", "rank")
-  }
 
   def m1MultimodalMeta(s: SparkSession, dir: String): DataFrame =
     // sort-first (both shapes measured at sf1.0/sf10): ordering the raw
@@ -2662,7 +2646,7 @@ object Queries {
     * shuffle before the output sort. */
   def t32Readability(s: SparkSession, dir: String): DataFrame = {
     val d = Sources.documents(s, dir)
-      .withColumn("n_words", size(split(trim(col("text")), "\\s+")))
+      .withColumn("n_words", ext.TextOps.wordCount(col("text")))
       .withColumn("n_sentences",
         greatest(lit(1), regexp_count(col("text"), lit("[.!?]"))))
       .withColumn("n_letter_chars",
@@ -3055,12 +3039,9 @@ object Queries {
     * vocab-sized explode — never a count-distinct Expand). Exact integers
     * end to end. */
   def t34BpePairs(s: SparkSession, dir: String): DataFrame = {
-    val words = Sources.documents(s, dir)
-      .select(explode(split(lower(col("text")), " ")).as("w"))
-      .filter(length(col("w")) >= 2)
-      .groupBy("w").agg(count(lit(1)).as("wc"))
-    val wp = words.withColumn("pairs", expr(
-      "transform(sequence(1, length(w) - 1), i -> substring(w, i, 2))"))
+    val wp = ext.TextOps.bpeWords(Sources.documents(s, dir))
+      .withColumn("pairs", expr(
+        "transform(sequence(1, length(w) - 1), i -> substring(w, i, 2))"))
     val counts = wp.select(col("wc"), explode(col("pairs")).as("pair"))
       .groupBy("pair").agg(sum("wc").as("pair_count"))
     val dfreq = wp.select(explode(array_distinct(col("pairs"))).as("pair"))
@@ -3070,138 +3051,59 @@ object Queries {
       .limit(30)
   }
 
-  /** Number of merge rounds the t35 BPE trainer runs — shared with the
-    * oracle's unrolled CTEs so both engines train the same vocabulary. */
-  val BpeRounds = 8
-
   /** Iterated BPE merge TRAINING — t34 gave merge 0's candidate table;
-    * this runs Sennrich et al. 2016's actual loop for [[BpeRounds]]
-    * rounds: count corpus-weighted adjacent symbol pairs, merge the most
-    * frequent pair everywhere, re-pair, repeat. The output is the learned
-    * merge list in order — the artifact a tokenizer trainer ships.
+    * this runs Sennrich et al. 2016's actual loop
+    * ([[ext.TextOps.bpeStates]]) for [[ext.TextOps.BpeRounds]] rounds:
+    * count corpus-weighted adjacent symbol pairs, merge the most frequent
+    * pair everywhere, re-pair, repeat. The output is the learned merge
+    * list in order — the artifact a tokenizer trainer ships — read off
+    * each round's merged-vocab checkpoint, which carries its winning pair.
     *
     * Shape at 100 TB (the sim21/ev24 training-as-relational-dataflow
     * contract): the CORPUS pays exactly one word-count aggregate before
-    * round 1; every round after that runs on the DISTINCT word VOCABULARY
-    * (Heaps-law sublinear in the corpus), materialized per round so the
-    * 8-round lineage stays flat (the g4 half-round lesson). A word's
-    * symbol sequence is kept as a marked string — each symbol wrapped in
-    * '<'/'>' (safe: the corpus is pure [a-z ]) — so applying a merge is
-    * ONE literal `replace('<a><b>' -> '<ab>')`: string replace scans
-    * left-to-right non-overlapping in both engines, which IS BPE's greedy
-    * merge order ('<a><a><a>' -> '<aa><a>', never '<a><aa>'), and the
-    * markers make cross-symbol false matches impossible ('<xa><b>' never
-    * contains '<a><b>'). Pair counting re-splits the marked string on
-    * '><' and explodes adjacent index pairs, weighted by word count —
-    * partial-combined into a table bounded by the live symbol alphabet².
-    * Top pair per round is a 1-row TakeOrderedAndProject (count desc,
-    * then (left, right) ascending — ASCII-deterministic in both engines),
-    * broadcast into the merge projection. Exact integers end to end;
-    * the oracle unrolls identical rounds as CTEs (bpeIterCtes). */
-  def t35BpeTrain(s: SparkSession, dir: String): DataFrame = {
-    val words = Sources.documents(s, dir)
-      .select(explode(split(lower(col("text")), " ")).as("w"))
-      .filter(length(col("w")) >= 2)
-      .groupBy("w").agg(count(lit(1)).as("wc"))
-    // initial checkpoint carries ONLY (sw, wc): no consumer ever read the
-    // former three always-null pair columns — round 1 reads
-    // vocab.select("sw", "wc") and bpePairCounts projects (sw, wc), so
-    // they only padded the first checkpoint (r13 advice item)
-    var vocab = Materialize(words.select(
-      regexp_replace(col("w"), "(.)", "<$1>").as("sw"), col("wc")))
-    val steps = (1 to BpeRounds).map { r =>
-      // ONE materialization per round (was two — the top pair, then the
-      // merged vocabulary): the winning pair rides the merged-vocab
-      // checkpoint as three constant columns, so the round's output row
-      // is a limit(1) read of the checkpoint, not a second blocking job
-      val top = bpePairCounts(vocab)
-        .orderBy(col("pair_count").desc,
-          col("left_sym").asc, col("right_sym").asc)
-        .limit(1)
-        .select(col("left_sym"), col("right_sym"), col("pair_count"))
-      vocab = Materialize(vocab.select("sw", "wc").crossJoin(broadcast(top))
-        .select(expr(
-          """replace(sw, concat('<', left_sym, '><', right_sym, '>'),
-            |        concat('<', left_sym, right_sym, '>'))""".stripMargin)
-          .as("sw"), col("wc"),
-          col("left_sym"), col("right_sym"), col("pair_count")))
-      vocab.limit(1)
-        .select(lit(r).as("round"), col("left_sym"), col("right_sym"),
-          col("pair_count"))
-    }
-    steps.reduce(_ union _)
+    * round 1; every round after that runs on the DISTINCT word VOCABULARY,
+    * materialized once per round so the 8-round lineage stays flat (the
+    * g4 half-round lesson). Exact integers end to end; the oracle unrolls
+    * identical rounds as CTEs (bpeIterCtes). */
+  def t35BpeTrain(s: SparkSession, dir: String): DataFrame =
+    ext.TextOps.bpeStates(Sources.documents(s, dir)).zipWithIndex.tail
+      .map { case (vocab, r) =>
+        vocab.limit(1).select(lit(r).as("round"), col("left_sym"),
+          col("right_sym"), col("pair_count"))
+      }
+      .reduce(_ union _)
       .withColumn("merged", concat(col("left_sym"), col("right_sym")))
       .select("round", "left_sym", "right_sym", "merged", "pair_count")
       .orderBy("round")
-  }
 
   /** BPE compression curve — the metric a tokenizer trainer actually
     * watches while t35 learns its merges: after each merge round, how
     * many symbols does the corpus tokenize into, and how large has the
     * symbol alphabet grown? (Vocab-size selection reads exactly this
     * curve — train until the marginal merge stops buying compression.)
-    * Rounds are the SAME t35 loop (same tops, same vocab states — the
-    * two queries must agree or one of them lies); per round the stats are
-    * two aggregates over the marked-vocabulary frame: corpus_tokens =
-    * SUM(wc x symbols-per-word) — exact, counts every word occurrence —
-    * and distinct_symbols = the live alphabet size. Round 0 is the
-    * pre-merge character baseline. Corpus cost: the one word-count
-    * aggregate t35 pays; everything else is vocab-frame work
-    * (Heaps-sublinear), and the oracle unrolls identical stats CTEs over
-    * bpeIterCtes' vocab states. */
-  def t36BpeCompression(s: SparkSession, dir: String): DataFrame = {
-    val words = Sources.documents(s, dir)
-      .select(explode(split(lower(col("text")), " ")).as("w"))
-      .filter(length(col("w")) >= 2)
-      .groupBy("w").agg(count(lit(1)).as("wc"))
-    var vocab = Materialize(words.select(
-      regexp_replace(col("w"), "(.)", "<$1>").as("sw"), col("wc")))
-    def stats(round: Int, v: DataFrame): DataFrame = {
-      val syms = v.select(col("wc"),
-        split(expr("substring(sw, 2, length(sw) - 2)"), "><").as("syms"))
-      val tok = syms.agg(
-        sum(col("wc") * size(col("syms"))).as("corpus_tokens"))
-      val alpha = syms.select(explode(col("syms")).as("sym"))
-        .agg(countDistinct(col("sym")).as("distinct_symbols"))
-      tok.crossJoin(broadcast(alpha))
-        .select(lit(round).as("round"), col("corpus_tokens"),
-          col("distinct_symbols"))
-    }
-    val curve = (1 to BpeRounds).foldLeft(Vector(stats(0, vocab))) { (acc, r) =>
-      // one materialization per round (the t35 fusion): the winning pair
-      // rides the merged-vocab job as the broadcast build side — a
-      // separate top checkpoint bought nothing, the stats read the vocab
-      // checkpoint anyway
-      val top = bpePairCounts(vocab)
-        .orderBy(col("pair_count").desc,
-          col("left_sym").asc, col("right_sym").asc)
-        .limit(1)
-        .select(col("left_sym"), col("right_sym"))
-      vocab = Materialize(vocab.crossJoin(broadcast(top))
-        .select(expr(
-          """replace(sw, concat('<', left_sym, '><', right_sym, '>'),
-            |        concat('<', left_sym, right_sym, '>'))""".stripMargin)
-          .as("sw"), col("wc")))
-      acc :+ stats(r, vocab)
-    }
-    curve.reduce(_ union _).orderBy("round")
-  }
-
-  /** One round's pair-count table over the marked-vocabulary frame —
-    * the per-round work t35 repeats (exposed for the PlanSpec pin: no
-    * documents scan, one pair-aggregate exchange). `size >= 2` guards the
-    * fully-merged single-symbol words BEFORE sequence(1, n-1) — Spark's
-    * sequence(1, 0) descends, it does not return empty. */
-  def bpePairCounts(vocab: DataFrame): DataFrame =
-    vocab.select(col("wc"),
-        split(expr("substring(sw, 2, length(sw) - 2)"), "><").as("syms"))
-      .filter(size(col("syms")) >= 2)
-      .select(col("wc"), explode(expr(
-        """transform(sequence(1, size(syms) - 1),
-          |  i -> struct(element_at(syms, i) AS l,
-          |              element_at(syms, i + 1) AS r))""".stripMargin)).as("p"))
-      .groupBy(col("p.l").as("left_sym"), col("p.r").as("right_sym"))
-      .agg(sum("wc").as("pair_count"))
+    * Rounds are the SAME loop as t35 ([[ext.TextOps.bpeStates]]: same
+    * tops, same vocab states — the two queries must agree or one of them
+    * lies); per state the stats are two aggregates over the
+    * marked-vocabulary frame: corpus_tokens = SUM(wc x symbols-per-word) —
+    * exact, counts every word occurrence — and distinct_symbols = the live
+    * alphabet size. Round 0 is the pre-merge character baseline. Corpus
+    * cost: the one word-count aggregate t35 pays; everything else is
+    * vocab-frame work (Heaps-sublinear), and the oracle unrolls identical
+    * stats CTEs over bpeIterCtes' vocab states. */
+  def t36BpeCompression(s: SparkSession, dir: String): DataFrame =
+    ext.TextOps.bpeStates(Sources.documents(s, dir)).zipWithIndex
+      .map { case (vocab, round) =>
+        val syms = vocab.select(col("wc"),
+          split(expr("substring(sw, 2, length(sw) - 2)"), "><").as("syms"))
+        val tok = syms.agg(
+          sum(col("wc") * size(col("syms"))).as("corpus_tokens"))
+        val alpha = syms.select(explode(col("syms")).as("sym"))
+          .agg(countDistinct(col("sym")).as("distinct_symbols"))
+        tok.crossJoin(broadcast(alpha))
+          .select(lit(round).as("round"), col("corpus_tokens"),
+            col("distinct_symbols"))
+      }
+      .reduce(_ union _).orderBy("round")
 
   /** Inter-arrival cadence per event type — per-user gaps between
     * consecutive events of the SAME type, reduced to p50/p90/mean

@@ -222,12 +222,11 @@ object CorpusPipeline {
     // decontamination so caps fill with clean documents.
     val capped = cfg.perSourceCap match {
       case Some(cap) =>
-        graft.functions.GraftFunctions.register(decontaminated.sparkSession)
-        val best = TextOps.withQualityScore(decontaminated)
-          .withColumn("__q", graft.ops.Num.cround(col("quality_score"), 6))
-          .groupBy("source")
-          .agg(expr(s"top_k_by(__q, doc_id, $cap)").as("tk"))
-          .select(explode(col("tk.id")).as("doc_id"))
+        val best = graft.functions.GraftFunctions.topKBy(
+            TextOps.withQualityScore(decontaminated)
+              .withColumn("__q", graft.ops.Num.cround(col("quality_score"), 6))
+              .groupBy("source"), col("__q"), col("doc_id"), cap)
+          .select(col("id").as("doc_id"))
         decontaminated.join(best, Seq("doc_id"), "left_semi")
           .materialized
       case None => decontaminated

@@ -156,7 +156,7 @@ object IncrementalAnnIndex {
       lshCapped = Materialize.append(state.lshCapped, newLsh, nb),
       ivfCapped = Materialize.append(state.ivfCapped, newIvf, nb),
       edges = edges,
-      nIngested = state.nIngested + arrived.get("n").asInstanceOf[Long],
+      nIngested = state.nIngested + Materialize.observedCount(arrived),
       nBatches = nb)
   }
 

@@ -151,7 +151,7 @@ object IncrementalCuration {
       // duplicateClusters returns a materialized table; the empty-edge
       // branch reuses the already-materialized previous labels
       labels = merged,
-      nIngested = state.nIngested + arrived.get("n").asInstanceOf[Long],
+      nIngested = state.nIngested + Materialize.observedCount(arrived),
       nBatches = nb)
   }
 

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.GraftFunctions.topKBy
 import graft.ops.Materialize.MaterializeOps
 
 /** Approximate-nearest-neighbor search over an embedding column
@@ -69,17 +70,8 @@ object Similarity {
     * top-k) where the division form produced NaN (which Spark orders
     * ABOVE every real similarity — a zero vector ranking first is a bug,
     * not a behavior to preserve); null elements are skipped pairwise. */
-  private val nativeFnName = "graft_cosine_similarity"
-  private def nativeCosine(a: Column, b: Column): Column = {
-    val reg = org.apache.spark.sql.SparkSession.active
-      .sessionState.functionRegistry
-    if (!reg.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier(nativeFnName)))
-      reg.createOrReplaceTempFunction(nativeFnName,
-        children => graft.functions.CosineSimilarity(children(0), children(1)),
-        "built-in")
-    call_function(nativeFnName, a, b)
-  }
+  private def nativeCosine(a: Column, b: Column): Column =
+    graft.functions.GraftFunctions.call("cosine_similarity", a, b)
 
   /** The per-query top-k cut every ranked search here ends with: rank by
     * `score` descending with vec_id as the tiebreak, keep rank <= k. */
@@ -154,21 +146,17 @@ object Similarity {
     * and pdims = dims it degenerates to [[bruteForceTopK]] exactly. */
   def prefixRerankTopK(emb: DataFrame, pdims: Int = 16, shortlist: Int = 20,
                        queryMod: Int = 100, k: Int = 5): DataFrame = {
-    graft.functions.GraftFunctions.register(
-      org.apache.spark.sql.SparkSession.active)
     val base = withDoubles(emb)
     val pre = base.select(col("vec_id"),
       slice(col("emb_d"), 1, pdims).as("emb_p"))
     val pQueries = pre.filter(col("vec_id") % queryMod === 0)
       .select(col("vec_id").as("query_id"), col("emb_p").as("q_p"))
-    val short = pre.join(broadcast(pQueries), col("vec_id") =!= col("query_id"))
-      .withColumn("pre_cosine", graft.ops.Num.cround(
-        nativeCosine(col("emb_p"), col("q_p")), 6))
-      .groupBy("query_id")
-      .agg(expr(s"top_k_by(pre_cosine, vec_id, $shortlist)").as("tk"))
-      .select(col("query_id"), explode(col("tk")).as("t"))
-      .select(col("query_id"), col("t.id").as("vec_id"),
-        col("t.score").as("pre_cosine"))
+    val short = topKBy(pre.join(broadcast(pQueries), col("vec_id") =!= col("query_id"))
+        .withColumn("pre_cosine", graft.ops.Num.cround(
+          nativeCosine(col("emb_p"), col("q_p")), 6))
+        .groupBy("query_id"), col("pre_cosine"), col("vec_id"), shortlist)
+      .select(col("query_id"), col("id").as("vec_id"),
+        col("score").as("pre_cosine"))
     val qFull = base.filter(col("vec_id") % queryMod === 0)
       .select(col("vec_id").as("query_id"), col("emb_d").as("q_d"))
     val scored = base.join(broadcast(short), "vec_id")
@@ -1005,8 +993,6 @@ object Similarity {
   def pqTopK(emb: DataFrame, codebook: DataFrame, queryMod: Int = 100,
              k: Int = 5, subDim: Int = 8,
              queryCap: Long = Long.MaxValue): DataFrame = {
-    graft.functions.GraftFunctions.register(
-      org.apache.spark.sql.SparkSession.active)
     val adc = adcTables(emb, codebook, queryMod, queryCap, subDim)
       .select(col("query_id"), col("s").as("qs"), col("c").as("qc"),
         col("qd"))
@@ -1110,13 +1096,11 @@ object Similarity {
     * bounded `top_k_by` (vec_id tiebreak). Output (query_id, rank, vec_id,
     * adc_dist2). */
   private def adcTopK(terms: DataFrame, k: Int): DataFrame =
-    terms.groupBy("query_id", "vec_id")
-      .agg(graft.ops.Num.cround(sum("qd"), 6).as("adc_dist2"))
-      .groupBy("query_id")
-      .agg(expr(s"top_k_by(-adc_dist2, vec_id, $k)").as("tk"))
-      .select(col("query_id"), posexplode(col("tk")).as(Seq("r", "t")))
-      .select(col("query_id"), (col("r") + 1).cast("int").as("rank"),
-        col("t.id").as("vec_id"), (-col("t.score")).as("adc_dist2"))
+    topKBy(terms.groupBy("query_id", "vec_id")
+        .agg(graft.ops.Num.cround(sum("qd"), 6).as("adc_dist2"))
+        .groupBy("query_id"), -col("adc_dist2"), col("vec_id"), k)
+      .select(col("query_id"), col("rank"), col("id").as("vec_id"),
+        (-col("score")).as("adc_dist2"))
 
   /** The tail of both IVF-PQ searches: join each code row to the queries
     * probing its list, look the code up in the broadcast `adc` table on
@@ -1157,8 +1141,6 @@ object Similarity {
                 queryCap: Long = Long.MaxValue,
                 routingOpt: Option[(DataFrame, DataFrame)] = None)
       : DataFrame = {
-    graft.functions.GraftFunctions.register(
-      org.apache.spark.sql.SparkSession.active)
     val (assigned, probes) = routingOpt.getOrElse(
       ivfRoute(emb, anchors, queryMod, nprobe, queryCap))
     val codes = pqEncode(emb, codebook, subDim).join(assigned, "vec_id")
@@ -1203,8 +1185,6 @@ object Similarity {
                         queryCap: Long = Long.MaxValue,
                         routingOpt: Option[(DataFrame, DataFrame)] = None)
       : DataFrame = {
-    graft.functions.GraftFunctions.register(
-      org.apache.spark.sql.SparkSession.active)
     val spark = emb.sparkSession
     val (assigned, probes) = routingOpt.getOrElse(
       ivfRoute(emb, anchors, queryMod, nprobe, queryCap))
@@ -1429,10 +1409,8 @@ object Similarity {
     * basis (up to float re-rounding); only the quantizer sees a
     * different, better-conditioned coordinate system. */
   def rotate(emb: DataFrame, rot: Array[Array[Double]]): DataFrame = {
-    graft.functions.GraftFunctions.register(
-      org.apache.spark.sql.SparkSession.active)
     emb.withColumn("embedding",
-      call_function("mat_vec_mul", lit(rot.flatten),
+      graft.functions.GraftFunctions.call("mat_vec_mul", lit(rot.flatten),
         transform(col("embedding"), x => x.cast("double"))))
   }
 
@@ -1503,22 +1481,18 @@ object Similarity {
     * not). `anchorVecs` must carry (vec_id, label, embedding). */
   def hardNegativesFor(emb: DataFrame, anchorVecs: DataFrame,
                        k: Int = 5): DataFrame = {
-    graft.functions.GraftFunctions.register(
-      org.apache.spark.sql.SparkSession.active)
     val vecs = emb.select(col("vec_id"), col("label"),
       transform(col("embedding"), x => x.cast("double")).as("emb_d"))
     val anchors = anchorVecs
       .select(col("vec_id").as("anchor_id"), col("label").as("anchor_label"),
         transform(col("embedding"), x => x.cast("double")).as("a_emb"))
-    val short = vecs.join(broadcast(anchors),
-        col("label") =!= col("anchor_label"))
-      .withColumn("cosine", graft.ops.Num.cround(
-        nativeCosine(col("emb_d"), col("a_emb")), 6))
-      .groupBy("anchor_id", "anchor_label")
-      .agg(expr(s"top_k_by(cosine, vec_id, $k)").as("tk"))
-      .select(col("anchor_id"), col("anchor_label"), explode(col("tk")).as("t"))
+    val short = topKBy(vecs.join(broadcast(anchors),
+          col("label") =!= col("anchor_label"))
+        .withColumn("cosine", graft.ops.Num.cround(
+          nativeCosine(col("emb_d"), col("a_emb")), 6))
+        .groupBy("anchor_id", "anchor_label"), col("cosine"), col("vec_id"), k)
       .select(col("anchor_id"), col("anchor_label"),
-        col("t.id").as("neg_id"), col("t.score").as("cosine"))
+        col("id").as("neg_id"), col("score").as("cosine"))
     val labels = vecs.select(col("vec_id").as("neg_id"),
       col("label").as("neg_label"))
     val w = Window.partitionBy("anchor_id")

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.GraftFunctions
 import graft.ops.Materialize.MaterializeOps
 
 /** Text-analysis operators for a training-data pipeline over the `documents`
@@ -18,6 +19,32 @@ object TextOps {
 
   /** Whitespace tokens (documents are single-space separated). */
   def tokens(text: Column): Column = split(text, " ")
+
+  /** Whitespace-run word count of `text`; trimmed, so leading and trailing
+    * blanks add no word. */
+  def wordCount(text: Column): Column = size(split(trim(text), "\\s+"))
+
+  /** Adjacent token pairs ("a b") of a token array, in order: empty below
+    * 2 tokens, NULL for a NULL array. zip_with over two offset slices — a
+    * higher-order projection, no self-join on position, no UDF. */
+  def pairs(toks: Column): Column =
+    zip_with(slice(toks, lit(1), size(toks) - 1), slice(toks, lit(2), size(toks) - 1),
+      (a, b) => concat(a, lit(" "), b))
+
+  /** Per-(doc_id, term) frequencies `(doc_id, <term>, tf)` of the `terms`
+    * array column (the whitespace tokens by default): one explode and one
+    * map-side-combining aggregate. Callers that read it twice materialize
+    * it themselves. */
+  def termFrequencies(docs: DataFrame, terms: Column = tokens(col("text")),
+                      term: String = "token"): DataFrame =
+    docs.select(col("doc_id"), explode(terms).as(term))
+      .groupBy("doc_id", term).agg(count(lit(1)).as("tf"))
+
+  /** Corpus token counts `(token, n)`: occurrences of each whitespace
+    * token over all documents. */
+  def tokenCounts(docs: DataFrame): DataFrame =
+    docs.select(explode(tokens(col("text"))).as("token"))
+      .groupBy("token").agg(count(lit(1)).as("n"))
 
   /** Word trigram shingles from a `toks` array column; empty below 3 tokens.
     * Higher-order transform — no explode, no UDF. */
@@ -40,26 +67,30 @@ object TextOps {
     "es" -> Seq("el", "la", "que", "y", "en", "los"),
     "fr" -> Seq("le", "les", "des", "et", "une", "dans"))
 
+  private val langs = Seq("en", "de", "es", "fr")
+
+  /** Stopword hits of `lang` in the `toks` column. */
   private def score(lang: String): Column = {
     val list = stopwords(lang).map(w => s"'$w'").mkString(", ")
     expr(s"size(filter(toks, t -> t IN ($list)))")
   }
 
-  /** Adds score_<lang> columns and detected_lang. */
-  def withLangId(docs: DataFrame): DataFrame = {
-    val scored = Seq("en", "de", "es", "fr").foldLeft(
-      docs.withColumn("toks", tokens(col("text")))) {
-      (d, l) => d.withColumn(s"score_$l", score(l))
-    }
-    val Seq(en, de, es, fr) =
-      Seq("en", "de", "es", "fr").map(l => col(s"score_$l"))
-    scored.withColumn("detected_lang",
-      when(en >= de && en >= es && en >= fr && en > 0, "en")
-        .when(de >= es && de >= fr && de > 0, "de")
-        .when(es >= fr && es > 0, "es")
-        .when(fr > 0, "fr")
-        .otherwise("und"))
+  /** The language whose column `scoreCol(lang)` is highest, ties by
+    * priority en > de > es > fr, 'und' when every score is 0. */
+  private def argmaxLang(scoreCol: String => Column): Column = {
+    val Seq(en, de, es, fr) = langs.map(scoreCol)
+    when(en >= de && en >= es && en >= fr && en > 0, "en")
+      .when(de >= es && de >= fr && de > 0, "de")
+      .when(es >= fr && es > 0, "es")
+      .when(fr > 0, "fr")
+      .otherwise("und")
   }
+
+  /** Adds score_<lang> columns and detected_lang. */
+  def withLangId(docs: DataFrame): DataFrame =
+    langs.foldLeft(docs.withColumn("toks", tokens(col("text")))) {
+      (d, l) => d.withColumn(s"score_$l", score(l))
+    }.withColumn("detected_lang", argmaxLang(l => col(s"score_$l")))
 
   /** Character-n-gram language-ID profiles: a few distinctive trigrams per
     * language. Scores count MATCHED CHARACTERS via non-overlapping regexp
@@ -81,19 +112,11 @@ object TextOps {
     * detected_lang_ngram with the same deterministic argmax priority
     * (en > de > es > fr) and 'und' when nothing matches. Pure codegen'd
     * string expressions — a linear scan per document, no explode. */
-  def withLangIdNgram(docs: DataFrame): DataFrame = {
-    val scored = Seq("en", "de", "es", "fr").foldLeft(docs) {
+  def withLangIdNgram(docs: DataFrame): DataFrame =
+    langs.foldLeft(docs) {
       (d, l) => d.withColumn(s"ngram_score_$l", ngramScore(l))
-    }
-    val Seq(en, de, es, fr) =
-      Seq("en", "de", "es", "fr").map(l => col(s"ngram_score_$l"))
-    scored.withColumn("detected_lang_ngram",
-      when(en >= de && en >= es && en >= fr && en > 0, "en")
-        .when(de >= es && de >= fr && de > 0, "de")
-        .when(es >= fr && es > 0, "es")
-        .when(fr > 0, "fr")
-        .otherwise("und"))
-  }
+    }.withColumn("detected_lang_ngram",
+      argmaxLang(l => col(s"ngram_score_$l")))
 
   /** Heuristic quality score: length, punctuation ratio, stopword ratio —
     * the filters a pre-training corpus pipeline applies before dedup. */
@@ -108,8 +131,7 @@ object TextOps {
         length(regexp_replace(col("text"), "[a-z0-9 ]", "")).cast("double") /
           expr("nullif(text_len, 0)"))
       .withColumn("stopword_ratio",
-        expr("size(filter(toks, t -> t IN ('the', 'a', 'of', 'and', 'to', 'in', 'is')))")
-          .cast("double") / col("n_tokens"))
+        score("en").cast("double") / col("n_tokens"))
       .withColumn("quality_score",
         lit(0.4) * least(col("n_tokens").cast("double") / 100, lit(1.0)) +
           lit(0.3) * (lit(1.0) - col("punct_ratio")) +
@@ -119,7 +141,7 @@ object TextOps {
     * chars/4 estimate (the standard quick subword-count heuristic). */
   def withTokenCounts(docs: DataFrame): DataFrame =
     docs
-      .withColumn("ws_tokens", size(split(trim(col("text")), "\\s+")))
+      .withColumn("ws_tokens", wordCount(col("text")))
       .withColumn("word_tokens", regexp_count(col("text"), lit("[a-z]+")))
       .withColumn("bpe_estimate", ceil(length(col("text")) / 4.0).cast("long"))
 
@@ -209,8 +231,7 @@ object TextOps {
     * single-reducer, no sequential driver loop. */
   def packSequences(docs: DataFrame, budgetTokens: Int,
                     shardBlock: Long = defaultShardBlock): DataFrame = {
-    val toked = docs.withColumn("n_tokens",
-      size(split(trim(col("text")), "\\s+")).cast("long"))
+    val toked = docs.withColumn("n_tokens", wordCount(col("text")).cast("long"))
     shardedPrefixSum(toked, "n_tokens", "cum_tokens", shardBlock)
       .withColumn("pack_id",
         expr(s"(cum_tokens - n_tokens) div ${budgetTokens.toLong}"))
@@ -295,19 +316,13 @@ object TextOps {
   def withRepetitionStats(docs: DataFrame,
                           topTokThreshold: Double = 0.12,
                           dupBigramThreshold: Double = 0.05): DataFrame = {
-    val toked = docs.select(col("doc_id"), tokens(col("text")).as("__w"))
-    val uni = toked
-      .select(col("doc_id"), explode(col("__w")).as("__t"))
-      .groupBy("doc_id", "__t").agg(count(lit(1)).as("__c"))
+    val uni = termFrequencies(docs)
       .groupBy("doc_id").agg(
-        sum("__c").as("n_tokens"),
+        sum("tf").as("n_tokens"),
         count(lit(1)).as("distinct_tokens"),
-        max("__c").as("__max_c"))
-    val bi = toked
-      .select(col("doc_id"), explode(expr(
-        """CASE WHEN size(__w) >= 2
-          |THEN transform(sequence(0, size(__w) - 2), i -> concat(__w[i], ' ', __w[i+1]))
-          |ELSE CAST(array() AS ARRAY<STRING>) END""".stripMargin)).as("__g"))
+        max("tf").as("__max_c"))
+    val bi = docs
+      .select(col("doc_id"), explode(pairs(tokens(col("text")))).as("__g"))
       .groupBy("doc_id").agg(
         count(lit(1)).as("n_bigrams"),
         countDistinct(col("__g")).as("distinct_bigrams"))
@@ -372,18 +387,13 @@ object TextOps {
   def stratifiedSample(docs: DataFrame, strataCol: String = "source",
                        k: Int = 5): DataFrame = {
     require(k > 0, "sample quota k must be positive")
-    graft.functions.GraftFunctions.register(
-      org.apache.spark.sql.SparkSession.active)
-    docs.select(col(strataCol), col("doc_id"))
-      .withColumn("h",
-        conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
-          .cast("long"))
-      .groupBy(strataCol)
-      .agg(expr(s"top_k_by(-CAST(h AS DOUBLE), doc_id, $k)").as("tk"))
-      .select(col(strataCol), posexplode(col("tk")).as(Seq("r", "t")))
-      .select(col(strataCol), (col("r") + 1).cast("int").as("rank"),
-        col("t.id").as("doc_id"),
-        (-col("t.score")).cast("long").as("smp_hash"))
+    GraftFunctions.topKBy(docs.select(col(strataCol), col("doc_id"))
+        .withColumn("h",
+          conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
+            .cast("long"))
+        .groupBy(strataCol), -col("h").cast("double"), col("doc_id"), k)
+      .select(col(strataCol), col("rank"), col("id").as("doc_id"),
+        (-col("score")).cast("long").as("smp_hash"))
       .orderBy(strataCol, "rank")
   }
 
@@ -408,20 +418,16 @@ object TextOps {
   def weightedSample(docs: DataFrame, strataCol: String = "source",
                      weightCol: String = "n_chars", k: Int = 5): DataFrame = {
     require(k > 0, "sample quota k must be positive")
-    graft.functions.GraftFunctions.register(
-      org.apache.spark.sql.SparkSession.active)
-    docs.select(col(strataCol), col("doc_id"), col(weightCol))
-      .filter(col(weightCol) > 0)
-      .withColumn("u",
-        (conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
-          .cast("double") + 1.0) / 4294967296.0)
-      .withColumn("es_key",
-        graft.ops.Num.cround(log(col("u")) / col(weightCol).cast("double"), 6))
-      .groupBy(strataCol)
-      .agg(expr(s"top_k_by(es_key, doc_id, $k)").as("tk"))
-      .select(col(strataCol), posexplode(col("tk")).as(Seq("r", "t")))
-      .select(col(strataCol), (col("r") + 1).cast("int").as("rank"),
-        col("t.id").as("doc_id"), col("t.score").as("es_key"))
+    GraftFunctions.topKBy(docs.select(col(strataCol), col("doc_id"), col(weightCol))
+        .filter(col(weightCol) > 0)
+        .withColumn("u",
+          (conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
+            .cast("double") + 1.0) / 4294967296.0)
+        .withColumn("es_key",
+          graft.ops.Num.cround(log(col("u")) / col(weightCol).cast("double"), 6))
+        .groupBy(strataCol), col("es_key"), col("doc_id"), k)
+      .select(col(strataCol), col("rank"), col("id").as("doc_id"),
+        col("score").as("es_key"))
       .orderBy(strataCol, "rank")
   }
 
@@ -465,8 +471,7 @@ object TextOps {
   def tokenBudgetFilter(docs: DataFrame, budgetTokens: Long,
                         shardBlock: Long = defaultShardBlock): DataFrame = {
     require(budgetTokens >= 0, "budgetTokens must be >= 0")
-    val toked = docs.withColumn("n_tokens",
-      size(split(trim(col("text")), "\\s+")).cast("long"))
+    val toked = docs.withColumn("n_tokens", wordCount(col("text")).cast("long"))
       .materialized
     shardedPrefixSum(toked, "n_tokens", "cum_tokens", shardBlock)
       .filter(col("cum_tokens") <= budgetTokens)
@@ -486,11 +491,9 @@ object TextOps {
     * occurrences desc, token asc. */
   def vocabulary(docs: DataFrame, k: Int = 1000): DataFrame = {
     require(k >= 1, "k must be >= 1")
-    docs
-      .select(col("doc_id"), explode(tokens(col("text"))).as("token"))
-      .groupBy("token", "doc_id").agg(count(lit(1)).as("__c"))
+    termFrequencies(docs)
       .groupBy("token").agg(
-        sum("__c").as("n_occurrences"),
+        sum("tf").as("n_occurrences"),
         count(lit(1)).as("doc_freq"))
       .orderBy(col("n_occurrences").desc, col("token").asc)
       .limit(k)
@@ -503,10 +506,9 @@ object TextOps {
     * t11's unigram vocabulary (reference provenance: the reference has no
     * text surface; this extends tokenizer-prep analytics).
     *
-    * Bigrams are built with zip_with over two offset slices of the token
-    * array — a higher-order projection, no self-join on position, no UDF.
-    * Shape at scale: the corpus reduces through TWO map-side-combining
-    * count aggregates (bigram table, unigram table); the top-k ranking is
+    * Bigrams are the [[pairs]] of each document's tokens. Shape at scale:
+    * the corpus reduces through TWO map-side-combining count aggregates
+    * (bigram [[termFrequencies]], [[tokenCounts]]); the top-k ranking is
     * a bounded TakeOrdered at k rows; and the PMI enrichment joins the
     * k-row shortlist (broadcast) against the unigram counts — nothing
     * downstream of the counts scales with the corpus. Determinism: counts
@@ -515,19 +517,13 @@ object TextOps {
     * to 1 ulp (t22/t25 precedent) — tie-safe-rounded at 6. */
   def bigramCollocations(docs: DataFrame, k: Int = 20): DataFrame = {
     require(k >= 1, "k must be >= 1")
-    val t = tokens(col("text"))
-    val bigrams = docs.select(col("doc_id"), explode(
-      zip_with(slice(t, lit(1), size(t) - 1), slice(t, lit(2), size(t) - 1),
-        (a, b) => concat(a, lit(" "), b))).as("bigram"))
-    val bgCounts = bigrams
-      .groupBy("bigram", "doc_id").agg(count(lit(1)).as("__c"))
+    val bgCounts = termFrequencies(docs, pairs(tokens(col("text"))), "bigram")
       .groupBy("bigram").agg(
-        sum("__c").as("n_occurrences"),
+        sum("tf").as("n_occurrences"),
         count(lit(1)).as("doc_freq"))
-    val uni = docs.select(explode(t).as("tok"))
-      .groupBy("tok").agg(count(lit(1)).cast("double").as("uc"))
+    val uni = tokenCounts(docs)
     val nBg = bgCounts.agg(sum("n_occurrences").cast("double").as("n_bigrams"))
-    val nUni = uni.agg(sum("uc").as("n_unigrams"))
+    val nUni = uni.agg(sum("n").cast("double").as("n_unigrams"))
     val top = bgCounts
       .orderBy(col("n_occurrences").desc, col("bigram").asc)
       .limit(k)
@@ -536,8 +532,8 @@ object TextOps {
           .orderBy(col("n_occurrences").desc, col("bigram").asc)).cast("int"))
       .withColumn("__w1", split(col("bigram"), " ").getItem(0))
       .withColumn("__w2", split(col("bigram"), " ").getItem(1))
-    val u1 = uni.select(col("tok").as("__w1"), col("uc").as("__uc1"))
-    val u2 = uni.select(col("tok").as("__w2"), col("uc").as("__uc2"))
+    val u1 = uni.select(col("token").as("__w1"), col("n").cast("double").as("__uc1"))
+    val u2 = uni.select(col("token").as("__w2"), col("n").cast("double").as("__uc2"))
     // each join streams the big unigram table against the broadcast k-row
     // shortlist, so only <= k rows ever leave either join
     val withU1 = u1.join(broadcast(top), "__w1")
@@ -568,9 +564,7 @@ object TextOps {
                     sizes: Seq[Int] = Seq(10, 100, 1000, 10000)): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val counts = docs
-      .select(explode(tokens(col("text"))).as("token"))
-      .groupBy("token").agg(count(lit(1)).as("n"))
+    val counts = tokenCounts(docs)
     val total = counts.agg(sum(col("n")).as("__tot"),
       count(lit(1)).as("__vocab"))
     val ranked = counts
@@ -644,10 +638,7 @@ object TextOps {
     // tf feeds BOTH the score join and the doc-frequency aggregate:
     // checkpoint so the corpus is scanned+tokenized once, not once per
     // branch (same reuse contract as shardedPrefixSum callers)
-    val tf = docs
-      .select(col("doc_id"), explode(tokens(col("text"))).as("token"))
-      .groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
-      .materialized
+    val tf = termFrequencies(docs).materialized
     val df = tf.groupBy("token").agg(count(lit(1)).as("doc_freq"))
     val scored = tf.join(df, Seq("token"))
       .withColumn("score", graft.ops.Num.cround(
@@ -687,10 +678,7 @@ object TextOps {
     * Row-preserving like the other with* augmenters: a NULL-text document
     * survives with null stats. */
   def withUnigramLogProb(docs: DataFrame): DataFrame = {
-    val tf = docs
-      .select(col("doc_id"), explode(tokens(col("text"))).as("token"))
-      .groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
-      .materialized
+    val tf = termFrequencies(docs).materialized
     val occ = tf.groupBy("token").agg(sum("tf").as("occ"))
     // An empty corpus (no docs, or every text NULL/blank) sums to NULL, not
     // 0 — degrade to the same row-preserving shape the left join below
@@ -721,8 +709,8 @@ object TextOps {
     * = disfluent/OOD (or boilerplate the unigram model can't see because
     * every WORD is common while the TRANSITIONS are not).
     *
-    * Shape at scale: bigrams build with the t27 zip_with projection (no
-    * self-join); the per-doc bigram tf, the corpus bigram counts, and the
+    * Shape at scale: bigrams are the t27 [[pairs]] (no self-join); the
+    * per-doc bigram tf, the corpus bigram counts, and the
     * two unigram-count joins are all hash-partitioned equi-joins with
     * map-side-combined aggregates on both sides — linear end to end, the
     * t13 join discipline. N rides a broadcast 1-row cross join.
@@ -732,30 +720,24 @@ object TextOps {
     * ln agrees to 1 ulp (t13/t22 precedent), rounded tie-safe at 6. */
   def withBigramLogProb(docs: DataFrame, lambda: Double = 0.7): DataFrame = {
     require(lambda > 0 && lambda <= 1, "lambda must be in (0, 1]")
-    val t = tokens(col("text"))
-    val bigramsOf = explode(
-      zip_with(slice(t, lit(1), size(t) - 1), slice(t, lit(2), size(t) - 1),
-        (a, b) => concat(a, lit(" "), b))).as("bigram")
-    val btf = docs.select(col("doc_id"), bigramsOf)
-      .groupBy("doc_id", "bigram").agg(count(lit(1)).as("btf"))
+    val btf = termFrequencies(docs, pairs(tokens(col("text"))), "bigram")
       .materialized
-    val bocc = btf.groupBy("bigram").agg(sum("btf").as("bocc"))
-    val uocc = docs.select(explode(t).as("tok"))
-      .groupBy("tok").agg(count(lit(1)).as("uocc"))
-    val nUni = uocc.agg(sum("uocc").cast("double").as("n_unigrams"))
+    val bocc = btf.groupBy("bigram").agg(sum("tf").as("bocc"))
+    val uocc = tokenCounts(docs)
+    val nUni = uocc.agg(sum("n").cast("double").as("n_unigrams"))
     val perDoc = btf
       .join(bocc, Seq("bigram"))
       .withColumn("__w1", split(col("bigram"), " ").getItem(0))
       .withColumn("__w2", split(col("bigram"), " ").getItem(1))
-      .join(uocc.select(col("tok").as("__w1"), col("uocc").as("__uc1")), Seq("__w1"))
-      .join(uocc.select(col("tok").as("__w2"), col("uocc").as("__uc2")), Seq("__w2"))
+      .join(uocc.select(col("token").as("__w1"), col("n").as("__uc1")), Seq("__w1"))
+      .join(uocc.select(col("token").as("__w2"), col("n").as("__uc2")), Seq("__w2"))
       .crossJoin(broadcast(nUni))
       .withColumn("__lp", log(
         lit(lambda) * (col("bocc").cast("double") / col("__uc1")) +
           lit(1.0 - lambda) * (col("__uc2").cast("double") / col("n_unigrams"))))
       .groupBy("doc_id").agg(
-        sum("btf").as("n_bigrams"),
-        sum(col("btf").cast("double") * col("__lp")).as("__slog"))
+        sum("tf").as("n_bigrams"),
+        sum(col("tf").cast("double") * col("__lp")).as("__slog"))
     docs.join(perDoc, Seq("doc_id"), "left")
       .withColumn("avg_neg_logprob2",
         graft.ops.Num.cround(-(col("__slog") / col("n_bigrams")), 6))
@@ -858,21 +840,6 @@ object TextOps {
       .withColumn("min_shingle_fingerprint",
         expr("array_min(transform(shingles, s -> substring(md5(s), 1, 16)))"))
 
-  /** The native Unicode fold ([[graft.functions.FoldText]]) resolved
-    * through a graft-namespaced registry entry, like
-    * Similarity.nativeCosine — user registrations of the public
-    * `fold_text` name can never shadow this path. */
-  private val foldFnName = "graft_fold_text"
-  private def foldText(c: Column): Column = {
-    val reg = org.apache.spark.sql.SparkSession.active
-      .sessionState.functionRegistry
-    if (!reg.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier(foldFnName)))
-      reg.createOrReplaceTempFunction(foldFnName,
-        children => graft.functions.FoldText(children(0)), "built-in")
-    call_function(foldFnName, c)
-  }
-
   /** Corpus text normalization — the C4/CCNet-style hygiene pass every
     * pretraining corpus runs before dedup/tokenization: Unicode NFC,
     * lowercase, diacritic strip (one fused native expression, codegen'd,
@@ -886,7 +853,8 @@ object TextOps {
   def normalizeDocuments(docs: DataFrame, textCol: String = "text"): DataFrame =
     docs
       .withColumn("norm_text",
-        trim(regexp_replace(foldText(col(textCol)), "[ \\t\\n\\r\\f]+", " ")))
+        trim(regexp_replace(GraftFunctions.call("fold_text", col(textCol)),
+          "[ \\t\\n\\r\\f]+", " ")))
       .withColumn("raw_len", length(col(textCol)))
       .withColumn("norm_len", length(col("norm_text")))
 
@@ -915,8 +883,6 @@ object TextOps {
     * ranking with doc_id tiebreak, the cross-engine ordering discipline. */
   def bm25TopK(docs: DataFrame, queries: Seq[(Int, String)], k: Int = 10,
                k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    graft.functions.GraftFunctions.register(
-      org.apache.spark.sql.SparkSession.active)
     val spark = docs.sparkSession
     import spark.implicits._
     val tf = docs
@@ -929,7 +895,8 @@ object TextOps {
     val stats = docs.agg(count(lit(1)).as("n"),
       avg(size(tokens(col("text")))).as("avgdl")).first()
     val nDocs = stats.getLong(0).toDouble
-    val avgdl = stats.getDouble(1)
+    // NULL when no document has text; tf is then empty, so nothing reads it
+    val avgdl = lit(stats.get(1))
     val qt = queries
       .flatMap { case (qid, q) => q.split(" ").distinct.map(t => (qid, t)) }
       .toDF("query_id", "token")
@@ -942,13 +909,76 @@ object TextOps {
       .withColumn("term_score", col("idf") *
         (col("tf") * (lit(k1) + lit(1.0))) /
         (col("tf") + lit(k1) *
-          (lit(1.0) - lit(b) + lit(b) * col("dl") / lit(avgdl))))
+          (lit(1.0) - lit(b) + lit(b) * col("dl") / avgdl)))
       .groupBy("query_id", "doc_id")
       .agg(graft.ops.Num.cround(sum("term_score"), 6).as("bm25"))
-    scored.groupBy("query_id")
-      .agg(expr(s"top_k_by(bm25, doc_id, $k)").as("tk"))
-      .select(col("query_id"), posexplode(col("tk")).as(Seq("r", "t")))
-      .select(col("query_id"), (col("r") + 1).cast("int").as("rank"),
-        col("t.id").as("doc_id"), col("t.score").as("bm25"))
+    GraftFunctions.topKBy(scored.groupBy("query_id"), col("bm25"), col("doc_id"), k)
+      .select(col("query_id"), col("rank"), col("id").as("doc_id"),
+        col("score").as("bm25"))
   }
+
+  /** Merge rounds of the BPE trainer — shared with the oracle's unrolled
+    * CTEs so both engines train the same vocabulary. */
+  val BpeRounds = 8
+
+  /** The BPE word table `(w, wc)`: lowercase space-split words of 2+
+    * characters and their corpus counts — the one corpus aggregate BPE
+    * training pays (map-side combined); every later step runs on this
+    * distinct-word vocabulary, Heaps-law sublinear in the corpus. */
+  def bpeWords(docs: DataFrame): DataFrame =
+    docs.select(explode(split(lower(col("text")), " ")).as("w"))
+      .filter(length(col("w")) >= 2)
+      .groupBy("w").agg(count(lit(1)).as("wc"))
+
+  /** Merge state 0, materialized: every word as its marked symbol string
+    * (each character wrapped in '<'/'>', safe because the corpus is pure
+    * [a-z ]) with its count, `(sw, wc)`. */
+  def bpeVocab(docs: DataFrame): DataFrame =
+    bpeWords(docs).select(
+      regexp_replace(col("w"), "(.)", "<$1>").as("sw"), col("wc")).materialized
+
+  /** One round's pair-count table `(left_sym, right_sym, pair_count)` over
+    * a marked-vocabulary frame: symbols re-split on '><', adjacent pairs
+    * weighted by word count, partial-combined into a table bounded by the
+    * live symbol alphabet². `size >= 2` guards the fully-merged
+    * single-symbol words BEFORE sequence(1, n-1) — Spark's sequence(1, 0)
+    * descends, it does not return empty. */
+  def bpePairCounts(vocab: DataFrame): DataFrame =
+    vocab.select(col("wc"),
+        split(expr("substring(sw, 2, length(sw) - 2)"), "><").as("syms"))
+      .filter(size(col("syms")) >= 2)
+      .select(col("wc"), explode(expr(
+        """transform(sequence(1, size(syms) - 1),
+          |  i -> struct(element_at(syms, i) AS l,
+          |              element_at(syms, i + 1) AS r))""".stripMargin)).as("p"))
+      .groupBy(col("p.l").as("left_sym"), col("p.r").as("right_sym"))
+      .agg(sum("wc").as("pair_count"))
+
+  /** The BPE merge loop (Sennrich et al. 2016): states 0 to [[BpeRounds]].
+    * State 0 is [[bpeVocab]]; state r applies round r's winning pair — the
+    * top of [[bpePairCounts]] over state r-1 by count desc, then (left,
+    * right) ascending, a 1-row TakeOrderedAndProject broadcast into the
+    * merge projection — and is materialized ONCE as `(sw, wc, left_sym,
+    * right_sym, pair_count)`: the pair rides the merged-vocab checkpoint
+    * as three constant columns, so reading it costs no job of its own, and
+    * each round's lineage starts at a checkpoint. The merge is ONE literal
+    * `replace('<a><b>' -> '<ab>')`: string replace scans left-to-right
+    * non-overlapping in both engines, which IS BPE's greedy merge order
+    * ('<a><a><a>' -> '<aa><a>'), and the markers make cross-symbol false
+    * matches impossible ('<xa><b>' never contains '<a><b>'). */
+  def bpeStates(docs: DataFrame): Seq[DataFrame] =
+    (1 to BpeRounds).scanLeft(bpeVocab(docs)) { (vocab, _) =>
+      val top = bpePairCounts(vocab)
+        .orderBy(col("pair_count").desc,
+          col("left_sym").asc, col("right_sym").asc)
+        .limit(1)
+        .select(col("left_sym"), col("right_sym"), col("pair_count"))
+      vocab.select("sw", "wc").crossJoin(broadcast(top))
+        .select(expr(
+          """replace(sw, concat('<', left_sym, '><', right_sym, '>'),
+            |        concat('<', left_sym, right_sym, '>'))""".stripMargin)
+          .as("sw"), col("wc"),
+          col("left_sym"), col("right_sym"), col("pair_count"))
+        .materialized
+    }
 }

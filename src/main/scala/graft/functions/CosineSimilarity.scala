@@ -1,9 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.functions.{call_function, col, lit, posexplode}
 import org.apache.spark.sql.types._
 
 /** Native Catalyst expression: cosine similarity of two numeric arrays.
@@ -84,7 +86,8 @@ case class CosineSimilarity(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Session-level registration for an already-running session. For config-
+/** Session-level registration for an already-running session, and the
+  * one route the engine's own call sites take to the natives. For config-
   * driven injection use [[GraftExtensions]] instead
   * (`spark.sql.extensions=graft.functions.GraftExtensions`). */
 object GraftFunctions {
@@ -105,13 +108,43 @@ object GraftFunctions {
 
   // replace-always: after register(), SQL text resolves these names to the
   // native expressions even if something else claimed them earlier. The
-  // library's own hot paths don't go through the registry at all
-  // (Similarity.nativeCosine constructs the expression Column directly).
+  // engine itself never reads the public names: it goes through [[call]].
   def register(spark: SparkSession): Unit =
     all.foreach { case (name, builder) =>
       spark.sessionState.functionRegistry
         .createOrReplaceTempFunction(name, builder, "built-in")
     }
+
+  /** `name(args)` for one of the natives above, through [[resolve]]. */
+  private[graft] def call(name: String, args: Column*): Column =
+    resolve(name, all.toMap.apply(name))(args: _*)
+
+  /** `name(args)`, resolved through the session registry entry
+    * `graft_<name>`, which is registered with `builder` on first use. The
+    * graft_ prefix keeps a user registration of the public name from
+    * shadowing an engine path, and the registry is written once per
+    * session rather than before every use. */
+  private[graft] def resolve(name: String, builder: Seq[Expression] => Expression)(
+      args: Column*): Column = {
+    val registry = SparkSession.active.sessionState.functionRegistry
+    val fn = s"graft_$name"
+    if (!registry.functionExists(FunctionIdentifier(fn)))
+      registry.createOrReplaceTempFunction(fn, builder, "built-in")
+    call_function(fn, args: _*)
+  }
+
+  /** The `k` rows of each group with the highest `score`, ties to the
+    * smaller `id`, through the bounded native `top_k_by` aggregate (see
+    * [[TopKByScore]]). Output: the grouping columns, then `rank` (int,
+    * 1 = best), `id` and `score`. */
+  private[graft] def topKBy(grouped: RelationalGroupedDataset, score: Column,
+                            id: Column, k: Int): DataFrame = {
+    val tk = grouped.agg(call("top_k_by", score, id, lit(k)).as("tk"))
+    val keys = tk.columns.filter(_ != "tk").map(col).toSeq
+    tk.select(keys :+ posexplode(col("tk")).as(Seq("r", "t")): _*)
+      .select(keys ++ Seq((col("r") + 1).cast("int").as("rank"),
+        col("t.id").as("id"), col("t.score").as("score")): _*)
+  }
 }
 
 /** The engine's `SparkSessionExtensions` entry point: injects the native

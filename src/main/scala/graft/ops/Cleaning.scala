@@ -1,7 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.AtLeastNNonNulls
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -28,19 +27,14 @@ object Cleaning {
     df.withColumnsRenamed(present)
   }
 
-  private val criticalFnName = "graft_has_critical_values"
-
   /** F1 predicate: no null (or NaN) in any critical column. It is the
     * expression `na.drop("any", criticalColumns)` plans (AtLeastNNonNulls),
-    * which the public Column API cannot build, so it is registered as a
-    * session function (as ext.Similarity does for its native cosine). */
-  def hasCriticalValues: Column = {
-    val registry = SparkSession.active.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier(criticalFnName)))
-      registry.createOrReplaceTempFunction(criticalFnName,
-        children => AtLeastNNonNulls(children.size, children), "built-in")
-    call_function(criticalFnName, criticalColumns.map(col): _*)
-  }
+    * which the public Column API cannot build, so it resolves as a session
+    * function, like the native functions. */
+  def hasCriticalValues: Column =
+    graft.functions.GraftFunctions.resolve("has_critical_values",
+      children => AtLeastNNonNulls(children.size, children))(
+      criticalColumns.map(col): _*)
 
   /** F2 predicate: OHLC logical consistency (reference:
     * src/transform.py:174-184). False where high < low, high < open,

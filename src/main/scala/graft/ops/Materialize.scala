@@ -69,8 +69,14 @@ object Materialize {
   def counting(df: DataFrame, cond: Column): (DataFrame, Long) = {
     val obs = Observation()
     val out = apply(df.observe(obs, count_if(cond).as("n")))
-    (out, obs.get("n").asInstanceOf[Long])
+    (out, observedCount(obs))
   }
+
+  /** The count an observation holds as "n" once its query has run. Spark
+    * replaces a plan it finds empty, observed node included, with an empty
+    * relation and then reports no metric at all: that count is 0. */
+  def observedCount(obs: Observation): Long =
+    obs.get.getOrElse("n", 0L).asInstanceOf[Long]
 
   /** Batches folded between two compactions of an accumulated frame. */
   val CompactEvery: Int = 8

@@ -40,30 +40,10 @@ object TemporalJoins {
     */
   def asofBackward(left: DataFrame, right: DataFrame, keys: Seq[String],
                    leftTime: String, rightTime: String): DataFrame = {
-    val reserved = Seq("__t", "__side", "__mark", "__m")
-    require(!(left.columns ++ right.columns).exists(reserved.contains),
-      s"column names ${reserved.mkString("/")} are reserved by asofBackward")
-    val payloadCols = right.columns.filterNot(keys.contains).toSeq
-    val clash = payloadCols.toSet intersect left.columns.toSet
-    require(clash.isEmpty,
-      s"right payload columns collide with left columns (rename first): $clash")
-    val rTagged = right.select(
-      keys.map(col) ++ Seq(
-        col(rightTime).as("__t"),
-        lit(0).as("__side"),
-        struct(payloadCols.map(col): _*).as("__mark")): _*)
-    val markType = rTagged.schema("__mark").dataType
-    val lTagged = left.select(
-      left.columns.map(col) ++ Seq(
-        col(leftTime).as("__t"),
-        lit(1).as("__side"),
-        lit(null).cast(markType).as("__mark")): _*)
-    val w = Window
-      .partitionBy(keys.map(col): _*)
-      .orderBy(col("__t"), col("__side"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    lTagged.unionByName(rTagged, allowMissingColumns = true)
-      .withColumn("__m", last(col("__mark"), ignoreNulls = true).over(w))
+    val (union, payloadCols) = tagged("asofBackward", left, right, keys,
+      leftTime, rightTime, Seq("__side" -> 0), Seq("__m"))
+    union
+      .withColumn("__m", running(keys, col("__t"), col("__side")))
       .filter(col("__side") === 1)
       .select(left.columns.map(col) ++
         payloadCols.map(c => col("__m").getField(c).as(c)): _*)
@@ -91,30 +71,10 @@ object TemporalJoins {
     * (keys, rightTime); time columns of one orderable type. */
   def asofForward(left: DataFrame, right: DataFrame, keys: Seq[String],
                   leftTime: String, rightTime: String): DataFrame = {
-    val reserved = Seq("__t", "__side", "__mark", "__m")
-    require(!(left.columns ++ right.columns).exists(reserved.contains),
-      s"column names ${reserved.mkString("/")} are reserved by asofForward")
-    val payloadCols = right.columns.filterNot(keys.contains).toSeq
-    val clash = payloadCols.toSet intersect left.columns.toSet
-    require(clash.isEmpty,
-      s"right payload columns collide with left columns (rename first): $clash")
-    val rTagged = right.select(
-      keys.map(col) ++ Seq(
-        col(rightTime).as("__t"),
-        lit(1).as("__side"),
-        struct(payloadCols.map(col): _*).as("__mark")): _*)
-    val markType = rTagged.schema("__mark").dataType
-    val lTagged = left.select(
-      left.columns.map(col) ++ Seq(
-        col(leftTime).as("__t"),
-        lit(0).as("__side"),
-        lit(null).cast(markType).as("__mark")): _*)
-    val w = Window
-      .partitionBy(keys.map(col): _*)
-      .orderBy(col("__t").desc, col("__side").desc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    lTagged.unionByName(rTagged, allowMissingColumns = true)
-      .withColumn("__m", last(col("__mark"), ignoreNulls = true).over(w))
+    val (union, payloadCols) = tagged("asofForward", left, right, keys,
+      leftTime, rightTime, Seq("__side" -> 1), Seq("__m"))
+    union
+      .withColumn("__m", running(keys, col("__t").desc, col("__side").desc))
       .filter(col("__side") === 0)
       .select(left.columns.map(col) ++
         payloadCols.map(c => col("__m").getField(c).as(c)): _*)
@@ -149,33 +109,11 @@ object TemporalJoins {
                   leftTime: String, rightTime: String,
                   tolerance: Option[Long] = None,
                   timeToLong: Column => Column = _.cast("long")): DataFrame = {
-    val reserved = Seq("__t", "__sb", "__sf", "__mark", "__mb", "__mf")
-    require(!(left.columns ++ right.columns).exists(reserved.contains),
-      s"column names ${reserved.mkString("/")} are reserved by asofNearest")
-    val payloadCols = right.columns.filterNot(keys.contains).toSeq
-    val clash = payloadCols.toSet intersect left.columns.toSet
-    require(clash.isEmpty,
-      s"right payload columns collide with left columns (rename first): $clash")
-    val rTagged = right.select(
-      keys.map(col) ++ Seq(
-        col(rightTime).as("__t"),
-        lit(0).as("__sb"), lit(1).as("__sf"),
-        struct(payloadCols.map(col): _*).as("__mark")): _*)
-    val markType = rTagged.schema("__mark").dataType
-    val lTagged = left.select(
-      left.columns.map(col) ++ Seq(
-        col(leftTime).as("__t"),
-        lit(1).as("__sb"), lit(0).as("__sf"),
-        lit(null).cast(markType).as("__mark")): _*)
-    val wb = Window.partitionBy(keys.map(col): _*)
-      .orderBy(col("__t"), col("__sb"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wf = Window.partitionBy(keys.map(col): _*)
-      .orderBy(col("__t").desc, col("__sf").desc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val matched = lTagged.unionByName(rTagged, allowMissingColumns = true)
-      .withColumn("__mb", last(col("__mark"), ignoreNulls = true).over(wb))
-      .withColumn("__mf", last(col("__mark"), ignoreNulls = true).over(wf))
+    val (union, payloadCols) = tagged("asofNearest", left, right, keys,
+      leftTime, rightTime, Seq("__sb" -> 0, "__sf" -> 1), Seq("__mb", "__mf"))
+    val matched = union
+      .withColumn("__mb", running(keys, col("__t"), col("__sb")))
+      .withColumn("__mf", running(keys, col("__t").desc, col("__sf").desc))
       .filter(col("__sb") === 1)
     val lt = timeToLong(col("__t"))
     val db0 = lt - timeToLong(col("__mb").getField(rightTime))
@@ -188,6 +126,47 @@ object TemporalJoins {
         .when(df.isNotNull, col("__mf").getField(c)).as(c)
     }: _*)
   }
+
+  /** The union every as-of join runs its passes over: left rows keep their
+    * columns, right rows bring `keys` and their payload (every non-key
+    * column) as one non-null `__mark` struct, and both carry their time as
+    * `__t`. Each `(name, v)` of `sideTags` tags right rows `v` and left
+    * rows `1 - v`: a pass orders each key's rows by `__t` and its tag, so
+    * the tag decides which side sorts first at equal time. The tag
+    * columns, `__t`, `__mark` and the pass outputs `outs` are reserved
+    * names; a payload column named like a left column is rejected. Returns
+    * the union and the payload column names. */
+  private def tagged(caller: String, left: DataFrame, right: DataFrame,
+                     keys: Seq[String], leftTime: String, rightTime: String,
+                     sideTags: Seq[(String, Int)],
+                     outs: Seq[String]): (DataFrame, Seq[String]) = {
+    val reserved = Seq("__t") ++ sideTags.map(_._1) ++ Seq("__mark") ++ outs
+    require(!(left.columns ++ right.columns).exists(reserved.contains),
+      s"column names ${reserved.mkString("/")} are reserved by $caller")
+    val payloadCols = right.columns.filterNot(keys.contains).toSeq
+    val clash = payloadCols.toSet intersect left.columns.toSet
+    require(clash.isEmpty,
+      s"right payload columns collide with left columns (rename first): $clash")
+    val rTagged = right.select(
+      keys.map(col) ++ Seq(col(rightTime).as("__t")) ++
+        sideTags.map { case (n, v) => lit(v).as(n) } ++
+        Seq(struct(payloadCols.map(col): _*).as("__mark")): _*)
+    val markType = rTagged.schema("__mark").dataType
+    val lTagged = left.select(
+      left.columns.map(col) ++ Seq(col(leftTime).as("__t")) ++
+        sideTags.map { case (n, v) => lit(1 - v).as(n) } ++
+        Seq(lit(null).cast(markType).as("__mark")): _*)
+    (lTagged.unionByName(rTagged, allowMissingColumns = true), payloadCols)
+  }
+
+  /** One pass: the last non-null `__mark` over each key's rows up to the
+    * current one, in `order`. A running frame, so each partition streams
+    * in O(n) with O(1) state. */
+  private def running(keys: Seq[String], order: Column*): Column =
+    last(col("__mark"), ignoreNulls = true).over(Window
+      .partitionBy(keys.map(col): _*)
+      .orderBy(order: _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow))
 
   /** Range join: every (point, range) pair with the same join keys and
     * `rangeStart <= pointTs < rangeEnd` (half-open interval). All three

@@ -86,7 +86,13 @@ object StreamPipeline {
     * same session (`> 1800` starts a new one); session_window's
     * half-open [t, t+gap) merge splits it — equal only when no
     * consecutive pair lands exactly `gap` apart (true of the fixture's
-    * microsecond timestamps, asserted by StreamingSpec). */
+    * microsecond timestamps, asserted by StreamingSpec).
+    *
+    * One row per session: (user_id, session_start, day, n_events,
+    * duration_sec, total_value). `day` is the session's start date, the
+    * key of the ev17/ev19 per-day folds ([[StreamingBounce]]); duration
+    * is in the same floor-epoch integer seconds as the batch
+    * gaps-and-islands head. */
   def userSessions(events: DataFrame, gap: String = "30 minutes",
                    watermark: String = "2 hours"): DataFrame =
     events
@@ -94,11 +100,12 @@ object StreamPipeline {
       .groupBy(session_window(col("ts"), gap), col("user_id"))
       .agg(count(lit(1)).as("n_events"),
         date_format(min("ts"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
+        date_trunc("day", min(col("ts"))).cast("date").as("day"),
         (max(col("ts").cast("long")) - min(col("ts").cast("long")))
           .as("duration_sec"),
         sum("value").as("total_value"))
-      .select(col("user_id"), col("session_start"), col("n_events"),
-        col("duration_sec"), col("total_value"))
+      .select(col("user_id"), col("session_start"), col("day"),
+        col("n_events"), col("duration_sec"), col("total_value"))
 
   /** Click->purchase attribution: a STREAM-STREAM interval join — for each
     * click, the same user's purchases within `horizonSec` after it. The
@@ -163,16 +170,12 @@ object StreamPipeline {
     * (value, then smaller event_id) as everywhere. */
   def windowedTopK(events: DataFrame, k: Int = 3,
                    watermark: String = "2 hours"): DataFrame = {
-    graft.functions.GraftFunctions.register(events.sparkSession)
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(expr(s"top_k_by(value, event_id, $k)").as("tk"))
+    graft.functions.GraftFunctions.topKBy(events
+        .withWatermark("ts", watermark)
+        .groupBy(window(col("ts"), "1 hour"), col("event_type")),
+        col("value"), col("event_id"), k)
       .select(col("window.start").as("window_start"), col("event_type"),
-        posexplode(col("tk")).as(Seq("r", "t")))
-      .select(col("window_start"), col("event_type"),
-        (col("r") + 1).cast("int").as("rank"),
-        col("t.id").as("event_id"), col("t.score").as("value"))
+        col("rank"), col("id").as("event_id"), col("score").as("value"))
   }
 
   /** Stream-static enrichment: broadcast-join a static dimension into the

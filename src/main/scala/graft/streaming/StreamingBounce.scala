@@ -5,13 +5,15 @@ import org.apache.spark.sql.functions._
 
 /** Streaming twin of the ev17 per-day bounce-rate report.
   *
-  * The stream head is Spark's NATIVE session_window (the st2 machinery):
-  * per-user sessions merge in the state store and EVICT once the watermark
-  * passes their close — the property that keeps an unbounded deployment
-  * alive. The batch head is the gaps-and-islands form (oracle-checked as
-  * ev17_bounce_rate); both heads produce the same (user_id, day, n_events)
-  * session table, and [[fromSessions]] is the ONE shared fold both twins
-  * run, so stream==batch is literal code sharing past the session step.
+  * The stream head is Spark's NATIVE session_window, the st2 operator
+  * [[StreamPipeline.userSessions]]: per-user sessions merge in the state
+  * store and EVICT once the watermark passes their close — the property
+  * that keeps an unbounded deployment alive. The batch head is the
+  * gaps-and-islands form (oracle-checked as ev17_bounce_rate); both heads
+  * produce the same (user_id, day, n_events, duration_sec) session
+  * columns, and [[fromSessions]] and [[fromSessionDurations]] are the ONE
+  * shared folds both twins run, so stream==batch is literal code sharing
+  * past the session step.
   *
   * Boundary contract inherited from st2: gaps-and-islands keeps an exactly-
   * 1800 s gap in one session (`> 1800` splits), session_window's half-open
@@ -19,23 +21,6 @@ import org.apache.spark.sql.functions._
   * 1800 s apart (asserted against the fixture by StreamingSpec).
   */
 object StreamingBounce {
-
-  /** Per-session (user_id, day, n_events, duration_sec) via
-    * session_window — works on a stream (stateful, watermark-evicted) or a
-    * batch frame (withWatermark is a no-op and session_window plans as a
-    * merge aggregate). Duration uses the same floor-epoch integer seconds
-    * as the batch gaps-and-islands head, so both ev17 and ev19 folds run
-    * off this one table. */
-  def sessionDaily(events: DataFrame, gap: String = "30 minutes",
-                   watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(session_window(col("ts"), gap), col("user_id"))
-      .agg(count(lit(1)).as("n_events"),
-        date_trunc("day", min(col("ts"))).cast("date").as("day"),
-        (max(col("ts").cast("long")) - min(col("ts").cast("long")))
-          .as("duration_sec"))
-      .select("user_id", "day", "n_events", "duration_sec")
 
   /** The shared ev19 fold — per-day duration distribution, identical to
     * the batch tail (exact integer durations, percentile == quantile_cont

@@ -465,6 +465,26 @@ class ExtSpec extends AnyFunSuite {
         ("opq", true, false), ("residual", true, false)))
   }
 
+  /** Runs `body` on an sf dir whose only table is an empty `documents`. */
+  private def withEmptyDocuments[A](body: String => A): A =
+    SparkTestSession.withTempDir("graft-empty-docs") { dir =>
+      Seq.empty[(Long, String, String, String, Long)]
+        .toDF("doc_id", "text", "lang", "source", "n_chars")
+        .write.parquet(dir.resolve("documents.parquet").toString)
+      body(dir.toString)
+    }
+
+  test("t31_bm25 over an empty documents table ranks nothing") {
+    // no document, no average length: every query has no hit, as in DuckDB
+    assert(withEmptyDocuments(Queries.all("t31_bm25")(spark, _).collect()).isEmpty)
+  }
+
+  test("d15_incremental_curation over an empty documents table keeps nothing") {
+    // three empty terciles fold in as three empty batches
+    assert(withEmptyDocuments(
+      Queries.all("d15_incremental_curation")(spark, _).collect()).isEmpty)
+  }
+
   test("OPQ rotation: orthonormal, cosine-invariant, beats plain learned PQ") {
     // r10 verdict stretch item (OPQ, Ge et al. CVPR 2013 — the
     // parametric eigenvalue-allocation variant). The round-11 recall

@@ -69,6 +69,21 @@ class IncrementalAnnIndexSpec extends AnyFunSuite {
     SparkTestSession.underPersist(checkAgainstBatch(3))
   }
 
+  test("an empty batch folds in as a no-op and the index still equals the batch build") {
+    // an empty micro-batch is routine on a stream; its arrival count is 0
+    val emb = graft.io.Sources.embeddings(spark, dir).localCheckpoint(true)
+    val empty = spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](), emb.schema)
+    val planes = Similarity.planes(spark)
+    var st = IncrementalAnnIndex.ingestBatch(
+      IncrementalAnnIndex.init(spark, emb), empty, planes)
+    assert(st.nBatches == 1 && st.nIngested == 0)
+    st = IncrementalAnnIndex.ingestBatch(st, emb, planes)
+    st = IncrementalAnnIndex.ingestBatch(st, empty, planes)
+    assert(st.nBatches == 3 && st.nIngested == emb.count())
+    assertSame(st.edges, Similarity.seedEdges(emb, planes), "seed edge table")
+  }
+
   test("engaged caps: ordered ingest still reproduces the batch election") {
     // bucketCap = 2 forces evictions-would-be-needed pressure on every
     // bucket; the smallest-vec_id election is order-independent, so

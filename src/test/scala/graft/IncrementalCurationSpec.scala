@@ -109,6 +109,23 @@ class IncrementalCurationSpec extends AnyFunSuite {
     assertSnapshotEqualsBatch(st)
   }
 
+  test("an empty batch folds in as a no-op and the snapshot still equals batch curate") {
+    // an empty micro-batch is routine on a stream; its arrival count is 0
+    val empty = Seq.empty[(Long, String, String)].toDF("doc_id", "source", "text")
+    var st = IncrementalCuration.ingestBatch(
+      IncrementalCuration.init(spark, union, cfg.nHashes), empty, cfg)
+    assert(st.nBatches == 1 && st.nIngested == 0 && st.docs.count() == 0)
+    st = IncrementalCuration.ingestBatch(st,
+      slices(0).toDF("doc_id", "source", "text"), cfg)
+    st = IncrementalCuration.ingestBatch(st, empty, cfg)
+    assert(st.nBatches == 3 && st.nIngested == 3 && st.docs.count() == 3)
+    st = slices.tail.foldLeft(st) { (acc, rows) =>
+      IncrementalCuration.ingestBatch(acc, rows.toDF("doc_id", "source", "text"), cfg)
+    }
+    assert(st.nIngested == 9)
+    assertSnapshotEqualsBatch(st)
+  }
+
   test("foreachBatch curator over a real file stream == batch curate") {
     import scala.jdk.CollectionConverters._
     SparkTestSession.withTempDir("graft-inc-curate") { landing =>

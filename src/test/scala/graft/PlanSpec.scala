@@ -520,13 +520,8 @@ class PlanSpec extends AnyFunSuite {
     // scan the documents parquet, and its only hash exchange is the pair
     // aggregate (the top-1 is a TakeOrdered, not a full sort).
     import org.apache.spark.sql.functions._
-    val words = graft.io.Sources.documents(spark, dir)
-      .select(explode(split(lower(col("text")), " ")).as("w"))
-      .filter(length(col("w")) >= 2)
-      .groupBy("w").agg(count(lit(1)).as("wc"))
-    val v0 = graft.ops.Materialize(words.select(
-      regexp_replace(col("w"), "(.)", "<$1>").as("sw"), col("wc")))
-    val round = Queries.bpePairCounts(v0)
+    val v0 = graft.ext.TextOps.bpeVocab(graft.io.Sources.documents(spark, dir))
+    val round = graft.ext.TextOps.bpePairCounts(v0)
       .orderBy(col("pair_count").desc, col("left_sym"), col("right_sym"))
       .limit(1)
     val p = round.queryExecution.executedPlan.toString

@@ -124,7 +124,7 @@ class StreamingSpec extends AnyFunSuite {
       Seq((windowReport("window.start"), () => query("st4_sliding_window")))),
     Twin("native session_window sessions match the batch gaps-and-islands twin",
       byTime, 3, s => StreamPipeline.userSessions(ts(s)), "complete",
-      Seq((_.withColumn("total_value", round(col("total_value"), 2)),
+      Seq((_.drop("day").withColumn("total_value", round(col("total_value"), 2)),
         () => query("st2_sessionize").select("user_id", "session_start",
           "n_events", "duration_sec", "total_value")))),
     // left join: every event survives, matched ones carry their segment
@@ -195,7 +195,7 @@ class StreamingSpec extends AnyFunSuite {
           () => query("ev21_growth_accounting")))),
     // one session table, two reports
     Twin("streaming session_window bounce rate matches the batch ev17 report",
-      byTime, 3, s => StreamingBounce.sessionDaily(ts(s)), "complete",
+      byTime, 3, s => StreamPipeline.userSessions(ts(s)), "complete",
       Seq((StreamingBounce.fromSessions, () => query("ev17_bounce_rate")),
         (StreamingBounce.fromSessionDurations,
           () => query("ev19_session_duration")))),

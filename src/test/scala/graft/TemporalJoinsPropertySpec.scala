@@ -40,6 +40,28 @@ class TemporalJoinsPropertySpec extends AnyFunSuite {
     }
   }
 
+  test("asofForward agrees with the brute-force definition on random data") {
+    val rnd = new Random(7171)
+    for (trial <- 1 to 15) {
+      val lRows = Seq.fill(25)((keys(rnd.nextInt(3)), rnd.nextInt(40).toLong))
+      val rRows = Seq.fill(25)((keys(rnd.nextInt(3)), rnd.nextInt(40).toLong))
+        .distinct.map { case (k, t) => (k, t, t * 100.0 + k.hashCode % 7) }
+
+      val left = lRows.zipWithIndex
+        .map { case ((k, t), i) => (k, t, i.toLong) }.toDF("k", "t", "lid")
+      val right = rRows.toDF("k", "rt", "payload")
+      val got = TemporalJoins.asofForward(left, right, Seq("k"), "t", "rt")
+        .select("lid", "rt", "payload")
+        .as[(Long, Option[Long], Option[Double])].collect()
+        .map(r => r._1 -> (r._2, r._3)).toMap
+      val want = lRows.zipWithIndex.map { case ((k, t), i) =>
+        val best = rRows.filter(r => r._1 == k && r._2 >= t).sortBy(_._2).headOption
+        i.toLong -> (best.map(_._2), best.map(_._3))
+      }.toMap
+      assert(got == want, s"trial $trial: left=$lRows right=$rRows")
+    }
+  }
+
   test("asofNearest agrees with the brute-force argmin-distance definition") {
     val rnd = new Random(9393)
     for (trial <- 1 to 15) {

@@ -31,23 +31,28 @@ object Profile {
   final case class Run(wallS: Double, jobs: Int, checkpoints: Int, stages: Seq[Stage])
 
   private val GroupKey = "spark.jobGroup.id"
+  private val StartMarker = "graft_profile_start"
   private val DrainMarker = "graft_profile_drain"
   private val runIds = new AtomicLong
 
   /** Runs `body` under a fresh job group and profiles it. Jobs and stages
     * are the group's; checkpoints are every `localCheckpoint` the session
-    * executes meanwhile (those events carry no job group). A marker query
-    * drains both listeners before they are read: the listener bus delivers
-    * events in order, so once the marker is seen every earlier event has
-    * been. */
+    * executes meanwhile (those events carry no job group). Two marker
+    * queries bound that window, since the listener bus delivers events in
+    * order: checkpoints count only after the start marker is seen, so one
+    * that finished before `run` but is delivered late is not counted, and
+    * the drain marker has both listeners see every event of `body` before
+    * they are read. */
   def run(spark: SparkSession)(body: => Unit): Run = {
     val sc = spark.sparkContext
     val group = s"graft-profile-${runIds.incrementAndGet()}"
+    val startGroup = s"$group-start"
     val drainGroup = s"$group-drain"
     var jobs, checkpoints = 0
     val stageIds = mutable.Set.empty[Int]
     val durations = mutable.Map.empty[Int, mutable.ArrayBuffer[Long]]
     val jobsDrained, plansDrained = new CountDownLatch(1)
+    var started = false
     val jobListener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
         e.properties.getProperty(GroupKey) match {
@@ -64,7 +69,8 @@ object Profile {
     }
     val planListener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, ns: Long): Unit =
-        if (funcName == "localCheckpoint") synchronized(checkpoints += 1)
+        if (funcName == "localCheckpoint") synchronized(if (started) checkpoints += 1)
+        else if (qe.analyzed.toString.contains(StartMarker)) synchronized { started = true }
         else if (qe.analyzed.toString.contains(DrainMarker)) plansDrained.countDown()
       override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     }
@@ -77,6 +83,7 @@ object Profile {
     sc.addSparkListener(jobListener)
     spark.listenerManager.register(planListener)
     try {
+      inGroup(startGroup)(spark.range(1).toDF(StartMarker).collect())
       val t0 = System.nanoTime()
       inGroup(group)(body)
       val wallS = (System.nanoTime() - t0) / 1e9

@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions._
 import graft.io.Sources
 import graft.model.Schemas
 import graft.ops.{Cleaning, Derive, Materialize, Num, TemporalJoins}
+import graft.ops.Derive.{bySymbol, bySymbolDateDesc, change, fir, negativeDay, pctChange,
+  positiveDay, prevClose, ret, trueRange}
 import graft.analytics.{Funnel, Performance, Predictions, Summary}
 
 /** Named correctness queries over the driver test corpus, one per operator in
@@ -30,6 +32,11 @@ object Queries {
   private def cleanedStock(s: SparkSession, dir: String): DataFrame =
     Cleaning.clean(Sources.stockFromLineitem(s, dir), col("rid"))
 
+  /** The cleaned bars every stock kernel reads: (symbol, date) unique,
+    * OHLC and volume, the dedup evidence dropped. */
+  private def bars(s: SparkSession, dir: String): DataFrame =
+    cleanedStock(s, dir).drop("rid")
+
   /** stockFromLineitem with deterministic dirt injected so F1-F3 actually
     * remove rows: l_linenumber=7 -> null open (F1), =6 -> high below close
     * (F2), =5 -> negative low (F3). Mirrored in OracleSql.dirtyCte. */
@@ -51,7 +58,7 @@ object Queries {
 
   /** Windowed feature columns over the cleaned, deduped stock frame. */
   private def features(s: SparkSession, dir: String): DataFrame =
-    Derive.addDerived(cleanedStock(s, dir).drop("rid"))
+    Derive.addDerived(bars(s, dir))
 
   // ===== flagship: the reference's full transform stage, end-to-end ========
 
@@ -160,17 +167,21 @@ object Queries {
   // ===== window functions (W1-W5) ==========================================
 
   private def windowQuery(s: SparkSession, dir: String)(expr: DataFrame => DataFrame): DataFrame =
-    expr(cleanedStock(s, dir).drop("rid")).orderBy("symbol", "date")
+    expr(bars(s, dir)).orderBy("symbol", "date")
 
-  private val w = Window.partitionBy("symbol").orderBy("date")
+  private val w = Derive.bySymbolDate
+
+  /** Each bar's simple return `r`, first bars (no return) dropped. */
+  private def returns(s: SparkSession, dir: String): DataFrame =
+    bars(s, dir).withColumn("r", ret(prevClose)).filter(col("r").isNotNull)
 
   def w1LagDiff(s: SparkSession, dir: String): DataFrame =
     windowQuery(s, dir)(df => rounded(df.select(col("symbol"), col("date"),
-      (col("close") - lag("close", 1).over(w)).as("daily_change")), Seq("daily_change")))
+      change(prevClose).as("daily_change")), Seq("daily_change")))
 
   def w2PctChange(s: SparkSession, dir: String): DataFrame =
     windowQuery(s, dir)(df => rounded(df.select(col("symbol"), col("date"),
-      ((col("close") / lag("close", 1).over(w) - 1) * 100).as("daily_change_percent")),
+      pctChange(prevClose).as("daily_change_percent")),
       Seq("daily_change_percent")))
 
   def w3Ma5(s: SparkSession, dir: String): DataFrame =
@@ -183,7 +194,7 @@ object Queries {
 
   def w5Volatility(s: SparkSession, dir: String): DataFrame =
     windowQuery(s, dir)(df => rounded(df
-      .withColumn("dcp", (col("close") / lag("close", 1).over(w) - 1) * 100)
+      .withColumn("dcp", pctChange(prevClose))
       .select(col("symbol"), col("date"),
         stddev_samp("dcp").over(w.rowsBetween(-19, 0)).as("volatility_indicator")),
       Seq("volatility_indicator"), 2))
@@ -207,7 +218,7 @@ object Queries {
       val g = col("__g")
       val l = col("__l")
       rounded(df
-        .withColumn("diff", col("close") - lag("close", 1).over(w))
+        .withColumn("diff", change(prevClose))
         .withColumn("gain", greatest(col("diff"), lit(0.0)))
         .withColumn("loss", greatest(-col("diff"), lit(0.0)))
         .withColumn("__g", avg("gain").over(f14))
@@ -228,15 +239,14 @@ object Queries {
     * undefined, and Spark's double 0/0=NaN vs DuckDB's NULL would
     * diverge). The z rounds at 2 (ratio of interpolated medians). */
   def w13RobustOutliers(s: SparkSession, dir: String): DataFrame = {
-    val wSym = Window.partitionBy("symbol")
     val z = (col("close") - col("med")) / (lit(1.4826) * col("madv"))
     // the threshold compares the tie-safe-ROUNDED |z| (c2 convention) so
     // percentile-interpolation ulps can never flip a row's inclusion
     // across engines
-    cleanedStock(s, dir).drop("rid")
-      .withColumn("med", percentile(col("close"), lit(0.5)).over(wSym))
+    bars(s, dir)
+      .withColumn("med", percentile(col("close"), lit(0.5)).over(bySymbol))
       .withColumn("madv",
-        percentile(abs(col("close") - col("med")), lit(0.5)).over(wSym))
+        percentile(abs(col("close") - col("med")), lit(0.5)).over(bySymbol))
       .filter(col("madv") > 0 && Num.cround(abs(z), 6) > 3)
       .select(col("symbol"), col("date"), col("close"),
         Num.cround(z, 2).as("robust_z"))
@@ -302,9 +312,7 @@ object Queries {
     * (~1e-12 relative). Symbols with a single traded day yield NULL
     * beta/corr on both engines (sample variance over one observation). */
   def w16Beta(s: SparkSession, dir: String): DataFrame = {
-    val r = cleanedStock(s, dir).drop("rid")
-      .withColumn("r", col("close") / lag("close", 1).over(w) - 1)
-      .filter(col("r").isNotNull)
+    val r = returns(s, dir)
     val m = r.groupBy("date").agg(avg("r").as("mr"))
     val beta = covar_samp(col("r"), col("mr")) / var_samp(col("mr"))
     rounded(r.join(broadcast(m), "date")
@@ -326,9 +334,7 @@ object Queries {
     * Spark's x/0 = Infinity can't diverge from an oracle NULL. sqrt(252)
     * is the same IEEE double in both engines. */
   def w17Sharpe(s: SparkSession, dir: String): DataFrame = {
-    val r = cleanedStock(s, dir).drop("rid")
-      .withColumn("r", col("close") / lag("close", 1).over(w) - 1)
-      .filter(col("r").isNotNull)
+    val r = returns(s, dir)
     val sd = stddev_samp(col("r"))
     rounded(r.groupBy("symbol")
       .agg(count(lit(1)).as("n_days"),
@@ -373,8 +379,8 @@ object Queries {
     * with zero up days have no streaks and drop out (mirrored in the
     * oracle). */
   def w19Streaks(s: SparkSession, dir: String): DataFrame = {
-    val flagged = cleanedStock(s, dir).drop("rid")
-      .withColumn("up", col("close") > lag("close", 1).over(w))
+    val flagged = bars(s, dir)
+      .withColumn("up", Derive.up(prevClose))
       .withColumn("rn", row_number().over(w))
     val streaks = flagged.filter(col("up") === true)
       .withColumn("grp", col("rn") - row_number().over(w))
@@ -400,9 +406,7 @@ object Queries {
     * vectorized branches eagerly. Zero-variance and single-day series
     * yield NULL on both engines. */
   def a16Moments(s: SparkSession, dir: String): DataFrame = {
-    val r = cleanedStock(s, dir).drop("rid")
-      .withColumn("r", col("close") / lag("close", 1).over(w) - 1)
-      .filter(col("r").isNotNull)
+    val r = returns(s, dir)
     val agg = r.groupBy("symbol").agg(
       count(lit(1)).as("n_days"),
       avg(col("r")).as("m1"),
@@ -431,9 +435,9 @@ object Queries {
     * one symbol-hash exchange. percent_rank/cume_dist are exact rationals
     * of small integers — identical doubles cross-engine. */
   def x13Ranks(s: SparkSession, dir: String): DataFrame = {
-    val wv = Window.partitionBy("symbol").orderBy(col("volume").desc)
-    val wvT = Window.partitionBy("symbol").orderBy(col("volume").desc, col("date"))
-    rounded(cleanedStock(s, dir).drop("rid")
+    val wv = bySymbol.orderBy(col("volume").desc)
+    val wvT = bySymbol.orderBy(col("volume").desc, col("date"))
+    rounded(bars(s, dir)
       .select(col("symbol"), col("date"), col("volume"),
         rank().over(wv).as("rnk"),
         dense_rank().over(wv).as("drnk"),
@@ -452,8 +456,8 @@ object Queries {
     * under tie-safe rounding at 6; < 2 pairs or zero variance yields NULL
     * on both engines). */
   def w20Autocorr(s: SparkSession, dir: String): DataFrame = {
-    val r = cleanedStock(s, dir).drop("rid")
-      .withColumn("r", col("close") / lag("close", 1).over(w) - 1)
+    val r = bars(s, dir)
+      .withColumn("r", ret(prevClose))
       .withColumn("rp", lag("r", 1).over(w))
       .filter(col("r").isNotNull && col("rp").isNotNull)
     rounded(r.groupBy("symbol")
@@ -507,8 +511,8 @@ object Queries {
     * cells → symbol), and the sorted level arrays make the ≤14-term sum
     * order DETERMINISTIC where the old window sum was shuffle-ordered. */
   def a17Chi2(s: SparkSession, dir: String): DataFrame = {
-    val f = cleanedStock(s, dir).drop("rid")
-      .withColumn("up", col("close") > lag("close", 1).over(w))
+    val f = bars(s, dir)
+      .withColumn("up", Derive.up(prevClose))
       .filter(col("up").isNotNull)
       .withColumn("wd", weekday(col("date")))
     val observed =
@@ -560,19 +564,17 @@ object Queries {
     * integer comparison rn*2 <= n (no float division) so both engines cut
     * identically. */
   def a18KsTest(s: SparkSession, dir: String): DataFrame = {
-    val bySym = Window.partitionBy("symbol")
-    val r = cleanedStock(s, dir).drop("rid")
-      .withColumn("ret", Num.cround(
-        (col("close") - lag("close", 1).over(w)) / lag("close", 1).over(w), 6))
+    val r = bars(s, dir)
+      .withColumn("ret", Num.cround((col("close") - prevClose) / prevClose, 6))
       .filter(col("ret").isNotNull)
       .withColumn("rn", row_number().over(w))
-      .withColumn("n", count(lit(1)).over(bySym))
+      .withColumn("n", count(lit(1)).over(bySymbol))
       .withColumn("grp", when(col("rn") * 2 <= col("n"), "a").otherwise("b"))
-    val ecdf = Window.partitionBy("symbol").orderBy("ret")
+    val ecdf = bySymbol.orderBy("ret")
       .rangeBetween(Window.unboundedPreceding, Window.currentRow)
     val d = r
-      .withColumn("na", sum(when(col("grp") === "a", 1L).otherwise(0L)).over(bySym))
-      .withColumn("nb", sum(when(col("grp") === "b", 1L).otherwise(0L)).over(bySym))
+      .withColumn("na", sum(when(col("grp") === "a", 1L).otherwise(0L)).over(bySymbol))
+      .withColumn("nb", sum(when(col("grp") === "b", 1L).otherwise(0L)).over(bySymbol))
       .withColumn("ca", sum(when(col("grp") === "a", 1.0).otherwise(0.0)).over(ecdf))
       .withColumn("cb", sum(when(col("grp") === "b", 1.0).otherwise(0.0)).over(ecdf))
       .withColumn("d", abs(col("ca") / col("na") - col("cb") / col("nb")))
@@ -594,10 +596,10 @@ object Queries {
     * either engine's incremental corr() kernel, whose summation orders
     * differ. All windows partition by symbol: one exchange. */
   def a19Spearman(s: SparkSession, dir: String): DataFrame = {
-    val f = cleanedStock(s, dir).drop("rid")
+    val f = bars(s, dir)
       .filter(col("volume").isNotNull && col("close").isNotNull)
     def avgRank(c: String): Column =
-      rank().over(Window.partitionBy("symbol").orderBy(c)) +
+      rank().over(bySymbol.orderBy(c)) +
         (count(lit(1)).over(Window.partitionBy("symbol", c)) - 1) / lit(2.0)
     val ranked = f
       .withColumn("rx", avgRank("volume"))
@@ -744,10 +746,9 @@ object Queries {
     * aggregates over ONE symbol exchange — no join, no second scan of the
     * upstream (the Derive.withVolumeCategory argument). */
   def f9Winsorize(s: SparkSession, dir: String): DataFrame = {
-    val wSym = Window.partitionBy("symbol")
-    cleanedStock(s, dir).drop("rid")
-      .withColumn("q05", percentile(col("close"), lit(0.05)).over(wSym))
-      .withColumn("q95", percentile(col("close"), lit(0.95)).over(wSym))
+    bars(s, dir)
+      .withColumn("q05", percentile(col("close"), lit(0.05)).over(bySymbol))
+      .withColumn("q95", percentile(col("close"), lit(0.95)).over(bySymbol))
       .select(col("symbol"), col("date"),
         Num.cround(col("close"), 6).as("close"),
         Num.cround(least(greatest(col("close"), col("q05")), col("q95")), 6)
@@ -770,8 +771,7 @@ object Queries {
       max(col("l_shipdate").cast("date")).as("latest_date"))
 
   def a4AvgTable(s: SparkSession, dir: String): DataFrame = {
-    val f = cleanedStock(s, dir).drop("rid")
-      .withColumn("daily_change_percent", (col("close") / lag("close", 1).over(w) - 1) * 100)
+    val f = bars(s, dir).withColumn("daily_change_percent", pctChange(prevClose))
     rounded(f.agg(
       avg(col("close")).as("avg_close"),
       avg(col("volume")).as("avg_volume"),
@@ -840,24 +840,26 @@ object Queries {
   def a15BinnedQuantiles(s: SparkSession, dir: String): DataFrame =
     rounded(
       ops.HistogramQuantiles.estimate(
-        cleanedStock(s, dir).drop("rid"), "symbol", "close"),
+        bars(s, dir), "symbol", "close"),
       Seq("est_q25", "est_q50", "est_q75"))
       .orderBy("symbol")
 
   def a7Stddev(s: SparkSession, dir: String): DataFrame = {
-    val f = cleanedStock(s, dir).drop("rid")
-      .withColumn("dcp", (col("close") / lag("close", 1).over(w) - 1) * 100)
+    val f = bars(s, dir).withColumn("dcp", pctChange(prevClose))
     rounded(f.groupBy("symbol").agg(stddev_samp(col("dcp")).as("stddev_dcp")),
       Seq("stddev_dcp"), 2).orderBy("symbol")
   }
 
   // ===== analytics (A6, A9, A10, X7, W6) ===================================
 
-  def a6Performance(s: SparkSession, dir: String): DataFrame =
+  /** The per-symbol performance table (A6), rounded at 2. */
+  private def performance(s: SparkSession, dir: String): DataFrame =
     rounded(Performance.performanceTable(features(s, dir)),
       Seq("latest_close", "first_close", "min_close", "max_close", "avg_close",
         "avg_daily_change_percent", "overall_change_percent"), 2)
-      .orderBy("symbol")
+
+  def a6Performance(s: SparkSession, dir: String): DataFrame =
+    performance(s, dir).orderBy("symbol")
 
   def a9UpDays(s: SparkSession, dir: String): DataFrame =
     rounded(Summary.upDayStats(features(s, dir)), Seq("positive_day_ratio"))
@@ -884,12 +886,8 @@ object Queries {
       Seq("close"))
       .orderBy(desc("date"), col("rid")).limit(2000)
 
-  def o4TopK(s: SparkSession, dir: String): DataFrame = {
-    val perf = rounded(Performance.performanceTable(features(s, dir)),
-      Seq("latest_close", "first_close", "min_close", "max_close", "avg_close",
-        "avg_daily_change_percent", "overall_change_percent"), 2)
-    Performance.topK(perf, "overall_change_percent", 5)
-  }
+  def o4TopK(s: SparkSession, dir: String): DataFrame =
+    Performance.topK(performance(s, dir), "overall_change_percent", 5)
 
   def o6StrideSample(s: SparkSession, dir: String): DataFrame =
     rounded(Sources.stockFromLineitem(s, dir), Seq("close"))
@@ -1304,7 +1302,7 @@ object Queries {
     * further back. Ordering by unix_date keeps the range arithmetic in
     * exact integer days. */
   def w11RangeMean(s: SparkSession, dir: String): DataFrame = {
-    val wr = Window.partitionBy("symbol").orderBy(expr("unix_date(date)"))
+    val wr = bySymbol.orderBy(expr("unix_date(date)"))
       .rangeBetween(-6, 0)
     windowQuery(s, dir)(df => rounded(df.select(col("symbol"), col("date"),
       avg("close").over(wr).as("range_ma7")), Seq("range_ma7"), 2))
@@ -1332,7 +1330,7 @@ object Queries {
   def o8KeysetPage(s: SparkSession, dir: String): DataFrame = {
     val cSym = "500"
     val cDate = "1995-06-01"
-    rounded(cleanedStock(s, dir).drop("rid")
+    rounded(bars(s, dir)
       .filter(col("symbol") > cSym ||
         (col("symbol") === cSym && col("date") > lit(cDate).cast("date")))
       .select(col("symbol"), col("date"), col("close"))
@@ -1536,11 +1534,10 @@ object Queries {
       .orderBy("rid")
 
   def x4UpdownFlags(s: SparkSession, dir: String): DataFrame = {
-    val f = cleanedStock(s, dir).drop("rid")
-      .withColumn("daily_change", col("close") - lag("close", 1).over(w))
+    val f = bars(s, dir).withColumn("daily_change", change(prevClose))
     f.select(col("symbol"), col("date"),
-      coalesce(col("daily_change") > 0, lit(false)).as("is_positive_day"),
-      coalesce(col("daily_change") < 0, lit(false)).as("is_negative_day"))
+      positiveDay(col("daily_change")).as("is_positive_day"),
+      negativeDay(col("daily_change")).as("is_negative_day"))
       .orderBy("symbol", "date")
   }
 
@@ -1555,8 +1552,7 @@ object Queries {
   }
 
   def a8WindowMean(s: SparkSession, dir: String): DataFrame = {
-    val f = cleanedStock(s, dir).drop("rid")
-      .withColumn("dcp", (col("close") / lag("close", 1).over(w) - 1) * 100)
+    val f = bars(s, dir).withColumn("dcp", pctChange(prevClose))
     rounded(f.select(col("symbol"), col("date"),
       avg("dcp").over(w.rowsBetween(-4, 0)).as("recent_avg_change")),
       Seq("recent_avg_change"), 2).orderBy("symbol", "date")
@@ -1578,9 +1574,8 @@ object Queries {
       .orderBy(desc("o_totalprice"), col("o_orderkey")).limit(100)
 
   def w7LatestRow(s: SparkSession, dir: String): DataFrame = {
-    val wDesc = Window.partitionBy("symbol").orderBy(col("date").desc)
-    rounded(cleanedStock(s, dir).drop("rid")
-      .withColumn("rn", row_number().over(wDesc))
+    rounded(bars(s, dir)
+      .withColumn("rn", row_number().over(bySymbolDateDesc))
       .filter(col("rn") === 1)
       .select("symbol", "date", "close"), Seq("close"))
       .orderBy("symbol")
@@ -1613,9 +1608,8 @@ object Queries {
       .orderBy("symbol", "date", "field")
 
   def w8TrailingK(s: SparkSession, dir: String): DataFrame = {
-    val wDesc = Window.partitionBy("symbol").orderBy(col("date").desc)
-    rounded(cleanedStock(s, dir).drop("rid")
-      .withColumn("rn", row_number().over(wDesc))
+    rounded(bars(s, dir)
+      .withColumn("rn", row_number().over(bySymbolDateDesc))
       .filter(col("rn") <= 5)
       .select("symbol", "date", "rn", "close"), Seq("close"))
       .orderBy("symbol", "date")
@@ -1625,7 +1619,7 @@ object Queries {
     * data-driven bucket chain (X6) — previously only exercised inside the
     * flagship. Same single-exchange window path as the pipeline. */
   def w9VolumeBucket(s: SparkSession, dir: String): DataFrame =
-    Derive.withVolumeCategory(cleanedStock(s, dir).drop("rid"))
+    Derive.withVolumeCategory(bars(s, dir))
       .select("symbol", "date", "volume", "volume_category")
       .orderBy("symbol", "date")
 
@@ -2107,6 +2101,19 @@ object Queries {
       (1 to 12).map("m" + _))
       .orderBy("symbol")
 
+  /** The x14/x15 daily spine: each % 97 symbol's min→max calendar days,
+    * left-joined to its bars (close NULL on a day it did not trade). */
+  private def dailySpine(s: SparkSession, dir: String): DataFrame = {
+    val f = cleanedStock(s, dir)
+      .filter(col("symbol").cast("long") % 97 === 0)
+      .select("symbol", "date", "close")
+    f.groupBy("symbol")
+      .agg(min("date").as("d0"), max("date").as("d1"))
+      .select(col("symbol"),
+        explode(expr("sequence(d0, d1, interval 1 day)")).as("date"))
+      .join(f, Seq("symbol", "date"), "left")
+  }
+
   /** Calendar gap-fill + forward-fill (LOCF): densify each symbol's bar
     * series onto its own min→max daily spine, carrying the last observed
     * close across the gaps and flagging imputed rows — the resample
@@ -2116,18 +2123,10 @@ object Queries {
     * LOCF is a running last() with O(1) frame state over ONE symbol
     * exchange). */
   def x14Gapfill(s: SparkSession, dir: String): DataFrame = {
-    val f = cleanedStock(s, dir)
-      .filter(col("symbol").cast("long") % 97 === 0)
-      .select("symbol", "date", "close")
-    val spine = f.groupBy("symbol")
-      .agg(min("date").as("d0"), max("date").as("d1"))
-      .select(col("symbol"),
-        explode(expr("sequence(d0, d1, interval 1 day)")).as("date"))
-    val w = Window.partitionBy("symbol").orderBy("date")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    spine.join(f, Seq("symbol", "date"), "left")
+    val upTo = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    dailySpine(s, dir)
       .withColumn("filled_close",
-        Num.cround(last("close", ignoreNulls = true).over(w), 6))
+        Num.cround(last("close", ignoreNulls = true).over(upTo), 6))
       .withColumn("is_imputed", col("close").isNull)
       .select("symbol", "date", "filled_close", "is_imputed")
       .orderBy("symbol", "date")
@@ -2419,10 +2418,8 @@ object Queries {
   def w21Atr(s: SparkSession, dir: String): DataFrame =
     windowQuery(s, dir) { df =>
       val withTr = df
-        .withColumn("__pc", lag("close", 1).over(w))
-        .withColumn("tr", when(col("__pc").isNull, col("high") - col("low"))
-          .otherwise(greatest(col("high") - col("low"),
-            abs(col("high") - col("__pc")), abs(col("low") - col("__pc")))))
+        .withColumn("__pc", prevClose)
+        .withColumn("tr", trueRange(col("__pc")))
       rounded(rounded(withTr
         .withColumn("atr14", avg("tr").over(w.rowsBetween(-13, 0)))
         .select("symbol", "date", "tr", "atr14"),
@@ -2433,7 +2430,7 @@ object Queries {
     * (high+low+close)/3 as the middle line, bands at ±2 × ATR14: the
     * volatility channel that pairs w15's Bollinger (stddev bands) with
     * w21's true-range machinery. Both kernels are the PROVEN ones: the
-    * truncated adjust=true FIR EMA ([[graft.ops.Num.emaKernel]], shared
+    * truncated adjust=true FIR EMA ([[graft.ops.Derive.fir]], shared
     * constants with the oracle — the w14 contract) and w21's TR/rolling
     * mean. Warm-up rows (rn < 20) hold NULL mid and bands, the w14
     * convention. Bands compute over RAW mid/atr and round at 2 (price
@@ -2442,19 +2439,13 @@ object Queries {
     * and the ATR frame. */
   def w23Keltner(s: SparkSession, dir: String): DataFrame =
     windowQuery(s, dir) { df =>
-      val ws = Num.emaKernel(20)
       val withTr = df
         .withColumn("__tp", (col("high") + col("low") + col("close")) / 3)
-        .withColumn("__pc", lag("close", 1).over(w))
-        .withColumn("__tr", when(col("__pc").isNull, col("high") - col("low"))
-          .otherwise(greatest(col("high") - col("low"),
-            abs(col("high") - col("__pc")), abs(col("low") - col("__pc")))))
+        .withColumn("__pc", prevClose)
+        .withColumn("__tr", trueRange(col("__pc")))
         .withColumn("__rn", row_number().over(w))
-      val num = ws.zipWithIndex.map { case (wj, j) =>
-        lit(wj) * (if (j == 0) col("__tp") else lag(col("__tp"), j).over(w))
-      }.reduce(_ + _)
       rounded(withTr
-        .withColumn("k_mid", when(col("__rn") >= 20, num / lit(ws.sum)))
+        .withColumn("k_mid", fir(col("__tp"), 20, 20))
         .withColumn("__atr", avg("__tr").over(w.rowsBetween(-13, 0)))
         .withColumn("k_upper", col("k_mid") + lit(2.0) * col("__atr"))
         .withColumn("k_lower", col("k_mid") - lit(2.0) * col("__atr"))
@@ -2495,7 +2486,7 @@ object Queries {
     * running frame. */
   def w22Obv(s: SparkSession, dir: String): DataFrame =
     windowQuery(s, dir) { df =>
-      df.withColumn("__pc", lag("close", 1).over(w))
+      df.withColumn("__pc", prevClose)
         .withColumn("__sv",
           when(col("__pc").isNull, lit(0L))
             .when(col("close") > col("__pc"), col("volume"))
@@ -2516,11 +2507,9 @@ object Queries {
     * Welch degrees-of-freedom renders with identical parenthesization on
     * both sides (the a16 raw-moment discipline). */
   def a20Ttest(s: SparkSession, dir: String): DataFrame = {
-    val r = cleanedStock(s, dir).drop("rid")
-      .withColumn("r", col("close") / lag("close", 1).over(w) - 1)
-      .filter(col("r").isNotNull)
+    val r = returns(s, dir)
       .withColumn("rn", row_number().over(w))
-      .withColumn("n", count(lit(1)).over(Window.partitionBy("symbol")))
+      .withColumn("n", count(lit(1)).over(bySymbol))
       .withColumn("half",
         when(col("rn") * 2 <= col("n"), lit(1)).otherwise(lit(2)))
     val byHalf = r.groupBy("symbol", "half")
@@ -2674,18 +2663,9 @@ object Queries {
     * bracket never dangles. Per-row arithmetic on identical doubles,
     * round 6. */
   def x15Interpolate(s: SparkSession, dir: String): DataFrame = {
-    val f = cleanedStock(s, dir)
-      .filter(col("symbol").cast("long") % 97 === 0)
-      .select("symbol", "date", "close")
-    val spine = f.groupBy("symbol")
-      .agg(min("date").as("d0"), max("date").as("d1"))
-      .select(col("symbol"),
-        explode(expr("sequence(d0, d1, interval 1 day)")).as("date"))
-    val wb = Window.partitionBy("symbol").orderBy("date")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wf = Window.partitionBy("symbol").orderBy(col("date").desc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    spine.join(f, Seq("symbol", "date"), "left")
+    val wb = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val wf = bySymbolDateDesc.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    dailySpine(s, dir)
       .withColumn("pv", last("close", ignoreNulls = true).over(wb))
       .withColumn("pd", last(when(col("close").isNotNull, col("date")),
         ignoreNulls = true).over(wb))
@@ -2792,7 +2772,7 @@ object Queries {
     * latent 0/0 divergence a20 guards with its se2 <= 0 branch (round-12
     * ADVICE), so the var_samp gate maps both engines to NULL. */
   def a22OlsTrend(s: SparkSession, dir: String): DataFrame = {
-    val d = cleanedStock(s, dir).drop("rid")
+    val d = bars(s, dir)
       .withColumn("x",
         datediff(col("date"), to_date(lit("1970-01-01"))).cast("double"))
     val slope = covar_samp(col("x"), col("close")) / var_samp(col("x"))
@@ -2935,7 +2915,7 @@ object Queries {
     * high/low/volume are exact; open/close round 2 (multi-source doubles
     * through arg selection, the a6 scale). */
   def w25WeeklyOhlc(s: SparkSession, dir: String): DataFrame =
-    rounded(cleanedStock(s, dir).drop("rid")
+    rounded(bars(s, dir)
       .groupBy(col("symbol"),
         date_trunc("week", col("date")).cast("date").as("week"))
       .agg(

@@ -1,6 +1,6 @@
 package graft.analytics
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -24,29 +24,7 @@ object Funnel {
   /** Per-user funnel row: first_view/click/purchase as exact microsecond
     * longs (null when the stage was never reached in order) and
     * funnel_stage 0-3 = number of stages completed. */
-  def userFunnel(events: DataFrame): DataFrame = {
-    val w = Window.partitionBy("user_id")
-    events
-      .select(col("user_id"), col("event_type"), col("ts"))
-      .withColumn("__v",
-        min(when(col("event_type") === "view", col("ts"))).over(w))
-      .withColumn("__c",
-        min(when(col("event_type") === "click" && col("ts") > col("__v"),
-          col("ts"))).over(w))
-      .withColumn("__p",
-        min(when(col("event_type") === "purchase" && col("ts") > col("__c"),
-          col("ts"))).over(w))
-      .groupBy("user_id")
-      .agg(
-        min(expr("unix_micros(__v)")).as("first_view_us"),
-        min(expr("unix_micros(__c)")).as("first_click_us"),
-        min(expr("unix_micros(__p)")).as("first_purchase_us"))
-      .withColumn("funnel_stage",
-        when(col("first_purchase_us").isNotNull, 3)
-          .when(col("first_click_us").isNotNull, 2)
-          .when(col("first_view_us").isNotNull, 1)
-          .otherwise(0))
-  }
+  def userFunnel(events: DataFrame): DataFrame = ordered(events, None)
 
   /** Conversion-window funnel — [[userFunnel]] with a staleness bound per
     * hop: each stage's first qualifying timestamp must fall within
@@ -56,30 +34,53 @@ object Funnel {
     * Same single user_id exchange and O(1) running-minima window state;
     * the interval bound is a per-row comparison inside the same gate
     * predicate, so the plan shape is IDENTICAL to ev1's. */
-  def userFunnelWindowed(events: DataFrame, maxLagDays: Int = 7): DataFrame = {
+  def userFunnelWindowed(events: DataFrame, maxLagDays: Int = 7): DataFrame =
+    ordered(events, Some(expr(s"INTERVAL $maxLagDays DAYS")))
+
+  /** The one gate chain of both forms: each stage's first timestamp
+    * strictly after the previous stage's, and within `maxLag` of it when a
+    * bound is given. */
+  private def ordered(events: DataFrame, maxLag: Option[Column]): DataFrame = {
     val w = Window.partitionBy("user_id")
-    val lag = expr(s"INTERVAL $maxLagDays DAYS")
-    events
+    def reached(stage: String, prev: String): Column = {
+      val after = col("event_type") === stage && col("ts") > col(prev)
+      maxLag.fold(after)(bound => after && col("ts") <= col(prev) + bound)
+    }
+    withStage(events
       .select(col("user_id"), col("event_type"), col("ts"))
       .withColumn("__v",
         min(when(col("event_type") === "view", col("ts"))).over(w))
-      .withColumn("__c",
-        min(when(col("event_type") === "click" && col("ts") > col("__v") &&
-          col("ts") <= col("__v") + lag, col("ts"))).over(w))
-      .withColumn("__p",
-        min(when(col("event_type") === "purchase" && col("ts") > col("__c") &&
-          col("ts") <= col("__c") + lag, col("ts"))).over(w))
+      .withColumn("__c", min(when(reached("click", "__v"), col("ts"))).over(w))
+      .withColumn("__p", min(when(reached("purchase", "__c"), col("ts"))).over(w))
       .groupBy("user_id")
       .agg(
         min(expr("unix_micros(__v)")).as("first_view_us"),
         min(expr("unix_micros(__c)")).as("first_click_us"),
-        min(expr("unix_micros(__p)")).as("first_purchase_us"))
-      .withColumn("funnel_stage",
-        when(col("first_purchase_us").isNotNull, 3)
-          .when(col("first_click_us").isNotNull, 2)
-          .when(col("first_view_us").isNotNull, 1)
-          .otherwise(0))
+        min(expr("unix_micros(__p)")).as("first_purchase_us")))
   }
+
+  /** funnel_stage 0-3 from the three first-stage columns. */
+  private def withStage(df: DataFrame): DataFrame =
+    df.withColumn("funnel_stage",
+      when(col("first_purchase_us").isNotNull, 3)
+        .when(col("first_click_us").isNotNull, 2)
+        .when(col("first_view_us").isNotNull, 1)
+        .otherwise(0))
+
+  /** [[userFunnelSalted]] with the bucket count chosen by
+    * [[graft.ops.Skew.adaptiveSaltBuckets]] from a cheap per-user count
+    * pre-pass instead of a hand-tuned constant: a uniform event log picks
+    * 1 bucket (no salting overhead), a bot-dominated log picks enough
+    * buckets to bound any task at ~targetPerBucket of the hot user's
+    * events. Answer-invariant by construction — SkewSpec proves equality
+    * with [[userFunnel]] and with fixed-constant salting on both uniform
+    * and 98%-one-user fixtures. */
+  def userFunnelAdaptive(events: DataFrame,
+      targetPerBucket: Long = 1000000L,
+      broadcastGates: Boolean = true): DataFrame =
+    userFunnelSalted(events,
+      graft.ops.Skew.adaptiveSaltBuckets(events, "user_id", targetPerBucket),
+      broadcastGates)
 
   /** Skew-hardened twin of [[userFunnel]] for a dominant user (one bot
     * account = half the event log). The plain form windows over
@@ -108,21 +109,6 @@ object Funnel {
     * hot-user partition is the one case AQE skew-join splits handle
     * (only the salted AGGREGATES must avoid a bare user_id exchange; a
     * join probe against a 1-row-per-key build side is fine to split). */
-  /** [[userFunnelSalted]] with the bucket count chosen by
-    * [[graft.ops.Skew.adaptiveSaltBuckets]] from a cheap per-user count
-    * pre-pass instead of a hand-tuned constant: a uniform event log picks
-    * 1 bucket (no salting overhead), a bot-dominated log picks enough
-    * buckets to bound any task at ~targetPerBucket of the hot user's
-    * events. Answer-invariant by construction — SkewSpec proves equality
-    * with [[userFunnel]] and with fixed-constant salting on both uniform
-    * and 98%-one-user fixtures. */
-  def userFunnelAdaptive(events: DataFrame,
-      targetPerBucket: Long = 1000000L,
-      broadcastGates: Boolean = true): DataFrame =
-    userFunnelSalted(events,
-      graft.ops.Skew.adaptiveSaltBuckets(events, "user_id", targetPerBucket),
-      broadcastGates)
-
   def userFunnelSalted(events: DataFrame, saltBuckets: Int = 16,
       broadcastGates: Boolean = true): DataFrame = {
     def gate(df: DataFrame): DataFrame = if (broadcastGates) broadcast(df) else df
@@ -152,11 +138,6 @@ object Funnel {
         col("ts_us") > col("first_click_us"), col("ts_us"))).as("pp"))
       .groupBy("user_id").agg(min("pp").as("first_purchase_us"))
 
-    v.join(c, Seq("user_id"), "left").join(p, Seq("user_id"), "left")
-      .withColumn("funnel_stage",
-        when(col("first_purchase_us").isNotNull, 3)
-          .when(col("first_click_us").isNotNull, 2)
-          .when(col("first_view_us").isNotNull, 1)
-          .otherwise(0))
+    withStage(v.join(c, Seq("user_id"), "left").join(p, Seq("user_id"), "left"))
   }
 }

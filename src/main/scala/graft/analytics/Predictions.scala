@@ -1,8 +1,8 @@
 package graft.analytics
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ops.Derive.{bySymbolDate, bySymbolDateDesc}
 import graft.ops.Num.cround
 
 /** MA-crossover trading signals and rule-based next-day forecasts
@@ -15,9 +15,6 @@ import graft.ops.Num.cround
   */
 object Predictions {
 
-  private val wDesc = Window.partitionBy("symbol").orderBy(col("date").desc)
-  private val wAsc  = Window.partitionBy("symbol").orderBy(col("date"))
-
   /** W7/W8 + A7/A8 + X7: next-day forecast per symbol
     * (reference: src/predictions.py:6-110). Requires >= `minDays` rows per
     * symbol (reference uses 20). Output one row per eligible symbol, sorted
@@ -26,7 +23,7 @@ object Predictions {
   def nextDayForecast(features: DataFrame, minDays: Int = 20): DataFrame = {
     val ranked = features.select("symbol", "date", "close", "ma_5", "ma_20",
         "daily_change_percent")
-      .withColumn("__rn", row_number().over(wDesc))
+      .withColumn("__rn", row_number().over(bySymbolDateDesc))
 
     // Latest row (W7) + last-5-day stats (W8/A7/A8) + row count, one aggregate.
     val perSymbol = ranked.groupBy("symbol").agg(
@@ -85,15 +82,15 @@ object Predictions {
     val maxDate = features.agg(max(col("date")).as("__max_date"))
 
     val last10 = features.select("symbol", "date", "close", "ma_5", "ma_20")
-      .withColumn("__rn", row_number().over(wDesc))
+      .withColumn("__rn", row_number().over(bySymbolDateDesc))
       .filter(col("__rn") <= 10)
 
     val buy  = col("__prev_ma5") <= col("__prev_ma20") && col("ma_5") > col("ma_20")
     val sell = col("__prev_ma5") >= col("__prev_ma20") && col("ma_5") < col("ma_20")
 
     last10
-      .withColumn("__prev_ma5", lag("ma_5", 1).over(wAsc))
-      .withColumn("__prev_ma20", lag("ma_20", 1).over(wAsc))
+      .withColumn("__prev_ma5", lag("ma_5", 1).over(bySymbolDate))
+      .withColumn("__prev_ma20", lag("ma_20", 1).over(bySymbolDate))
       .filter(col("__prev_ma5").isNotNull)
       .withColumn("signal", when(buy, "BUY").when(sell, "SELL"))
       .filter(col("signal").isNotNull)

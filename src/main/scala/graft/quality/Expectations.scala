@@ -1,9 +1,9 @@
 package graft.quality
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+import graft.ops.Derive.bySymbolDate
 
 /** The reference's 13-item Great Expectations suite as Column-predicate
   * aggregates (reference: src/data_quality.py:8-128, operator A11).
@@ -93,9 +93,8 @@ object Expectations {
     * frame that already comes out of the per-symbol date-ordered windows
     * (Derive's) the lag needs no exchange or sort of its own. */
   def observe(df: DataFrame, extra: Column*): Observed = {
-    val w = Window.partitionBy("symbol").orderBy("date")
     val firstOfKey = col("symbol").isNotNull && col("date").isNotNull &&
-      !lag(col("date"), 1).over(w).eqNullSafe(col("date"))
+      !lag(col("date"), 1).over(bySymbolDate).eqNullSafe(col("date"))
     val cs = checks(df, count_if(col("__first_of_key")))
     val metrics = ratios(cs) ++ extra
     val observation = Observation()

@@ -1,7 +1,12 @@
 package graft
 
+import scala.util.Random
+
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.rng.Seed
+import org.scalacheck.util.Pretty
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.Derive
@@ -151,5 +156,70 @@ class DeriveSpec extends AnyFunSuite {
     assert(math.abs(last.getDouble(0)) < 1e-12)
     assert(math.abs(last.getDouble(1)) < 1e-12)
     assert(math.abs(last.getDouble(2)) < 1e-12)
+  }
+
+  /** Bars of 2-4 symbols in shuffled row order: a one-bar symbol, the rest
+    * 2-30 bars on gapped dates, about a fifth of closes repeating the
+    * previous one so flat days occur. (symbol, day, high, low, close). */
+  private val genBars: Gen[Seq[(String, Int, Double, Double, Double)]] = for {
+    symbols <- Gen.choose(2, 4)
+    seed <- Gen.long
+  } yield {
+    val rnd = new Random(seed)
+    val rows = (0 until symbols).flatMap { k =>
+      val n = if (k == 0) 1 else 2 + rnd.nextInt(29)
+      val days = (1 to n).scanLeft(0)((d, _) => d + 1 + rnd.nextInt(3)).tail
+      val closes = (1 until n).scanLeft(50.0 + rnd.nextInt(100))((c, _) =>
+        if (rnd.nextInt(5) == 0) c else c * (0.9 + rnd.nextDouble() * 0.2))
+      days.zip(closes).map { case (d, c) =>
+        (s"s$k", d, c + rnd.nextDouble() * 5, c - rnd.nextDouble() * 5, c)
+      }
+    }
+    rnd.shuffle(rows)
+  }
+
+  test("shared bar kernels equal a plain-Scala reference row by row; first bars per contract") {
+    import Derive._
+    val emaSpans = Seq((3, 3), (4, 6))
+    def reference(bars: Seq[(String, Int, Double, Double, Double)]) =
+      bars.groupBy(_._1).values.flatMap { series =>
+        val s = series.sortBy(_._2).toVector
+        s.indices.map { i =>
+          val (sym, day, high, low, close) = s(i)
+          val prev = if (i == 0) None else Some(s(i - 1)._5)
+          val chg = prev.map(close - _)
+          val firs = emaSpans.map { case (span, minRn) =>
+            val ws = graft.ops.Num.emaKernel(span)
+            if (i + 1 < minRn) None
+            else Some(ws.zipWithIndex.map { case (wj, j) => wj * s(i - j)._5 }
+              .reduce(_ + _) / ws.sum)
+          }
+          (sym, day) -> (Seq(chg, prev.map(close / _ - 1), prev.map(p => (close / p - 1) * 100),
+            prev.map(close > _), Some(chg.exists(_ > 0)), Some(chg.exists(_ < 0)),
+            Some(prev.fold(high - low)(p =>
+              Seq(high - low, math.abs(high - p), math.abs(low - p)).max))) ++ firs)
+        }
+      }.toMap
+
+    val prop = Prop.forAllNoShrink(genBars) { bars =>
+      val df = bars.map { case (sym, day, high, low, close) =>
+        (sym, java.sql.Date.valueOf(java.time.LocalDate.of(2024, 1, 1).plusDays(day.toLong)),
+          close, high, low, close, 1000L)
+      }.toDF("symbol", "date", "open", "high", "low", "close", "volume")
+      val got = df.withColumn("__rn", row_number().over(bySymbolDate))
+        .select(Seq(col("symbol"), datediff(col("date"), lit("2024-01-01")),
+          change(prevClose), ret(prevClose), pctChange(prevClose), up(prevClose),
+          positiveDay(change(prevClose)), negativeDay(change(prevClose)),
+          trueRange(prevClose)) ++ emaSpans.map { case (span, minRn) =>
+            fir(col("close"), span, minRn) }: _*)
+        .collect().map { r =>
+          (r.getString(0), r.getInt(1)) ->
+            (2 until r.length).map(i => Option(r.get(i))).toSeq
+        }.toMap
+      Prop(got == reference(bars)) :| s"bars=$bars"
+    }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(10)
+      .withWorkers(1).withInitialSeed(Seed(12L)), prop)
+    assert(res.passed, Pretty.pretty(res))
   }
 }

@@ -7,21 +7,34 @@ import org.scalatest.funsuite.AnyFunSuite
 class ProfileSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
-  test("back-to-back profiles: nothing leaks from the first into the second") {
-    // a slow listener holds back every later event on the shared bus, so
-    // only the drain, not the bus's speed, keeps the counts exact
+  /** Runs `f` with a slow listener on the shared bus: it holds back every
+    * later event, so only the markers, not the bus's speed, keep the
+    * counts exact. */
+  private def withSlowBus(f: => Unit): Unit = {
     val slow = new SparkListener {
       override def onJobEnd(e: SparkListenerJobEnd): Unit = Thread.sleep(1000)
     }
     spark.sparkContext.addSparkListener(slow)
-    try {
+    try f finally spark.sparkContext.removeSparkListener(slow)
+  }
+
+  test("back-to-back profiles: nothing leaks from the first into the second") {
+    withSlowBus {
       Profile.run(spark) {
         spark.range(100).repartition(2).localCheckpoint().count()
       }
       val r = Profile.run(spark)(spark.range(1).collect())
       assert(r.jobs == 1, s"expected 1 job, saw ${r.jobs}")
       assert(r.checkpoints == 0, s"expected no checkpoint, saw ${r.checkpoints}")
-    } finally spark.sparkContext.removeSparkListener(slow)
+    }
+  }
+
+  test("a checkpoint run before the profile is not counted, however late it is delivered") {
+    withSlowBus {
+      spark.range(100).repartition(2).localCheckpoint()
+      val r = Profile.run(spark)(spark.range(1).collect())
+      assert(r.checkpoints == 0, s"expected no checkpoint, saw ${r.checkpoints}")
+    }
   }
 
   test("a query with an exchange reports every stage's task spread") {

@@ -4,9 +4,10 @@
     python3 scripts/plandiff.py <dirA> <suffixA> <dirB> <suffixB>
 
 `graft.Profile` writes each query's plan to `<dir>/<query>_<suffix>.txt`.
-Two runs number expression ids (`name#123`), exchange `plan_id`s and RDD ids
-differently, so each is renumbered in order of first appearance before the
-compare: two plans are identical when they differ only in those numbers.
+Two runs number expression ids (`name#123`), exchange `plan_id`s, RDD ids and
+lambda variables (`lambda x_12`, from a JVM-wide counter) differently, so each
+is renumbered in order of first appearance before the compare: two plans are
+identical when they differ only in those numbers.
 Prints each query whose plan differs (or that only one side has), or
 "N identical"; exits 1 when any plan differs.
 """
@@ -15,14 +16,14 @@ import re
 import sys
 from pathlib import Path
 
-IDS = [(prefix, re.compile(re.escape(prefix) + r"(\d+)"))
-       for prefix in ("#", "plan_id=", "RDD[")]
+IDS = [re.compile(prefix + r"(\d+)")
+       for prefix in (r"(#)", r"(plan_id=)", r"(RDD\[)", r"(lambda [a-z]+_)")]
 
 
 def canonical(text):
-    for prefix, pat in IDS:
+    for pat in IDS:
         seen = {}
-        text = pat.sub(lambda m: prefix + seen.setdefault(m.group(1), str(len(seen))), text)
+        text = pat.sub(lambda m: m.group(1) + seen.setdefault(m.group(2), str(len(seen))), text)
     return text.splitlines()
 
 

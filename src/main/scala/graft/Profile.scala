@@ -7,7 +7,7 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -15,10 +15,10 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * executions it ran, and how its task time spread over each stage.
   *
   * `sbt "runMain graft.Profile <sfDir> <outDir> <suffix> <q1,q2,...>"`
-  * writes each query's formatted physical plan to
-  * `<outDir>/<query>_<suffix>.txt`, then runs the query into the `noop`
-  * sink under [[run]] and prints one line per stage plus the query's
-  * totals. A stage's max/median task time above ~4 on a stage of 4 or
+  * runs each query into the `noop` sink under [[run]], writes the
+  * formatted physical plan of the frame it ran to
+  * `<outDir>/<query>_<suffix>.txt` and prints one line per stage plus the
+  * query's totals. A stage's max/median task time above ~4 on a stage of 4 or
   * more tasks is the straggler signature. Not part of the driver
   * contract. */
 object Profile {
@@ -113,13 +113,16 @@ object Profile {
     val spark = SparkEntry.localSession()
     val outDir = Files.createDirectories(Paths.get(out))
     queries.foreach { case (name, fn) =>
-      val plan = fn(spark, sfDir).queryExecution.explainString(FormattedMode)
+      // built once, inside run: building runs the query's eager checkpoints
+      var df: DataFrame = null
+      spark.sparkContext.setJobDescription(name)
+      val r = try run(spark) {
+          df = fn(spark, sfDir)
+          df.write.format("noop").mode("overwrite").save()
+        } finally spark.sparkContext.setJobDescription(null)
+      val plan = df.queryExecution.explainString(FormattedMode)
       Files.writeString(outDir.resolve(s"${name}_$suffix.txt"), plan)
       println(s"[profile] wrote ${name}_$suffix.txt (${plan.length} chars)")
-
-      spark.sparkContext.setJobDescription(name)
-      val r = try run(spark)(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
-        finally spark.sparkContext.setJobDescription(null)
       r.stages.foreach { s =>
         println(f"[profile] stage=${s.id}%-5d tasks=${s.tasks}%-5d med=${s.medianMs}ms max=${s.maxMs}ms ratio=${s.ratio}%.1f")
       }

@@ -9,7 +9,7 @@ import graft.model.Schemas
 import graft.ops.{Cleaning, Derive, Materialize, Num, TemporalJoins}
 import graft.ops.Derive.{bySymbol, bySymbolDateDesc, change, fir, negativeDay, pctChange,
   positiveDay, prevClose, ret, trueRange}
-import graft.analytics.{Funnel, Performance, Predictions, Summary}
+import graft.analytics.{Events, Funnel, Performance, Predictions, Summary}
 
 /** Named correctness queries over the driver test corpus, one per operator in
   * SURVEY §2. Every query ends in a total deterministic ORDER BY, and every
@@ -1012,38 +1012,14 @@ object Queries {
 
   // ===== streaming-shaped (tumbling window over events) ====================
 
-  /** Gaps-and-islands session labelling, the one copy behind st2, ev7,
-    * ev17 and ev19: per user in (ts, event_id) order, an event opens a
-    * new session when it is the user's first or follows a > 1800 s
-    * silence, and `session_seq` is the running count of openings. Adds
-    * `prev_ts`, `new_session` and `session_seq`; both windows share the
-    * one user_id partitioning. */
-  private def sessionized(events: DataFrame): DataFrame = {
-    val byUser = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    events
-      .withColumn("prev_ts", lag("ts", 1).over(byUser))
-      .withColumn("new_session",
-        when(col("prev_ts").isNull ||
-          col("ts").cast("long") - col("prev_ts").cast("long") > 1800, 1L)
-          .otherwise(0L))
-      .withColumn("session_seq", sum("new_session").over(
-        byUser.rowsBetween(Window.unboundedPreceding, 0)))
-  }
-
   /** Sessionization (gaps-and-islands): a new session starts after a
-    * > 30 min silence per user. The batch-declarative twin of
-    * session_window — same semantics, oracle-checkable. */
-  def st2Sessionize(s: SparkSession, dir: String): DataFrame = {
-    val sessions = sessionized(Sources.events(s, dir))
-    rounded(sessions.groupBy("user_id", "session_seq")
-      .agg(
-        count(lit(1)).as("n_events"),
-        date_format(min("ts"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
-        (max(col("ts").cast("long")) - min(col("ts").cast("long"))).as("duration_sec"),
-        sum("value").as("total_value")),
+    * > 30 min silence per user ([[Events.sessions]]). The
+    * batch-declarative twin of session_window — same semantics,
+    * oracle-checkable. */
+  def st2Sessionize(s: SparkSession, dir: String): DataFrame =
+    rounded(Events.sessions(Sources.events(s, dir)).drop("day"),
       Seq("total_value"), 2)
       .orderBy("user_id", "session_seq")
-  }
 
   /** Top session event-paths — discovery-mode funnel mining (which
     * journeys actually happen, before ev1 asks about a PRESCRIBED one):
@@ -1058,7 +1034,7 @@ object Queries {
     * table is tiny (distinct truncated paths); top-20 is
     * TakeOrderedAndProject. */
   def ev7SessionPaths(s: SparkSession, dir: String): DataFrame = {
-    val sessions = sessionized(Sources.events(s, dir))
+    val sessions = Events.sessionized(Sources.events(s, dir))
     val rnW = Window.partitionBy("user_id", "session_seq")
       .orderBy("ts", "event_id")
     val first8 = sessions
@@ -1109,15 +1085,8 @@ object Queries {
     * cross-engine summation-order ulp can never flip a quintile
     * boundary; displayed monetary rounds at 2. */
   def ev10Rfm(s: SparkSession, dir: String): DataFrame = {
-    val p = Sources.events(s, dir).filter(col("event_type") === "purchase")
-    val mx = p.agg(max(date_trunc("day", col("ts")).cast("date")).as("__mx"))
-    val rfm = p.groupBy("user_id")
-      .agg(max(date_trunc("day", col("ts")).cast("date")).as("__last"),
-        count(lit(1)).as("frequency"),
-        sum("value").as("__mraw"))
-      .crossJoin(broadcast(mx))
-      .withColumn("recency_days", datediff(col("__mx"), col("__last")))
-      .withColumn("__m6", Num.cround(col("__mraw"), 6))
+    val rfm = Events.rfm(Sources.events(s, dir))
+      .withColumn("__m6", Num.cround(col("value_sum"), 6))
     val r5 = ntile(5).over(Window.orderBy(col("recency_days").desc, col("user_id")))
     val f5 = ntile(5).over(Window.orderBy(col("frequency"), col("user_id")))
     val m5 = ntile(5).over(Window.orderBy(col("__m6"), col("user_id")))
@@ -1126,7 +1095,7 @@ object Queries {
       .withColumn("f_score", f5)
       .withColumn("m_score", m5)
       .select(col("user_id"), col("recency_days"), col("frequency"),
-        Num.cround(col("__mraw"), 2).as("monetary"),
+        Num.cround(col("value_sum"), 2).as("monetary"),
         col("r_score"), col("f_score"), col("m_score"),
         when(col("r_score") >= 4 && col("f_score") >= 4, "champions")
           .when(col("f_score") >= 4, "loyal")
@@ -1190,8 +1159,7 @@ object Queries {
     val conv = analytics.Funnel.userFunnel(Sources.events(s, dir))
       .filter(col("funnel_stage") === 3)
       .select(
-        date_trunc("week", timestamp_micros(col("first_view_us")))
-          .cast("date").as("cohort_week"),
+        Events.week(timestamp_micros(col("first_view_us"))).as("cohort_week"),
         ((col("first_purchase_us") - col("first_view_us")) / lit(1e6))
           .as("latency_sec"))
     conv.groupBy("cohort_week")
@@ -1213,13 +1181,14 @@ object Queries {
     * form is a constant stack — nothing after the funnel's one user_id
     * exchange scales with events. Ratios round tie-safe at 6 (exact
     * integer divisions); a zero-user previous stage yields NULL
-    * conversion on both engines (0/0 guarded to null). */
+    * conversion on both engines (0/0 guarded to null); stage counts are
+    * `count`s, so no events read 0 users (the oracle's), not NULL. */
   def ev13FunnelSummary(s: SparkSession, dir: String): DataFrame = {
     val f = analytics.Funnel.userFunnel(Sources.events(s, dir))
       .agg(
-        sum(when(col("funnel_stage") >= 1, 1L).otherwise(0L)).as("s1"),
-        sum(when(col("funnel_stage") >= 2, 1L).otherwise(0L)).as("s2"),
-        sum(when(col("funnel_stage") >= 3, 1L).otherwise(0L)).as("s3"))
+        count(when(col("funnel_stage") >= 1, 1L)).as("s1"),
+        count(when(col("funnel_stage") >= 2, 1L)).as("s2"),
+        count(when(col("funnel_stage") >= 3, 1L)).as("s3"))
     val stages = f.selectExpr(
       "stack(3, 1, 'view', s1, s1, 2, 'click', s2, s1, 3, 'purchase', s3, s2) " +
         "as (stage, step, n_reached, prev)")
@@ -2565,13 +2534,8 @@ object Queries {
     * the per-day report is exact-integer division (round 6 is exact). The
     * tail is [[graft.streaming.StreamingBounce.fromSessions]] — the same
     * fold the session_window stream twin runs. */
-  def ev17BounceRate(s: SparkSession, dir: String): DataFrame = {
-    val sessions = sessionized(Sources.events(s, dir))
-      .groupBy("user_id", "session_seq")
-      .agg(count(lit(1)).as("n_events"),
-        date_trunc("day", min(col("ts"))).cast("date").as("day"))
-    streaming.StreamingBounce.fromSessions(sessions)
-  }
+  def ev17BounceRate(s: SparkSession, dir: String): DataFrame =
+    streaming.StreamingBounce.fromSessions(Events.sessions(Sources.events(s, dir)))
 
   /** Weekly-cohort revenue triangle — users cohorted by their first event
     * week, purchase value summed per (cohort_week, week_index): the LTV
@@ -2584,12 +2548,11 @@ object Queries {
   def ev18CohortValue(s: SparkSession, dir: String): DataFrame = {
     val ev = Sources.events(s, dir)
     val cohort = ev.groupBy("user_id")
-      .agg(date_trunc("week", min(col("ts"))).cast("date").as("cohort_week"))
+      .agg(Events.week(min(col("ts"))).as("cohort_week"))
     val p = ev.filter(col("event_type") === "purchase")
       .join(cohort, "user_id")
       .withColumn("week_index",
-        (datediff(date_trunc("week", col("ts")).cast("date"),
-          col("cohort_week")) / 7).cast("int"))
+        Events.weekIndex(Events.week(col("ts")), col("cohort_week")))
     p.groupBy("cohort_week", "week_index")
       .agg(count(lit(1)).as("n_purchases"),
         countDistinct(col("user_id")).as("n_buyers"),
@@ -2686,14 +2649,9 @@ object Queries {
     * ev7's 30-minute-gap sessions. Durations are exact integer seconds
     * (floor-epoch diffs), percentiles are the a5-proven exact
     * `percentile` == `quantile_cont` contract, the mean rounds at 2. */
-  def ev19SessionDuration(s: SparkSession, dir: String): DataFrame = {
-    val sess = sessionized(Sources.events(s, dir))
-      .groupBy("user_id", "session_seq")
-      .agg(date_trunc("day", min(col("ts"))).cast("date").as("day"),
-        (max(col("ts").cast("long")) - min(col("ts").cast("long")))
-          .as("duration_sec"))
-    streaming.StreamingBounce.fromSessionDurations(sess)
-  }
+  def ev19SessionDuration(s: SparkSession, dir: String): DataFrame =
+    streaming.StreamingBounce.fromSessionDurations(
+      Events.sessions(Sources.events(s, dir)))
 
   /** PageRank over the synthetic host link graph (damping 0.85, 10 power
     * iterations) — the graph-analytics companion to d6's label
@@ -2773,8 +2731,7 @@ object Queries {
     * ADVICE), so the var_samp gate maps both engines to NULL. */
   def a22OlsTrend(s: SparkSession, dir: String): DataFrame = {
     val d = bars(s, dir)
-      .withColumn("x",
-        datediff(col("date"), to_date(lit("1970-01-01"))).cast("double"))
+      .withColumn("x", Events.epochDay(col("date")).cast("double"))
     val slope = covar_samp(col("x"), col("close")) / var_samp(col("x"))
     rounded(rounded(d.groupBy("symbol")
       .agg(count(lit(1)).as("n_days"),
@@ -2898,14 +2855,10 @@ object Queries {
     * scaladoc for the shape and cross-engine argument). The fixture's
     * kernel is proper (every observed state has outgoing transitions),
     * so mass is conserved without a dangling term. */
-  def ev20MarkovStationary(s: SparkSession, dir: String): DataFrame = {
-    val byUser = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    val counts = Sources.events(s, dir)
-      .withColumn("prev_type", lag("event_type", 1).over(byUser))
-      .filter(col("prev_type").isNotNull)
-      .groupBy("prev_type", "event_type").agg(count(lit(1)).as("n"))
-    analytics.Transitions.stationaryDistribution(counts)
-  }
+  def ev20MarkovStationary(s: SparkSession, dir: String): DataFrame =
+    analytics.Transitions.stationaryDistribution(
+      Events.transitionCounts(Sources.events(s, dir))
+        .filter(col("prev_type").isNotNull))
 
   /** Weekly OHLC resample — the classic bar-downsampling transform (daily
     * -> weekly candles): first open / max high / min low / last close per
@@ -2938,20 +2891,9 @@ object Queries {
   def g2Triangles(s: SparkSession, dir: String): DataFrame = {
     // two link targets per doc (affine + quadratic residue): g1's single
     // functional target yields a triangle-free cycle — this graph has 23
-    // undirected edges and exactly 4 triangles over the 13 hosts.
-    // residue reduces mod 13 BEFORE squaring (overflow-free at any
-    // doc_id; identical mod 13 — the StreamingGraph.toHitsEdgeEvents
-    // contract, both engines)
-    val links = Sources.documents(s, dir)
-      .select(col("doc_id"), explode(array(
-        (col("doc_id") * 7 + 3) % 13,
-        ((col("doc_id") % 13) * (col("doc_id") % 13) + 1) % 13)).as("dk"))
-      .select(
-        concat(lit("h"), (col("doc_id") % 13).cast("string"),
-          lit(".example.com")).as("src"),
-        concat(lit("h"), col("dk").cast("string"),
-          lit(".example.com")).as("dst"))
-      .filter(col("src") =!= col("dst"))
+    // undirected edges and exactly 4 triangles over the 13 hosts. It is
+    // g4's edge projection.
+    val links = streaming.StreamingGraph.toHitsEdgeEvents(Sources.documents(s, dir))
     val und = Materialize(links.select(
         least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
@@ -3101,15 +3043,11 @@ object Queries {
     * same-instant rows tie-broken by event_id); percentile ==
     * quantile_cont (the a5 contract), rounded 6, mean rounded 2. */
   def ev22Interarrival(s: SparkSession, dir: String): DataFrame = {
-    val byUt = Window.partitionBy("user_id", "event_type")
-      .orderBy("ts", "event_id")
     val gaps = Sources.events(s, dir)
-      .withColumn("prev_ts", lag("ts", 1).over(byUt))
+      .withColumn("prev_ts", lag("ts", 1).over(Events.byUserType))
       .filter(col("prev_ts").isNotNull)
-      .select(col("event_type"),
-        (col("ts").cast("long") - col("prev_ts").cast("long")).as("gap_sec"))
-    streaming.StreamingInterarrival.fold(
-      gaps.groupBy("event_type", "gap_sec").agg(count(lit(1)).as("n")))
+      .select(col("event_type"), Events.gapSec(col("prev_ts")).as("gap_sec"))
+    streaming.StreamingInterarrival.fold(Events.gapHistogram(gaps))
   }
 
   /** Cross-table fuzzy record linkage — entity resolution between the

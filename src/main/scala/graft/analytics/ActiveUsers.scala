@@ -33,10 +33,7 @@ object ActiveUsers {
 
   def rollingActive(events: DataFrame, windowDays: Int = 7): DataFrame = {
     require(windowDays >= 1, "windowDays must be >= 1")
-    val daily = events
-      .select(col("user_id"),
-        date_trunc("day", col("ts")).cast("date").as("day"))
-      .distinct()
+    val daily = Events.userDays(events)
     val maxDay = daily.agg(max("day").as("__max_day"))
     val contributions = daily
       .crossJoin(broadcast(maxDay))
@@ -67,15 +64,12 @@ object ActiveUsers {
     * stickiness its exact-integer ratio — both engines compute the same
     * IEEE divisions; rounded tie-safe anyway (2 / 6, the house scales). */
   def weeklyStickiness(events: DataFrame): DataFrame = {
-    val daily = events
-      .select(col("user_id"),
-        date_trunc("day", col("ts")).cast("date").as("day"))
-      .distinct()
+    val daily = Events.userDays(events)
     val dau = daily.groupBy("day").agg(count(lit(1)).as("dau"))
-      .groupBy(date_trunc("week", col("day")).cast("date").as("wk"))
+      .groupBy(Events.week(col("day")).as("wk"))
       .agg(count(lit(1)).as("n_days"), avg("dau").as("avg_dau"))
     val wau = daily
-      .groupBy(date_trunc("week", col("day")).cast("date").as("wk"))
+      .groupBy(Events.week(col("day")).as("wk"))
       .agg(countDistinct(col("user_id")).as("wau"))
     dau.join(wau, "wk")
       .select(col("wk"), col("n_days"), col("wau"),

@@ -42,11 +42,8 @@ object Graph {
     val ew = Materialize(edges.join(outCnt, "src")
       .select(col("src"), col("dst"),
         (col("cnt").cast("double") / col("out_cnt")).as("w")))
-    val nodes = Materialize(edges.select(col("src").as("host"))
-      .union(edges.select(col("dst"))).distinct())
-    val nn = nodes.agg(count(lit(1)).as("__n"))
-    var rank = nodes.crossJoin(broadcast(nn))
-      .select(col("host"), (lit(1.0) / col("__n")).as("r"))
+    val (nodes, nn, start) = nodeSet(edges, "r")
+    var rank = start
     // broadcast the vector into each step: the per-iteration cost is pure
     // stage overhead on constant-size frames — a shuffle join would double
     // the stages for node-count-sized inputs
@@ -71,6 +68,16 @@ object Graph {
         coalesce(col("in_links"), lit(0L)).as("in_links"),
         coalesce(col("out_links"), lit(0L)).as("out_links"))
       .orderBy("host")
+  }
+
+  /** The materialized node set `host` of an edge table, its size `__n`,
+    * and the uniform start vector (host, `score`), which sums to 1. */
+  private def nodeSet(edges: DataFrame, score: String): (DataFrame, DataFrame, DataFrame) = {
+    val nodes = Materialize(edges.select(col("src").as("host"))
+      .union(edges.select(col("dst"))).distinct())
+    val nn = nodes.agg(count(lit(1)).as("__n"))
+    (nodes, nn, nodes.crossJoin(broadcast(nn))
+      .select(col("host"), (lit(1.0) / col("__n")).as(score)))
   }
 
   /** Connected components over an edge list, by iterative min-label
@@ -141,12 +148,8 @@ object Graph {
     val edges = Materialize(
       links.select(col("src"), col("dst"))
         .filter(col("src") =!= col("dst")).distinct())
-    val nodes = Materialize(edges.select(col("src").as("host"))
-      .union(edges.select(col("dst"))).distinct())
-    val nn = nodes.agg(count(lit(1)).as("__n"))
-    // uniform init over the node set: h0 sums to 1 by construction
-    var hub = nodes.crossJoin(broadcast(nn))
-      .select(col("host"), (lit(1.0) / col("__n")).as("h"))
+    val (nodes, _, start) = nodeSet(edges, "h")
+    var hub = start
     var auth: DataFrame = null
     // global window over the BOUNDED node frame, so normalization
     // references its input exactly once — a total-aggregate cross join

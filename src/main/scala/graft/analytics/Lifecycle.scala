@@ -29,7 +29,7 @@ object Lifecycle {
   def growthAccounting(events: DataFrame): DataFrame = {
     val byUser = Window.partitionBy("user_id").orderBy("week")
     val st = events
-      .select(col("user_id"), date_trunc("week", col("ts")).cast("date").as("week"))
+      .select(col("user_id"), Events.week(col("ts")).as("week"))
       .distinct()
       .withColumn("prev_week", lag("week", 1).over(byUser))
       .withColumn("next_week", lead("week", 1).over(byUser))

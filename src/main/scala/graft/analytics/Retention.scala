@@ -37,14 +37,13 @@ object Retention {
 
   def cohortRetention(events: DataFrame): DataFrame = {
     val perUser = events
-      .select(col("user_id"), date_trunc("week", col("ts")).cast("date").as("week"))
+      .select(col("user_id"), Events.week(col("ts")).as("week"))
       .groupBy("user_id")
       .agg(min(col("week")).as("cohort_week"),
         collect_set(col("week")).as("weeks"))
     val counts = perUser
       .select(col("cohort_week"), explode(col("weeks")).as("week"))
-      .withColumn("week_offset",
-        (datediff(col("week"), col("cohort_week")) / 7).cast("int"))
+      .withColumn("week_offset", Events.weekIndex(col("week"), col("cohort_week")))
       .groupBy("cohort_week", "week_offset")
       .agg(count(lit(1)).as("n_users"))
     val byCohort = Window.partitionBy("cohort_week")

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.ops.{Materialize, Num}
 
 /** Learned RFM segmentation — ev10's recency/frequency/monetary features
-  * (same purchase-only base, same date conventions) segmented by an
+  * (the one purchase-only [[Events.rfm]] aggregate) segmented by an
   * EMBEDDED k-means training loop instead of rule buckets: the second
   * consumer of the engine's "model training as relational dataflow" path
   * (sim21's PQ codebook was the first), lifted from embedding subvectors
@@ -45,16 +45,9 @@ object Segments {
   def rfmSegments(events: DataFrame, k: Int = 4, iters: Int = 3): DataFrame = {
     require(k >= 1 && iters >= 1, "k and iters must be >= 1")
     val spark = events.sparkSession
-    val p = events.filter(col("event_type") === "purchase")
-    val mx = p.agg(max(date_trunc("day", col("ts")).cast("date")).as("mxd"))
-    val rfm = p.groupBy("user_id")
-      .agg(max(date_trunc("day", col("ts")).cast("date")).as("last_d"),
-        count(lit(1)).as("frequency"),
-        Num.cround(sum("value"), 6).as("monetary"))
-      .crossJoin(broadcast(mx))
-      .withColumn("recency",
-        datediff(col("mxd"), col("last_d")).cast("double"))
-      .select("user_id", "recency", "frequency", "monetary")
+    val rfm = Events.rfm(events)
+      .select(col("user_id"), col("recency_days").cast("double").as("recency"),
+        col("frequency"), Num.cround(col("value_sum"), 6).as("monetary"))
     val stats = rfm.agg(
       min("recency").as("rmn"), max("recency").as("rmx"),
       min("frequency").as("fmn"), max("frequency").as("fmx"),

@@ -17,8 +17,8 @@ import graft.ops.{Materialize, Num}
   *
   * Scale design (events is the 100 TB side):
   *   1. ONE user-keyed window pass computes each event's predecessor
-  *      (lag over (ts, event_id) — event_id is the deterministic
-  *      tiebreak for same-instant events, the [[Funnel]] convention).
+  *      ([[Events.transitionCounts]]: lag over [[Events.byUser]] — event_id
+  *      is the deterministic tiebreak for same-instant events).
   *      Per-user daily event streams are thousands of rows per key at
   *      most, so the per-partition sort is memory-resident; a dominant
   *      user degrades this window the same way it does ev1's, and the
@@ -36,12 +36,9 @@ import graft.ops.{Materialize, Num}
 object Transitions {
 
   def eventTransitions(events: DataFrame): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-    val counts = events
-      .withColumn("prev_type", lag("event_type", 1).over(w))
+    val counts = Events.transitionCounts(events)
       .filter(col("prev_type").isNotNull)
-      .groupBy("prev_type", "event_type")
-      .agg(count(lit(1)).as("n_transitions"))
+      .withColumnRenamed("n", "n_transitions")
     val wState = Window.partitionBy("prev_type")
     counts
       .withColumn("n_from_state", sum("n_transitions").over(wState))
@@ -108,20 +105,16 @@ object Transitions {
     * solve would need data-dependent convergence depth that no round-12
     * lockstep can pin.
     *
-    * Scale shape: ONE user-keyed window pass reduces the corpus to the
-    * (prev_type, event_type) count table WITH prev_type = NULL rows
-    * carrying the first-event (start) distribution — materialized once so
-    * the transition and start slices don't recompute the window — plus one
-    * plain per-type count (the drop-out denominators). Everything after
-    * is the ev20 in-row pattern: the bounded scenario × state absorption
-    * matrix iterates inside chained higher-order projections, one row,
-    * one stage. Round-12 lockstep per iteration; the report rounds at 6. */
+    * Scale shape: the corpus reduces to [[Events.transitionCounts]], start
+    * rows included — materialized once so the transition and start slices
+    * don't recompute the window — plus one plain per-type count (the
+    * drop-out denominators). Everything after is the ev20 in-row pattern:
+    * the bounded scenario × state absorption matrix iterates inside
+    * chained higher-order projections, one row, one stage. Round-12
+    * lockstep per iteration; the report rounds at 6. */
   def removalAttribution(events: DataFrame, convState: String = "purchase",
                          horizon: Int = 20): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-    val seqAll = Materialize(events
-      .withColumn("prev_type", lag("event_type", 1).over(w))
-      .groupBy("prev_type", "event_type").agg(count(lit(1)).as("n")))
+    val seqAll = Materialize(Events.transitionCounts(events))
     removalAttributionFromFacts(
       seqAll.filter(col("prev_type").isNotNull),
       events.groupBy("event_type").agg(count(lit(1)).as("n_events")),

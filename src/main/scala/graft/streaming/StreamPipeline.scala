@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.analytics.Events
+
 /** Structured Streaming shape of the engine (SURVEY §2.8): the reference's
   * daily re-run batch is a degenerate micro-batch, so the streaming pipeline
   * is the same declarative plan on readStream:
@@ -89,21 +91,15 @@ object StreamPipeline {
     * microsecond timestamps, asserted by StreamingSpec).
     *
     * One row per session: (user_id, session_start, day, n_events,
-    * duration_sec, total_value). `day` is the session's start date, the
-    * key of the ev17/ev19 per-day folds ([[StreamingBounce]]); duration
-    * is in the same floor-epoch integer seconds as the batch
-    * gaps-and-islands head. */
+    * duration_sec, total_value), the batch [[Events.sessions]] table's
+    * aggregates ([[Events.sessionColumns]]). `day` is the session's start
+    * date, the key of the ev17/ev19 per-day folds ([[StreamingBounce]]). */
   def userSessions(events: DataFrame, gap: String = "30 minutes",
                    watermark: String = "2 hours"): DataFrame =
     events
       .withWatermark("ts", watermark)
       .groupBy(session_window(col("ts"), gap), col("user_id"))
-      .agg(count(lit(1)).as("n_events"),
-        date_format(min("ts"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
-        date_trunc("day", min(col("ts"))).cast("date").as("day"),
-        (max(col("ts").cast("long")) - min(col("ts").cast("long")))
-          .as("duration_sec"),
-        sum("value").as("total_value"))
+      .agg(Events.sessionColumns.head, Events.sessionColumns.tail: _*)
       .select(col("user_id"), col("session_start"), col("day"),
         col("n_events"), col("duration_sec"), col("total_value"))
 

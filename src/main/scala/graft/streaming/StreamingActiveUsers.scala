@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.GroupStateTimeout
 
+import graft.analytics.Events
+
 /** Streaming twin of the per-user activity kernels — a live growth
   * dashboard folds each micro-batch into per-user state instead of
   * re-scanning the event log, and one state serves three batch reports:
@@ -51,9 +53,7 @@ object StreamingActiveUsers {
   def toActiveEvents(spark: SparkSession, events: DataFrame): Dataset[AEvent] = {
     import spark.implicits._
     val ev = graft.io.Sources.normalizeEventTs(events)
-    ev.select(col("user_id"),
-        datediff(date_trunc("day", col("ts")).cast("date"),
-          to_date(lit("1970-01-01"))).cast("int").as("day"))
+    ev.select(col("user_id"), Events.epochDay(Events.day(col("ts"))).as("day"))
       .as[AEvent]
   }
 
@@ -70,6 +70,5 @@ object StreamingActiveUsers {
   def activity(latest: DataFrame): DataFrame =
     latest.select(col("user_id"), explode(col("day_set")).as("__d"))
       .select(col("user_id"),
-        date_add(to_date(lit("1970-01-01")), col("__d")).cast("timestamp")
-          .as("ts"))
+        Events.fromEpochDay(col("__d")).cast("timestamp").as("ts"))
 }

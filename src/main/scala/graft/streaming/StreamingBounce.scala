@@ -9,16 +9,11 @@ import org.apache.spark.sql.functions._
   * [[StreamPipeline.userSessions]]: per-user sessions merge in the state
   * store and EVICT once the watermark passes their close — the property
   * that keeps an unbounded deployment alive. The batch head is the
-  * gaps-and-islands form (oracle-checked as ev17_bounce_rate); both heads
-  * produce the same (user_id, day, n_events, duration_sec) session
-  * columns, and [[fromSessions]] and [[fromSessionDurations]] are the ONE
-  * shared folds both twins run, so stream==batch is literal code sharing
-  * past the session step.
-  *
-  * Boundary contract inherited from st2: gaps-and-islands keeps an exactly-
-  * 1800 s gap in one session (`> 1800` splits), session_window's half-open
-  * merge splits it — equal only when no consecutive pair lands exactly
-  * 1800 s apart (asserted against the fixture by StreamingSpec).
+  * gaps-and-islands `Events.sessions` (oracle-checked as
+  * ev17_bounce_rate); both heads aggregate the same session columns, and
+  * [[fromSessions]] and [[fromSessionDurations]] are the ONE shared folds
+  * both twins run, so stream==batch is literal code sharing past the
+  * session step (boundary contract: [[StreamPipeline.userSessions]]).
   */
 object StreamingBounce {
 

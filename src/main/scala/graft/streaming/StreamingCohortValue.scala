@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
+import graft.analytics.Events
+
 /** Streaming twin of the ev18 weekly-cohort revenue triangle — with this,
   * every event-analytics operator in the engine keeps a stream==batch
   * proof. A live LTV dashboard folds each micro-batch into per-user state
@@ -62,9 +64,7 @@ object StreamingCohortValue {
   def toCohortEvents(spark: SparkSession, events: DataFrame): Dataset[CEvent] = {
     import spark.implicits._
     val ev = graft.io.Sources.normalizeEventTs(events)
-    ev.select(col("user_id"),
-        datediff(date_trunc("day", col("ts")).cast("date"),
-          to_date(lit("1970-01-01"))).cast("int").as("day"),
+    ev.select(col("user_id"), Events.epochDay(Events.day(col("ts"))).as("day"),
         (col("event_type") === "purchase").as("is_purchase"),
         coalesce((graft.ops.Num.cround(col("value"), 6).cast("decimal(38,6)")
           * 1000000).cast("long"), lit(0L)).as("value_micros"))
@@ -84,18 +84,15 @@ object StreamingCohortValue {
     * Week truncation and the /7 index use the identical expressions the
     * batch query compiles. */
   def fromSnapshots(latest: DataFrame): DataFrame = {
-    val epoch = to_date(lit("1970-01-01"))
     val cells = latest
       .select(col("user_id"), col("min_day"), explode(col("cells")).as("c"))
       .select(col("user_id"),
-        date_trunc("week", date_add(epoch, col("min_day")))
-          .cast("date").as("cohort_week"),
-        date_trunc("week", date_add(epoch, col("c.day")))
-          .cast("date").as("purchase_week"),
+        Events.week(Events.fromEpochDay(col("min_day"))).as("cohort_week"),
+        Events.week(Events.fromEpochDay(col("c.day"))).as("purchase_week"),
         col("c.n").as("n"), col("c.micros").as("micros"))
     cells
       .withColumn("week_index",
-        (datediff(col("purchase_week"), col("cohort_week")) / 7).cast("int"))
+        Events.weekIndex(col("purchase_week"), col("cohort_week")))
       .groupBy("cohort_week", "week_index")
       .agg(sum(col("n")).as("n_purchases"),
         countDistinct(col("user_id")).as("n_buyers"),

@@ -1,9 +1,9 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.analytics.Events
 import graft.ops.{Materialize, Num}
 
 /** Streaming twin of the ev22 inter-arrival cadence report.
@@ -32,18 +32,15 @@ object StreamingInterarrival {
     * last_ts to its first in-batch event. Returns (gap rows, updated
     * last-seen); both are materialized so per-batch lineage stays flat. */
   def batchGaps(batch: DataFrame, lastSeen: DataFrame): (DataFrame, DataFrame) = {
-    val byKey = Window.partitionBy("user_id", "event_type")
-      .orderBy("ts", "event_id")
     val withPrev = batch
       .select(col("user_id"), col("event_type"), col("ts"), col("event_id"))
-      .withColumn("prev_in_batch", lag("ts", 1).over(byKey))
+      .withColumn("prev_in_batch", lag("ts", 1).over(Events.byUserType))
       .join(lastSeen.withColumnRenamed("last_ts", "prev_carried"),
         Seq("user_id", "event_type"), "left")
       .withColumn("prev_ts",
         coalesce(col("prev_in_batch"), col("prev_carried")))
     val gaps = Materialize(withPrev.filter(col("prev_ts").isNotNull)
-      .select(col("event_type"),
-        (col("ts").cast("long") - col("prev_ts").cast("long")).as("gap_sec")))
+      .select(col("event_type"), Events.gapSec(col("prev_ts")).as("gap_sec")))
     // max-merge makes ONLY the last-seen frame idempotent under a no-op
     // batch replay; the histogram side (mergeHist) is add-only, so a
     // replayed batch would double-count its gaps AND recompute boundary
@@ -63,7 +60,7 @@ object StreamingInterarrival {
     * update-mode aggregation would keep. */
   def mergeHist(hist: DataFrame, gaps: DataFrame): DataFrame =
     Materialize(
-      gaps.groupBy("event_type", "gap_sec").agg(count(lit(1)).as("n"))
+      Events.gapHistogram(gaps)
         .union(hist)
         .groupBy("event_type", "gap_sec").agg(sum("n").as("n")))
 

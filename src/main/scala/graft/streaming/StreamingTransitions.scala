@@ -8,7 +8,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * (prev_type -> event_type) transition fact as it happens, carrying only
   * each user's LAST event as `flatMapGroupsWithState` state. A user's
   * first event emits a start fact (prev_type NULL), the start row of
-  * `Transitions.removalAttribution`'s count table, so one fact stream
+  * the batch `Events.transitionCounts` table, so one fact stream
   * feeds ev6 (non-NULL pairs), ev20 (their counts) and ev23 (pairs, starts
   * and per-type totals: every event is the `event_type` of exactly one
   * fact).
@@ -16,7 +16,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * State per user is one (ts_us, event_id, event_type) triple — O(1),
   * independent of history length, the same state-store footprint argument
   * as [[StreamingFunnel]]. Each micro-batch folds its events in
-  * (ts, event_id) order (the batch operator's exact tiebreak), chaining
+  * (ts_us, event_id) order, the batch order `Events.byUser`, chaining
   * from the stored last event, so the emitted pair stream aggregated over
   * time is IDENTICAL to the batch lag-pass — StreamingSpec drives three
   * time-ordered micro-batches, and a restart from the checkpoint, and
@@ -37,6 +37,7 @@ object StreamingTransitions {
 
   private def advance(user: Long, evs: Iterator[TEvent],
                       st: GroupState[LastEvent]): Iterator[Transition] = {
+    // must match the batch order, Events.byUser: (ts, event_id)
     val sorted = evs.toSeq.sortBy(e => (e.ts_us, e.event_id))
     var prev = st.getOption
     val out = Seq.newBuilder[Transition]

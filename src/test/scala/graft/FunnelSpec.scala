@@ -108,6 +108,18 @@ class FunnelSpec extends AnyFunSuite {
     assert(out("direct") == ((1L, 8.0)), out.toString)
   }
 
+  test("ev13 over an empty events table reads 0 users per stage and NULL conversions") {
+    import spark.implicits._
+    SparkTestSession.withTempDir("graft-ev13-") { dir =>
+      Seq.empty[(Long, Timestamp, Long, String, Double)]
+        .toDF("event_id", "ts", "user_id", "event_type", "value")
+        .write.parquet(s"$dir/events.parquet")
+      val rows = Queries.ev13FunnelSummary(spark, dir.toString).collect()
+        .map(r => (Option(r.get(2)), r.isNullAt(3), r.isNullAt(4))).toSeq
+      assert(rows == Seq.fill(3)((Some(0L), true, true)), rows.toString)
+    }
+  }
+
   test("window, salted, and stateful-stream funnels agree on random event logs") {
     import org.apache.spark.sql.functions.col
     import spark.implicits._

@@ -54,15 +54,25 @@ object Similarity {
 
   /** Double-cast copy of the embedding, computed ONCE per side before the
     * pairwise join so the n_queries x n_vectors dot products don't re-cast
-    * every float element per pair. */
-  private[graft] def withDoubles(emb: DataFrame): DataFrame =
-    emb.select(col("vec_id"),
-      transform(col("embedding"), x => x.cast("double")).as("emb_d"))
+    * every float element per pair: (vec_id, keep..., emb_d). */
+  private[graft] def withDoubles(emb: DataFrame, keep: String*): DataFrame =
+    emb.select((col("vec_id") +: keep.map(col)) :+
+      transform(col("embedding"), x => x.cast("double")).as("emb_d"): _*)
 
-  /** The native fused cosine over pre-cast double arrays, resolved through
-    * a graft-namespaced registry entry (`graft_cosine_similarity`) so a
-    * user registration of the public `cosine_similarity` name can never
-    * shadow the hot path. One codegen'd loop per pair — dot and both norms
+  /** The query batch of a search over a [[withDoubles]] frame `vecs`:
+    * (query_id, q_emb, keep...) for the rows [[queryPred]] selects. */
+  private def queryVecs(vecs: DataFrame, queryMod: Int, queryCap: Long,
+                        keep: String*): DataFrame =
+    vecs.filter(queryPred(queryMod, queryCap))
+      .select((col("vec_id").as("query_id") +: col("emb_d").as("q_emb") +:
+        keep.map(col)): _*)
+
+  /** The cosine every ranking and threshold here compares, tie-safe-rounded
+    * at 6 so both engines keep the same boundary rows and order. It is the
+    * native fused cosine over pre-cast double arrays, resolved through a
+    * graft-namespaced registry entry (`graft_cosine_similarity`) so a user
+    * registration of the public `cosine_similarity` name can never shadow
+    * the hot path. One codegen'd loop per pair — dot and both norms
     * together, no zip_with/aggregate intermediates — and bit-identical to
     * dot(a,b)/(norm(a)*norm(b)) on clean inputs because both accumulate in
     * index order. Edge semantics differ deliberately: a zero-norm vector
@@ -70,8 +80,23 @@ object Similarity {
     * top-k) where the division form produced NaN (which Spark orders
     * ABOVE every real similarity — a zero vector ranking first is a bug,
     * not a behavior to preserve); null elements are skipped pairwise. */
-  private def nativeCosine(a: Column, b: Column): Column =
-    graft.functions.GraftFunctions.call("cosine_similarity", a, b)
+  private def cosine(a: Column, b: Column): Column =
+    graft.ops.Num.cround(
+      graft.functions.GraftFunctions.call("cosine_similarity", a, b), 6)
+
+  /** A candidate other than its query's own vector: self-pairs are never
+    * a result. */
+  private def notSelf: Column = col("vec_id") =!= col("query_id")
+
+  /** The scored candidate join of the searches: candidates `vecs`
+    * (vec_id, emb_d, ...) against the broadcast `queries` (query_id,
+    * q_emb, ...) on the shared `keys` (none: every pair), self-pairs
+    * dropped, plus the [[cosine]] column. */
+  private def scoredJoin(vecs: DataFrame, queries: DataFrame,
+                         keys: String*): DataFrame =
+    vecs.join(broadcast(queries), keys, "inner")
+      .filter(notSelf)
+      .withColumn("cosine", cosine(col("emb_d"), col("q_emb")))
 
   /** The per-query top-k cut every ranked search here ends with: rank by
     * `score` descending with vec_id as the tiebreak, keep rank <= k. */
@@ -102,20 +127,15 @@ object Similarity {
   }
 
   /** Brute-force cosine top-k: deterministic query subset
-    * (vec_id % queryMod == 0, optionally capped below `queryCap` — the
-    * fixed-batch production shape) against the full corpus. Ranking uses
-    * the comparison-rounded cosine (ties broken by vec_id) so results are
-    * engine-reproducible. */
+    * ([[queryPred]]: vec_id ≡ 0 (mod queryMod), optionally capped below
+    * `queryCap` — the fixed-batch production shape) against the full
+    * corpus. Ranking uses the comparison-rounded cosine (ties broken by
+    * vec_id) so results are engine-reproducible. */
   def bruteForceTopK(emb: DataFrame, queryMod: Int = 100, k: Int = 5,
                      queryCap: Long = Long.MaxValue): DataFrame = {
     val withNorm = withDoubles(emb)
-    val queries = withNorm.filter(queryPred(queryMod, queryCap))
-      .select(col("vec_id").as("query_id"), col("emb_d").as("q_emb"))
-    val scored = withNorm.join(broadcast(queries),
-        col("vec_id") =!= col("query_id"))
-      .withColumn("cosine", graft.ops.Num.cround(
-        nativeCosine(col("emb_d"), col("q_emb")), 6))
-    topKPerQuery(scored, k).select("query_id", "rank", "vec_id", "cosine")
+    topKPerQuery(scoredJoin(withNorm, queryVecs(withNorm, queryMod, queryCap)),
+      k).select("query_id", "rank", "vec_id", "cosine")
   }
 
   /** Two-stage prefix-dimension rerank top-k — the Matryoshka-retrieval
@@ -138,7 +158,7 @@ object Similarity {
     * Both stages rank by the tie-safe-ROUNDED cosine with vec_id as
     * tiebreak, so the shortlist boundary and the final ranking are
     * engine-reproducible. A zero-norm prefix scores NULL in stage 1
-    * ([[nativeCosine]] semantics) and drops from the shortlist.
+    * ([[cosine]] semantics) and drops from the shortlist.
     *
     * This is approximate by design: a candidate whose prefix disagrees with
     * its full vector can miss the shortlist (ExtSpec proves both the miss
@@ -148,21 +168,15 @@ object Similarity {
                        queryMod: Int = 100, k: Int = 5): DataFrame = {
     val base = withDoubles(emb)
     val pre = base.select(col("vec_id"),
-      slice(col("emb_d"), 1, pdims).as("emb_p"))
-    val pQueries = pre.filter(col("vec_id") % queryMod === 0)
-      .select(col("vec_id").as("query_id"), col("emb_p").as("q_p"))
-    val short = topKBy(pre.join(broadcast(pQueries), col("vec_id") =!= col("query_id"))
-        .withColumn("pre_cosine", graft.ops.Num.cround(
-          nativeCosine(col("emb_p"), col("q_p")), 6))
-        .groupBy("query_id"), col("pre_cosine"), col("vec_id"), shortlist)
+      slice(col("emb_d"), 1, pdims).as("emb_d"))
+    val short = topKBy(
+        scoredJoin(pre, queryVecs(pre, queryMod, Long.MaxValue))
+          .groupBy("query_id"), col("cosine"), col("vec_id"), shortlist)
       .select(col("query_id"), col("id").as("vec_id"),
         col("score").as("pre_cosine"))
-    val qFull = base.filter(col("vec_id") % queryMod === 0)
-      .select(col("vec_id").as("query_id"), col("emb_d").as("q_d"))
     val scored = base.join(broadcast(short), "vec_id")
-      .join(broadcast(qFull), "query_id")
-      .withColumn("cosine", graft.ops.Num.cround(
-        nativeCosine(col("emb_d"), col("q_d")), 6))
+      .join(broadcast(queryVecs(base, queryMod, Long.MaxValue)), "query_id")
+      .withColumn("cosine", cosine(col("emb_d"), col("q_emb")))
     topKPerQuery(scored, k)
       .select("query_id", "rank", "vec_id", "cosine", "pre_cosine")
   }
@@ -255,28 +269,20 @@ object Similarity {
               k: Int = 3, nprobe: Int = 2,
               queryCap: Long = Long.MaxValue): DataFrame = {
     val (assigned, probes) = ivfRoute(emb, anchors, queryMod, nprobe, queryCap)
-    ivfSearch(emb, assigned, emb.filter(queryPred(queryMod, queryCap)),
+    ivfSearch(emb, assigned, queryVecs(withDoubles(emb), queryMod, queryCap),
       probes, k)
       .select("query_id", "rank", "vec_id", "list_id", "cosine")
   }
 
   /** The search body of [[ivfTopK]] and [[ivfTopKFiltered]]: exact cosine
     * of every query against the `corpus` vectors of its probed lists, cut
-    * to top-k. `assigned` is (vec_id, list_id) over `corpus`, `probes` is
-    * (query_id, list_id) over `queries`. */
+    * to top-k. `assigned` is (vec_id, list_id) over `corpus`, `queries` is
+    * a [[queryVecs]] batch and `probes` its (query_id, list_id). */
   private def ivfSearch(corpus: DataFrame, assigned: DataFrame,
                         queries: DataFrame, probes: DataFrame,
-                        k: Int): DataFrame = {
-    val vecs = withDoubles(corpus).join(assigned, "vec_id")
-    val routed = withDoubles(queries)
-      .select(col("vec_id").as("query_id"), col("emb_d").as("q_emb"))
-      .join(probes, "query_id")
-    val scored = vecs.join(broadcast(routed), Seq("list_id"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cosine", graft.ops.Num.cround(
-        nativeCosine(col("emb_d"), col("q_emb")), 6))
-    topKPerQuery(scored, k)
-  }
+                        k: Int): DataFrame =
+    topKPerQuery(scoredJoin(withDoubles(corpus).join(assigned, "vec_id"),
+      queries.join(probes, "query_id"), "list_id"), k)
 
   /** k-NN majority-vote classification over the IVF shortlist — the
     * retrieval-based classifier next to e2's nearest-centroid (Rocchio):
@@ -332,10 +338,10 @@ object Similarity {
                       queryMod: Int = 100, k: Int = 3,
                       nprobe: Int = 2): DataFrame = {
     val corpus = emb.filter(pred)
-    val qset = emb.filter(col("vec_id") % queryMod === 0)
-    ivfSearch(corpus, nearestLists(anchorScores(corpus, anchors), 1), qset,
-      nearestLists(anchorScores(qset, anchors), nprobe)
-        .withColumnRenamed("vec_id", "query_id"), k)
+    ivfSearch(corpus, nearestLists(anchorScores(corpus, anchors), 1),
+      queryVecs(withDoubles(emb), queryMod, Long.MaxValue),
+      nearestLists(anchorScores(emb.filter(queryPred(queryMod, Long.MaxValue)),
+        anchors), nprobe).withColumnRenamed("vec_id", "query_id"), k)
       .join(emb.select(col("vec_id"), col("label")), "vec_id")
       .select("query_id", "rank", "vec_id", "list_id", "label", "cosine")
   }
@@ -374,8 +380,7 @@ object Similarity {
     capped.as("a").join(capped.as("b"),
         col("a.list_id") === col("b.list_id") &&
           col("a.vec_id") < col("b.vec_id"))
-      .withColumn("cosine", graft.ops.Num.cround(
-        nativeCosine(col("a.emb_d"), col("b.emb_d")), 6))
+      .withColumn("cosine", cosine(col("a.emb_d"), col("b.emb_d")))
       .filter(col("cosine") >= minCos)
       .select(col("a.vec_id").as("doc_a"), col("b.vec_id").as("doc_b"))
   }
@@ -386,18 +391,9 @@ object Similarity {
   def lshTopK(emb: DataFrame, planesDf: DataFrame, queryMod: Int = 100,
               k: Int = 3, nPlanes: Int = 8,
               queryCap: Long = Long.MaxValue): DataFrame = {
-    val withNorm = withDoubles(emb)
-    val buckets = lshBuckets(emb, planesDf, nPlanes)
-    val vecs = withNorm.join(buckets, "vec_id")
-    val queries = vecs.filter(queryPred(queryMod, queryCap))
-      .select(col("vec_id").as("query_id"), col("emb_d").as("q_emb"),
-        col("bucket"))
-    val scored = vecs.join(broadcast(queries),
-        Seq("bucket"), "inner")
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cosine", graft.ops.Num.cround(
-        nativeCosine(col("emb_d"), col("q_emb")), 6))
-    topKPerQuery(scored, k)
+    val vecs = withDoubles(emb).join(lshBuckets(emb, planesDf, nPlanes), "vec_id")
+    topKPerQuery(scoredJoin(vecs,
+        queryVecs(vecs, queryMod, queryCap, "bucket"), "bucket"), k)
       .select("query_id", "rank", "vec_id", "bucket", "cosine")
   }
 
@@ -420,16 +416,9 @@ object Similarity {
   def lshRangeSearch(emb: DataFrame, planesDf: DataFrame,
                      queryMod: Int = 100, tau: Double = 0.25,
                      nPlanes: Int = 8): DataFrame = {
-    val withNorm = withDoubles(emb)
-    val buckets = lshBuckets(emb, planesDf, nPlanes)
-    val vecs = withNorm.join(buckets, "vec_id")
-    val queries = vecs.filter(col("vec_id") % queryMod === 0)
-      .select(col("vec_id").as("query_id"), col("emb_d").as("q_emb"),
-        col("bucket"))
-    vecs.join(broadcast(queries), Seq("bucket"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cosine", graft.ops.Num.cround(
-        nativeCosine(col("emb_d"), col("q_emb")), 6))
+    val vecs = withDoubles(emb).join(lshBuckets(emb, planesDf, nPlanes), "vec_id")
+    scoredJoin(vecs, queryVecs(vecs, queryMod, Long.MaxValue, "bucket"),
+        "bucket")
       .filter(col("cosine") >= tau)
       .select("query_id", "vec_id", "bucket", "cosine")
   }
@@ -442,9 +431,9 @@ object Similarity {
     * likely lands on the other side of, so first-order single-bit flips
     * recover most of the recall lost to bucket boundaries at a (probes+1)×
     * candidate cost instead of the 2^planes-fold cost of using fewer
-    * planes. COVERAGE.md round 9 on the sf0.1 fixture: 0.030 recall@5
-    * for the single-probe registered config → see that table for the
-    * probes sweep.
+    * planes. COVERAGE.md's ANN table on the sf0.1 fixture: 0.030
+    * recall@5 for the single-probe registered config, and the probes
+    * sweep.
     *
     * Cross-engine determinism: the flip ranking orders planes by the
     * tie-safe-ROUNDED |dot| (scale 6) with the plane id as tiebreak, the
@@ -477,15 +466,9 @@ object Similarity {
     val probeBuckets = qBase
       .unionAll(qBase.join(flips, "vec_id")
         .select(col("vec_id"), col("bucket").bitwiseXOR(col("__bit")).as("bucket")))
-    val queries = withNorm.filter(queryPred(queryMod, queryCap))
-      .select(col("vec_id").as("query_id"), col("emb_d").as("q_emb"))
+    val queries = queryVecs(withNorm, queryMod, queryCap)
       .join(probeBuckets.withColumnRenamed("vec_id", "query_id"), "query_id")
-
-    val scored = vecs.join(broadcast(queries), Seq("bucket"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cosine", graft.ops.Num.cround(
-        nativeCosine(col("emb_d"), col("q_emb")), 6))
-    topKPerQuery(scored, k)
+    topKPerQuery(scoredJoin(vecs, queries, "bucket"), k)
       .select("query_id", "rank", "vec_id", "bucket", "cosine")
   }
 
@@ -539,8 +522,8 @@ object Similarity {
         col("emb_d").as("__se")), Seq("src"))
       .join(withNorm.select(col("vec_id").as("dst"),
         col("emb_d").as("__de")), Seq("dst"))
-      .select(col("src"), col("dst"), graft.ops.Num.cround(
-        nativeCosine(col("__se"), col("__de")), 6).as("cosine"))
+      .select(col("src"), col("dst"),
+        cosine(col("__se"), col("__de")).as("cosine"))
 
   /** Keep each src's top-`m` out-edges (rounded cosine desc, dst
     * tiebreak). Top-m is MERGEABLE under edge additions — top-m(top-m(A)
@@ -659,15 +642,9 @@ object Similarity {
     import graft.ops.Materialize.MaterializeOps
     val g = graph
     val withNorm = withDoubles(emb)
-    val queries = withNorm.filter(queryPred(queryMod, queryCap))
-      .select(col("vec_id").as("query_id"), col("emb_d").as("q_emb"))
-      .materialized
-    val wQ = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("vec_id"))
+    val queries = queryVecs(withNorm, queryMod, queryCap).materialized
     def topBeam(df: DataFrame): DataFrame =
-      df.withColumn("__rn", row_number().over(wQ))
-        .filter(col("__rn") <= beam)
-        .select("query_id", "vec_id", "cosine")
+      topKPerQuery(df, beam).select("query_id", "vec_id", "cosine")
     // each hop references the previous beam TWICE (expansion probe +
     // keep-union), so a lazy loop DOUBLES the plan per hop — 2^hops
     // copies of the hop-0 subtree by the final action (the g3
@@ -688,12 +665,12 @@ object Similarity {
       val expanded = beamDf.select("query_id", "vec_id")
         .join(g.select(col("src").as("vec_id"), col("dst")), Seq("vec_id"))
         .select(col("query_id"), col("dst").as("vec_id"))
-        .filter(col("vec_id") =!= col("query_id"))
+        .filter(notSelf)
         .distinct()
         .join(withNorm, Seq("vec_id"))
         .join(broadcast(queries), Seq("query_id"))
-        .select(col("query_id"), col("vec_id"), graft.ops.Num.cround(
-          nativeCosine(col("emb_d"), col("q_emb")), 6).as("cosine"))
+        .select(col("query_id"), col("vec_id"),
+          cosine(col("emb_d"), col("q_emb")).as("cosine"))
       beamDf = topBeam(beamDf.unionByName(expanded).distinct())
       if (hop < hops) beamDf = beamDf.materialized
     }
@@ -827,12 +804,10 @@ object Similarity {
     * threshold instead. */
   def embeddingContamination(corpus: DataFrame, benchmark: DataFrame,
                              threshold: Double = 0.9): DataFrame = {
-    val c = withDoubles(corpus).select(col("vec_id"), col("emb_d"))
     val b = withDoubles(benchmark)
       .select(col("vec_id").as("bench_id"), col("emb_d").as("b_emb"))
-    c.crossJoin(broadcast(b))
-      .withColumn("cosine", graft.ops.Num.cround(
-        nativeCosine(col("emb_d"), col("b_emb")), 6))
+    withDoubles(corpus).crossJoin(broadcast(b))
+      .withColumn("cosine", cosine(col("emb_d"), col("b_emb")))
       .filter(col("cosine") >= threshold)
       .groupBy("vec_id")
       .agg(count(lit(1)).as("n_matches"),
@@ -997,8 +972,7 @@ object Similarity {
       .select(col("query_id"), col("s").as("qs"), col("c").as("qc"),
         col("qd"))
     adcTopK(pqEncode(emb, codebook, subDim).join(broadcast(adc),
-      col("s") === col("qs") && col("code") === col("qc") &&
-        col("vec_id") =!= col("query_id")), k)
+      col("s") === col("qs") && col("code") === col("qc") && notSelf), k)
   }
 
   /** Exact-cosine rerank of an ADC shortlist — the second tier every
@@ -1020,13 +994,10 @@ object Similarity {
                               queryMod: Int, k: Int,
                               queryCap: Long = Long.MaxValue): DataFrame = {
     val base = withDoubles(emb)
-    val qFull = base.filter(queryPred(queryMod, queryCap))
-      .select(col("vec_id").as("query_id"), col("emb_d").as("q_d"))
     val scored = base
       .join(broadcast(short.select("query_id", "vec_id", "adc_dist2")), "vec_id")
-      .join(broadcast(qFull), "query_id")
-      .withColumn("cosine", graft.ops.Num.cround(
-        nativeCosine(col("emb_d"), col("q_d")), 6))
+      .join(broadcast(queryVecs(base, queryMod, queryCap)), "query_id")
+      .withColumn("cosine", cosine(col("emb_d"), col("q_emb")))
     topKPerQuery(scored, k)
       .select("query_id", "rank", "vec_id", "cosine", "adc_dist2")
   }
@@ -1035,7 +1006,7 @@ object Similarity {
     * `shortlist` codes per query, [[rerankShortlist]] re-scores them with
     * full-precision cosine and keeps k. recall@k becomes ADC's COVERAGE of
     * the true top-k at depth `shortlist` rather than its point accuracy at
-    * depth k — see COVERAGE.md's recall table for the measured lift. */
+    * depth k — see COVERAGE.md's ANN table for the measured lift. */
   def pqTopKRerank(emb: DataFrame, codebook: DataFrame, queryMod: Int = 100,
                    k: Int = 5, shortlist: Int = 50,
                    subDim: Int = 8,
@@ -1112,7 +1083,7 @@ object Similarity {
                          probes: DataFrame, adc: DataFrame, on: Column,
                          k: Int): DataFrame = {
     val top = adcTopK(codes.join(broadcast(probes), "list_id")
-      .filter(col("vec_id") =!= col("query_id"))
+      .filter(notSelf)
       .join(broadcast(adc), on), k)
     assigned.join(broadcast(top), "vec_id")
       .select("query_id", "rank", "vec_id", "list_id", "adc_dist2")
@@ -1160,7 +1131,7 @@ object Similarity {
     * clustered corpus a codebook trained on raw vectors collapses onto the
     * cluster centers — every same-cluster vector gets the SAME codes, ADC
     * ties everywhere, and within-cluster ranking (where the true top-k
-    * lives) is destroyed (COVERAGE.md round 10 measured exactly this:
+    * lives) is destroyed (COVERAGE.md's ANN table measured exactly this:
     * learned raw-vector PQ UNDERPERFORMS the fixed codebook on the planted
     * corpus). Subtracting the centroid removes the shared cluster
     * component, so the codebook's 16 centroids spend their capacity on the
@@ -1261,7 +1232,7 @@ object Similarity {
     * the residual pass just re-centers noise), while residual wins
     * decisively on a clustered one (raw-vector codebooks collapse onto the
     * cluster centers, same-cluster vectors get identical codes, and ADC
-    * ties destroy within-cluster ranking — COVERAGE.md round 10 measured
+    * ties destroy within-cluster ranking — COVERAGE.md's ANN table measured
     * the inversion). No prose rule can pick per corpus, so this MEASURES.
     *
     * One row per relational configuration: (config, build_cost, hits,
@@ -1333,7 +1304,7 @@ object Similarity {
     * corpora (real embedding models put most energy in a few directions)
     * the high-variance subspace's quantization error dominates every ADC
     * distance and recall collapses — the exact failure the round-12
-    * anisotropic fixture (COVERAGE.md's sim23 table) measured. OPQ-P
+    * anisotropic fixture (COVERAGE.md's ANN table) measured. OPQ-P
     * fixes the basis first:
     *
     *  1. covariance of the corpus (one exploded outer-product pass —
@@ -1407,12 +1378,11 @@ object Similarity {
     * rotation preserves dot products and norms, hence cosine — so
     * brute-force truth and the exact-rerank tier are UNCHANGED by the
     * basis (up to float re-rounding); only the quantizer sees a
-    * different, better-conditioned coordinate system. */
-  def rotate(emb: DataFrame, rot: Array[Array[Double]]): DataFrame = {
-    emb.withColumn("embedding",
-      graft.functions.GraftFunctions.call("mat_vec_mul", lit(rot.flatten),
-        transform(col("embedding"), x => x.cast("double"))))
-  }
+    * different, better-conditioned coordinate system. The kernel's
+    * implicit input cast widens the float elements to double, exactly. */
+  def rotate(emb: DataFrame, rot: Array[Array[Double]]): DataFrame =
+    emb.withColumn("embedding", graft.functions.GraftFunctions.call(
+      "mat_vec_mul", lit(rot.flatten), col("embedding")))
 
   /** [[pqTopKRerank]] in the OPQ basis — equal code budget
     * (nSub x nCentroids x subDim), one extra linear rotation pass at
@@ -1448,9 +1418,9 @@ object Similarity {
       queryMod, k, nprobe, shortlist, subDim, queryCap)
   }
 
-  /** Contrastive hard-negative mining: for each sampled anchor (vec_id %
-    * queryMod == 0), the k most-cosine-similar vectors carrying a
-    * DIFFERENT label — the negatives an embedding fine-tune actually
+  /** Contrastive hard-negative mining: for each sampled anchor
+    * ([[queryPred]] at queryMod), the k most-cosine-similar vectors
+    * carrying a DIFFERENT label — the negatives an embedding fine-tune actually
     * learns from (random in-batch negatives are mostly easy; the nearest
     * confusable examples drive the contrastive gradient — Robinson et
     * al., "Contrastive Learning with Hard Negative Samples", ICLR 2021).
@@ -1470,7 +1440,7 @@ object Similarity {
     * neg_id as tiebreak, so the shortlist boundary and the final order
     * are engine-reproducible. */
   def hardNegatives(emb: DataFrame, queryMod: Int = 100, k: Int = 5): DataFrame =
-    hardNegativesFor(emb, emb.filter(col("vec_id") % queryMod === 0), k)
+    hardNegativesFor(emb, emb.filter(queryPred(queryMod, Long.MaxValue)), k)
 
   /** [[hardNegatives]] against an EXPLICIT anchor frame — the production
     * shape: a training batch is a FIXED set of anchors mined against a
@@ -1481,15 +1451,13 @@ object Similarity {
     * not). `anchorVecs` must carry (vec_id, label, embedding). */
   def hardNegativesFor(emb: DataFrame, anchorVecs: DataFrame,
                        k: Int = 5): DataFrame = {
-    val vecs = emb.select(col("vec_id"), col("label"),
-      transform(col("embedding"), x => x.cast("double")).as("emb_d"))
-    val anchors = anchorVecs
+    val vecs = withDoubles(emb, "label")
+    val anchors = withDoubles(anchorVecs, "label")
       .select(col("vec_id").as("anchor_id"), col("label").as("anchor_label"),
-        transform(col("embedding"), x => x.cast("double")).as("a_emb"))
+        col("emb_d").as("a_emb"))
     val short = topKBy(vecs.join(broadcast(anchors),
           col("label") =!= col("anchor_label"))
-        .withColumn("cosine", graft.ops.Num.cround(
-          nativeCosine(col("emb_d"), col("a_emb")), 6))
+        .withColumn("cosine", cosine(col("emb_d"), col("a_emb")))
         .groupBy("anchor_id", "anchor_label"), col("cosine"), col("vec_id"), k)
       .select(col("anchor_id"), col("anchor_label"),
         col("id").as("neg_id"), col("score").as("cosine"))
@@ -1623,27 +1591,21 @@ object Similarity {
     // only applies when k > 1.
     require(k >= 1, s"mmrTopK: k must be >= 1 (got $k)")
     val withNorm = withDoubles(emb)
-    val queries = withNorm.filter(queryPred(queryMod, queryCap))
-      .select(col("vec_id").as("query_id"), col("emb_d").as("q_emb"))
-    val rel = withNorm.join(broadcast(queries),
-        col("vec_id") =!= col("query_id"))
-      .withColumn("rel", graft.ops.Num.cround(
-        nativeCosine(col("emb_d"), col("q_emb")), 6))
-      .withColumn("rn", row_number().over(Window.partitionBy("query_id")
-        .orderBy(col("rel").desc, col("vec_id"))))
-      .filter(col("rn") <= shortlist)
-      .select("query_id", "vec_id", "rel", "emb_d")
     // the shortlist feeds the pairwise join AND k-1 greedy steps — cut the
     // corpus-scan lineage once (conf-switchable persist/localCheckpoint)
-    val cand = rel.materialized
+    val cand = topKPerQuery(
+        scoredJoin(withNorm, queryVecs(withNorm, queryMod, queryCap)),
+        shortlist)
+      .select("query_id", "vec_id", "cosine", "emb_d")
+      .materialized
     // candidate-candidate sims: shortlist² per query, a bounded constant
     val pair = cand.select(col("query_id"), col("vec_id").as("v_a"),
         col("emb_d").as("e_a"))
       .join(broadcast(cand.select(col("query_id"), col("vec_id").as("v_b"),
         col("emb_d").as("e_b"))), Seq("query_id"))
       .filter(col("v_a") =!= col("v_b"))
-      .select(col("query_id"), col("v_a"), col("v_b"), graft.ops.Num.cround(
-        nativeCosine(col("e_a"), col("e_b")), 6).as("sim"))
+      .select(col("query_id"), col("v_a"), col("v_b"),
+        cosine(col("e_a"), col("e_b")).as("sim"))
     // The greedy is bounded per query (shortlist candidates, shortlist²
     // sims), so it collapses to per-query ARRAYS and ONE
     // aggregate-over-sequence higher-order function — two exchanges total
@@ -1655,7 +1617,8 @@ object Similarity {
     // one aggregate() the accumulator is a lambda VARIABLE — a leaf — so
     // the plan stays a single expression of linear size.
     val candsArr = cand.groupBy("query_id")
-      .agg(sort_array(collect_list(struct(col("vec_id"), col("rel"))))
+      .agg(sort_array(collect_list(struct(col("vec_id"),
+        col("cosine").as("rel"))))
         .as("cands"))
     val simsArr = pair.groupBy("query_id")
       .agg(sort_array(collect_list(

@@ -23,22 +23,21 @@ import org.apache.spark.sql.functions._
   * batch aggregate shuffles on. */
 object StreamingGraph {
 
+  /** The host name of host number `k`: `h<k>.example.com`. */
+  private def host(k: Column): Column =
+    concat(lit("h"), k.cast("string"), lit(".example.com"))
+
   /** g1's host-graph edge projection, stateless per document — shared by
     * the batch query and the stream (one code path, the twin invariant). */
   def toEdgeEvents(docs: DataFrame): DataFrame =
-    docs.select(
-        concat(lit("h"), (col("doc_id") % 13).cast("string"),
-          lit(".example.com")).as("src"),
-        concat(lit("h"), ((col("doc_id") * 7 + 3) % 13).cast("string"),
-          lit(".example.com")).as("dst"))
+    docs.select(host(col("doc_id") % 13).as("src"),
+        host((col("doc_id") * 7 + 3) % 13).as("dst"))
       .filter(col("src") =!= col("dst"))
 
   /** g3's host-graph edge projection (40 hosts, every edge step a multiple
     * of 4 — the planted mod-4 components), stateless per document; shared
     * by the batch query and the stream like [[toEdgeEvents]]. */
   def toComponentEdgeEvents(docs: DataFrame): DataFrame = {
-    val host = (k: Column) =>
-      concat(lit("h"), k.cast("string"), lit(".example.com"))
     val a = col("doc_id") % 40
     val step = (expr("doc_id div 40") % 9 + 1) * 4
     docs.select(host(a).as("src"), host((a + step) % 40).as("dst"))
@@ -55,11 +54,7 @@ object StreamingGraph {
     docs.select(col("doc_id"), explode(array(
         (col("doc_id") * 7 + 3) % 13,
         ((col("doc_id") % 13) * (col("doc_id") % 13) + 1) % 13)).as("dk"))
-      .select(
-        concat(lit("h"), (col("doc_id") % 13).cast("string"),
-          lit(".example.com")).as("src"),
-        concat(lit("h"), col("dk").cast("string"),
-          lit(".example.com")).as("dst"))
+      .select(host(col("doc_id") % 13).as("src"), host(col("dk")).as("dst"))
       .filter(col("src") =!= col("dst"))
 
   /** The incremental edge-count aggregate over an edge-event stream.

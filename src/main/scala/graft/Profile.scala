@@ -6,7 +6,7 @@ import java.util.concurrent.atomic.AtomicLong
 
 import scala.collection.mutable
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd, StageInfo}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -18,13 +18,18 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * runs each query into the `noop` sink under [[run]], writes the
   * formatted physical plan of the frame it ran to
   * `<outDir>/<query>_<suffix>.txt` and prints one line per stage plus the
-  * query's totals. A stage's max/median task time above ~4 on a stage of 4 or
-  * more tasks is the straggler signature. Not part of the driver
-  * contract. */
+  * query's totals. A stage line names its call site and its SQL
+  * operators, so a job that one run adds or drops can be found by diffing
+  * two runs' lines. A stage's max/median task time above ~4 on a stage of
+  * 4 or more tasks is the straggler signature. Not part of the Verify or
+  * Bench contract. */
 object Profile {
 
-  /** Task durations of one stage, over its successful tasks (upper median). */
-  final case class Stage(id: Int, tasks: Int, medianMs: Long, maxMs: Long) {
+  /** Task durations of one stage, over its successful tasks (upper median),
+    * its `name` (`StageInfo.name`, the call site that submitted it) and its
+    * `operators` ([[operators]]). */
+  final case class Stage(id: Int, name: String, operators: String, tasks: Int,
+                         medianMs: Long, maxMs: Long) {
     def ratio: Double = maxMs.toDouble / math.max(1L, medianMs)
   }
 
@@ -34,6 +39,16 @@ object Profile {
   private val StartMarker = "graft_profile_start"
   private val DrainMarker = "graft_profile_drain"
   private val runIds = new AtomicLong
+
+  /** The SQL operators a stage runs, in RDD order: the distinct scope names
+    * of its RDDs (e.g. `Scan parquet > WholeStageCodegen (2) > Exchange`).
+    * Under AQE every query stage is submitted from the same future, so the
+    * call site alone cannot tell two stages apart. The scope type is
+    * internal to Spark, so its name is read reflectively. */
+  private def operators(i: StageInfo): String =
+    i.rddInfos.sortBy(_.id).flatMap(_.scope.asInstanceOf[Option[AnyRef]])
+      .map(s => s.getClass.getMethod("name").invoke(s).toString)
+      .distinct.mkString(" > ")
 
   /** Runs `body` under a fresh job group and profiles it. Jobs and stages
     * are the group's; checkpoints are every `localCheckpoint` the session
@@ -49,20 +64,22 @@ object Profile {
     val startGroup = s"$group-start"
     val drainGroup = s"$group-drain"
     var jobs, checkpoints = 0
-    val stageIds = mutable.Set.empty[Int]
+    val stageNames = mutable.Map.empty[Int, (String, String)]
     val durations = mutable.Map.empty[Int, mutable.ArrayBuffer[Long]]
     val jobsDrained, plansDrained = new CountDownLatch(1)
     var started = false
     val jobListener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
         e.properties.getProperty(GroupKey) match {
-          case `group` => jobs += 1; stageIds ++= e.stageIds
+          case `group` =>
+            jobs += 1
+            e.stageInfos.foreach(i => stageNames(i.stageId) = (i.name, operators(i)))
           case `drainGroup` => jobsDrained.countDown()
           case _ =>
         }
       }
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit = synchronized {
-        if (stageIds(t.stageId) && t.taskInfo != null && t.taskInfo.successful)
+        if (stageNames.contains(t.stageId) && t.taskInfo != null && t.taskInfo.successful)
           durations.getOrElseUpdate(t.stageId, mutable.ArrayBuffer.empty) +=
             t.taskInfo.duration
       }
@@ -94,7 +111,8 @@ object Profile {
       val stages = jobListener.synchronized(durations.toSeq).sortBy(_._1).map {
         case (id, ds) =>
           val s = ds.sorted
-          Stage(id, s.size, s(s.size / 2), s.last)
+          val (name, ops) = jobListener.synchronized(stageNames(id))
+          Stage(id, name, ops, s.size, s(s.size / 2), s.last)
       }
       Run(wallS, jobListener.synchronized(jobs), planListener.synchronized(checkpoints), stages)
     } finally {
@@ -124,7 +142,7 @@ object Profile {
       Files.writeString(outDir.resolve(s"${name}_$suffix.txt"), plan)
       println(s"[profile] wrote ${name}_$suffix.txt (${plan.length} chars)")
       r.stages.foreach { s =>
-        println(f"[profile] stage=${s.id}%-5d tasks=${s.tasks}%-5d med=${s.medianMs}ms max=${s.maxMs}ms ratio=${s.ratio}%.1f")
+        println(f"[profile] stage=${s.id}%-5d tasks=${s.tasks}%-5d med=${s.medianMs}ms max=${s.maxMs}ms ratio=${s.ratio}%.1f site=${s.name} ops=${s.operators}")
       }
       println(f"[profile] $name%-28s wall=${r.wallS}%.2f s jobs=${r.jobs} " +
         s"checkpoints=${r.checkpoints} stages=${r.stages.size} tasks=${r.stages.map(_.tasks).sum}")

@@ -97,7 +97,7 @@ object IncrementalAnnIndex {
     * `Observation` on the batch, filled by the fresh delta's
     * materialization — no job of its own. */
   def ingestBatch(state: GraphState, batch: DataFrame,
-                  planesDf: DataFrame, m: Int = 8, nPlanes: Int = 8,
+                  planesDf: DataFrame, m: Int = 8,
                   bucketCap: Int = 64): GraphState = {
     val sc = batch.sparkSession.sparkContext
     val nb = state.nBatches + 1
@@ -107,7 +107,7 @@ object IncrementalAnnIndex {
       .join(state.vectors.select("vec_id"), Seq("vec_id"), "left_anti")
       .materialized
 
-    val freshLsh = Similarity.lshBuckets(fresh, planesDf, nPlanes)
+    val freshLsh = Similarity.lshBuckets(fresh, planesDf)
     val freshIvf = Similarity.ivfMembership(fresh)
 
     // the two per-partitioning admissions are independent small jobs —

@@ -181,6 +181,76 @@ object Similarity {
       .select("query_id", "rank", "vec_id", "cosine", "pre_cosine")
   }
 
+  // ------------------------------------------------------------------
+  // Exploded-vector kernels: every LSH, IVF, PQ and centroid pass below
+  // builds from these.
+
+  /** The PQ code budget of every codebook here: `NSub` subspaces (the
+    * 64-dim corpus) of `SubDim` coordinates, `NCentroids` codewords per
+    * subspace, and `Iters` Lloyd iterations per learned codebook. */
+  private val NSub = 8
+  private val SubDim = 8
+  private val NCentroids = 16
+  private val Iters = 3
+
+  /** The one embedding explode: (keys..., pos, v) with 0-based `pos`. `v`
+    * stays the stored float and is cast where the arithmetic is, so no
+    * exchange carries a wider row. */
+  private[graft] def coords(df: DataFrame, keys: Column*): DataFrame =
+    df.select(keys :+ posexplode(col("embedding")).as(Seq("pos", "v")): _*)
+
+  /** (vec_id, key, dot): each vector's dot product with every weight row
+    * of `weights` (key, d, w) on the 1-based coordinate d = pos + 1 — the
+    * LSH plane dots and the IVF anchor scores. */
+  private def weightedDot(emb: DataFrame, weights: DataFrame,
+                          key: String): DataFrame =
+    coords(emb, col("vec_id"))
+      .withColumn("d", col("pos") + 1)
+      .join(broadcast(weights), "d")
+      .groupBy("vec_id", key)
+      .agg(sum(col("v").cast("double") * col("w")).as("dot"))
+
+  /** The subspace split of a coordinate table: subspace s = pos / subDim,
+    * in-subspace coordinate d = pos % subDim + 1. */
+  private def split(coordsDf: DataFrame, subDim: Int = SubDim): DataFrame =
+    coordsDf.withColumn("s", floor(col("pos") / subDim).cast("long"))
+      .withColumn("d", col("pos") % subDim + 1)
+
+  /** Squared L2 of coordinates `v` to weights `w`, summed over a group. */
+  private def sqDist(v: Column, w: Column): Column = {
+    val diff = v.cast("double") - w
+    sum(diff * diff)
+  }
+
+  /** The codeword distance: (keys..., s, c, dist2), the squared L2 of each
+    * [[split]] subvector to every codeword c of its subspace in the
+    * broadcast (s, c, d, w) `codebook`. */
+  private def codewordDist(subvecs: DataFrame, codebook: DataFrame,
+                           keys: String*): DataFrame =
+    subvecs.join(broadcast(codebook), Seq("s", "d"))
+      .groupBy((keys :+ "s" :+ "c").map(col): _*)
+      .agg(sqDist(col("v"), col("w")).as("dist2"))
+
+  /** The rounded argmin over [[codewordDist]] rows: (keys..., s, code), the
+    * codeword nearest by the distance tie-safe-rounded at 6, the smaller
+    * codeword id on a tie. The per-subspace sums are doubles whose
+    * summation order differs run to run and engine to engine, so an
+    * unrounded argmin would let an ulp flip a code. */
+  private def argmin(dists: DataFrame, keys: String*): DataFrame =
+    dists.groupBy((keys :+ "s").map(col): _*)
+      .agg(min_by(col("c"),
+        struct(graft.ops.Num.cround(col("dist2"), 6), col("c"))).as("code"))
+
+  /** The IVF residual of a (key, list_id, pos, v) coordinate table: each
+    * coordinate minus its list's anchor coordinate in `anchors` (c, d, w),
+    * as (key, list_id, pos, v). */
+  private[graft] def residual(coordsDf: DataFrame, anchors: DataFrame,
+                              key: String): DataFrame =
+    coordsDf.join(broadcast(anchors.select(col("c").as("list_id"),
+        (col("d") - 1).as("pos"), col("w").as("cw"))), Seq("list_id", "pos"))
+      .select(col(key), col("list_id"), col("pos"),
+        (col("v").cast("double") - col("cw")).as("v"))
+
   /** Deterministic pseudo-random hyperplanes: weight(plane p, dim d) =
     * (md5-derived integer in [-1000, 1000]) / 1000. Reproducible from public
     * md5 alone — no RNG state to ship to executors. */
@@ -192,22 +262,15 @@ object Similarity {
           .cast("long") % 2001 - 1000).cast("double") / 1000.0)
 
   /** Sign-bucket per vector: bit p = (v . plane_p > 0); bucket in
-    * [0, 2^nPlanes). One posexplode + broadcast join + aggregate. */
-  def lshBuckets(emb: DataFrame, planesDf: DataFrame, nPlanes: Int = 8): DataFrame =
-    signBuckets(planeDots(emb, planesDf))
+    * [0, 2^planes). One posexplode + broadcast join + aggregate. */
+  def lshBuckets(emb: DataFrame, planesDf: DataFrame): DataFrame =
+    signBuckets(weightedDot(emb, planesDf, "p"))
 
-  /** The plane-dot pass behind [[lshBuckets]]: (vec_id, p, pdot). */
-  private def planeDots(emb: DataFrame, planesDf: DataFrame): DataFrame =
-    emb.select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "v")))
-      .withColumn("d", col("pos") + 1)
-      .join(broadcast(planesDf), "d")
-      .groupBy("vec_id", "p")
-      .agg(sum(col("v").cast("double") * col("w")).as("pdot"))
-
-  /** Plane dots to (vec_id, bucket): bit p set where pdot > 0. */
+  /** Plane dots (vec_id, p, dot) to (vec_id, bucket): bit p set where
+    * dot > 0. */
   private def signBuckets(dots: DataFrame): DataFrame =
     dots.groupBy("vec_id")
-      .agg(sum(when(col("pdot") > 0,
+      .agg(sum(when(col("dot") > 0,
         pow(lit(2.0), col("p")).cast("long")).otherwise(0L)).as("bucket"))
 
   /** IVF coarse quantizer: deterministic anchor vectors (md5-derived, same
@@ -224,31 +287,27 @@ object Similarity {
           .cast("long") % 2001 - 1000).cast("double") / 1000.0)
 
   /** Learned IVF codebook: Lloyd's k-means over the corpus, refining the
-    * fixed md5 codebook for `iters` iterations. It is [[lloyd]] with one
+    * fixed md5 codebook for `Iters` iterations. It is [[lloyd]] with one
     * subspace spanning all `dims` coordinates, seeded by [[ivfAnchors]]:
     * the same loop, argmin and rounding that train the PQ codebooks. The
     * learned path is spec-checked by recall, while sim3's oracle path keeps
     * the fixed codebook. To train on a slice of a large corpus, filter
     * `emb` first. Output (c, d, w), the [[ivfAnchors]] layout. */
-  def learnIvfAnchors(emb: DataFrame, nLists: Int = 16, dims: Int = 64,
-                      iters: Int = 3): DataFrame =
-    lloyd(exploded(emb),
+  def learnIvfAnchors(emb: DataFrame, nLists: Int = 16,
+                      dims: Int = 64): DataFrame =
+    lloyd(coords(emb, col("vec_id")),
       ivfAnchors(emb.sparkSession, nLists, dims)
         .select(lit(0L).as("s"), col("c"), col("d"), col("w")),
-      dims, iters)
+      dims)
       .select("c", "d", "w")
 
   /** Anchor-similarity scores per vector: (vec_id, c, score) where score =
     * dot(v, anchor_c) / |anchor_c| (|v| constant across lists, dropped). */
   private[graft] def anchorScores(emb: DataFrame, anchors: DataFrame): DataFrame = {
     val anorm = anchors.groupBy("c").agg(sqrt(sum(col("w") * col("w"))).as("anorm"))
-    emb.select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "v")))
-      .withColumn("d", col("pos") + 1)
-      .join(broadcast(anchors), "d")
-      .groupBy("vec_id", "c")
-      .agg(sum(col("v").cast("double") * col("w")).as("adot"))
+    weightedDot(emb, anchors, "c")
       .join(broadcast(anorm), "c")
-      .withColumn("score", col("adot") / col("anorm"))
+      .withColumn("score", col("dot") / col("anorm"))
   }
 
   /** Each vector's `n` nearest lists over [[anchorScores]] output:
@@ -386,12 +445,11 @@ object Similarity {
   }
 
   /** LSH-bucketed cosine top-k: only candidates in the query's bucket are
-    * scored. The 2^nPlanes buckets bound the self-join; per-bucket top-k
+    * scored. The 2^planes buckets bound the self-join; per-bucket top-k
     * keeps the shuffle payload at k rows per query. */
   def lshTopK(emb: DataFrame, planesDf: DataFrame, queryMod: Int = 100,
-              k: Int = 3, nPlanes: Int = 8,
-              queryCap: Long = Long.MaxValue): DataFrame = {
-    val vecs = withDoubles(emb).join(lshBuckets(emb, planesDf, nPlanes), "vec_id")
+              k: Int = 3, queryCap: Long = Long.MaxValue): DataFrame = {
+    val vecs = withDoubles(emb).join(lshBuckets(emb, planesDf), "vec_id")
     topKPerQuery(scoredJoin(vecs,
         queryVecs(vecs, queryMod, queryCap, "bucket"), "bucket"), k)
       .select("query_id", "rank", "vec_id", "bucket", "cosine")
@@ -414,9 +472,8 @@ object Similarity {
     * no top-k sort at all (a pure filter), so the operator is
     * embarrassingly parallel after the candidate join. */
   def lshRangeSearch(emb: DataFrame, planesDf: DataFrame,
-                     queryMod: Int = 100, tau: Double = 0.25,
-                     nPlanes: Int = 8): DataFrame = {
-    val vecs = withDoubles(emb).join(lshBuckets(emb, planesDf, nPlanes), "vec_id")
+                     queryMod: Int = 100, tau: Double = 0.25): DataFrame = {
+    val vecs = withDoubles(emb).join(lshBuckets(emb, planesDf), "vec_id")
     scoredJoin(vecs, queryVecs(vecs, queryMod, Long.MaxValue, "bucket"),
         "bucket")
       .filter(col("cosine") >= tau)
@@ -448,17 +505,16 @@ object Similarity {
     * dots, bounded per-bucket candidate join, per-query top-k; the probe
     * expansion multiplies only the (tiny, broadcast) query side. */
   def lshTopKMultiProbe(emb: DataFrame, planesDf: DataFrame,
-                        queryMod: Int = 100, k: Int = 3, nPlanes: Int = 8,
-                        probes: Int = 2,
+                        queryMod: Int = 100, k: Int = 3, probes: Int = 2,
                         queryCap: Long = Long.MaxValue): DataFrame = {
     val withNorm = withDoubles(emb)
-    val dots = planeDots(emb, planesDf)
+    val dots = weightedDot(emb, planesDf, "p")
     val buckets = signBuckets(dots)
     val vecs = withNorm.join(buckets, "vec_id")
 
     val qBase = buckets.filter(queryPred(queryMod, queryCap))
     val wFlip = Window.partitionBy("vec_id")
-      .orderBy(graft.ops.Num.cround(abs(col("pdot")), 6), col("p"))
+      .orderBy(graft.ops.Num.cround(abs(col("dot")), 6), col("p"))
     val flips = dots.filter(queryPred(queryMod, queryCap))
       .withColumn("__rnk", row_number().over(wFlip))
       .filter(col("__rnk") <= probes)
@@ -500,15 +556,14 @@ object Similarity {
     * (scale 6) with dst as tiebreak; bucket caps order by vec_id.
     * Output: (src, dst, cosine), directed, top-m per src. */
   def knnGraph(emb: DataFrame, planesDf: DataFrame, m: Int = 8,
-               nPlanes: Int = 8, bucketCap: Int = 64,
-               descentRounds: Int = 1): DataFrame = {
+               bucketCap: Int = 64, descentRounds: Int = 1): DataFrame = {
     // ONE double-cast checkpoint shared by the seed scoring and every
     // descent round — seedEdges and descend each built their own full
     // copy when called back-to-back
     import graft.ops.Materialize.MaterializeOps
     val withNorm = withDoubles(emb).materialized
     descendFrom(withNorm,
-      seedEdgesFrom(withNorm, emb, planesDf, m, nPlanes, bucketCap),
+      seedEdgesFrom(withNorm, emb, planesDf, m, bucketCap),
       m, descentRounds)
   }
 
@@ -543,11 +598,10 @@ object Similarity {
     * election, so incremental ingest in vec_id order reproduces it
     * append-only). Returns (lshCapped, ivfCapped), both (vec_id, bucket). */
   private[graft] def seedMemberships(emb: DataFrame, planesDf: DataFrame,
-                                     nPlanes: Int, bucketCap: Int)
-      : (DataFrame, DataFrame) = {
+                                     bucketCap: Int): (DataFrame, DataFrame) = {
     def capped(membership: DataFrame): DataFrame =
       Dedup.capPerKey(membership, Seq("bucket"), "vec_id", bucketCap)
-    (capped(lshBuckets(emb, planesDf, nPlanes)),
+    (capped(lshBuckets(emb, planesDf)),
       capped(ivfMembership(emb)))
   }
 
@@ -561,17 +615,15 @@ object Similarity {
   /** The seed half of [[knnGraph]]: dual-partitioning co-occupant pairs,
     * exact-scored, cut to top-m per src. */
   def seedEdges(emb: DataFrame, planesDf: DataFrame, m: Int = 8,
-                nPlanes: Int = 8, bucketCap: Int = 64): DataFrame = {
+                bucketCap: Int = 64): DataFrame = {
     import graft.ops.Materialize.MaterializeOps
-    seedEdgesFrom(withDoubles(emb).materialized, emb, planesDf, m,
-      nPlanes, bucketCap)
+    seedEdgesFrom(withDoubles(emb).materialized, emb, planesDf, m, bucketCap)
   }
 
   private def seedEdgesFrom(withNorm: DataFrame, emb: DataFrame,
                             planesDf: DataFrame, m: Int,
-                            nPlanes: Int, bucketCap: Int): DataFrame = {
-    val (capped, listCapped) =
-      seedMemberships(emb, planesDf, nPlanes, bucketCap)
+                            bucketCap: Int): DataFrame = {
+    val (capped, listCapped) = seedMemberships(emb, planesDf, bucketCap)
     def coPairs(part: DataFrame): DataFrame =
       part.select(col("vec_id").as("src"), col("bucket"))
         .join(part.select(col("vec_id").as("dst"), col("bucket")),
@@ -626,11 +678,10 @@ object Similarity {
     * no rows — the documented cold-start of every graph index. */
   def graphAnnTopK(emb: DataFrame, planesDf: DataFrame, queryMod: Int = 100,
                    k: Int = 5, m: Int = 8, beam: Int = 10, hops: Int = 3,
-                   nPlanes: Int = 8, bucketCap: Int = 64,
-                   descentRounds: Int = 1,
+                   bucketCap: Int = 64, descentRounds: Int = 1,
                    queryCap: Long = Long.MaxValue): DataFrame =
     searchGraph(emb,
-      knnGraph(emb, planesDf, m, nPlanes, bucketCap, descentRounds),
+      knnGraph(emb, planesDf, m, bucketCap, descentRounds),
       queryMod, k, beam, hops, queryCap)
 
   /** The search half of [[graphAnnTopK]] over an ALREADY-BUILT edge table
@@ -683,16 +734,16 @@ object Similarity {
     * re-rank the survivors against the full-precision column. Zero vectors
     * quantize to zeros with scale 0. Pure higher-order functions — codegen,
     * no UDF, one linear pass. */
-  def quantizeInt8(emb: DataFrame,
-                   vecCol: String = "embedding"): DataFrame = {
-    val absMax = aggregate(col(vecCol),
+  def quantizeInt8(emb: DataFrame): DataFrame = {
+    val vec = col("embedding")
+    val absMax = aggregate(vec,
       lit(0.0), (acc, v) => greatest(acc, abs(v.cast("double"))))
     emb
       .withColumn("q_scale", absMax / 127.0)
       .withColumn("q_vec",
         when(col("q_scale") === 0.0,
-          transform(col(vecCol), _ => lit(0).cast("tinyint")))
-          .otherwise(transform(col(vecCol),
+          transform(vec, _ => lit(0).cast("tinyint")))
+          .otherwise(transform(vec,
             x => round(x.cast("double") / col("q_scale")).cast("tinyint"))))
   }
 
@@ -707,13 +758,11 @@ object Similarity {
     * the profile size, never the corpus; no window, no collect, no cross
     * join. Element math is double-cast like every other op here (float
     * sums drift across engines); the mean is tie-safe-rounded (scale 6). */
-  def labelCentroids(emb: DataFrame,
-                     vecCol: String = "embedding"): DataFrame =
-    emb
-      .select(col("label"), posexplode(col(vecCol)).as(Seq("dim", "__v")))
-      .groupBy("label", "dim")
+  def labelCentroids(emb: DataFrame): DataFrame =
+    coords(emb, col("label"))
+      .groupBy(col("label"), col("pos").as("dim"))
       .agg(count(lit(1)).as("n_vectors"),
-        graft.ops.Num.cround(avg(col("__v").cast("double")), 6).as("centroid"))
+        graft.ops.Num.cround(avg(col("v").cast("double")), 6).as("centroid"))
 
   /** Reciprocal-rank fusion of two retrieval paths (Cormack et al. SIGIR
     * 2009: score = Σ 1/(c + rank), c=60) — the hybrid-search primitive
@@ -761,23 +810,20 @@ object Similarity {
     * (map-side combine over exploded dims); everything downstream runs on
     * the labels × dims table. */
   def embeddingDrift(emb: DataFrame, isOld: Column): DataFrame = {
-    val cents = emb
-      .select(col("label"), isOld.as("is_old"),
-        posexplode(col("embedding")).as(Seq("dim", "__v")))
-      .groupBy("label", "is_old", "dim")
-      .agg(graft.ops.Num.cround(avg(col("__v").cast("double")), 6).as("w"))
-    val o = cents.filter(col("is_old")).select(col("label"), col("dim"),
+    val cents = coords(emb, col("label"), isOld.as("is_old"))
+      .groupBy("label", "is_old", "pos")
+      .agg(graft.ops.Num.cround(avg(col("v").cast("double")), 6).as("w"))
+    val o = cents.filter(col("is_old")).select(col("label"), col("pos"),
       col("w").as("wo"))
-    val n = cents.filter(!col("is_old")).select(col("label"), col("dim"),
+    val n = cents.filter(!col("is_old")).select(col("label"), col("pos"),
       col("w").as("wn"))
     val counts = emb.groupBy("label").agg(
       sum(when(isOld, 1L).otherwise(0L)).as("n_old"),
       sum(when(isOld, 0L).otherwise(1L)).as("n_new"))
-    o.join(n, Seq("label", "dim"))
+    o.join(n, Seq("label", "pos"))
       .groupBy("label")
       .agg(
-        graft.ops.Num.cround(
-          sqrt(sum((col("wo") - col("wn")) * (col("wo") - col("wn")))), 6)
+        graft.ops.Num.cround(sqrt(sqDist(col("wo"), col("wn"))), 6)
           .as("centroid_l2"),
         graft.ops.Num.cround(
           sum(col("wo") * col("wn")) /
@@ -817,16 +863,15 @@ object Similarity {
   }
 
   /** Deterministic product-quantization codebook: nSub subspaces x
-    * nCentroids centroids x subDim dims, weights md5-derived in [-1, 1]
+    * `NCentroids` centroids x `SubDim` dims, weights md5-derived in [-1, 1]
     * (the [[planes]] recipe, salt "pq") — reproducible from public md5
     * alone, hence oracle-checkable, while preserving the PQ execution
     * shape exactly (a production deployment swaps in k-means subspace
     * codebooks, which [[learnPqCodebook]] trains). */
-  def pqCodebook(spark: SparkSession, nSub: Int = 8, nCentroids: Int = 16,
-                 subDim: Int = 8): DataFrame =
+  def pqCodebook(spark: SparkSession, nSub: Int = NSub): DataFrame =
     spark.range(nSub).withColumnRenamed("id", "s")
-      .crossJoin(spark.range(nCentroids).withColumnRenamed("id", "c"))
-      .crossJoin(spark.range(1, subDim + 1).withColumnRenamed("id", "d"))
+      .crossJoin(spark.range(NCentroids).withColumnRenamed("id", "c"))
+      .crossJoin(spark.range(1, SubDim + 1).withColumnRenamed("id", "d"))
       .withColumn("w",
         (conv(substring(md5(concat(lit("pq_"), col("s"), lit("_"), col("c"),
           lit("_"), col("d"))), 1, 8), 16, 10)
@@ -834,33 +879,24 @@ object Similarity {
 
   /** Learned PQ codebook: per-subspace Lloyd's k-means ([[lloyd]]) over
     * the subvector population, seeded from the fixed md5 [[pqCodebook]] —
-    * k-means run independently in each of the nSub 8-dim subspaces
+    * k-means run independently in each of the 8-dim subspaces
     * (production PQ trains exactly this way: k-means per subspace over a
     * corpus sample; Jegou et al. 2011 §III). To train on a slice of a
     * large corpus, filter `emb` first. */
-  def learnPqCodebook(emb: DataFrame, nSub: Int = 8, nCentroids: Int = 16,
-                      subDim: Int = 8, iters: Int = 3): DataFrame =
-    lloyd(exploded(emb), pqCodebook(emb.sparkSession, nSub, nCentroids, subDim),
-      subDim, iters)
-
-  /** The (vec_id, pos, v) training population of the raw coordinates. */
-  private def exploded(emb: DataFrame): DataFrame =
-    emb.select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "v")))
-      .select(col("vec_id"), col("pos"), col("v").cast("double").as("v"))
+  def learnPqCodebook(emb: DataFrame): DataFrame =
+    lloyd(coords(emb, col("vec_id")), pqCodebook(emb.sparkSession), SubDim)
 
   /** THE Lloyd's k-means loop: every learned codebook in the engine (PQ,
     * residual PQ, and the IVF anchors as a single subspace of `subDim` =
     * dims) trains here. Population: (vec_id, pos, v) with 0-based `pos`,
-    * split into subspace s = pos / subDim and in-subspace coordinate
-    * d = pos % subDim + 1. Seed: an (s, c, d, w) codebook.
+    * [[split]] at `subDim`. Seed: an (s, c, d, w) codebook.
     *
-    * Deterministic: fixed iteration count, argmin on the 6-dp-rounded
-    * subspace distance with the centroid id as tiebreak (the [[pqEncode]]
-    * discipline — the per-subspace sums are doubles whose summation order
-    * differs run to run and engine to engine, so an unrounded argmin
-    * would let an ulp flip an assignment), and centroid means rounded to
-    * 9 dp, far above shuffle-arrival summation noise and far below any
-    * real centroid geometry. Empty cells keep their previous centroid.
+    * Deterministic: fixed iteration count, the [[argmin]] of the
+    * [[codewordDist]] (the [[pqEncode]] discipline), and centroid means
+    * rounded to 9 dp, far above shuffle-arrival summation noise and far
+    * below any real centroid geometry. Empty cells keep their previous
+    * centroid. `analytics/Segments.rfmSegments` keeps its own loop: its
+    * update rounds with `cround`, where this one uses `round`.
     *
     * Fully distributed: per iteration the assignment is one exploded
     * broadcast join against the codebook + a (vec, subspace) argmin, and
@@ -868,23 +904,17 @@ object Similarity {
     * (population x nSub x nCentroids) scores and codebook-sized centroids,
     * never the corpus. The population is checkpointed once and reused
     * across iterations; each iteration's codebook is checkpointed. */
-  private def lloyd(population: DataFrame, seed: DataFrame, subDim: Int,
-                    iters: Int): DataFrame = {
-    val sample = population
-      .withColumn("s", floor(col("pos") / subDim).cast("long"))
-      .withColumn("d", col("pos") % subDim + 1)
-      .select(col("vec_id"), col("s"), col("d"), col("v"))
+  private def lloyd(population: DataFrame, seed: DataFrame,
+                    subDim: Int): DataFrame = {
+    val sample = split(population, subDim)
+      .select(col("vec_id"), col("s"), col("d"), col("v").cast("double").as("v"))
       .materialized
     var codebook = seed.select("s", "c", "d", "w")
-    for (_ <- 0 until iters) {
-      val assigned = sample.join(broadcast(codebook), Seq("s", "d"))
-        .groupBy("vec_id", "s", "c")
-        .agg(sum((col("v") - col("w")) * (col("v") - col("w"))).as("dist2"))
-        .groupBy("vec_id", "s")
-        .agg(min_by(col("c"),
-          struct(graft.ops.Num.cround(col("dist2"), 6), col("c"))).as("c"))
+    for (_ <- 0 until Iters) {
+      val assigned = argmin(codewordDist(sample, codebook, "vec_id"), "vec_id")
       val updated = sample.join(assigned, Seq("vec_id", "s"))
-        .groupBy("s", "c", "d").agg(round(avg(col("v")), 9).as("w"))
+        .groupBy(col("s"), col("code").as("c"), col("d"))
+        .agg(round(avg(col("v")), 9).as("w"))
       codebook = codebook.as("old")
         .join(updated.as("new"), Seq("s", "c", "d"), "left")
         .select(col("s"), col("c"), col("d"),
@@ -894,27 +924,17 @@ object Similarity {
     codebook
   }
 
+  /** The raw-vector codeword distances of `emb` against `codebook`:
+    * (vec_id, s, c, dist2), shared by [[pqEncode]] and [[pqDistortion]]. */
+  private def vecDists(emb: DataFrame, codebook: DataFrame): DataFrame =
+    codewordDist(split(coords(emb, col("vec_id"))), codebook, "vec_id")
+
   /** PQ encode: nearest codebook centroid per (vector, subspace) —
-    * squared L2, argmin on the tie-safe-ROUNDED distance with centroid id
-    * tiebreak (the [[nearestCentroid]] discipline: per-subspace sums are
-    * 8 doubles whose summation order differs across engines, and an
-    * unrounded argmin would let an ulp flip a code). Output
+    * squared L2, the rounded [[argmin]] with centroid id tiebreak. Output
     * (vec_id, s, code) — 8 bytes of code per 64-dim float vector, the
     * 32x memory shrink that makes billion-vector indexes RAM-resident. */
-  def pqEncode(emb: DataFrame, codebook: DataFrame,
-               subDim: Int = 8): DataFrame = {
-    val el = emb
-      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "v")))
-      .withColumn("s", floor(col("pos") / subDim).cast("long"))
-      .withColumn("d", col("pos") % subDim + 1)
-    el.join(broadcast(codebook), Seq("s", "d"))
-      .groupBy("vec_id", "s", "c")
-      .agg(sum((col("v").cast("double") - col("w")) *
-        (col("v").cast("double") - col("w"))).as("dist2"))
-      .groupBy("vec_id", "s")
-      .agg(min_by(col("c"),
-        struct(graft.ops.Num.cround(col("dist2"), 6), col("c"))).as("code"))
-  }
+  def pqEncode(emb: DataFrame, codebook: DataFrame): DataFrame =
+    argmin(vecDists(emb, codebook), "vec_id")
 
   /** PQ quantization-distortion report: per subspace, the average and
     * worst squared L2 between the raw subvectors and their assigned
@@ -924,29 +944,20 @@ object Similarity {
     * A subspace whose avg_dist2 dwarfs the others is the one to give more
     * centroids.
     *
-    * Shape at scale: [[pqEncode]]'s linear encode pass re-joined to the
-    * broadcast codebook, reduced to an nSub-row report — per-vector dist2
-    * is tie-safe-ROUNDED (scale 6) before the avg/max so the report is
-    * reproducible cross-engine. */
-  def pqDistortion(emb: DataFrame, codebook: DataFrame,
-                   subDim: Int = 8): DataFrame = {
-    val codes = pqEncode(emb, codebook, subDim)
-    val el = emb
-      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "v")))
-      .withColumn("s", floor(col("pos") / subDim).cast("long"))
-      .withColumn("d", col("pos") % subDim + 1)
-    val perSub = el.join(codes, Seq("vec_id", "s"))
-      .join(broadcast(codebook.withColumnRenamed("c", "code")),
-        Seq("s", "d", "code"))
+    * Shape at scale: [[pqEncode]]'s linear distance pass reduced to an
+    * nSub-row report. The assigned codeword is the [[argmin]] of the
+    * rounded distance, so its distance is the (vec_id, s) minimum of the
+    * distances tie-safe-ROUNDED at 6 — read from the same distance rows,
+    * without a second explode or a re-join of the codes — and the report
+    * is reproducible cross-engine. */
+  def pqDistortion(emb: DataFrame, codebook: DataFrame): DataFrame =
+    vecDists(emb, codebook)
       .groupBy("vec_id", "s")
-      .agg(graft.ops.Num.cround(
-        sum((col("v").cast("double") - col("w")) *
-          (col("v").cast("double") - col("w"))), 6).as("dist2"))
-    perSub.groupBy("s")
+      .agg(min(graft.ops.Num.cround(col("dist2"), 6)).as("dist2"))
+      .groupBy("s")
       .agg(count(lit(1)).as("n_vectors"),
         graft.ops.Num.cround(avg("dist2"), 6).as("avg_dist2"),
         graft.ops.Num.cround(max("dist2"), 6).as("max_dist2"))
-  }
 
   /** Asymmetric-distance (ADC) top-k over PQ codes — the IVF-PQ search
     * kernel (Jegou, Douze & Schmid, "Product quantization for nearest
@@ -966,12 +977,11 @@ object Similarity {
     * probe's corpus-growing queryMod. Rankings compare the
     * tie-safe-ROUNDED ADC distance with vec_id tiebreak. */
   def pqTopK(emb: DataFrame, codebook: DataFrame, queryMod: Int = 100,
-             k: Int = 5, subDim: Int = 8,
-             queryCap: Long = Long.MaxValue): DataFrame = {
-    val adc = adcTables(emb, codebook, queryMod, queryCap, subDim)
+             k: Int = 5, queryCap: Long = Long.MaxValue): DataFrame = {
+    val adc = adcTables(emb, codebook, queryMod, queryCap)
       .select(col("query_id"), col("s").as("qs"), col("c").as("qc"),
-        col("qd"))
-    adcTopK(pqEncode(emb, codebook, subDim).join(broadcast(adc),
+        col("dist2"))
+    adcTopK(pqEncode(emb, codebook).join(broadcast(adc),
       col("s") === col("qs") && col("code") === col("qc") && notSelf), k)
   }
 
@@ -1009,10 +1019,9 @@ object Similarity {
     * depth k — see COVERAGE.md's ANN table for the measured lift. */
   def pqTopKRerank(emb: DataFrame, codebook: DataFrame, queryMod: Int = 100,
                    k: Int = 5, shortlist: Int = 50,
-                   subDim: Int = 8,
                    queryCap: Long = Long.MaxValue): DataFrame =
     rerankShortlist(emb,
-      pqTopK(emb, codebook, queryMod, shortlist, subDim, queryCap),
+      pqTopK(emb, codebook, queryMod, shortlist, queryCap),
       queryMod, k, queryCap)
 
   /** [[ivfPqTopK]] with the exact-rerank tier — IVF routing x PQ/ADC
@@ -1023,12 +1032,11 @@ object Similarity {
   def ivfPqTopKRerank(emb: DataFrame, anchors: DataFrame,
                       codebook: DataFrame, queryMod: Int = 100, k: Int = 5,
                       nprobe: Int = 2, shortlist: Int = 50,
-                      subDim: Int = 8,
                       queryCap: Long = Long.MaxValue,
                       routingOpt: Option[(DataFrame, DataFrame)] = None)
       : DataFrame =
     rerankShortlist(emb,
-      ivfPqTopK(emb, anchors, codebook, queryMod, shortlist, nprobe, subDim,
+      ivfPqTopK(emb, anchors, codebook, queryMod, shortlist, nprobe,
         queryCap, routingOpt),
       queryMod, k, queryCap)
 
@@ -1047,28 +1055,21 @@ object Similarity {
         .withColumnRenamed("vec_id", "query_id"))
   }
 
-  /** Per-query ADC tables over the raw query vectors:
-    * (query_id, s, c, qd), qd = squared distance of the query's subvector
-    * s to centroid c. Shared by [[pqTopK]] and [[ivfPqTopK]]. */
+  /** Per-query ADC tables over the raw query vectors: the
+    * [[codewordDist]] (query_id, s, c, dist2) of each query subvector s to
+    * centroid c. Shared by [[pqTopK]] and [[ivfPqTopK]]. */
   private def adcTables(emb: DataFrame, codebook: DataFrame, queryMod: Int,
-                        queryCap: Long, subDim: Int): DataFrame =
-    emb.filter(queryPred(queryMod, queryCap))
-      .select(col("vec_id").as("query_id"),
-        posexplode(col("embedding")).as(Seq("pos", "v")))
-      .withColumn("s", floor(col("pos") / subDim).cast("long"))
-      .withColumn("d", col("pos") % subDim + 1)
-      .join(broadcast(codebook), Seq("s", "d"))
-      .groupBy("query_id", "s", "c")
-      .agg(sum((col("v").cast("double") - col("w")) *
-        (col("v").cast("double") - col("w"))).as("qd"))
+                        queryCap: Long): DataFrame =
+    codewordDist(split(coords(emb.filter(queryPred(queryMod, queryCap)),
+      col("vec_id").as("query_id"))), codebook, "query_id")
 
-  /** ADC ranking of (query_id, vec_id, qd) candidate terms: sum the terms
+  /** ADC ranking of (query_id, vec_id, dist2) candidate terms: sum the terms
     * per pair, round tie-safe at 6, keep each query's k nearest by the
     * bounded `top_k_by` (vec_id tiebreak). Output (query_id, rank, vec_id,
     * adc_dist2). */
   private def adcTopK(terms: DataFrame, k: Int): DataFrame =
     topKBy(terms.groupBy("query_id", "vec_id")
-        .agg(graft.ops.Num.cround(sum("qd"), 6).as("adc_dist2"))
+        .agg(graft.ops.Num.cround(sum("dist2"), 6).as("adc_dist2"))
         .groupBy("query_id"), -col("adc_dist2"), col("vec_id"), k)
       .select(col("query_id"), col("rank"), col("id").as("vec_id"),
         (-col("score")).as("adc_dist2"))
@@ -1078,7 +1079,7 @@ object Similarity {
     * `on`, rank by [[adcTopK]], then fetch each winner's list id —
     * broadcasting the bounded top rows against the assignment, never vice
     * versa (the e3 label-fetch shape). `codes` is (vec_id, list_id, s,
-    * code); `adc` carries its keys renamed (aq, qs, qc, ...) and `qd`. */
+    * code); `adc` carries its keys renamed (aq, qs, qc, ...) and `dist2`. */
   private def ivfAdcTopK(codes: DataFrame, assigned: DataFrame,
                          probes: DataFrame, adc: DataFrame, on: Column,
                          k: Int): DataFrame = {
@@ -1108,16 +1109,15 @@ object Similarity {
     * ~8 GB resident where raw floats need 256 GB. */
   def ivfPqTopK(emb: DataFrame, anchors: DataFrame, codebook: DataFrame,
                 queryMod: Int = 100, k: Int = 5, nprobe: Int = 2,
-                subDim: Int = 8,
                 queryCap: Long = Long.MaxValue,
                 routingOpt: Option[(DataFrame, DataFrame)] = None)
       : DataFrame = {
     val (assigned, probes) = routingOpt.getOrElse(
       ivfRoute(emb, anchors, queryMod, nprobe, queryCap))
-    val codes = pqEncode(emb, codebook, subDim).join(assigned, "vec_id")
-    val adc = adcTables(emb, codebook, queryMod, queryCap, subDim)
+    val codes = pqEncode(emb, codebook).join(assigned, "vec_id")
+    val adc = adcTables(emb, codebook, queryMod, queryCap)
       .select(col("query_id").as("aq"), col("s").as("qs"),
-        col("c").as("qc"), col("qd"))
+        col("c").as("qc"), col("dist2"))
     ivfAdcTopK(codes, assigned, probes, adc,
       col("query_id") === col("aq") && col("s") === col("qs") &&
         col("code") === col("qc"), k)
@@ -1144,62 +1144,32 @@ object Similarity {
     * still flow as (vec_id, list_id, s, code), ADC tables
     * (queries x nprobe x nSub x nCentroids) still broadcast, the per-query
     * reduction is still the bounded `top_k_by`. Codebook: per-subspace
-    * k-means over the RESIDUAL population when `learnedCodebook` (the
-    * production configuration), else the fixed md5 codebook. Determinism:
-    * same rounded-argmin/rounded-ADC discipline as [[pqEncode]]/[[pqTopK]].
-    */
+    * k-means over the RESIDUAL population (the production configuration).
+    * Determinism: same rounded-argmin/rounded-ADC discipline as
+    * [[pqEncode]]/[[pqTopK]]. */
   def ivfPqResidualTopK(emb: DataFrame, anchors: DataFrame,
                         queryMod: Int = 100, k: Int = 5, nprobe: Int = 2,
-                        subDim: Int = 8, nSub: Int = 8, nCentroids: Int = 16,
-                        learnedCodebook: Boolean = true,
-                        iters: Int = 3,
                         queryCap: Long = Long.MaxValue,
                         routingOpt: Option[(DataFrame, DataFrame)] = None)
       : DataFrame = {
-    val spark = emb.sparkSession
     val (assigned, probes) = routingOpt.getOrElse(
       ivfRoute(emb, anchors, queryMod, nprobe, queryCap))
-    val centroidsByPos = anchors.select(col("c").as("list_id"),
-      (col("d") - 1).as("pos"), col("w").as("cw"))
     // corpus residuals, checkpointed once: reused by codebook training AND
     // the encode (two consumers of one linear pass)
-    val resid = emb
-      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "v")))
-      .join(assigned, "vec_id")
-      .join(broadcast(centroidsByPos), Seq("list_id", "pos"))
-      .select(col("vec_id"), col("list_id"), col("pos"),
-        (col("v").cast("double") - col("cw")).as("v"))
-      .materialized
-    val codebook =
-      if (learnedCodebook)
-        lloyd(resid.select("vec_id", "pos", "v"),
-          pqCodebook(spark, nSub, nCentroids, subDim), subDim, iters)
-      else pqCodebook(spark, nSub, nCentroids, subDim)
-    val rl = resid
-      .withColumn("s", floor(col("pos") / subDim).cast("long"))
-      .withColumn("d", col("pos") % subDim + 1)
-    val codes = rl.join(broadcast(codebook), Seq("s", "d"))
-      .groupBy("vec_id", "list_id", "s", "c")
-      .agg(sum((col("v") - col("w")) * (col("v") - col("w"))).as("dist2"))
-      .groupBy("vec_id", "list_id", "s")
-      .agg(min_by(col("c"),
-        struct(graft.ops.Num.cround(col("dist2"), 6), col("c"))).as("code"))
+    val resid = residual(coords(emb, col("vec_id")).join(assigned, "vec_id"),
+      anchors, "vec_id").materialized
+    val codebook = lloyd(resid.select("vec_id", "pos", "v"),
+      pqCodebook(emb.sparkSession), SubDim)
+    val codes = argmin(codewordDist(split(resid), codebook, "vec_id",
+      "list_id"), "vec_id", "list_id")
 
     // per-(query, probed list) residual -> per-list ADC table
-    val qresid = emb.filter(queryPred(queryMod, queryCap))
-      .select(col("vec_id").as("query_id"),
-        posexplode(col("embedding")).as(Seq("pos", "v")))
-      .join(probes, "query_id")
-      .join(broadcast(centroidsByPos), Seq("list_id", "pos"))
-      .withColumn("s", floor(col("pos") / subDim).cast("long"))
-      .withColumn("d", col("pos") % subDim + 1)
-      .select(col("query_id"), col("list_id"), col("s"), col("d"),
-        (col("v").cast("double") - col("cw")).as("v"))
-    val adc = qresid.join(broadcast(codebook), Seq("s", "d"))
-      .groupBy("query_id", "list_id", "s", "c")
-      .agg(sum((col("v") - col("w")) * (col("v") - col("w"))).as("qd"))
+    val qresid = residual(coords(emb.filter(queryPred(queryMod, queryCap)),
+      col("vec_id").as("query_id")).join(probes, "query_id"), anchors,
+      "query_id")
+    val adc = codewordDist(split(qresid), codebook, "query_id", "list_id")
       .select(col("query_id").as("aq"), col("list_id").as("al"),
-        col("s").as("qs"), col("c").as("qc"), col("qd"))
+        col("s").as("qs"), col("c").as("qc"), col("dist2"))
 
     ivfAdcTopK(codes, assigned, probes, adc,
       col("query_id") === col("aq") && col("list_id") === col("al") &&
@@ -1211,14 +1181,12 @@ object Similarity {
   def ivfPqResidualTopKRerank(emb: DataFrame, anchors: DataFrame,
                               queryMod: Int = 100, k: Int = 5,
                               nprobe: Int = 2, shortlist: Int = 50,
-                              subDim: Int = 8, learnedCodebook: Boolean = true,
                               queryCap: Long = Long.MaxValue,
                               routingOpt: Option[(DataFrame, DataFrame)] = None)
       : DataFrame =
     rerankShortlist(emb,
-      ivfPqResidualTopK(emb, anchors, queryMod, shortlist, nprobe, subDim,
-        learnedCodebook = learnedCodebook, queryCap = queryCap,
-        routingOpt = routingOpt),
+      ivfPqResidualTopK(emb, anchors, queryMod, shortlist, nprobe, queryCap,
+        routingOpt),
       queryMod, k, queryCap)
 
   /** PQ codebook-configuration scorecard — the engine's one selector
@@ -1326,17 +1294,14 @@ object Similarity {
     * canonicalized (largest-|component| coordinate made positive, first
     * index on ties); greedy ties take the lowest subspace index. Returns
     * the rotation ROW-MAJOR — row i is output coordinate i, rows grouped
-    * subspace-major so [[pqEncode]]'s `floor(pos / subDim)` sees the
-    * allocation. */
-  def opqRotation(emb: DataFrame, nSub: Int = 8,
-                  subDim: Int = 8): Array[Array[Double]] = {
-    val dims = nSub * subDim
-    val el = emb.select(posexplode(col("embedding")).as(Seq("pos", "v")))
-      .select(col("pos"), col("v").cast("double").as("v"))
+    * subspace-major so [[pqEncode]]'s [[split]] sees the allocation. */
+  def opqRotation(emb: DataFrame): Array[Array[Double]] = {
+    val dims = NSub * SubDim
     val mean = Array.ofDim[Double](dims)
     // dims-sized (64-row) aggregated statistic to the driver — a model
     // PARAMETER pull (the Spark ML PCA pattern), never corpus rows
-    el.groupBy("pos").agg(avg("v").as("m")).collect()
+    coords(emb).groupBy("pos").agg(avg(col("v").cast("double")).as("m"))
+      .collect()
       .foreach(r => mean(r.getInt(0)) = r.getDouble(1))
     // E[v vᵀ] in one pass: per-row outer product flattened to a dims²
     // array, exploded, partially aggregated per position before the
@@ -1354,16 +1319,16 @@ object Similarity {
     }
     val es = breeze.linalg.eigSym(cov) // eigenvalues ASCENDING
     val order = (0 until dims).sortBy(i => (-es.eigenvalues(i), i))
-    val load = Array.fill(nSub)(0.0)
-    val used = Array.fill(nSub)(0)
+    val load = Array.fill(NSub)(0.0)
+    val used = Array.fill(NSub)(0)
     val rot = Array.ofDim[Double](dims, dims)
     for (e <- order) {
-      val s = (0 until nSub).filter(used(_) < subDim)
+      val s = (0 until NSub).filter(used(_) < SubDim)
         .minBy(b => (load(b), b))
       val vec = Array.tabulate(dims)(d => es.eigenvectors(d, e))
       val pivot = (0 until dims).maxBy(d => (math.abs(vec(d)), -d))
       val signed = if (vec(pivot) < 0) vec.map(-_) else vec
-      rot(s * subDim + used(s)) = signed
+      rot(s * SubDim + used(s)) = signed
       load(s) += math.log(math.max(es.eigenvalues(e), 1e-12))
       used(s) += 1
     }
@@ -1385,18 +1350,18 @@ object Similarity {
       "mat_vec_mul", lit(rot.flatten), col("embedding")))
 
   /** [[pqTopKRerank]] in the OPQ basis — equal code budget
-    * (nSub x nCentroids x subDim), one extra linear rotation pass at
+    * (NSub x NCentroids x SubDim), one extra linear rotation pass at
     * index-build time: rotate the corpus, train the per-subspace k-means
     * codebook in the rotated basis, ADC-propose there, exact-rerank with
     * full-precision cosine (invariant under the rotation). The rotated
     * corpus is materialized once and shared by encode, query, and rerank
     * passes, the signature-table idiom. */
   def opqPqTopKRerank(emb: DataFrame, queryMod: Int = 100, k: Int = 5,
-                      shortlist: Int = 50, nSub: Int = 8, subDim: Int = 8,
+                      shortlist: Int = 50,
                       queryCap: Long = Long.MaxValue): DataFrame = {
-    val remb = rotate(emb, opqRotation(emb, nSub, subDim)).materialized
-    pqTopKRerank(remb, learnPqCodebook(remb, nSub, subDim = subDim),
-      queryMod, k, shortlist, subDim, queryCap)
+    val remb = rotate(emb, opqRotation(emb)).materialized
+    pqTopKRerank(remb, learnPqCodebook(remb), queryMod, k, shortlist,
+      queryCap)
   }
 
   /** [[ivfPqTopKRerank]] in the OPQ basis — the fourth
@@ -1404,18 +1369,16 @@ object Similarity {
     * IVF anchors and the PQ codebook in the rotated coordinates (an IVF
     * coarse quantizer must live in the same basis as the codes it
     * routes), route x ADC-propose x exact-rerank as usual. Same
-    * nLists / nSub x nCentroids x subDim budget as the other candidates;
+    * nLists / NSub x NCentroids x SubDim budget as the other candidates;
     * the extra build cost is the rotation learning pass plus re-learning
     * anchors in the rotated basis — the most expensive of the four, which
     * is why [[flagWinner]] ties break away from it. */
   def opqIvfPqTopKRerank(emb: DataFrame, queryMod: Int = 100, k: Int = 5,
                          nprobe: Int = 2, shortlist: Int = 50,
-                         nSub: Int = 8, subDim: Int = 8,
                          queryCap: Long = Long.MaxValue): DataFrame = {
-    val remb = rotate(emb, opqRotation(emb, nSub, subDim)).materialized
-    ivfPqTopKRerank(remb, learnIvfAnchors(remb),
-      learnPqCodebook(remb, nSub, subDim = subDim),
-      queryMod, k, nprobe, shortlist, subDim, queryCap)
+    val remb = rotate(emb, opqRotation(emb)).materialized
+    ivfPqTopKRerank(remb, learnIvfAnchors(remb), learnPqCodebook(remb),
+      queryMod, k, nprobe, shortlist, queryCap)
   }
 
   /** Contrastive hard-negative mining: for each sampled anchor
@@ -1486,24 +1449,27 @@ object Similarity {
     * Determinism: distances compare tie-safe-ROUNDED (scale 6) with the
     * label id as tiebreak, so cross-engine summation-order ulps can never
     * flip a prediction. */
-  def nearestCentroid(emb: DataFrame,
-                      vecCol: String = "embedding"): DataFrame = {
-    val cent = labelCentroids(emb, vecCol)
-      .select(col("label").as("c_label"), col("dim"), col("centroid"))
-    emb
-      .select(col("vec_id"), col("label"),
-        posexplode(col(vecCol)).as(Seq("dim", "__v")))
-      .join(broadcast(cent), "dim")
-      .groupBy("vec_id", "label", "c_label")
-      .agg(graft.ops.Num.cround(
-        sum((col("__v").cast("double") - col("centroid")) *
-          (col("__v").cast("double") - col("centroid"))), 6).as("dist2"))
+  def nearestCentroid(emb: DataFrame): DataFrame =
+    centroidDists(emb)
       .groupBy("vec_id", "label")
       .agg(
         min_by(col("c_label"), struct(col("dist2"), col("c_label")))
           .as("predicted"),
         min(col("dist2")).as("dist2"))
       .withColumn("correct", col("label") === col("predicted"))
+
+  /** (vec_id, label, c_label, dist2): each vector's squared L2 to every
+    * [[labelCentroids]] centroid, tie-safe-rounded at 6 — the one distance
+    * frame of [[nearestCentroid]] and [[silhouetteByLabel]]. */
+  private def centroidDists(emb: DataFrame): DataFrame = {
+    val cent = labelCentroids(emb)
+      .select(col("label").as("c_label"), col("dim").as("pos"),
+        col("centroid"))
+    coords(emb, col("vec_id"), col("label"))
+      .join(broadcast(cent), "pos")
+      .groupBy("vec_id", "label", "c_label")
+      .agg(graft.ops.Num.cround(sqDist(col("v"), col("centroid")), 6)
+        .as("dist2"))
   }
 
   /** Simplified-silhouette cluster-quality report per label — for each
@@ -1516,7 +1482,7 @@ object Similarity {
     * before trusting e2's nearest-centroid classifier or d9's semantic
     * clusters.
     *
-    * Shape at scale: reuses [[nearestCentroid]]'s exact distance plan —
+    * Shape at scale: reuses [[nearestCentroid]]'s distance frame —
     * broadcast labels×dims centroids, one (vec, label) partial-agg sum,
     * corpus never pairwise. The per-vector silhouette then reduces to a
     * labels-sized report. Determinism: a²/b² compare tie-safe-ROUNDED
@@ -1524,19 +1490,8 @@ object Similarity {
     * rounded IEEE in both engines, a degenerate max(a,b) = 0 (vector ==
     * both centroids) yields s = 0 explicitly, and the per-label mean
     * rounds at 2 (multi-term summation). */
-  def silhouetteByLabel(emb: DataFrame,
-                        vecCol: String = "embedding"): DataFrame = {
-    val cent = labelCentroids(emb, vecCol)
-      .select(col("label").as("c_label"), col("dim"), col("centroid"))
-    val dists = emb
-      .select(col("vec_id"), col("label"),
-        posexplode(col(vecCol)).as(Seq("dim", "__v")))
-      .join(broadcast(cent), "dim")
-      .groupBy("vec_id", "label", "c_label")
-      .agg(graft.ops.Num.cround(
-        sum((col("__v").cast("double") - col("centroid")) *
-          (col("__v").cast("double") - col("centroid"))), 6).as("dist2"))
-    val perVec = dists.groupBy("vec_id", "label")
+  def silhouetteByLabel(emb: DataFrame): DataFrame = {
+    val perVec = centroidDists(emb).groupBy("vec_id", "label")
       .agg(
         min(when(col("c_label") === col("label"), col("dist2"))).as("__a2"),
         min_by(col("dist2"), struct(
@@ -1560,12 +1515,11 @@ object Similarity {
     * cosine similarity reduces to a dot product — normalize once at ingest
     * and the per-pair norm divisions in the top-k joins disappear. Zero
     * vectors stay zero (null-free, unlike x/0). */
-  def l2Normalize(vecCol: String = "embedding"): Column = {
-    val nrm = sqrt(aggregate(
-      transform(col(vecCol), x => x.cast("double") * x.cast("double")),
-      lit(0.0), (acc, v) => acc + v))
-    when(nrm === 0.0, transform(col(vecCol), _ => lit(0.0)))
-      .otherwise(transform(col(vecCol), x => x.cast("double") / nrm))
+  def l2Normalize(): Column = {
+    val vec = col("embedding")
+    val nrm = norm(vec)
+    when(nrm === 0.0, transform(vec, _ => lit(0.0)))
+      .otherwise(transform(vec, x => x.cast("double") / nrm))
   }
 
   /** Maximal-marginal-relevance diversified top-k (Carbonell & Goldstein,

@@ -1572,7 +1572,7 @@ class ExtSpec extends AnyFunSuite {
   test("PQ: centroid-built vectors encode to those centroids; ADC ranks the twin first at ~0") {
     // 16-dim space, 2 subspaces of 8: vectors 0 and 100 are built EXACTLY
     // from codebook centroids (s0,c3)++(s1,c7); vector 5 from (s0,c1)++(s1,c2)
-    val cb = Similarity.pqCodebook(spark, nSub = 2, nCentroids = 16, subDim = 8)
+    val cb = Similarity.pqCodebook(spark, nSub = 2)
     val w = cb.collect().map(r => ((r.getAs[Long]("s"), r.getAs[Long]("c"),
       r.getAs[Long]("d")), r.getAs[Double]("w"))).toMap
     def centroid(s: Long, c: Long): Seq[Float] =
@@ -1591,7 +1591,7 @@ class ExtSpec extends AnyFunSuite {
     assert(codes((5L, 0L)) == 1L && codes((5L, 1L)) == 2L)
 
     // queries are ids 0 and 100; each ranks its twin first at ADC ~0
-    val top = Similarity.pqTopK(emb, cb, queryMod = 100, k = 2, subDim = 8)
+    val top = Similarity.pqTopK(emb, cb, queryMod = 100, k = 2)
       .orderBy("query_id", "rank").collect()
     val first = top.filter(_.getAs[Int]("rank") == 1)
       .map(r => r.getAs[Long]("query_id") -> r.getAs[Long]("vec_id")).toMap

@@ -3,7 +3,10 @@
 
     python3 scripts/plandiff.py <dirA> <suffixA> <dirB> <suffixB>
 
-`graft.Profile` writes each query's plan to `<dir>/<query>_<suffix>.txt`.
+`graft.Profile` writes each query's plan to `<dir>/<query>_<suffix>.txt`,
+after a first line of the run's totals (`jobs= checkpoints= stages= tasks=`),
+so a query that ran a different number of jobs, checkpoints, stages or tasks
+in the two runs differs on that line even when its plan is the same.
 Two runs number expression ids (`name#123`), exchange `plan_id`s, RDD ids and
 lambda variables (`lambda x_12`, from a JVM-wide counter) differently, so each
 is renumbered in order of first appearance before the compare: two plans are

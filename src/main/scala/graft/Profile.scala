@@ -15,14 +15,14 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * executions it ran, and how its task time spread over each stage.
   *
   * `sbt "runMain graft.Profile <sfDir> <outDir> <suffix> <q1,q2,...>"`
-  * runs each query into the `noop` sink under [[run]], writes the
-  * formatted physical plan of the frame it ran to
-  * `<outDir>/<query>_<suffix>.txt` and prints one line per stage plus the
-  * query's totals. A stage line names its call site and its SQL
-  * operators, so a job that one run adds or drops can be found by diffing
-  * two runs' lines. A stage's max/median task time above ~4 on a stage of
-  * 4 or more tasks is the straggler signature. Not part of the Verify or
-  * Bench contract. */
+  * runs each query into the `noop` sink under [[run]], writes its
+  * `jobs= checkpoints= stages= tasks=` totals and then the formatted
+  * physical plan of the frame it ran to `<outDir>/<query>_<suffix>.txt`,
+  * and prints one line per stage plus the query's totals. A stage line
+  * names its call site and its SQL operators, so a job that one run adds
+  * or drops can be found by diffing two runs' lines. A stage's max/median
+  * task time above ~4 on a stage of 4 or more tasks is the straggler
+  * signature. Not part of the Verify or Bench contract. */
 object Profile {
 
   /** Task durations of one stage, over its successful tasks (upper median),
@@ -138,14 +138,15 @@ object Profile {
           df = fn(spark, sfDir)
           df.write.format("noop").mode("overwrite").save()
         } finally spark.sparkContext.setJobDescription(null)
+      val counts = s"jobs=${r.jobs} checkpoints=${r.checkpoints} " +
+        s"stages=${r.stages.size} tasks=${r.stages.map(_.tasks).sum}"
       val plan = df.queryExecution.explainString(FormattedMode)
-      Files.writeString(outDir.resolve(s"${name}_$suffix.txt"), plan)
+      Files.writeString(outDir.resolve(s"${name}_$suffix.txt"), s"$counts\n$plan")
       println(s"[profile] wrote ${name}_$suffix.txt (${plan.length} chars)")
       r.stages.foreach { s =>
         println(f"[profile] stage=${s.id}%-5d tasks=${s.tasks}%-5d med=${s.medianMs}ms max=${s.maxMs}ms ratio=${s.ratio}%.1f site=${s.name} ops=${s.operators}")
       }
-      println(f"[profile] $name%-28s wall=${r.wallS}%.2f s jobs=${r.jobs} " +
-        s"checkpoints=${r.checkpoints} stages=${r.stages.size} tasks=${r.stages.map(_.tasks).sum}")
+      println(f"[profile] $name%-28s wall=${r.wallS}%.2f s $counts")
       // a stage of fewer than 4 tasks cannot show skew
       val ratios = r.stages.filter(_.tasks >= 4).map(_.ratio)
       println(s"[profile] $name worst max/med ratio: " + (

@@ -217,9 +217,14 @@ object Dedup {
       .distinct()
       .materialized
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
+    // both intersect joins meet two pair- or shingle-sized inputs: hinted
+    // sort-merge joins, so every run plans the same stages (left to AQE,
+    // the broadcast side is whichever input stage finishes first)
     val inter = p.select("doc_a", "doc_b")
-      .join(sh.select(col("doc_id").as("doc_a"), col("sh")), Seq("doc_a"))
-      .join(sh.select(col("doc_id").as("doc_b"), col("sh")), Seq("doc_b", "sh"))
+      .join(sh.select(col("doc_id").as("doc_a"), col("sh")).hint("merge"),
+        Seq("doc_a"))
+      .join(sh.select(col("doc_id").as("doc_b"), col("sh")).hint("merge"),
+        Seq("doc_b", "sh"))
       .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("n_common"))
     p
       .join(inter, Seq("doc_a", "doc_b"), "left")

@@ -102,9 +102,12 @@ object IncrementalAnnIndex {
     val sc = batch.sparkSession.sparkContext
     val nb = state.nBatches + 1
     val arrived = Observation()
+    // the accepted ids grow with the corpus: shuffled and hashed, never
+    // broadcast
     val fresh = batch
       .observe(arrived, count(lit(1)).as("n"))
-      .join(state.vectors.select("vec_id"), Seq("vec_id"), "left_anti")
+      .join(state.vectors.select("vec_id").hint("shuffle_hash"),
+        Seq("vec_id"), "left_anti")
       .materialized
 
     val freshLsh = Similarity.lshBuckets(fresh, planesDf)
@@ -122,16 +125,17 @@ object IncrementalAnnIndex {
     val newIvf = Await.result(fIvf, Duration.Inf)
 
     // fresh-vs-all co-occupant pairs, BOTH directions, per partitioning —
-    // the batch that admits a pair's later endpoint generates it
+    // the batch that admits a pair's later endpoint generates it; the
+    // admitted delta, a subset of `all`, is always the broadcast side
     def newPairs(old: DataFrame, neu: DataFrame): DataFrame = {
       val all = old.unionByName(neu)
-      neu.select(col("vec_id").as("src"), col("bucket"))
+      broadcast(neu.select(col("vec_id").as("src"), col("bucket")))
         .join(all.select(col("vec_id").as("dst"), col("bucket")),
           Seq("bucket"))
         .unionByName(
           all.select(col("vec_id").as("src"), col("bucket"))
-            .join(neu.select(col("vec_id").as("dst"), col("bucket")),
-              Seq("bucket")))
+            .join(broadcast(neu.select(col("vec_id").as("dst"),
+              col("bucket"))), Seq("bucket")))
         .filter(col("src") =!= col("dst"))
         .select("src", "dst")
     }

@@ -1104,6 +1104,9 @@ object Similarity {
     * linear, both payload-free after their aggregates); candidates flow
     * as (vec_id, list_id, s, code) — never floats; ADC tables and probe
     * routes broadcast; per-query reduction is the bounded `top_k_by`.
+    * The codes ⋈ assignment join is a hinted shuffle-hash join: both sides
+    * are corpus-sized, so neither may broadcast, and it hashes the
+    * one-row-per-vector assignment instead of sorting the codes.
     * This is the engine's asymptotic ANN scale path with PQ memory
     * economics: codes are 8 bytes/vector, so a 10^9-vector index is
     * ~8 GB resident where raw floats need 256 GB. */
@@ -1114,7 +1117,8 @@ object Similarity {
       : DataFrame = {
     val (assigned, probes) = routingOpt.getOrElse(
       ivfRoute(emb, anchors, queryMod, nprobe, queryCap))
-    val codes = pqEncode(emb, codebook).join(assigned, "vec_id")
+    val codes = pqEncode(emb, codebook)
+      .join(assigned.hint("shuffle_hash"), "vec_id")
     val adc = adcTables(emb, codebook, queryMod, queryCap)
       .select(col("query_id").as("aq"), col("s").as("qs"),
         col("c").as("qc"), col("dist2"))

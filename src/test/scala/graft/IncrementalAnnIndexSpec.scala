@@ -1,5 +1,8 @@
 package graft
 
+import scala.collection.mutable
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -26,6 +29,43 @@ class IncrementalAnnIndexSpec extends AnyFunSuite {
     }
   }
 
+  /** Runs `body` under the job description `label` and asserts through a
+    * listener that every job it starts carries the label. Two marker jobs
+    * bound the window, since the listener bus delivers events in order. */
+  private def labelled[A](label: String)(body: => A): A = {
+    val sc = spark.sparkContext
+    val seen = mutable.ArrayBuffer.empty[String]
+    @volatile var open, drained = false
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        e.properties.getProperty("spark.job.description") match {
+          case "ann-start" => open = true
+          case "ann-drain" => drained = true
+          case d => if (open && !drained) seen.synchronized(seen += d)
+        }
+    }
+    def marker(d: String): Unit = {
+      sc.setJobDescription(d)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    }
+    sc.addSparkListener(listener)
+    val out = try {
+      marker("ann-start")
+      sc.setJobDescription(label)
+      val r = try body finally sc.setJobDescription(null)
+      marker("ann-drain")
+      val deadline = System.currentTimeMillis() + 30000
+      while (!drained && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      r
+    } finally sc.removeSparkListener(listener)
+    assert(drained, "listener did not drain in 30 s")
+    seen.synchronized {
+      assert(seen.nonEmpty && seen.forall(_ == label),
+        s"jobs without the label $label: ${seen.filterNot(_ == label)}")
+    }
+    out
+  }
+
   private def assertSame(a: DataFrame, b: DataFrame, what: String): Unit = {
     assert(a.count() > 0, s"$what: empty comparison is vacuous")
     assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0,
@@ -34,10 +74,13 @@ class IncrementalAnnIndexSpec extends AnyFunSuite {
 
   /** Folds the sf0.001 embeddings in `nBatches` vec_id-ordered batches and
     * checks the arrival count and the seed edges, descended graph and
-    * search against the batch build. */
-  private def checkAgainstBatch(nBatches: Int): Unit = {
+    * search against the batch build; with a `label`, also that every job
+    * of the fold carries it. */
+  private def checkAgainstBatch(nBatches: Int,
+                                label: Option[String] = None): Unit = {
     val emb = graft.io.Sources.embeddings(spark, dir).localCheckpoint(true)
-    val st = foldBatches(emb, nBatches, bucketCap = 64)
+    def ingest = foldBatches(emb, nBatches, bucketCap = 64)
+    val st = label.fold(ingest)(labelled(_)(ingest))
     assert(st.nBatches == nBatches)
     assert(st.nIngested == emb.count())
 
@@ -54,7 +97,9 @@ class IncrementalAnnIndexSpec extends AnyFunSuite {
   }
 
   test("3-batch ingest reproduces the batch seed edges, graph, and search") {
-    checkAgainstBatch(3)
+    // every job the ingest starts carries the caller's job description,
+    // the admissions the ConcurrentJobs pool runs included
+    checkAgainstBatch(3, label = Some("ann-ingest-3"))
   }
 
   test("9-batch ingest crosses a compaction and still reproduces the batch index") {

@@ -232,6 +232,15 @@ class PlanSpec extends AnyFunSuite {
     // the only Window node is the final rank over n_queries x shortlist
     assert("Window \\[".r.findAllIn(p).length <= 1,
       "sim9: only the bounded final-rank window is allowed")
+    // sim10's IVF sibling: the corpus-sized codes ⋈ assignment join of
+    // ivfPqTopK keeps its shuffle-hash hint through AQE's re-planning,
+    // hashing the one-row-per-vector assignment; neither side broadcasts
+    val ivf = Queries.all("sim10_ivfpq_rerank")(spark, dir)
+    ivf.write.format("noop").mode("overwrite").save()
+    val finalPlan = ivf.queryExecution.executedPlan.toString
+    assert("ShuffledHashJoin \\[vec_id#\\d+L?\\], \\[vec_id#\\d+L?\\], Inner, BuildRight"
+      .r.findFirstIn(finalPlan).isDefined,
+      s"sim10: codes ⋈ assignment is not the hinted shuffle-hash join:\n$finalPlan")
   }
 
   test("funnel runs every stage over one user_id exchange") {
